@@ -113,33 +113,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // AQE's partition coalescing floors every post-shuffle partition at
-      // minPartitionSize (default 1m) even with parallelismFirst=true; on
-      // compute-heavy but byte-light stages (pair/gram fan-out joins from
-      // a few-MB shuffle) that floor serialized 32 cores down to 2 tasks
-      // (profiled round 10: q_rouge_recall's 2.7 s stage → 1.0 s at 32
-      // tasks). Parameterized, local default 64k; at cluster scale
-      // post-shuffle partitions are ≫1m and the floor never binds, so
-      // production behavior is unchanged.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      // The UI is off but the status stores still retain per-execution
-      // plan graphs and per-job/stage/task rollups for the REST API
-      // (defaults: 1000 executions / 1000 jobs / 1000 stages / 100k
-      // tasks). A 976-query suite accumulates all of it as dead heap —
-      // the round-10 decile analysis showed queries mid-suite running
-      // 1.5-2× their fresh-JVM time. Retain a handful for postmortems.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "64")
-      .config("spark.ui.retainedStages", "64")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     // JVM/codegen warmup so classloading cost doesn't land on the first
     // measured query; touches the same read path the queries use.
     graft.core.Tables.region(spark, sfDir).groupBy("r_name").count().count()

@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same session tuning as Bench (see the comments there): don't let
-      // the 976-execution dump accumulate dead status-store heap, and
-      // don't let AQE's 1m partition floor serialize fan-out stages
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "64")
-      .config("spark.ui.retainedStages", "64")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated keys); the driver never sets
     // this, so its runs always dump the full inventory.

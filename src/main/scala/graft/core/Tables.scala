@@ -6,9 +6,10 @@ import org.apache.spark.sql.types._
 
 /** Central table loader for the driver-generated parquet fixtures.
   *
-  * All queries load tables through here so that session-level read
-  * configuration is applied on every entry path (`Verify`, `Bench`,
-  * tests each build their own SparkSession).
+  * All queries load tables through here, so every read passes the
+  * fixture-schema guard. The read confs the loaders rely on
+  * (`nanosAsLong`, UTC) are installed once per session by `Graft.attach`;
+  * loading a table writes no session conf.
   *
   * Scale note: each table is a single parquet file at test scale, but the
   * loaders take any directory layout `spark.read.parquet` accepts — at
@@ -18,21 +19,7 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  /** Read-time confs that must hold before touching the fixtures.
-    *
-    * `events.parquet` stores `ts` as INT64 TIMESTAMP(NANOS) which Spark 4.x
-    * refuses by default ([PARQUET_TYPE_ILLEGAL]); `nanosAsLong` reads it as
-    * raw nanosecond longs, from which [[eventsWithTs]] derives a
-    * microsecond-floored timestamp that matches DuckDB's own µs truncation
-    * bit-for-bit. Safe to set on a live session (read-time conf).
-    */
-  def prepare(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-  }
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    prepare(spark)
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     assertSchema(name, df)
     df
@@ -137,7 +124,7 @@ object Tables {
     * one stable contract:
     *
     *  - INT64 TIMESTAMP(NANOS): read as raw ns longs under `nanosAsLong`
-    *    (see [[prepare]]); µs floor MUST be integer division (`div`) —
+    *    (set by `Graft.attach`); µs floor MUST be integer division (`div`) —
     *    `col/1000` goes through double and 2024-epoch nanos (~1.7e18)
     *    exceed double's 2^53 exact-integer range.
     *  - timestamp[us] (reads as TIMESTAMP_NTZ): wall-clock equals DuckDB's

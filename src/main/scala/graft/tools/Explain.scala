@@ -1,29 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev utility: print the formatted physical plan and wall time for the
   * named queries (all queries if none given). Not part of the driver
   * contract — used to audit pushdown/broadcast/codegen plan shapes.
   *
   * Usage: runMain graft.tools.Explain <sfDir> [queryName...]
+  *
+  * `SPARK_GRAFT_EXPLAIN_ONLY=1` skips the final `.count()` only: queries
+  * that materialize intermediates while they are built (eager
+  * `localCheckpoint`, `isEmpty`/`collect` probes) still run those jobs.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's session tuning so plans match bench conditions
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_EXPLAIN_ONLY=1: skip executing each query (plan sweep
+    val spark = graft.Graft.localSession()
+    // SPARK_GRAFT_EXPLAIN_ONLY=1: skip the final action (plan sweep
     // over the full inventory — prints one summary line per query with
     // the Exchange count and plan size instead of the full text)
     val planOnly = sys.env.get("SPARK_GRAFT_EXPLAIN_ONLY").contains("1")
@@ -45,7 +39,7 @@ object Explain {
           val n = df.count()
           println(f"rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"PLAN $name ERROR ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
       }
     }

@@ -62,7 +62,7 @@ class LayoutSpec extends AnyFunSuite {
     val src = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")).asScala
         .mkString("\n")
-    val body = src.substring(src.indexOf("def queries"),
+    val body = src.substring(src.indexOf("val queries"),
       src.indexOf("def oracleSql"))
     val keys = "\"(q_[a-z0-9_]+)\"\\s*->".r.findAllMatchIn(body)
       .map(_.group(1)).toSeq

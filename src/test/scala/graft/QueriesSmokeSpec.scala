@@ -31,7 +31,17 @@ abstract class QueriesSmokeShard(shard: Int) extends AnyFunSuite {
 
   QueriesSmokeShard.shardQueries(shard).foreach { case (name, fn) =>
     test(s"$name runs, is deterministic, and is non-vacuous at sf0.001") {
-      val a = fn(spark, sf).collect().map(_.toString).toSeq
+      // building a query must not write session conf (the session's read
+      // confs are installed once by Graft.attach, not per table read)
+      val before = spark.conf.getAll
+      val df = fn(spark, sf)
+      val after = spark.conf.getAll
+      val written = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k)) --
+        QueriesSmokeShard.confWrites.getOrElse(name, Set.empty)
+      assert(written.isEmpty, s"$name wrote session conf while being built: " +
+        written.toSeq.sorted.map(k => s"$k: ${before.get(k)} -> ${after.get(k)}").mkString(", "))
+      val a = df.collect().map(_.toString).toSeq
       val b = fn(spark, sf).collect().map(_.toString).toSeq
       assert(a === b, s"$name not deterministic")
       if (emptyAtSmokeScale(name)) assert(a.isEmpty,
@@ -44,6 +54,11 @@ abstract class QueriesSmokeShard(shard: Int) extends AnyFunSuite {
 
 object QueriesSmokeShard {
   val nShards = 6
+  // the confs a query may write while it is built, per query: the
+  // recursive calendar sizes the CTE recursion limit to the data's day
+  // span before it plans (the default of 100 levels fails past ~3 months)
+  val confWrites: Map[String, Set[String]] = Map(
+    "q_recursive_calendar" -> Set("spark.sql.cteRecursionLevelLimit"))
   // stable across JVMs (String.hashCode is specified arithmetic, not
   // identity-based), so every query lands in exactly one shard suite
   def shardOf(name: String): Int = math.floorMod(name.hashCode, nShards)
@@ -68,6 +83,17 @@ class QueriesSmokeSpec extends QueriesSmokeShard(0) {
     val all = (0 until QueriesSmokeShard.nShards)
       .flatMap(s => QueriesSmokeShard.shardQueries(s).map(_._1))
     assert(all.sorted === SparkEntry.queries.keys.toSeq.sorted)
+  }
+
+  test("a suite class runs each shard") {
+    // a shard without a concrete suite class is never run, while the
+    // coverage test above still passes — so pin the classes to nShards
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/test/scala/graft/QueriesSmokeSpec.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val shards = "class \\w+ extends QueriesSmokeShard\\((\\d+)\\)".r
+      .findAllMatchIn(src).map(_.group(1).toInt).toSeq
+    assert(shards.sorted === (0 until QueriesSmokeShard.nShards))
   }
 
   private val capabilityOnly = Set("q_approx_distinct", "q_kmeans_converged")

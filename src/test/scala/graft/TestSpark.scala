@@ -1,38 +1,34 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (JVM-forked once). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    // keep the derby metastore + warehouse out of the repo working tree,
-    // and give each test JVM a fresh PRIVATE derby home + warehouse —
-    // suites fork into parallel JVMs (build.sbt testGrouping) and derby
-    // locks its system directory per process, so a shared path would
-    // make concurrent suites fail on the catalog lock
-    System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("graft_derby").toString)
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      // the UI is off but the status stores still retain per-execution
-      // plan graphs/metrics for the API (defaults: 1000 executions, 1000
-      // jobs/stages, 100k tasks) — a smoke shard runs hundreds of
-      // queries in one JVM and the retained state is pure heap ballast
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "64")
-      .config("spark.ui.retainedStages", "64")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
+    // give each test JVM a fresh PRIVATE derby home + warehouse — suites
+    // fork into parallel JVMs (build.sbt testGrouping) and derby locks
+    // its system directory per process, so a shared path would make
+    // concurrent suites fail on the catalog lock. Both live in one
+    // directory under target/ that is deleted when the JVM exits.
+    val dir = Files.createTempDirectory(
+      Files.createDirectories(Paths.get("target")), "graft_test")
+    sys.addShutdownHook(deleteTree(dir))
+    System.setProperty("derby.system.home", dir.resolve("derby").toString)
+    // Graft.session's SparkConf reads every spark.* system property
+    System.setProperty("spark.sql.warehouse.dir", dir.resolve("warehouse").toString)
+    val s = Graft.session("local[4]", 4)
     s.sparkContext.setLogLevel("WARN")
-    graft.core.Tables.prepare(s)
-    graft.functions.GraftFunctions.register(s)
     s
   }
 
   val sf: String = "/root/testdata/sf0.001"
+
+  private def deleteTree(root: Path): Unit = {
+    val paths = Files.walk(root)
+    try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+    finally paths.close()
+  }
 }
