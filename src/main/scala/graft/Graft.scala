@@ -23,7 +23,6 @@ object Graft {
     * e.g. `-Dspark.sql.adaptive.coalescePartitions.minPartitionSize=1m`.
     */
   private val sessionDefaults: Seq[(String, String)] = Seq(
-    "spark.sql.extensions" -> "graft.extensions.GraftExtensions",
     "spark.ui.enabled" -> "false",
     // AQE's partition coalescing floors every post-shuffle partition at
     // minPartitionSize (default 1m) even with parallelismFirst=true; on

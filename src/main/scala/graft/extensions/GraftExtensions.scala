@@ -10,9 +10,9 @@ import graft.functions.{DotProductLong, SquaredDistanceLong}
   * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.extensions.GraftExtensions`.
   *
-  * (Programmatic sessions can instead call
-  * `GraftFunctions.register(spark)`, which installs the same functions
-  * plus the UDF/UDAF surface on a live session.)
+  * It is the opt-in for sessions built outside the engine: `Graft.session`
+  * does not set it, because `Graft.attach` already installs the same
+  * functions plus the UDF/UDAF surface (`GraftFunctions.register`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

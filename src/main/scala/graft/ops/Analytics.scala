@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Baskets, Det, Guards, Tables}
+import graft.core.{Baskets, Det, Guards, Mat, Tables}
 import graft.core.Det.{cents, pct}
 
 /** Time-series / product-analytics operators (SURVEY.md §2.21).
@@ -25,8 +25,8 @@ object Analytics {
     * shuffle on the pair key. Replaces nine per-query copies of an
     * items×items self-join that streamed the same breadth² rows with no
     * breadth guard. Deliberately NOT cached across queries — per-query
-    * independence is a bench contract; each caller localCheckpoints when
-    * it fans out.
+    * independence is a bench contract; each caller materializes it
+    * (`Mat.once`) when it fans out.
     */
   private[graft] def support2Edges(spark: SparkSession, sf: String): DataFrame =
     support2PairCounts(spark, sf)
@@ -168,8 +168,7 @@ object Analytics {
     // (support-2 survivors), so materialize it before it fans out into the
     // three triangle-join references + the node/edge counts — without this
     // the pair explosion re-executes five times
-    val edges = support2Edges(spark, sf)
-      .localCheckpoint()
+    val edges = Mat.once(support2Edges(spark, sf))
     val tri = edges.as("e1")
       .join(edges.as("e2"), col("e1.v") === col("e2.u"))
       .join(edges.as("e3"),
@@ -1149,17 +1148,16 @@ object Analytics {
     * monetary total per (r, f, m) cell.
     */
   def q_rfm_segments(spark: SparkSession, sf: String): DataFrame = {
-    val base = Tables.orders(spark, sf)
+    // one row per customer; materialized because FOUR consumers fan
+    // out below (three quintile-boundary passes + the bucketing scan)
+    // — lazy, the orders aggregate re-ran four times (round 10 plan
+    // audit: 102 Exchange nodes without it)
+    val base = Mat.once(Tables.orders(spark, sf)
       .groupBy(col("o_custkey"))
       .agg(datediff(lit("1999-01-01").cast("date"), max(col("o_orderdate")).cast("date"))
           .cast("long").as("rec"),
         count(lit(1)).as("freq"),
-        sum(cents(col("o_totalprice"))).as("mon"))
-      // one row per customer; materialized because FOUR consumers fan
-      // out below (three quintile-boundary passes + the bucketing scan)
-      // — lazy, the orders aggregate re-ran four times (round 10 plan
-      // audit: 102 Exchange nodes without it)
-      .localCheckpoint()
+        sum(cents(col("o_totalprice"))).as("mon")))
     def quintiles(c: String, name: String) = Relational.latticePercentiles(
         base.groupBy(col(c).as("pc")).agg(count(lit(1)).as("cnt")),
         Seq(), (1 to 4).map(i => i / 5.0 -> s"q$i"))
@@ -1557,16 +1555,15 @@ object Analytics {
         spend.groupBy(col("sp").as("pc")).agg(count(lit(1)).as("cnt")),
         Seq(), (1 to 9).map(i => i / 10.0 -> s"d$i"))
       .select(array((1 to 9).map(i => col(s"d$i")): _*).as("bs"))
-    val dec = spend.crossJoin(broadcast(bounds))
+    // ≤10 rows, three consumers below (both self-join sides + the
+    // total) — materialized so the spend⋈percentile pipeline above
+    // runs once instead of three times (round 10 plan audit: 116
+    // Exchange nodes without it; guide §2.4 repeated-subtree)
+    val dec = Mat.once(spend.crossJoin(broadcast(bounds))
       .select(expr("1 + size(filter(bs, b -> sp > b))").cast("long").as("decile"),
         col("sp"))
       .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n_customers"), sum(col("sp")).as("spend_cents"))
-      // ≤10 rows, three consumers below (both self-join sides + the
-      // total) — materialized so the spend⋈percentile pipeline above
-      // runs once instead of three times (round 10 plan audit: 116
-      // Exchange nodes without it; guide §2.4 repeated-subtree)
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n_customers"), sum(col("sp")).as("spend_cents")))
     dec.as("a")
       .join(dec.select(col("decile").as("d2"), col("spend_cents").as("s2")).as("b"),
         col("b.d2") <= col("a.decile"))
@@ -2218,14 +2215,13 @@ object Analytics {
     */
   def q_risk_pooling(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val weekly = Tables.lineitem(spark, sf)
+    val weekly = Mat.once(Tables.lineitem(spark, sf)
       .join(broadcast(Tables.part(spark, sf).select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand").as("brand"),
         (datediff(date_trunc("week", col("l_shipdate")).cast("date"), epoch) / 7)
           .cast("long").as("wk"))
-      .agg(sum(col("l_quantity").cast("long")).as("u"))
-      .localCheckpoint()
+      .agg(sum(col("l_quantity").cast("long")).as("u")))
     val perBrand = weekly.groupBy(col("brand"))
       .agg(count(lit(1)).as("nw"), sum(col("u")).as("s"), sum(col("u") * col("u")).as("q"))
       .select(expr(
@@ -2334,7 +2330,7 @@ object Analytics {
       .groupBy(col("p_brand").as("brand"))
       .agg(sum(cents(col("l_extendedprice"))).as(s"r$y"),
         sum(col("l_quantity").cast("long")).as(s"q$y"))
-    val j = yr(1996).join(yr(1997), "brand").localCheckpoint()
+    val j = Mat.once(yr(1996).join(yr(1997), "brand"))
     val tot = j.agg(sum(col("q1996")).as("tq0"), sum(col("q1997")).as("tq1"))
     j.crossJoin(broadcast(tot))
       .select(
@@ -2458,25 +2454,23 @@ object Analytics {
       .select(col("user_id"), col("wk"),
         when(col("v") < 100000L, 0L).when(col("v") < 300000L, 1L)
           .when(col("v") < 600000L, 2L).otherwise(3L).as("tier"))
-    val trans = weekly.as("a")
+    val trans = Mat.once(weekly.as("a")
       .join(weekly.select(col("user_id").as("u2"), (col("wk") - 1).as("wk2"),
         col("tier").as("dst")).as("b"),
         col("user_id") === col("u2") && col("wk") === col("wk2"))
       .groupBy(col("tier").as("src"), col("dst"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     val rowTot = trans.groupBy(col("src")).agg(sum(col("c")).as("rt"))
     val states = trans.select(col("src").as("s")).unionByName(trans.select(col("dst").as("s")))
       .distinct()
     def step(pi: DataFrame): DataFrame =
-      states.join(
+      Mat.once(states.join(
         pi.join(rowTot.select(col("src").as("s"), col("rt")), "s")
           .join(trans.select(col("src").as("s"), col("dst"), col("c")), "s")
           .select(col("dst").as("s"), expr("(p * c) div rt").as("contrib"))
           .groupBy(col("s")).agg(sum(col("contrib")).as("pn")),
         Seq("s"), "left_outer")
-        .select(col("s"), coalesce(col("pn"), lit(0L)).as("p"))
-        .localCheckpoint()
+        .select(col("s"), coalesce(col("pn"), lit(0L)).as("p")))
     val n0 = states.agg(count(lit(1)).as("k"))
     val pi0 = states.crossJoin(broadcast(n0))
       .select(col("s"), expr("1000000000000 div k").as("p"))
@@ -2672,11 +2666,10 @@ object Analytics {
   def q_ljung_box(spark: SparkSession, sf: String): DataFrame = {
     import spark.implicits._
     val rev = monthlyRevenue(spark, sf)
-    val d1 = rev.as("a")
+    val d1 = Mat.once(rev.as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2") === col("m") + 1)
-      .select(col("m"), (col("rev2") - col("rev")).as("d"))
-      .localCheckpoint()
+      .select(col("m"), (col("rev2") - col("rev")).as("d")))
     val base = d1.agg(count(lit(1)).as("n"), sum(col("d")).as("sd"),
       sum(col("d").cast("double") * col("d").cast("double")).as("sdd"))
       .select(col("n"),
@@ -2685,15 +2678,14 @@ object Analytics {
           - (col("sd").cast("double") / col("n").cast("double"))
             * col("sd").cast("double")).as("ss"))
     val lags = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("lag")
-    val rho = d1.crossJoin(broadcast(lags)).as("a")
+    val rho = Mat.once(d1.crossJoin(broadcast(lags)).as("a")
       .join(d1.select(col("m").as("m2"), col("d").as("d2")).as("b"),
         col("m2") === col("m") + col("lag"))
       .crossJoin(broadcast(base))
       .groupBy(col("lag"), col("n"), col("ss"))
       .agg(sum((col("d").cast("double") - col("mu"))
         * (col("d2").cast("double") - col("mu"))).as("num"))
-      .select(col("lag"), col("n"), (col("num") / col("ss")).as("rho"))
-      .localCheckpoint()
+      .select(col("lag"), col("n"), (col("num") / col("ss")).as("rho")))
     rho.as("a")
       .join(rho.select(col("lag").as("lag2"), col("rho").as("rho2")).as("b"),
         col("lag2") <= col("a.lag"))
@@ -2725,11 +2717,10 @@ object Analytics {
             - col("st").cast("double") * col("st").cast("double"))).as("b"),
         (col("sy").cast("double") / col("n").cast("double")).as("ybar"),
         (col("st").cast("double") / col("n").cast("double")).as("tbar"))
-    val resid = rev.crossJoin(broadcast(fit))
+    val resid = Mat.once(rev.crossJoin(broadcast(fit))
       .select(col("m"), col("n"),
         (col("rev").cast("double") - col("ybar")
-          - col("b") * (col("m").cast("double") - col("tbar"))).as("e"))
-      .localCheckpoint()
+          - col("b") * (col("m").cast("double") - col("tbar"))).as("e")))
     val num = resid.as("a")
       .join(resid.select(col("m").as("m2"), col("e").as("e2")).as("b"),
         col("m2") === col("m") + 1)
@@ -2879,12 +2870,11 @@ object Analytics {
     * H = (12/(N(N+1)) ΣR_g²/n_g − 3(N+1)) / (1 − Σ(t³−t)/(N³−N)).
     */
   def q_kruskal_wallis(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderpriority").as("g"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 100000 AS BIGINT)")
           .as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
     val ranks = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 32L)
       .select(col("v"), col("t"),
@@ -2892,11 +2882,10 @@ object Analytics {
           + (col("t").cast("double") + lit(1.0)) / lit(2.0)).as("midrank"))
     val tot = vals.agg(sum(col("t")).as("nn"),
       sum(col("t") * col("t") * col("t") - col("t")).as("ties"))
-    val grp = gv.join(ranks, "v")
+    val grp = Mat.once(gv.join(ranks, "v")
       .groupBy(col("g"))
       .agg(sum(col("cnt")).as("n_g"),
-        sum(col("cnt").cast("double") * col("midrank")).as("r_g"))
-      .localCheckpoint()
+        sum(col("cnt").cast("double") * col("midrank")).as("r_g")))
     val h = grp.crossJoin(broadcast(tot))
       .groupBy(col("nn"), col("ties"))
       .agg(sum(col("r_g") * col("r_g") / col("n_g").cast("double")).as("srr"))
@@ -2921,11 +2910,10 @@ object Analytics {
     * Q = 12/(nk(k+1))·ΣR_j² − 3n(k+1) vs χ²₄ = 9.487729.
     */
   def q_friedman_test(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.orders(spark, sf)
+    val cell = Mat.once(Tables.orders(spark, sf)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"), col("o_orderpriority").as("g"))
-      .agg(sum(cents(col("o_totalprice"))).as("s"), count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(sum(cents(col("o_totalprice"))).as("s"), count(lit(1)).as("c")))
     val full = cell.groupBy(col("m")).agg(count(lit(1)).as("k"))
       .filter(col("k") === 5).select(col("m"))
     val blocks = cell.join(broadcast(full), "m")
@@ -2936,8 +2924,8 @@ object Analytics {
       .groupBy(col("a.m").as("m"), col("a.g").as("g"))
       .agg((lit(1L) + sum(when(col("s2") * col("a.c") > col("a.s") * col("c2"), 1L)
         .otherwise(0L))).as("rank"))
-    val rj = ranked.groupBy(col("g")).agg(sum(col("rank")).as("r_sum"),
-      count(lit(1)).as("n_blocks")).localCheckpoint()
+    val rj = Mat.once(ranked.groupBy(col("g")).agg(sum(col("rank")).as("r_sum"),
+      count(lit(1)).as("n_blocks")))
     val q = rj.agg(max(col("n_blocks")).as("n"),
         sum(col("r_sum") * col("r_sum")).as("srr"))
       .select(col("n"),
@@ -2959,7 +2947,7 @@ object Analytics {
     * z = (W⁺ − n(n+1)/4)/√(n(n+1)(2n+1)/24).
     */
   def q_wilcoxon_signed_rank(spark: SparkSession, sf: String): DataFrame = {
-    val d = Tables.orders(spark, sf)
+    val d = Mat.once(Tables.orders(spark, sf)
       .join(Tables.customer(spark, sf),
         col("o_custkey") === col("c_custkey"))
       .filter(year(col("o_orderdate")).isin(1996, 1997))
@@ -2969,8 +2957,7 @@ object Analytics {
         - sum(when(year(col("o_orderdate")) === 1996, cents(col("o_totalprice")))
           .otherwise(0L))).as("d"))
       .filter(col("d") =!= 0L)
-      .select(col("nation"), col("d"), abs(col("d")).as("ad"))
-      .localCheckpoint()
+      .select(col("nation"), col("d"), abs(col("d")).as("ad")))
     val ranked = d.as("a")
       .join(d.select(col("nation").as("n2"), col("ad").as("ad2")).as("b"),
         col("n2") =!= col("a.nation"), "left")
@@ -3023,13 +3010,12 @@ object Analytics {
     */
   def q_rsi_indicator(spark: SparkSession, sf: String): DataFrame = {
     val rev = dailyRevenue(spark, sf)
-    val chg = rev.as("a")
+    val chg = Mat.once(rev.as("a")
       .join(rev.select(col("d").as("d2"), col("rev").as("rev2")).as("b"),
         col("d2") === col("d") + 1)
       .select(col("d2").as("d"),
         greatest(col("rev2") - col("rev"), lit(0L)).as("g"),
-        greatest(col("rev") - col("rev2"), lit(0L)).as("l"))
-      .localCheckpoint()
+        greatest(col("rev") - col("rev2"), lit(0L)).as("l")))
     chg.as("a")
       .join(chg.select(col("d").as("d2"), col("g").as("g2"), col("l").as("l2")).as("b"),
         col("d2").between(col("a.d") - 13, col("a.d")))
@@ -3054,12 +3040,11 @@ object Analytics {
       .groupBy(datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
         .cast("long").as("d"), year(col("o_orderdate")).cast("long").as("y"))
       .agg(sum(cents(col("o_totalprice"))).as("rev"))
-    val chg = rev.as("a")
+    val chg = Mat.once(rev.as("a")
       .join(rev.select(col("d").as("d2"), col("y").as("y2"),
         col("rev").as("rev2")).as("b"),
         col("d2") === col("d") + 1)
-      .select(col("y2").as("y"), (col("rev2") - col("rev")).as("diff"))
-      .localCheckpoint()
+      .select(col("y2").as("y"), (col("rev2") - col("rev")).as("diff")))
     val vals = chg.groupBy(col("y"), col("diff")).agg(count(lit(1)).as("cnt"))
     val stats = chg.groupBy(col("y")).agg(count(lit(1)).as("n"))
       .select(col("y"), col("n"), expr("CAST((n + 19) div 20 AS BIGINT)").as("k"))
@@ -3089,7 +3074,7 @@ object Analytics {
     * Σ(nᵢ−1)ln(Sᵢ²)]/C with the standard small-sample correction C.
     */
   def q_bartlett_test(spark: SparkSession, sf: String): DataFrame = {
-    val g = Tables.orders(spark, sf)
+    val g = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderpriority").as("g"),
         cents(col("o_totalprice")).as("x"))
       .groupBy(col("g"))
@@ -3098,8 +3083,7 @@ object Analytics {
       .select(col("g"), col("n"),
         ((col("sxx") - (col("sx").cast("double") * col("sx").cast("double"))
           / col("n").cast("double"))
-          / (col("n").cast("double") - lit(1.0))).as("s2"))
-      .localCheckpoint()
+          / (col("n").cast("double") - lit(1.0))).as("s2")))
     val tot = g.agg(count(lit(1)).as("k"), sum(col("n")).as("nn"),
         sum((col("n").cast("double") - lit(1.0)) * col("s2")).as("pooled_num"),
         sum((col("n").cast("double") - lit(1.0)) * log(col("s2"))).as("sum_nl"),
@@ -3135,8 +3119,7 @@ object Analytics {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
         .agg(sum(cents(col("o_totalprice"))).as(out))
-    val ab = seg("BUILDING", "ya").join(seg("AUTOMOBILE", "yb"), "m")
-      .localCheckpoint()
+    val ab = Mat.once(seg("BUILDING", "ya").join(seg("AUTOMOBILE", "yb"), "m"))
     val fit = ab.agg(count(lit(1)).as("n"), sum(col("ya")).as("sa"),
         sum(col("yb")).as("sb"),
         sum(col("ya").cast("double") * col("yb").cast("double")).as("sab"),
@@ -3148,11 +3131,10 @@ object Analytics {
             - col("sb").cast("double") * col("sb").cast("double"))).as("beta"),
         (col("sa").cast("double") / col("n").cast("double")).as("abar"),
         (col("sb").cast("double") / col("n").cast("double")).as("bbar"))
-    val resid = ab.crossJoin(broadcast(fit))
+    val resid = Mat.once(ab.crossJoin(broadcast(fit))
       .select(col("m"), col("n"), col("beta"),
         (col("ya").cast("double") - col("abar")
-          - col("beta") * (col("yb").cast("double") - col("bbar"))).as("e"))
-      .localCheckpoint()
+          - col("beta") * (col("yb").cast("double") - col("bbar"))).as("e")))
     val num = resid.as("a")
       .join(resid.select(col("m").as("m2"), col("e").as("e2")).as("b"),
         col("m2") === col("m") + 1)
@@ -3173,11 +3155,10 @@ object Analytics {
     * join — exact integer products — γ = (C−D)/(C+D).
     */
   def q_goodman_kruskal_gamma(spark: SparkSession, sf: String): DataFrame = {
-    val cells = Tables.lineitem(spark, sf)
+    val cells = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(col("l_quantity").cast("long").as("x"),
         pct(col("l_discount")).as("y"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     cells.as("a")
       .join(cells.select(col("x").as("x2"), col("y").as("y2"),
         col("cnt").as("cnt2")).as("b"),
@@ -3280,7 +3261,7 @@ object Analytics {
     * companion to the Theil–Sen slope already in §2.
     */
   def q_mann_kendall(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val s = rev.as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2") > col("m"))
@@ -3312,7 +3293,7 @@ object Analytics {
     * MAE/mean and RMSE/mean.
     */
   def q_ses_forecast(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val pred = rev.as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2").between(col("m") - 12, col("m") - 1))
@@ -3362,12 +3343,11 @@ object Analytics {
     * the single χ² epilogue, so the reject flag is bit-safe.
     */
   def q_moods_median_test(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderpriority").as("g"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
           .as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
     val tot = vals.agg(sum(col("t")).as("nn"))
       .select(col("nn"), expr("CAST((nn + 1) div 2 AS BIGINT)").as("k"))
@@ -3375,14 +3355,13 @@ object Analytics {
       .crossJoin(broadcast(tot))
       .filter(col("cum") >= col("k"))
       .agg(min(col("v")).as("med"))
-    val grp = gv.crossJoin(broadcast(med))
+    val grp = Mat.once(gv.crossJoin(broadcast(med))
       .groupBy(col("g"))
       .agg(sum(when(col("v") > col("med"), col("cnt")).otherwise(0L)).as("above"),
-        sum(when(col("v") <= col("med"), col("cnt")).otherwise(0L)).as("notabove"))
-      .localCheckpoint()
+        sum(when(col("v") <= col("med"), col("cnt")).otherwise(0L)).as("notabove")))
     val marg = grp.agg(sum(col("above")).as("ta"), sum(col("notabove")).as("tb"))
       .select(col("ta"), col("tb"), (col("ta") + col("tb")).as("nn"))
-    val chi = grp.crossJoin(broadcast(marg))
+    val chi = Mat.once(grp.crossJoin(broadcast(marg))
       .select(col("g"), col("above"), col("notabove"),
         ((col("above").cast("double")
           - col("ta").cast("double") * (col("above") + col("notabove")).cast("double")
@@ -3399,8 +3378,7 @@ object Analytics {
               - col("tb").cast("double") * (col("above") + col("notabove")).cast("double")
                 / col("nn").cast("double"))
             / (col("tb").cast("double") * (col("above") + col("notabove")).cast("double")
-              / col("nn").cast("double"))).as("contrib"))
-      .localCheckpoint()
+              / col("nn").cast("double"))).as("contrib")))
     val stat = chi.agg(sum(col("contrib")).as("chi2"))
     chi.crossJoin(broadcast(stat))
       .select(col("g").as("priority"), col("above"), col("notabove"),
@@ -3417,12 +3395,11 @@ object Analytics {
     * E[T] = m(N²−1)/12, Var[T] = mn(N+1)(N²−4)/180.
     */
   def q_mood_dispersion(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .select((col("o_custkey") % 2).cast("long").as("g"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
           .as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
     val mid = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 256L)
       .select(col("v"),
@@ -3463,9 +3440,8 @@ object Analytics {
       .select(col("rev").as("ra"))
     val b = rev.filter(col("m").between(1997L * 12 + 1, 1997L * 12 + 12))
       .select(col("rev").as("rb"))
-    val w = a.crossJoin(b).select((col("rb") - col("ra")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val w = Mat.once(a.crossJoin(b).select((col("rb") - col("ra")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
     val tot = w.agg(sum(col("cnt")).as("np"))
       .select(col("np"), expr("CAST((np + 1) div 2 AS BIGINT)").as("k"))
     // auto bandWidth: the cent-difference lattice is sparse and its range
@@ -3490,7 +3466,7 @@ object Analytics {
     * integer, so the result is bit-identical to the sign-sum form.
     */
   def q_pettitt_test(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val lat = rev.groupBy(col("rev").as("rv")).agg(count(lit(1)).as("tcnt"))
     // auto bandWidth (was a degenerate 1e8 single band): ≈√V bands at any SF
     val twomid = BandedScan.cumSumAuto(lat, Seq.empty, "rv", "tcnt", "ci")
@@ -3498,9 +3474,8 @@ object Analytics {
         (lit(2L) * (col("ci") - col("tcnt")) + col("tcnt") + 1L).as("tm"))
     val byMonth = rev.join(twomid, col("rev") === col("rv"))
       .select(col("m"), col("tm"), lit(1L).as("one"))
-    val u = BandedScan.cumSums(byMonth, Seq.empty, "m",
-        Seq("tm" -> "w2", "one" -> "tpos"), bandWidth = 16L)
-      .localCheckpoint()
+    val u = Mat.once(BandedScan.cumSums(byMonth, Seq.empty, "m",
+        Seq("tm" -> "w2", "one" -> "tpos"), bandWidth = 16L))
     val nm = rev.agg(count(lit(1)).as("nm"))
     val ut = u.crossJoin(broadcast(nm))
       .filter(col("tpos") < col("nm"))  // U_n ≡ 0: the empty cut, as before
@@ -3528,12 +3503,11 @@ object Analytics {
     * of the O(V²) all-pairs cumulative theta join).
     */
   def q_bowley_skewness(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderpriority").as("g"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
           .as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val stats = gv.groupBy(col("g")).agg(sum(col("cnt")).as("n"))
       .select(col("g"), col("n"),
         expr("CAST((n + 3) div 4 AS BIGINT)").as("k1"),
@@ -3560,12 +3534,11 @@ object Analytics {
     * the Bonferroni-corrected 2.807034 (10 comparisons).
     */
   def q_dunn_posthoc(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderpriority").as("g"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 100000 AS BIGINT)")
           .as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
     val mid = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 32L)
       .select(col("v"),
@@ -3573,11 +3546,10 @@ object Analytics {
           + (col("t").cast("double") + lit(1.0)) / lit(2.0)).as("midrank"))
     val tot = vals.agg(sum(col("t")).as("nn"),
       sum(col("t") * col("t") * col("t") - col("t")).as("ties"))
-    val grp = gv.join(mid, "v")
+    val grp = Mat.once(gv.join(mid, "v")
       .groupBy(col("g"))
       .agg(sum(col("cnt")).as("n_g"),
-        sum(col("cnt").cast("double") * col("midrank")).as("r_g"))
-      .localCheckpoint()
+        sum(col("cnt").cast("double") * col("midrank")).as("r_g")))
     grp.as("a")
       .join(grp.select(col("g").as("g2"), col("n_g").as("n_g2"),
         col("r_g").as("r_g2")).as("b"), col("a.g") < col("g2"))
@@ -3625,7 +3597,7 @@ object Analytics {
     * (pre-rounded literal).
     */
   def q_permutation_entropy(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val tri = rev.as("a")
       .join(rev.select(col("m").as("m1"), col("rev").as("rev1")).as("b"),
         col("m1") === col("m") + 1)
@@ -3634,8 +3606,7 @@ object Analytics {
       .select((when(col("rev1") > col("rev"), 4L).otherwise(0L)
         + when(col("rev2") > col("rev"), 2L).otherwise(0L)
         + when(col("rev2") > col("rev1"), 1L).otherwise(0L)).as("code"))
-    val dist = tri.groupBy(col("code")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val dist = Mat.once(tri.groupBy(col("code")).agg(count(lit(1)).as("cnt")))
     val tot = dist.agg(sum(col("cnt")).as("n"))
     val h = dist.crossJoin(broadcast(tot))
       .agg(sum(-(col("cnt").cast("double") / col("n").cast("double"))
@@ -3656,7 +3627,7 @@ object Analytics {
     */
   def q_sample_entropy(spark: SparkSession, sf: String): DataFrame = {
     val rev = monthlyRevenue(spark, sf)
-    val tpl = rev.as("a")
+    val tpl = Mat.once(rev.as("a")
       .join(rev.select(col("m").as("m1"), col("rev").as("rev1")).as("b"),
         col("m1") === col("m") + 1)
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("c"),
@@ -3664,8 +3635,7 @@ object Analytics {
       .select(col("m"),
         expr("CAST(rev div 100000000 AS BIGINT)").as("b0"),
         expr("CAST(rev1 div 100000000 AS BIGINT)").as("b1"),
-        expr("CAST(rev2 div 100000000 AS BIGINT)").as("b2"))
-      .localCheckpoint()
+        expr("CAST(rev2 div 100000000 AS BIGINT)").as("b2")))
     tpl.as("a")
       .join(tpl.select(col("m").as("mj"), col("b0").as("c0"),
         col("b1").as("c1"), col("b2").as("c2")).as("b"),
@@ -3688,7 +3658,7 @@ object Analytics {
     * z = (T−E)/√Var — all integer until the single epilogue.
     */
   def q_turning_points(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val tp = rev.as("a")
       .join(rev.select(col("m").as("m1"), col("rev").as("rev1")).as("b"),
         col("m1") === col("m") + 1)
@@ -3721,13 +3691,12 @@ object Analytics {
             - col("st").cast("double") * col("st").cast("double"))).as("b"),
         (col("sy").cast("double") / col("n").cast("double")).as("ybar"),
         (col("st").cast("double") / col("n").cast("double")).as("tbar"))
-    val u = rev.crossJoin(broadcast(fit))
+    val u = Mat.once(rev.crossJoin(broadcast(fit))
       .select(col("m"),
         ((col("rev").cast("double") - col("ybar")
           - col("b") * (col("m").cast("double") - col("tbar")))
           * (col("rev").cast("double") - col("ybar")
-            - col("b") * (col("m").cast("double") - col("tbar")))).as("u"))
-      .localCheckpoint()
+            - col("b") * (col("m").cast("double") - col("tbar")))).as("u")))
     u.as("a")
       .join(u.select(col("m").as("m2"), col("u").as("ul")).as("b"),
         col("m2") === col("m") - 1)
@@ -3755,7 +3724,7 @@ object Analytics {
     import spark.implicits._
     val rev = monthlyRevenue(spark, sf)
     val lags = Seq(1L, 2L, 4L).toDF("k")
-    val cl = rev.crossJoin(broadcast(lags)).as("a")
+    val cl = Mat.once(rev.crossJoin(broadcast(lags)).as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2") === col("m") + col("k"))
       .groupBy(col("k"))
@@ -3766,8 +3735,7 @@ object Analytics {
       .select(col("k"), col("np"), col("clen"),
         when(col("k") === 1L, lit(0.0)).when(col("k") === 2L, lit(-0.6931472))
           .otherwise(lit(-1.3862944)).as("x"),
-        log(col("nl")).as("y"), col("nl"))
-      .localCheckpoint()
+        log(col("nl")).as("y"), col("nl")))
     val slope = cl.agg(count(lit(1)).as("nk"), sum(col("x")).as("sx"),
         sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("x")).as("sxx"))
@@ -3788,8 +3756,7 @@ object Analytics {
     * bit-safe).
     */
   def q_local_clustering(spark: SparkSession, sf: String): DataFrame = {
-    val edges = support2Edges(spark, sf)
-      .localCheckpoint()
+    val edges = Mat.once(support2Edges(spark, sf))
     val deg = edges.select(col("u").as("p")).union(edges.select(col("v").as("p")))
       .groupBy(col("p")).agg(count(lit(1)).as("d"))
     val triNodes = edges.as("e1")
@@ -3818,10 +3785,9 @@ object Analytics {
     */
   def q_repeat_purchase_curve(spark: SparkSession, sf: String): DataFrame = {
     import spark.implicits._
-    val pc = Tables.orders(spark, sf)
+    val pc = Mat.once(Tables.orders(spark, sf)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("k_c"))
-      .groupBy(col("k_c")).agg(count(lit(1)).as("nc"))
-      .localCheckpoint()
+      .groupBy(col("k_c")).agg(count(lit(1)).as("nc")))
     val tot = pc.agg(sum(col("nc")).as("n_cust"))
     val ks = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L).toDF("k")
     ks.join(pc, col("k_c") >= col("k"))
@@ -3866,14 +3832,13 @@ object Analytics {
   def q_littles_law(spark: SparkSession, sf: String): DataFrame = {
     val ship = Tables.lineitem(spark, sf)
       .groupBy(col("l_orderkey")).agg(min(col("l_shipdate")).as("sd"))
-    val ord = Tables.orders(spark, sf)
+    val ord = Mat.once(Tables.orders(spark, sf)
       .join(ship, col("o_orderkey") === col("l_orderkey"))
       .select(datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
         .cast("long").as("od"),
         datediff(col("sd"), lit("1992-01-01").cast("date")).cast("long").as("sdd"))
-      .filter(col("sdd") >= col("od"))
-      .localCheckpoint()
-    val days = ord.select(col("od").as("d")).distinct().localCheckpoint()
+      .filter(col("sdd") >= col("od")))
+    val days = Mat.once(ord.select(col("od").as("d")).distinct())
     val base = ord.agg(count(lit(1)).as("n_orders"),
       sum(col("sdd") - col("od")).as("sdur"))
     val span = days.agg(count(lit(1)).as("n_days"))
@@ -3967,22 +3932,20 @@ object Analytics {
     * largest/smallest-k boundary splitting via cumulative value counts.
     */
   def q_palma_ratio(spark: SparkSession, sf: String): DataFrame = {
-    val vals = Tables.orders(spark, sf)
+    val vals = Mat.once(Tables.orders(spark, sf)
       .groupBy(col("o_custkey"))
       .agg(sum(cents(col("o_totalprice"))).as("xc"))
       .select(expr("CAST(xc div 10000 AS BIGINT)").as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("t"))
-      .localCheckpoint()
+      .groupBy(col("v")).agg(count(lit(1)).as("t")))
     val tot = vals.agg(sum(col("t")).as("n"), sum(col("v") * col("t")).as("mass"))
       .select(col("n"), col("mass"),
         expr("CAST((4 * n + 9) div 10 AS BIGINT)").as("k40"),
         expr("CAST((9 * n + 9) div 10 AS BIGINT)").as("k90"))
-    val cum = BandedScan.cumSums(vals.withColumn("vt", col("v") * col("t")),
+    val cum = Mat.once(BandedScan.cumSums(vals.withColumn("vt", col("v") * col("t")),
         Seq.empty, "v", Seq("t" -> "ct", "vt" -> "cmass"), bandWidth = 1024L)
       .select(col("v"), col("t"), (col("ct") - col("t")).as("cb"),
         (col("cmass") - col("vt")).as("mb"))
-      .crossJoin(broadcast(tot))
-      .localCheckpoint()
+      .crossJoin(broadcast(tot)))
     val b40 = cum.filter(col("cb") < col("k40") && col("cb") + col("t") >= col("k40"))
       .select(col("v").as("v40"),
         (col("mb") + (col("k40") - col("cb")) * col("v")).as("bottom40_mass"))
@@ -4002,8 +3965,7 @@ object Analytics {
     */
   def q_rich_club(spark: SparkSession, sf: String): DataFrame = {
     import spark.implicits._
-    val edges = support2Edges(spark, sf)
-      .localCheckpoint()
+    val edges = Mat.once(support2Edges(spark, sf))
     val deg = edges.select(col("u").as("p")).union(edges.select(col("v").as("p")))
       .groupBy(col("p")).agg(count(lit(1)).as("d"))
     val ks = Seq(2L, 4L, 8L).toDF("k")
@@ -4113,12 +4075,11 @@ object Analytics {
       .groupBy(datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
         .cast("long").as("d"), year(col("o_orderdate")).cast("long").as("y"))
       .agg(sum(cents(col("o_totalprice"))).as("rev"))
-    val chg = rev.as("a")
+    val chg = Mat.once(rev.as("a")
       .join(rev.select(col("d").as("d2"), col("y").as("y2"),
         col("rev").as("rev2")).as("b"),
         col("d2") === col("d") + 1)
-      .select(col("y2").as("y"), (col("rev2") - col("rev")).as("diff"))
-      .localCheckpoint()
+      .select(col("y2").as("y"), (col("rev2") - col("rev")).as("diff")))
     val vals = chg.groupBy(col("y"), col("diff")).agg(count(lit(1)).as("cnt"))
     val stats = chg.groupBy(col("y")).agg(count(lit(1)).as("n"))
       .select(col("y"), col("n"), expr("CAST((n + 19) div 20 AS BIGINT)").as("k"))
@@ -4156,11 +4117,10 @@ object Analytics {
     * cell.
     */
   def q_g_test(spark: SparkSession, sf: String): DataFrame = {
-    val cells = Tables.lineitem(spark, sf)
+    val cells = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(col("l_returnflag").as("r"),
         (col("l_quantity") > 25).cast("long").as("b"))
-      .agg(count(lit(1)).as("o"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("o")))
     val rm = cells.groupBy(col("r")).agg(sum(col("o")).as("ro"))
     val cm = cells.groupBy(col("b")).agg(sum(col("o")).as("co"))
     val nn = cells.agg(sum(col("o")).as("nn"))
@@ -4204,13 +4164,12 @@ object Analytics {
     * cell-level cross join — exact integer products throughout.
     */
   def q_cliff_delta(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
       .groupBy(col("o_orderpriority").as("g"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
           .as("v"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     gv.filter(col("g") === "1-URGENT").select(col("v").as("v1"), col("cnt").as("c1"))
       .crossJoin(gv.filter(col("g") === "5-LOW")
         .select(col("v").as("v2"), col("cnt").as("c2")))
@@ -4263,11 +4222,10 @@ object Analytics {
     * Friedman competition ranks, z = (L − nk(k+1)²/4)/√(nk²(k+1)(k²−1)/144).
     */
   def q_page_trend(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.orders(spark, sf)
+    val cell = Mat.once(Tables.orders(spark, sf)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"), col("o_orderpriority").as("g"))
-      .agg(sum(cents(col("o_totalprice"))).as("s"), count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(sum(cents(col("o_totalprice"))).as("s"), count(lit(1)).as("c")))
     val full = cell.groupBy(col("m")).agg(count(lit(1)).as("k"))
       .filter(col("k") === 5).select(col("m"))
     val blocks = cell.join(broadcast(full), "m")
@@ -4335,22 +4293,20 @@ object Analytics {
     * bounded 4× expand + a banded cumulative scan.
     */
   def q_jonckheere(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .groupBy(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("j"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
           .as("v"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     val targets = gv.sparkSession.range(2, 6).select(col("id").as("j2"))
     val lower = gv.crossJoin(broadcast(targets)).filter(col("j") < col("j2"))
       .groupBy(col("j2"), col("v")).agg(sum(col("cnt")).as("dcnt"))
     val query = gv.filter(col("j") >= 2)
       .select(col("j").as("j2"), col("v"), col("cnt").as("qcnt"))
-    val lat = lower.join(query, Seq("j2", "v"), "full_outer")
+    val lat = Mat.once(lower.join(query, Seq("j2", "v"), "full_outer")
       .select(col("j2"), col("v"),
         coalesce(col("dcnt"), lit(0L)).as("dcnt"),
-        coalesce(col("qcnt"), lit(0L)).as("qcnt"))
-      .localCheckpoint()
+        coalesce(col("qcnt"), lit(0L)).as("qcnt")))
     val pairs = BandedScan.cumSumAuto(lat, Seq("j2"), "v", "dcnt", "ci")
       .agg(sum(col("qcnt") * (col("ci") - col("dcnt"))).as("jgt"),
         sum(col("qcnt") * col("dcnt")).as("jeq"))
@@ -4464,9 +4420,8 @@ object Analytics {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
         .agg(sum(cents(col("o_totalprice"))).as(out))
-    val d = seg("BUILDING", "ya").join(seg("AUTOMOBILE", "yb"), "m")
-      .select(col("m"), (col("ya") - col("yb")).as("d"))
-      .localCheckpoint()
+    val d = Mat.once(seg("BUILDING", "ya").join(seg("AUTOMOBILE", "yb"), "m")
+      .select(col("m"), (col("ya") - col("yb")).as("d")))
     val st = d.agg(count(lit(1)).as("n"), sum(col("d")).as("sd"),
         sum(col("d").cast("double") * col("d").cast("double")).as("sdd"))
       .select(col("n"),
@@ -4495,21 +4450,20 @@ object Analytics {
     * (inliers desc, m₁, m₂) argmax — no float enters the vote.
     */
   def q_ransac_trend(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val tol = rev.agg(sum(col("rev")).as("s"), count(lit(1)).as("n"))
       .select(expr("CAST(s div (10 * n) AS BIGINT)").as("tol"))
     val cand = rev.as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2") > col("m"))
       .select(col("m").as("m1"), col("rev").as("y1"), col("m2"), col("rev2").as("y2"))
-    val votes = cand.crossJoin(broadcast(tol)).as("c")
+    val votes = Mat.once(cand.crossJoin(broadcast(tol)).as("c")
       .join(rev.select(col("m").as("mm"), col("rev").as("yy")).as("p"),
         abs((col("yy") - col("y1")) * (col("m2") - col("m1"))
           - (col("y2") - col("y1")) * (col("mm") - col("m1")))
           <= col("tol") * (col("m2") - col("m1")))
       .groupBy(col("m1"), col("m2"), col("y1"), col("y2"))
-      .agg(count(lit(1)).as("inliers"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("inliers")))
     val best = votes.agg(max(col("inliers")).as("best"))
     val win = votes.crossJoin(broadcast(best))
       .filter(col("inliers") === col("best"))
@@ -4534,9 +4488,8 @@ object Analytics {
     */
   def q_katz_centrality(spark: SparkSession, sf: String): DataFrame = {
     val und = support2Edges(spark, sf)
-    val dir = und.select(col("u"), col("v"))
-      .union(und.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+    val dir = Mat.once(und.select(col("u"), col("v"))
+      .union(und.select(col("v").as("u"), col("u").as("v"))))
     val deg = dir.groupBy(col("u")).agg(count(lit(1)).as("d"))
     val s2 = dir.join(deg.select(col("u").as("v"), col("d").as("dv")), "v")
       .groupBy(col("u")).agg(sum(col("dv")).as("s2"))
@@ -4601,12 +4554,11 @@ object Analytics {
         datediff(col("d1"), col("d0")).cast("long").as("t"),
         when(col("d1") <= lit("2024-01-23").cast("date"), 1L).otherwise(0L)
           .as("churned"))
-    val byT = obs.groupBy(col("t"))
+    val byT = Mat.once(obs.groupBy(col("t"))
       .agg(count(lit(1)).as("n_at"),
         sum(when(col("g") === 0, 1L).otherwise(0L)).as("n_at1"),
         sum(col("churned")).as("d"),
-        sum(when(col("g") === 0, col("churned")).otherwise(0L)).as("d1"))
-      .localCheckpoint()
+        sum(when(col("g") === 0, col("churned")).otherwise(0L)).as("d1")))
     val risk = byT.as("a")
       .join(byT.select(col("t").as("t2"), col("n_at").as("na2"),
         col("n_at1").as("na12")).as("b"), col("t2") >= col("a.t"))
@@ -4644,12 +4596,11 @@ object Analytics {
           .as("churned"))
     val byT = obs.groupBy(col("t"))
       .agg(count(lit(1)).as("n_at"), sum(col("churned")).as("d"))
-    val risk = byT.as("a")
+    val risk = Mat.once(byT.as("a")
       .join(byT.select(col("t").as("t2"), col("n_at").as("na2")).as("b"),
         col("t2") >= col("a.t"))
       .groupBy(col("a.t").as("t"), col("a.n_at").as("n_at"), col("a.d").as("d"))
-      .agg(sum(col("na2")).as("nr"))
-      .localCheckpoint()
+      .agg(sum(col("na2")).as("nr")))
     risk.as("a")
       .join(risk.select(col("t").as("t2"), col("d").as("d2"),
         col("nr").as("nr2")).as("b"), col("t2") <= col("a.t"))
@@ -4669,19 +4620,17 @@ object Analytics {
     * t = (x̄ₜ₁−x̄ₜ₂)/√(d₁+d₂) with dᵢ = s²wᵢ(nᵢ−1)/(hᵢ(hᵢ−1)).
     */
   def q_yuen_ttest(spark: SparkSession, sf: String): DataFrame = {
-    val gv = Tables.orders(spark, sf)
+    val gv = Mat.once(Tables.orders(spark, sf)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
       .groupBy(col("o_orderpriority").as("g"),
         expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
           .as("v"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     val stats = gv.groupBy(col("g")).agg(sum(col("cnt")).as("n"))
       .select(col("g"), col("n"), expr("CAST(n div 5 AS BIGINT)").as("tr"))
-    val cum = BandedScan.cumSum(gv, Seq("g"), "v", "cnt", "ci", bandWidth = 256L)
+    val cum = Mat.once(BandedScan.cumSum(gv, Seq("g"), "v", "cnt", "ci", bandWidth = 256L)
       .withColumn("cb", col("ci") - col("cnt")).drop("ci")
-      .join(broadcast(stats), "g")
-      .localCheckpoint()
+      .join(broadcast(stats), "g"))
     // per-bin kept mass inside ranks (tr, n-tr]: clip the bin's rank span
     val kept = cum.select(col("g"), col("v"), col("n"), col("tr"),
         (least(col("cb") + col("cnt"), col("n") - col("tr"))
@@ -4695,7 +4644,7 @@ object Analytics {
       .agg(sum(col("keep") * col("v")).as("tsum"),
         sum(col("keep") * col("v") * col("v")).as("tss"),
         sum(col("keep")).as("h"))
-    val agg = core.join(bounds, "g")
+    val agg = Mat.once(core.join(bounds, "g")
       .select(col("g"), col("n"), col("tr"), col("h"),
         (col("tsum").cast("double") / col("h").cast("double")).as("tmean"),
         ((col("tss") + col("tr") * col("vlo") * col("vlo")
@@ -4709,8 +4658,7 @@ object Analytics {
         (col("wvar") * col("n").cast("double") / (col("n").cast("double") - lit(1.0))
           * (col("n").cast("double") - lit(1.0))
           / (col("h").cast("double") * (col("h").cast("double") - lit(1.0))))
-          .as("dterm"))
-      .localCheckpoint()
+          .as("dterm")))
     val a = agg.filter(col("g") === "1-URGENT")
       .select(col("n").as("n1"), col("h").as("h1"), col("tmean").as("tm1"),
         col("dterm").as("d1"))
@@ -4733,13 +4681,12 @@ object Analytics {
     * every boundary evaluated on exact-derived values.
     */
   def q_abc_xyz_matrix(spark: SparkSession, sf: String): DataFrame = {
-    val li = Tables.lineitem(spark, sf)
+    val li = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_partkey").as("p"),
         (year(col("l_shipdate")) * 12 + month(col("l_shipdate")))
           .cast("long").as("m"),
         cents(col("l_extendedprice")).as("rev"),
-        col("l_quantity").cast("long").as("q"))
-      .localCheckpoint()
+        col("l_quantity").cast("long").as("q")))
     val part = li.groupBy(col("p"))
       .agg(expr("CAST(SUM(rev) div 10000 AS BIGINT)").as("rv"))
     val pm = li.groupBy(col("p"), col("m")).agg(sum(col("q")).as("qm"))
@@ -4751,7 +4698,7 @@ object Analytics {
           - (col("sq").cast("double") / col("nm").cast("double"))
             * (col("sq").cast("double") / col("nm").cast("double")))
           / (col("sq").cast("double") / col("nm").cast("double"))).as("cv"))
-    val vals = part.groupBy(col("rv")).agg(count(lit(1)).as("t")).localCheckpoint()
+    val vals = Mat.once(part.groupBy(col("rv")).agg(count(lit(1)).as("t")))
     val tot = vals.agg(sum(col("t")).as("n"))
       .select(col("n"), expr("CAST((4 * n + 4) div 5 AS BIGINT)").as("k80"),
         expr("CAST((19 * n + 19) div 20 AS BIGINT)").as("k95"))
@@ -4786,18 +4733,17 @@ object Analytics {
     * 2·|d3| — an exact integer ranking.
     */
   def q_harmonic_centrality(spark: SparkSession, sf: String): DataFrame = {
-    val dir = copurchaseDir(spark, sf).localCheckpoint()
+    val dir = Mat.once(copurchaseDir(spark, sf))
     val deg = dir.groupBy(col("u")).agg(count(lit(1)).as("d"))
     val seeds = deg.orderBy(col("d").desc, col("u").asc).limit(100)
       .select(col("u").as("s0"))
-    val d1 = seeds.join(dir, col("s0") === col("u"))
-      .select(col("s0"), col("v").as("w")).localCheckpoint()
+    val d1 = Mat.once(seeds.join(dir, col("s0") === col("u"))
+      .select(col("s0"), col("v").as("w")))
     val r2 = d1.join(dir, col("w") === col("u"))
       .select(col("s0"), col("v").as("w")).distinct()
       .filter(col("w") =!= col("s0"))
-    val d2 = r2.join(d1.select(col("s0"), col("w"), lit(1).as("hit")),
-        Seq("s0", "w"), "left_anti")
-      .localCheckpoint()
+    val d2 = Mat.once(r2.join(d1.select(col("s0"), col("w"), lit(1).as("hit")),
+        Seq("s0", "w"), "left_anti"))
     val r3 = d2.join(dir, col("w") === col("u"))
       .select(col("s0"), col("v").as("w")).distinct()
       .filter(col("w") =!= col("s0"))
@@ -4825,12 +4771,12 @@ object Analytics {
     * stable across engines.
     */
   def q_burt_constraint(spark: SparkSession, sf: String): DataFrame = {
-    val dir = copurchaseDir(spark, sf).localCheckpoint()
+    val dir = Mat.once(copurchaseDir(spark, sf))
     val deg = dir.groupBy(col("u")).agg(count(lit(1)).as("d"))
     val seeds = deg.orderBy(col("d").desc, col("u").asc).limit(100)
       .select(col("u").as("i"), col("d").as("di"))
-    val sedges = seeds.join(dir, col("i") === col("u"))
-      .select(col("i"), col("di"), col("v").as("j")).localCheckpoint()
+    val sedges = Mat.once(seeds.join(dir, col("i") === col("u"))
+      .select(col("i"), col("di"), col("v").as("j")))
     val ind = sedges.as("e")
       .join(dir.select(col("u").as("i2"), col("v").as("q")).as("p1"),
         col("i2") === col("e.i"))
@@ -5005,7 +4951,7 @@ object Analytics {
     * exact (forecast deltas are exact dyadic doubles).
     */
   def q_directional_accuracy(spark: SparkSession, sf: String): DataFrame = {
-    val p = sesPred(spark, sf).localCheckpoint()
+    val p = Mat.once(sesPred(spark, sf))
     p.as("a")
       .join(p.select(col("m").as("m2"), col("actual").as("prev"),
         col("yhat").as("yh2")).as("b"), col("m2") === col("m") - 1)
@@ -5026,7 +4972,7 @@ object Analytics {
     * doubles on both engines.
     */
   def q_xmr_chart(spark: SparkSession, sf: String): DataFrame = {
-    val rev = dailyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(dailyRevenue(spark, sf))
     val mr = rev.as("a")
       .join(rev.select(col("d").as("d2"), col("rev").as("rev2")).as("b"),
         col("d2") === col("d") + 1)
@@ -5057,12 +5003,11 @@ object Analytics {
     * all comparisons on identically-derived doubles.
     */
   def q_p_chart(spark: SparkSession, sf: String): DataFrame = {
-    val wk = Tables.lineitem(spark, sf)
+    val wk = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(expr("CAST(datediff(l_shipdate, DATE '1992-01-01') div 7 AS BIGINT)")
         .as("wk"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r"))
-      .localCheckpoint()
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r")))
     val pool = wk.agg(sum(col("n")).as("tn"), sum(col("r")).as("tr"))
       .select((col("tr").cast("double") / col("tn").cast("double")).as("pbar"))
     wk.crossJoin(broadcast(pool))
@@ -5092,8 +5037,8 @@ object Analytics {
         .filter(col("c_mktsegment") === seg)
         .join(Tables.part(spark, sf), col("l_partkey") === col("p_partkey"))
         .select(col("p_brand").as("b")).distinct()
-    val a = brands("BUILDING").localCheckpoint()
-    val b = brands("AUTOMOBILE").localCheckpoint()
+    val a = Mat.once(brands("BUILDING"))
+    val b = Mat.once(brands("AUTOMOBILE"))
     val na = a.agg(count(lit(1)).as("n_building"))
     val nb = b.agg(count(lit(1)).as("n_automobile"))
     val ni = a.join(b, "b").agg(count(lit(1)).as("n_inter"))
@@ -5187,13 +5132,12 @@ object Analytics {
     */
   def q_markov_entropy_rate(spark: SparkSession, sf: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts_usl").asc, col("event_id").asc)
-    val cells = Tables.eventsWithTs(spark, sf)
+    val cells = Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("user_id"), col("ts_usl"), col("event_id"), col("event_type"))
       .withColumn("dst", lead(col("event_type"), 1).over(w))
       .filter(col("dst").isNotNull)
       .groupBy(col("event_type").as("src"), col("dst"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     val row = cells.groupBy(col("src")).agg(sum(col("c")).as("rt"))
     val tot = cells.agg(sum(col("c")).as("nn"))
     cells.join(broadcast(row), "src").crossJoin(broadcast(tot))
@@ -5240,7 +5184,7 @@ object Analytics {
     val pc = Tables.lineitem(spark, sf)
       .select(col("l_partkey").as("p"), col("l_orderkey").as("ok")).distinct()
       .groupBy(col("p")).agg(count(lit(1)).as("c"))
-    val vals = pc.groupBy(col("c")).agg(count(lit(1)).as("t")).localCheckpoint()
+    val vals = Mat.once(pc.groupBy(col("c")).agg(count(lit(1)).as("t")))
     vals.as("a")
       .join(vals.select(col("c").as("c2"), col("t").as("t2")).as("b"),
         col("c2") >= col("a.c"))
@@ -5258,7 +5202,7 @@ object Analytics {
     * bucketing, so the grouping is exact).
     */
   def q_clumpiness(spark: SparkSession, sf: String): DataFrame = {
-    val gaps = interGaps(spark, sf).localCheckpoint()
+    val gaps = Mat.once(interGaps(spark, sf))
     val cust = gaps.groupBy(col("c"))
       .agg(count(lit(1)).as("ng"), sum(col("t")).as("st"))
       .filter(col("ng") >= 2)
@@ -5277,11 +5221,10 @@ object Analytics {
 
   private def dailyLossExceed(spark: SparkSession, sf: String): DataFrame = {
     val rev = dailyRevenue(spark, sf)
-    val chg = rev.as("a")
+    val chg = Mat.once(rev.as("a")
       .join(rev.select(col("d").as("d2"), col("rev").as("rev2")).as("b"),
         col("d2") === col("d") + 1)
-      .select(col("d2").as("d"), (col("rev2") - col("rev")).as("diff"))
-      .localCheckpoint()
+      .select(col("d2").as("d"), (col("rev2") - col("rev")).as("diff")))
     val vals = chg.groupBy(col("diff")).agg(count(lit(1)).as("cnt"))
     val tot = chg.agg(count(lit(1)).as("n"))
       .select(col("n"), expr("CAST((n + 19) div 20 AS BIGINT)").as("k"))
@@ -5322,7 +5265,7 @@ object Analytics {
     * exceedance on the prior two days — exact day-lattice logic.
     */
   def q_extremal_index(spark: SparkSession, sf: String): DataFrame = {
-    val ex = dailyLossExceed(spark, sf).select(col("d")).localCheckpoint()
+    val ex = Mat.once(dailyLossExceed(spark, sf).select(col("d")))
     val starts = ex.as("a")
       .join(ex.select(col("d").as("d2")).as("b"),
         col("d2") === col("d") - 1 || col("d2") === col("d") - 2, "left")
@@ -5341,7 +5284,7 @@ object Analytics {
     * index), z = (R − H_n)/√(H_n − H_n²ᵗᵉʳᵐ).
     */
   def q_records_test(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val recs = rev.as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2") < col("m"), "left")
@@ -5395,11 +5338,10 @@ object Analytics {
     * D_yx = (C−D)/(C+D+T_y) from exact contingency-cell pair products.
     */
   def q_somers_d(spark: SparkSession, sf: String): DataFrame = {
-    val cells = Tables.lineitem(spark, sf)
+    val cells = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(col("l_quantity").cast("long").as("x"),
         pct(col("l_discount")).as("y"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     cells.as("a")
       .join(cells.select(col("x").as("x2"), col("y").as("y2"),
         col("cnt").as("cnt2")).as("b"), col("x2") > col("a.x"))
@@ -5420,7 +5362,7 @@ object Analytics {
     * second-min, max, second-max via strict theta joins).
     */
   def q_dixon_q(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val ex = rev.agg(count(lit(1)).as("n"), min(col("rev")).as("x1"),
       max(col("rev")).as("xn"))
     val x2 = rev.crossJoin(broadcast(ex)).filter(col("rev") > col("x1"))
@@ -5454,7 +5396,7 @@ object Analytics {
         (col("stt").cast("double")
           - col("st").cast("double") * col("st").cast("double")
             / col("n").cast("double")).as("cstt"))
-    val resid = rev.crossJoin(broadcast(fit))
+    val resid = Mat.once(rev.crossJoin(broadcast(fit))
       .select(col("m"), col("n"), col("cstt"), col("tbar"),
         (col("rev").cast("double") - col("ybar")
           - col("b") * (col("m").cast("double") - col("tbar"))).as("e"))
@@ -5462,8 +5404,7 @@ object Analytics {
         (lit(1.0) / col("n").cast("double")
           + (col("m").cast("double") - col("tbar"))
             * (col("m").cast("double") - col("tbar")) / col("cstt")).as("h"),
-        col("e"))
-      .localCheckpoint()
+        col("e")))
     val s2 = resid.agg(max(col("n")).as("nn"), sum(col("e") * col("e")).as("rss"))
       .select((col("rss") / (col("nn").cast("double") - lit(2.0))).as("s2"))
     resid.crossJoin(broadcast(s2))
@@ -5482,11 +5423,10 @@ object Analytics {
     * 2I/(H_X+H_Y) — exact counts, ln epilogue per cell.
     */
   def q_uncertainty_coefficient(spark: SparkSession, sf: String): DataFrame = {
-    val cells = Tables.lineitem(spark, sf)
+    val cells = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(expr("CAST((CAST(l_quantity AS BIGINT) - 1) div 17 AS BIGINT)")
         .as("x"), col("l_returnflag").as("y"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     val hx = cells.groupBy(col("x")).agg(sum(col("c")).as("cx"))
     val hy = cells.groupBy(col("y")).agg(sum(col("c")).as("cy"))
     val nn = cells.agg(sum(col("c")).as("n"))
@@ -5511,11 +5451,10 @@ object Analytics {
     * engines), values recovered from the cumulative value lattice.
     */
   def q_median_ci(spark: SparkSession, sf: String): DataFrame = {
-    val vals = Tables.orders(spark, sf)
+    val vals = Mat.once(Tables.orders(spark, sf)
       .select(expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
         .as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("t"))
-      .localCheckpoint()
+      .groupBy(col("v")).agg(count(lit(1)).as("t")))
     val tot = vals.agg(sum(col("t")).as("n"))
       .select(col("n"),
         expr("CAST((n + 1) div 2 AS BIGINT)").as("k2"),
@@ -5603,13 +5542,12 @@ object Analytics {
     * exact stratum counts, double epilogue.
     */
   def q_direct_standardization(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority").as("g"),
         expr("CAST((CAST(l_quantity AS BIGINT) - 1) div 17 AS BIGINT)").as("st"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r"))
-      .localCheckpoint()
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r")))
     val w = cell.groupBy(col("st")).agg(sum(col("n")).as("ns"))
     val tot = cell.agg(sum(col("n")).as("nt"))
     cell.join(broadcast(w), "st").crossJoin(broadcast(tot))
@@ -5641,9 +5579,8 @@ object Analytics {
     * both engines agree bit-for-bit.
     */
   def q_bowker_symmetry(spark: SparkSession, sf: String): DataFrame = {
-    val t = firstLastPriority(spark, sf)
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val t = Mat.once(firstLastPriority(spark, sf)
+      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("n")))
     val up = t.filter(col("i") < col("j"))
       .select(col("i"), col("j"), col("n").as("nij"))
     val lo = t.filter(col("i") > col("j"))
@@ -5664,9 +5601,8 @@ object Analytics {
     * M = (k − Σ pᵢᵢ)/(k−1) over the 5 priority classes.
     */
   def q_shorrocks_mobility(spark: SparkSession, sf: String): DataFrame = {
-    val t = firstLastPriority(spark, sf)
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val t = Mat.once(firstLastPriority(spark, sf)
+      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("n")))
     val row = t.groupBy(col("i")).agg(sum(col("n")).as("ri"))
     t.filter(col("i") === col("j"))
       .join(broadcast(row), "i")
@@ -5684,13 +5620,12 @@ object Analytics {
     * positive C means returns concentrate among big spenders.
     */
   def q_concentration_index(spark: SparkSession, sf: String): DataFrame = {
-    val cust = Tables.lineitem(spark, sf)
+    val cust = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
       .agg(expr("CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) div 10000 AS BIGINT)")
         .as("v"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("h"))
-      .localCheckpoint()
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("h")))
     val vals = cust.groupBy(col("v"))
       .agg(count(lit(1)).as("t"), sum(col("h")).as("hv"))
     val mid = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 1024L)
@@ -5712,12 +5647,11 @@ object Analytics {
     * bᵢ/B|, P* = Σ(aᵢ/A)(aᵢ/(aᵢ+bᵢ)).
     */
   def q_dissimilarity_index(spark: SparkSession, sf: String): DataFrame = {
-    val c = Tables.customer(spark, sf)
+    val c = Mat.once(Tables.customer(spark, sf)
       .filter(col("c_mktsegment").isin("BUILDING", "AUTOMOBILE"))
       .groupBy(col("c_nationkey").as("nk"))
       .agg(sum(when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L)).as("a"),
-        sum(when(col("c_mktsegment") === "AUTOMOBILE", 1L).otherwise(0L)).as("b"))
-      .localCheckpoint()
+        sum(when(col("c_mktsegment") === "AUTOMOBILE", 1L).otherwise(0L)).as("b")))
     val tot = c.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
     c.crossJoin(broadcast(tot))
       .agg(count(lit(1)).as("n_nations"),
@@ -5736,10 +5670,9 @@ object Analytics {
     * concentrations on the e4-rounded score with exact tie-breaks.
     */
   def q_location_quotient(spark: SparkSession, sf: String): DataFrame = {
-    val c = Tables.customer(spark, sf)
+    val c = Mat.once(Tables.customer(spark, sf)
       .groupBy(col("c_nationkey").as("nk"), col("c_mktsegment").as("seg"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n")))
     val byN = c.groupBy(col("nk")).agg(sum(col("n")).as("nn"))
     val byS = c.groupBy(col("seg")).agg(sum(col("n")).as("ns"))
     val tot = c.agg(sum(col("n")).as("nt"))
@@ -5758,19 +5691,17 @@ object Analytics {
     * nation/region hierarchy — exact cent sums, one double epilogue.
     */
   def q_morans_i(spark: SparkSession, sf: String): DataFrame = {
-    val natBal = Tables.customer(spark, sf)
+    val natBal = Mat.once(Tables.customer(spark, sf)
       .groupBy(col("c_nationkey").as("nk"))
       .agg(count(lit(1)).as("nc"), sum(cents(col("c_acctbal"))).as("sb"))
       .join(broadcast(Tables.nation(spark, sf)
         .select(col("n_nationkey").as("nk"), col("n_regionkey").as("rk"))), "nk")
       .select(col("nk"), col("rk"),
-        (col("sb").cast("double") / col("nc").cast("double")).as("x"))
-      .localCheckpoint()
+        (col("sb").cast("double") / col("nc").cast("double")).as("x")))
     val mean = natBal.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
       .select(col("n"), (col("sx") / col("n").cast("double")).as("xbar"))
-    val z = natBal.crossJoin(broadcast(mean))
-      .select(col("nk"), col("rk"), (col("x") - col("xbar")).as("z"), col("n"))
-      .localCheckpoint()
+    val z = Mat.once(natBal.crossJoin(broadcast(mean))
+      .select(col("nk"), col("rk"), (col("x") - col("xbar")).as("z"), col("n")))
     val pairs = z.as("a")
       .join(z.select(col("nk").as("nk2"), col("rk").as("rk2"),
         col("z").as("z2")).as("b"),
@@ -5817,7 +5748,7 @@ object Analytics {
     * df = k−1.
     */
   def q_breslow_day(spark: SparkSession, sf: String): DataFrame = {
-    val st = strataTables(spark, sf).localCheckpoint()
+    val st = Mat.once(strataTables(spark, sf))
     val or = st
       .agg(sum(col("a").cast("double") * col("d").cast("double")
         / (col("a") + col("b") + col("c") + col("d")).cast("double")).as("sr"),
@@ -5877,13 +5808,12 @@ object Analytics {
     * log-normal CI exp(ln SMR ± 1.959964/√O).
     */
   def q_smr_indirect(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority").as("g"),
         expr("CAST((CAST(l_quantity AS BIGINT) - 1) div 17 AS BIGINT)").as("st"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r"))
-      .localCheckpoint()
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r")))
     val ref = cell.groupBy(col("st"))
       .agg(sum(col("r")).as("rs"), sum(col("n")).as("ns"))
       .select(col("st"),
@@ -5908,15 +5838,14 @@ object Analytics {
     * all flags from identically-derived doubles.
     */
   def q_funnel_plot(spark: SparkSession, sf: String): DataFrame = {
-    val nat = Tables.lineitem(spark, sf)
+    val nat = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey").as("nk"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("o"))
-      .localCheckpoint()
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("o")))
     val pool = nat.agg(sum(col("o")).as("to"), sum(col("n")).as("tn"))
       .select((col("to").cast("double") / col("tn").cast("double")).as("pbar"))
     nat.crossJoin(broadcast(pool))
@@ -5938,7 +5867,7 @@ object Analytics {
     * shrunk = (O + mK)/(n + K).
     */
   def q_eb_shrinkage(spark: SparkSession, sf: String): DataFrame = {
-    val nat = Tables.lineitem(spark, sf)
+    val nat = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -5947,8 +5876,7 @@ object Analytics {
       .agg(count(lit(1)).as("n"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("o"))
       .select(col("nk"), col("n"), col("o"),
-        (col("o").cast("double") / col("n").cast("double")).as("x"))
-      .localCheckpoint()
+        (col("o").cast("double") / col("n").cast("double")).as("x")))
     val prior = nat.agg(count(lit(1)).as("kk"), sum(col("x")).as("sx"),
         sum(col("x") * col("x")).as("sxx"))
       .select((col("sx") / col("kk").cast("double")).as("m"),
@@ -5973,7 +5901,7 @@ object Analytics {
     * Z = n/(n+k) at the common month count.
     */
   def q_buhlmann_credibility(spark: SparkSession, sf: String): DataFrame = {
-    val nm = Tables.lineitem(spark, sf)
+    val nm = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -5982,16 +5910,14 @@ object Analytics {
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
       .agg((sum(when(col("l_returnflag") === "R", 1.0).otherwise(0.0))
-        / count(lit(1)).cast("double")).as("x"))
-      .localCheckpoint()
-    val within = nm.groupBy(col("nk"))
+        / count(lit(1)).cast("double")).as("x")))
+    val within = Mat.once(nm.groupBy(col("nk"))
       .agg(count(lit(1)).as("t"), sum(col("x")).as("sx"),
         sum(col("x") * col("x")).as("sxx"))
       .select(col("nk"), col("t"),
         (col("sx") / col("t").cast("double")).as("xbar"),
         ((col("sxx") - col("sx") * col("sx") / col("t").cast("double"))
-          / (col("t").cast("double") - lit(1.0))).as("s2"))
-      .localCheckpoint()
+          / (col("t").cast("double") - lit(1.0))).as("s2")))
     val agg = within.agg(count(lit(1)).as("r"), avg(col("s2")).as("epv"),
         avg(col("t").cast("double")).as("tbar"),
         avg(col("xbar")).as("gx"),
@@ -6080,17 +6006,15 @@ object Analytics {
     */
   def q_newey_west(spark: SparkSession, sf: String): DataFrame = {
     val rev = dailyRevenue(spark, sf)
-    val chg = rev.as("a")
+    val chg = Mat.once(rev.as("a")
       .join(rev.select(col("d").as("d2"), col("rev").as("rev2")).as("b"),
         col("d2") === col("d") + 1)
-      .select(col("d2").as("d"), (col("rev2") - col("rev")).as("x"))
-      .localCheckpoint()
+      .select(col("d2").as("d"), (col("rev2") - col("rev")).as("x")))
     val mu = chg.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
       .select(col("n"), (col("sx").cast("double") / col("n").cast("double")).as("mu"))
-    val z = chg.crossJoin(broadcast(mu))
+    val z = Mat.once(chg.crossJoin(broadcast(mu))
       .select(col("d"), col("n"), col("mu"),
-        (col("x").cast("double") - col("mu")).as("z"))
-      .localCheckpoint()
+        (col("x").cast("double") - col("mu")).as("z")))
     def gamma(l: Int): DataFrame = z.as("a")
       .join(z.select(col("d").as("d2"), col("z").as("z2")).as("b"),
         col("d2") === col("d") + l)
@@ -6146,7 +6070,7 @@ object Analytics {
     * with wⱼ = nⱼ/s²ⱼ — exact sums, one double epilogue.
     */
   def q_welch_anova(spark: SparkSession, sf: String): DataFrame = {
-    val g = Tables.orders(spark, sf)
+    val g = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("x"))
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
@@ -6156,8 +6080,7 @@ object Analytics {
         (col("n").cast("double")
           / ((col("ss") - (col("s").cast("double") * col("s").cast("double"))
             / col("n").cast("double")) / (col("n").cast("double") - lit(1.0))))
-          .as("w"))
-      .localCheckpoint()
+          .as("w")))
     val tot = g.agg(count(lit(1)).as("k"), sum(col("w")).as("sw"),
       sum(col("w") * col("xbar")).as("swx"))
     val lam = g.crossJoin(broadcast(tot))
@@ -6193,7 +6116,7 @@ object Analytics {
     * plus the n₁n₂/(n₁+n₂)-scaled e-statistic.
     */
   def q_energy_distance(spark: SparkSession, sf: String): DataFrame = {
-    val cells = twoGroupCells(spark, sf).localCheckpoint()
+    val cells = Mat.once(twoGroupCells(spark, sf))
     def within(p: String, out: String): DataFrame = {
       val c = cells.filter(col("g") === p)
       c.as("a").crossJoin(c.select(col("v").as("v2"), col("cnt").as("c2")).as("b"))
@@ -6229,7 +6152,7 @@ object Analytics {
     * over cell-pair kernel sums.
     */
   def q_mmd_rbf(spark: SparkSession, sf: String): DataFrame = {
-    val cells = twoGroupCells(spark, sf).localCheckpoint()
+    val cells = Mat.once(twoGroupCells(spark, sf))
     def kern(ga: String, gb: String, out: String): DataFrame =
       cells.filter(col("g") === ga).as("a")
         .crossJoin(cells.filter(col("g") === gb)
@@ -6264,14 +6187,13 @@ object Analytics {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
         .agg(sum(cents(col("o_totalprice"))).as(out))
-    val xy = seg("BUILDING", "x").join(seg("AUTOMOBILE", "y"), "m").localCheckpoint()
-    val pairs = xy.as("a")
+    val xy = Mat.once(seg("BUILDING", "x").join(seg("AUTOMOBILE", "y"), "m"))
+    val pairs = Mat.once(xy.as("a")
       .join(xy.select(col("m").as("m2"), col("x").as("x2"), col("y").as("y2"))
         .as("b"), lit(true))
       .select(col("m"), col("m2"),
         abs(col("x") - col("x2")).cast("double").as("ax"),
-        abs(col("y") - col("y2")).cast("double").as("byy"))
-      .localCheckpoint()
+        abs(col("y") - col("y2")).cast("double").as("byy")))
     val rm = pairs.groupBy(col("m"))
       .agg(avg(col("ax")).as("rax"), avg(col("byy")).as("rby"))
     val gm = pairs.agg(avg(col("ax")).as("gax"), avg(col("byy")).as("gby"),
@@ -6334,15 +6256,14 @@ object Analytics {
     * identity carried as an output check).
     */
   def q_theil_between_within(spark: SparkSession, sf: String): DataFrame = {
-    val cust = Tables.orders(spark, sf)
+    val cust = Mat.once(Tables.orders(spark, sf)
       .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(spark, sf)
         .select(col("n_nationkey"), col("n_regionkey").as("rk"))),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("o_custkey"), col("rk"))
       .agg(sum(cents(col("o_totalprice"))).as("x"))
-      .filter(col("x") > 0L)
-      .localCheckpoint()
+      .filter(col("x") > 0L))
     val tot = cust.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
     val reg = cust.groupBy(col("rk"))
       .agg(count(lit(1)).as("nr"), sum(col("x")).as("yr"))
@@ -6384,7 +6305,7 @@ object Analytics {
       .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("y"),
         cents(col("c_acctbal")).as("x"))
-    val g = d.groupBy(col("g"))
+    val g = Mat.once(d.groupBy(col("g"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"), sum(col("x")).as("sx"),
         sum(col("x").cast("double") * col("y").cast("double")).as("sxy"),
         sum(col("x").cast("double") * col("x").cast("double")).as("sxx"))
@@ -6394,8 +6315,7 @@ object Analytics {
         (col("sxy") - col("sx").cast("double") * col("sy").cast("double")
           / col("n").cast("double")).as("cxy"),
         (col("sxx") - col("sx").cast("double") * col("sx").cast("double")
-          / col("n").cast("double")).as("cxx"))
-      .localCheckpoint()
+          / col("n").cast("double")).as("cxx")))
     val bw = g.agg(sum(col("cxy")).as("scxy"), sum(col("cxx")).as("scxx"))
       .select((col("scxy") / col("scxx")).as("bw"))
     val a = g.filter(col("g") === "1-URGENT")
@@ -6453,15 +6373,13 @@ object Analytics {
     * (9·MAD), BWMV = n·Σt(v−med)²(1−u²)⁴/(Σt(1−u²)(1−5u²))².
     */
   def q_biweight_midvariance(spark: SparkSession, sf: String): DataFrame = {
-    val vals = Tables.orders(spark, sf)
+    val vals = Mat.once(Tables.orders(spark, sf)
       .select(expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
         .as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("t"))
-      .localCheckpoint()
+      .groupBy(col("v")).agg(count(lit(1)).as("t")))
     val tot = vals.agg(sum(col("t")).as("n"))
       .select(col("n"), expr("CAST((n + 1) div 2 AS BIGINT)").as("k"))
-    val cum = BandedScan.cumSum(vals, Seq.empty, "v", "t", "cum", bandWidth = 256L)
-      .localCheckpoint()
+    val cum = Mat.once(BandedScan.cumSum(vals, Seq.empty, "v", "t", "cum", bandWidth = 256L))
     val med = cum.crossJoin(broadcast(tot))
       .filter(col("cum") >= col("k")).agg(min(col("v")).as("med"))
     val dev = vals.crossJoin(broadcast(med))
@@ -6498,10 +6416,9 @@ object Analytics {
     * series).
     */
   def q_cvm_uniform(spark: SparkSession, sf: String): DataFrame = {
-    val vals = Tables.lineitem(spark, sf)
+    val vals = Mat.once(Tables.lineitem(spark, sf)
       .select(pct(col("l_discount")).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("t"))
-      .localCheckpoint()
+      .groupBy(col("v")).agg(count(lit(1)).as("t")))
     val cum = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 4L)
       .withColumn("cb", col("ci") - col("t"))
     val tot = vals.agg(sum(col("t")).as("n"))
@@ -6555,12 +6472,11 @@ object Analytics {
     * within-group mean square.
     */
   def q_scheffe_contrast(spark: SparkSession, sf: String): DataFrame = {
-    val g = Tables.orders(spark, sf)
+    val g = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderpriority").as("g"), cents(col("o_totalprice")).as("x"))
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
-        sum(col("x").cast("double") * col("x").cast("double")).as("ss"))
-      .localCheckpoint()
+        sum(col("x").cast("double") * col("x").cast("double")).as("ss")))
     val msw = g.agg(count(lit(1)).as("k"), sum(col("n")).as("nn"),
         sum(col("ss") - (col("s").cast("double") * col("s").cast("double"))
           / col("n").cast("double")).as("ssw"))
@@ -6591,13 +6507,12 @@ object Analytics {
     */
   def q_polynomial_contrasts(spark: SparkSession, sf: String): DataFrame = {
     import spark.implicits._
-    val g = Tables.orders(spark, sf)
+    val g = Mat.once(Tables.orders(spark, sf)
       .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("j"),
         cents(col("o_totalprice")).as("x"))
       .groupBy(col("j"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
-        sum(col("x").cast("double") * col("x").cast("double")).as("ss"))
-      .localCheckpoint()
+        sum(col("x").cast("double") * col("x").cast("double")).as("ss")))
     val msw = g.agg(count(lit(1)).as("k"), sum(col("n")).as("nn"),
         sum(col("ss") - (col("s").cast("double") * col("s").cast("double"))
           / col("n").cast("double")).as("ssw"))
@@ -6626,7 +6541,7 @@ object Analytics {
     * on the (lifetime, score) lattice.
     */
   def q_survival_cindex(spark: SparkSession, sf: String): DataFrame = {
-    val obs = Tables.eventsWithTs(spark, sf)
+    val obs = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(col("user_id"))
       .agg(min(to_date(col("ts_us"))).as("d0"), max(to_date(col("ts_us"))).as("d1"),
         count(lit(1)).as("score"))
@@ -6634,8 +6549,7 @@ object Analytics {
         when(col("d1") <= lit("2024-01-23").cast("date"), 1L).otherwise(0L)
           .as("e"),
         col("score"))
-      .groupBy(col("t"), col("e"), col("score")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("t"), col("e"), col("score")).agg(count(lit(1)).as("c")))
     obs.filter(col("e") === 1L).as("a")
       .join(obs.select(col("t").as("t2"), col("score").as("sc2"),
         col("c").as("c2")).as("b"), col("t2") > col("a.t"))
@@ -6655,7 +6569,7 @@ object Analytics {
     * the ideal/anti-ideal, closeness ranked on the e6-rounded score.
     */
   def q_topsis_ranking(spark: SparkSession, sf: String): DataFrame = {
-    val nat = Tables.lineitem(spark, sf)
+    val nat = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -6664,17 +6578,15 @@ object Analytics {
       .agg(sum(cents(col("l_extendedprice"))).as("rev"),
         count(lit(1)).as("cnt"),
         (sum(when(col("l_returnflag") === "R", 1.0).otherwise(0.0))
-          / count(lit(1)).cast("double")).as("rr"))
-      .localCheckpoint()
+          / count(lit(1)).cast("double")).as("rr")))
     val norms = nat.agg(
       sqrt(sum(col("rev").cast("double") * col("rev").cast("double"))).as("nr"),
       sqrt(sum(col("cnt").cast("double") * col("cnt").cast("double"))).as("nc"),
       sqrt(sum(col("rr") * col("rr"))).as("nrr"))
-    val scaled = nat.crossJoin(broadcast(norms))
+    val scaled = Mat.once(nat.crossJoin(broadcast(norms))
       .select(col("nk"), (col("rev").cast("double") / col("nr")).as("v1"),
         (col("cnt").cast("double") / col("nc")).as("v2"),
-        (col("rr") / col("nrr")).as("v3"))
-      .localCheckpoint()
+        (col("rr") / col("nrr")).as("v3")))
     val ideals = scaled.agg(max(col("v1")).as("b1"), max(col("v2")).as("b2"),
       min(col("v3")).as("b3"), min(col("v1")).as("w1"), min(col("v2")).as("w2"),
       max(col("v3")).as("w3"))
@@ -6753,17 +6665,16 @@ object Analytics {
     * tie-breaking.
     */
   def q_max_subarray(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val base = rev.agg(min(col("m")).as("m0"))
-    val pre = rev.as("a")
+    val pre = Mat.once(rev.as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2") <= col("a.m"))
       .groupBy(col("a.m").as("m")).agg(sum(col("rev2")).as("cum"))
       .crossJoin(broadcast(base))
-      .select(col("m"), col("cum"))
-      .localCheckpoint()
+      .select(col("m"), col("cum")))
     val zero = base.select((col("m0") - 1L).as("m"), lit(0L).as("cum"))
-    val pts = pre.union(zero).localCheckpoint()
+    val pts = Mat.once(pre.union(zero))
     val best = pts.as("a")
       .join(pts.select(col("m").as("mj"), col("cum").as("cumj")).as("b"),
         col("mj") > col("m"))
@@ -6784,11 +6695,10 @@ object Analytics {
     * top-10 brand pairs on the e6-rounded score.
     */
   def q_simrank_step(spark: SparkSession, sf: String): DataFrame = {
-    val cb = Tables.lineitem(spark, sf)
+    val cb = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
       .join(Tables.part(spark, sf), col("l_partkey") === col("p_partkey"))
-      .select(col("o_custkey").as("c"), col("p_brand").as("b")).distinct()
-      .localCheckpoint()
+      .select(col("o_custkey").as("c"), col("p_brand").as("b")).distinct())
     val deg = cb.groupBy(col("b")).agg(count(lit(1)).as("d"))
     val common = cb.as("x")
       .join(cb.select(col("c").as("c2"), col("b").as("b2")).as("y"),
@@ -6818,9 +6728,8 @@ object Analytics {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
         .agg(sum(cents(col("o_totalprice"))).as(out))
-    val d = seg("BUILDING", "ya").join(seg("AUTOMOBILE", "yb"), "m")
-      .select(col("m"), abs(col("ya") - col("yb")).as("dl"))
-      .localCheckpoint()
+    val d = Mat.once(seg("BUILDING", "ya").join(seg("AUTOMOBILE", "yb"), "m")
+      .select(col("m"), abs(col("ya") - col("yb")).as("dl")))
     val ext = d.agg(min(col("dl")).as("dmin"), max(col("dl")).as("dmax"),
       count(lit(1)).as("n"))
     d.crossJoin(broadcast(ext))
@@ -6841,12 +6750,11 @@ object Analytics {
     * and bit-safe.
     */
   def q_median_polish(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.orders(spark, sf)
+    val cell = Mat.once(Tables.orders(spark, sf)
       .groupBy(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("r"),
         month(col("o_orderdate")).cast("long").as("cmo"))
       .agg(expr("CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div COUNT(*) AS BIGINT)")
-        .as("v"))
-      .localCheckpoint()
+        .as("v")))
     def medOf(df: DataFrame, key: String, value: String): DataFrame =
       df.as("a")
         .join(df.select(col(key).as("k2"), col(value).as("v2")).as("b"),
@@ -6859,9 +6767,8 @@ object Analytics {
         .groupBy(col(key)).agg(min(col(value)).as("med"))
     val rowMed = medOf(cell.select(col("r").as("rk"), col("v")), "rk", "v")
       .select(col("rk"), col("med").as("rmed"))
-    val resid1 = cell.join(broadcast(rowMed), col("r") === col("rk"))
-      .select(col("r"), col("cmo"), (col("v") - col("rmed")).as("e1"))
-      .localCheckpoint()
+    val resid1 = Mat.once(cell.join(broadcast(rowMed), col("r") === col("rk"))
+      .select(col("r"), col("cmo"), (col("v") - col("rmed")).as("e1")))
     val colMed = medOf(resid1.select(col("cmo").as("ck"), col("e1")), "ck", "e1")
       .select(col("ck"), col("med").as("cmed"))
     resid1.join(broadcast(colMed), col("cmo") === col("ck"))
@@ -6894,11 +6801,10 @@ object Analytics {
             - col("st").cast("double") * col("st").cast("double"))).as("b"),
         (col("sy").cast("double") / col("n").cast("double")).as("ybar"),
         (col("st").cast("double") / col("n").cast("double")).as("tbar"))
-    val det = rev.crossJoin(broadcast(fit))
+    val det = Mat.once(rev.crossJoin(broadcast(fit))
       .select(col("cmo"),
         (col("rev").cast("double") - col("ybar")
-          - col("b") * (col("m").cast("double") - col("tbar"))).as("e"))
-      .localCheckpoint()
+          - col("b") * (col("m").cast("double") - col("tbar"))).as("e")))
     val seas = det.groupBy(col("cmo")).agg(avg(col("e")).as("smean"))
     det.join(broadcast(seas), "cmo")
       .select(col("e"), (col("e") - col("smean")).as("r"))
@@ -6928,7 +6834,7 @@ object Analytics {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
         .agg(sum(cents(col("o_totalprice"))).as(out))
-    val xy = seg("BUILDING", "x").join(seg("AUTOMOBILE", "y"), "m").localCheckpoint()
+    val xy = Mat.once(seg("BUILDING", "x").join(seg("AUTOMOBILE", "y"), "m"))
     def med(value: String): DataFrame = {
       val v = xy.select(col(value).as("v"))
       val tot = v.agg(count(lit(1)).as("n"))
@@ -6964,16 +6870,15 @@ object Analytics {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"))
         .agg(sum(cents(col("o_totalprice"))).as(out))
-    val xy = seg("BUILDING", "x").join(seg("AUTOMOBILE", "y"), "m").localCheckpoint()
-    val ranks = xy.as("a")
+    val xy = Mat.once(seg("BUILDING", "x").join(seg("AUTOMOBILE", "y"), "m"))
+    val ranks = Mat.once(xy.as("a")
       .join(xy.select(col("m").as("m2"), col("x").as("x2"), col("y").as("y2"))
         .as("b"), col("m2") =!= col("a.m"))
       .groupBy(col("a.m").as("m"))
       .agg((sum(when(col("x2") < col("a.x"), 1L).otherwise(0L)) + 1L).as("r"),
         (sum(when(col("y2") < col("a.y"), 1L).otherwise(0L)) + 1L).as("s"),
         sum(when(col("x2") < col("a.x") && col("y2") < col("a.y"), 1L)
-          .otherwise(0L)).as("q"))
-      .localCheckpoint()
+          .otherwise(0L)).as("q")))
     ranks.agg(count(lit(1)).as("n"),
         sum(col("q") * (col("q") - 1L)).as("d1"),
         sum((col("r") - 1L) * (col("r") - 2L) * (col("s") - 1L)
@@ -6999,11 +6904,10 @@ object Analytics {
     * identically-derived bounds.
     */
   def q_tail_bounds(spark: SparkSession, sf: String): DataFrame = {
-    val dc = Tables.orders(spark, sf)
+    val dc = Mat.once(Tables.orders(spark, sf)
       .groupBy(datediff(col("o_orderdate"), lit("1992-01-01").cast("date"))
         .cast("long").as("d"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     val st = dc.agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
         sum(col("c") * col("c")).as("scc"))
       .select(col("n"),
@@ -7117,14 +7021,13 @@ object Analytics {
         (col("stt").cast("double")
           - col("st").cast("double") * col("st").cast("double")
             / col("n").cast("double")).as("cstt"))
-    val resid = rev.crossJoin(broadcast(fit))
+    val resid = Mat.once(rev.crossJoin(broadcast(fit))
       .select(col("m"), col("n"), col("cstt"), col("tbar"),
         (lit(1.0) / col("n").cast("double")
           + (col("m").cast("double") - col("tbar"))
             * (col("m").cast("double") - col("tbar")) / col("cstt")).as("h"),
         (col("rev").cast("double") - col("ybar")
-          - col("b") * (col("m").cast("double") - col("tbar"))).as("e"))
-      .localCheckpoint()
+          - col("b") * (col("m").cast("double") - col("tbar"))).as("e")))
     val s2 = resid.agg(max(col("n")).as("nn"), max(col("cstt")).as("cs"),
         sum(col("e") * col("e")).as("rss"))
       .select((col("rss") / (col("nn").cast("double") - lit(2.0))).as("s2"),
@@ -7184,11 +7087,10 @@ object Analytics {
     * OLS slope (≈ −1 under Zipf), ranks exact via count-greater+1.
     */
   def q_rank_size_rule(spark: SparkSession, sf: String): DataFrame = {
-    val nat = Tables.orders(spark, sf)
+    val nat = Mat.once(Tables.orders(spark, sf)
       .join(Tables.customer(spark, sf), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey").as("nk"))
-      .agg(sum(cents(col("o_totalprice"))).as("rev"))
-      .localCheckpoint()
+      .agg(sum(cents(col("o_totalprice"))).as("rev")))
     nat.as("a")
       .join(nat.select(col("nk").as("nk2"), col("rev").as("rev2")).as("b"),
         col("rev2") > col("a.rev")
@@ -7216,12 +7118,11 @@ object Analytics {
     * ratios.
     */
   def q_decile_ratio(spark: SparkSession, sf: String): DataFrame = {
-    val vals = Tables.orders(spark, sf)
+    val vals = Mat.once(Tables.orders(spark, sf)
       .groupBy(col("o_custkey"))
       .agg(expr("CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 10000 AS BIGINT)")
         .as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("t"))
-      .localCheckpoint()
+      .groupBy(col("v")).agg(count(lit(1)).as("t")))
     val tot = vals.agg(sum(col("t")).as("n"))
       .select(col("n"),
         expr("CAST((n + 9) div 10 AS BIGINT)").as("k10"),
@@ -7259,11 +7160,10 @@ object Analytics {
     * range-rule σ ≈ range/4 sanity ratio alongside.
     */
   def q_pearson_skew2(spark: SparkSession, sf: String): DataFrame = {
-    val vals = Tables.orders(spark, sf)
+    val vals = Mat.once(Tables.orders(spark, sf)
       .select(expr("CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) div 10000 AS BIGINT)")
         .as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("t"))
-      .localCheckpoint()
+      .groupBy(col("v")).agg(count(lit(1)).as("t")))
     val st = vals.agg(sum(col("t")).as("n"),
         sum(col("v") * col("t")).as("sv"),
         sum(col("v").cast("double") * col("v").cast("double")
@@ -7303,11 +7203,10 @@ object Analytics {
       .groupBy(col("n_name"), col("c_mktsegment")).agg(count(lit(1)).as("c"))
     val tot = cn.groupBy(col("n_name")).agg(sum(col("c")).as("t"))
     val segs = cn.select(col("c_mktsegment")).distinct()
-    val dense = tot.crossJoin(segs)
+    val dense = Mat.once(tot.crossJoin(segs)
       .join(cn, Seq("n_name", "c_mktsegment"), "left_outer")
       .select(col("n_name"), col("c_mktsegment"), col("t"),
-        coalesce(col("c"), lit(0L)).as("c"))
-      .localCheckpoint()
+        coalesce(col("c"), lit(0L)).as("c")))
     val pa = col("a.c").cast("double") / col("a.t").cast("double")
     val pb = col("b.c").cast("double") / col("b.t").cast("double")
     dense.as("a")
@@ -7337,8 +7236,7 @@ object Analytics {
     val o = Tables.orders(spark, sf)
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
         col("o_orderpriority").as("prio"))
-    val mc = o.groupBy(col("month"), col("prio")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val mc = Mat.once(o.groupBy(col("month"), col("prio")).agg(count(lit(1)).as("c")))
     val mt = mc.groupBy(col("month")).agg(sum(col("c")).as("n"))
     val gc = mc.groupBy(col("prio")).agg(sum(col("c")).as("g"))
     val gt = gc.agg(sum(col("g")).as("nn"))
@@ -7371,10 +7269,9 @@ object Analytics {
     val li = Tables.lineitem(spark, sf)
       .filter(col("l_returnflag").isin("A", "R"))
       .select(col("l_returnflag").as("rf"), cents(col("l_quantity")).as("qc"))
-    val cell = li.groupBy(col("qc")).agg(
+    val cell = Mat.once(li.groupBy(col("qc")).agg(
       sum(when(col("rf") === "A", 1L).otherwise(0L)).as("ca"),
-      sum(when(col("rf") === "R", 1L).otherwise(0L)).as("cr"))
-      .localCheckpoint()
+      sum(when(col("rf") === "R", 1L).otherwise(0L)).as("cr")))
     val cum = BandedScan.cumSumsAuto(cell, Seq(), "qc",
       Seq("ca" -> "cuma", "cr" -> "cumr"))
     cum.agg(
@@ -7438,10 +7335,9 @@ object Analytics {
     * lattice — scale-flat.
     */
   def q_brown_forsythe(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("rf"), cents(col("l_quantity")).as("qc"))
-      .groupBy(col("rf"), col("qc")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy(col("rf"), col("qc")).agg(count(lit(1)).as("cnt")))
     val cum = BandedScan.cumSumAuto(cell, Seq("rf"), "qc", "cnt", "cum")
     val gn = cell.groupBy(col("rf")).agg(sum(col("cnt")).as("ng"))
     val med = cum.join(broadcast(gn), Seq("rf"))
@@ -7513,12 +7409,11 @@ object Analytics {
     * epilogue. One tiny value lattice + [[BandedScan]] cumulative.
     */
   def q_ansari_bradley(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_linestatus").as("ls"), pct(col("l_discount")).as("dp"))
       .groupBy(col("dp"))
       .agg(sum(when(col("ls") === "O", 1L).otherwise(0L)).as("co"),
-        count(lit(1)).as("ct"))
-      .localCheckpoint()
+        count(lit(1)).as("ct")))
     val cum = BandedScan.cumSumAuto(cell, Seq(), "dp", "ct", "cumt")
     val tot = cell.agg(sum(col("co")).as("m"), sum(col("ct")).as("nt"))
     // S(x) = sum_{p=1..x} min(p, T-p), T = N+1, kk = T div 2 — all
@@ -7612,9 +7507,8 @@ object Analytics {
     val o = Tables.orders(spark, sf)
       .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)").as("j"),
         cents(col("o_totalprice")).as("v"))
-    val cell = o.groupBy(col("v"))
-      .agg(count(lit(1)).as("ct"), sum(col("j")).as("sjc"))
-      .localCheckpoint()
+    val cell = Mat.once(o.groupBy(col("v"))
+      .agg(count(lit(1)).as("ct"), sum(col("j")).as("sjc")))
     val cum = BandedScan.cumSumAuto(cell, Seq(), "v", "ct", "cumt")
     val t2 = cum.agg(sum(col("sjc") *
       ((col("cumt") - col("ct")) * 2L + col("ct") + 1L)).as("t2"))
@@ -7643,11 +7537,10 @@ object Analytics {
     */
   def q_mase_smape(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(col("event_type"),
         datediff(to_date(col("ts_us")), epoch).cast("long").as("dayn"))
-      .agg(sum(cents(col("value"))).as("rev"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("rev")))
     val s7 = daily.as("a")
       .join(daily.select(col("event_type"), (col("dayn") + 7L).as("dayn"),
         col("rev").as("rev7")).as("b"), Seq("event_type", "dayn"))
@@ -7728,16 +7621,15 @@ object Analytics {
     * scale factor.
     */
   def q_brown_double_smoothing(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
-    val s1 = rev.as("a")
+    val rev = Mat.once(monthlyRevenue(spark, sf))
+    val s1 = Mat.once(rev.as("a")
       .join(rev.select(col("m").as("m2"), col("rev").as("rev2")).as("b"),
         col("m2").between(col("m") - 12, col("m") - 1))
       .groupBy(col("a.m").as("m"))
       .agg(count(lit(1)).as("k1"),
         sum(col("rev2").cast("double")
           * pow(lit(0.5), (col("a.m") - col("m2")).cast("double"))).as("s1"))
-      .filter(col("k1") === 12)
-      .localCheckpoint()
+      .filter(col("k1") === 12))
     val s2 = s1.as("a")
       .join(s1.select(col("m").as("m2"), col("s1").as("s1b")).as("b"),
         col("m2").between(col("m") - 12, col("m") - 1))
@@ -7869,11 +7761,10 @@ object Analytics {
     * work at any row count.
     */
   def q_gini_mean_difference(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("rf"), cents(col("l_quantity")).as("v"))
       .groupBy(col("rf"), col("v")).agg(count(lit(1)).as("c"))
-      .withColumn("sv", col("c") * col("v"))
-      .localCheckpoint()
+      .withColumn("sv", col("c") * col("v")))
     val cum = BandedScan.cumSumsAuto(cell, Seq("rf"), "v",
       Seq("c" -> "cumc", "sv" -> "cumsv"))
     cum.select(col("rf"), col("c"),
@@ -7958,12 +7849,11 @@ object Analytics {
     * downweighted — the outlier-robust price-curve fit.
     */
   def q_huber_irls_step(spark: SparkSession, sf: String): DataFrame = {
-    val xy = Tables.lineitem(spark, sf)
+    val xy = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("x"))
       .join(Tables.orders(spark, sf)
         .select(col("o_orderkey").as("l_orderkey"),
-          cents(col("o_totalprice")).as("y")), Seq("l_orderkey"))
-      .localCheckpoint()
+          cents(col("o_totalprice")).as("y")), Seq("l_orderkey")))
     val s = xy.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
       sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
       sum(col("x") * col("x")).as("sxx"))
@@ -7975,15 +7865,13 @@ object Analytics {
     val a = (col("sy").cast("double") - b * col("sx").cast("double")) / nD
     val withB = s.select(col("n"), round(b * lit(1e8)).cast("long").as("b_e8"),
       round(a * lit(1e4)).cast("long").as("a_e4"))
-    val r = xy.crossJoin(broadcast(withB))
+    val r = Mat.once(xy.crossJoin(broadcast(withB))
       .select(col("x"), col("y"), col("n"), col("b_e8"), col("a_e4"),
         abs(round(col("y").cast("double") -
           (col("a_e4").cast("double") / lit(1e4) +
             col("b_e8").cast("double") / lit(1e8) * col("x").cast("double"))))
-          .cast("long").as("ar"))
-      .localCheckpoint()
-    val lat = r.groupBy(col("ar")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+          .cast("long").as("ar")))
+    val lat = Mat.once(r.groupBy(col("ar")).agg(count(lit(1)).as("cnt")))
     val medv = BandedScan.cumSumAuto(lat, Seq(), "ar", "cnt", "cum")
       .crossJoin(broadcast(lat.agg(sum(col("cnt")).as("nn"))))
       .filter(col("cum") * 2L >= col("nn") + 1L)
@@ -8023,10 +7911,9 @@ object Analytics {
     * |types|²-bounded everywhere after the one edge aggregate.
     */
   def q_reciprocity(spark: SparkSession, sf: String): DataFrame = {
-    val e = GraphMl.transitionEdges(spark, sf)
+    val e = Mat.once(GraphMl.transitionEdges(spark, sf)
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("w"))
-      .localCheckpoint()
+      .select(col("src"), col("dst"), col("w")))
     val j = e.as("a")
       .join(e.select(col("src").as("dst"), col("dst").as("src"),
         col("w").as("wrev")).as("b"), Seq("src", "dst"), "left_outer")
@@ -8064,7 +7951,7 @@ object Analytics {
     * |nations|² worst case.
     */
   def q_getis_ord_g(spark: SparkSession, sf: String): DataFrame = {
-    val x = nationBalance(spark, sf).localCheckpoint()
+    val x = Mat.once(nationBalance(spark, sf))
     val pairs = x.as("a")
       .join(x.select(col("nk").as("nk2"), col("rk").as("rk2"),
         col("xq").as("xq2")).as("b"),
@@ -8091,16 +7978,15 @@ object Analytics {
     * hot-spot detection on coded maps.
     */
   def q_join_count_stat(spark: SparkSession, sf: String): DataFrame = {
-    val x = nationBalance(spark, sf).localCheckpoint()
+    val x = Mat.once(nationBalance(spark, sf))
     val med = x.as("a")
       .join(x.select(col("xq").as("xq2")).as("b"), col("xq2") <= col("a.xq"))
       .groupBy(col("a.xq").as("xq")).agg(count(lit(1)).as("cle"))
       .crossJoin(broadcast(x.agg(count(lit(1)).as("n"))))
       .filter(col("cle") * 2L >= col("n"))
       .agg(min(col("xq")).as("m"))
-    val colored = x.crossJoin(broadcast(med))
-      .select(col("nk"), col("rk"), (col("xq") > col("m")).as("black"))
-      .localCheckpoint()
+    val colored = Mat.once(x.crossJoin(broadcast(med))
+      .select(col("nk"), col("rk"), (col("xq") > col("m")).as("black")))
     val pairs = colored.as("a")
       .join(colored.select(col("nk").as("nk2"), col("rk").as("rk2"),
         col("black").as("black2")).as("b"),
@@ -8132,12 +8018,11 @@ object Analytics {
     * epilogue per nation. Quadrant code: HH/LL/HL/LH from the signs.
     */
   def q_local_moran(spark: SparkSession, sf: String): DataFrame = {
-    val x = nationBalance(spark, sf).localCheckpoint()
+    val x = Mat.once(nationBalance(spark, sf))
     val tot = x.agg(count(lit(1)).as("n"), sum(col("xq")).as("sx"))
-    val z = x.crossJoin(broadcast(tot))
+    val z = Mat.once(x.crossJoin(broadcast(tot))
       .select(col("nk"), col("rk"), col("n"),
-        (col("xq") * col("n") - col("sx")).as("z"))
-      .localCheckpoint()
+        (col("xq") * col("n") - col("sx")).as("z")))
     val regionSum = z.groupBy(col("rk"))
       .agg(sum(col("z")).as("rz"), count(lit(1)).as("rn"))
     val szsq = z.agg(sum(col("z").cast("decimal(38,0)") * col("z")).as("szsq"))
@@ -8197,14 +8082,13 @@ object Analytics {
     * pairing is one self-equi-join on (type, index+lag) — no global sort.
     */
   def q_cox_stuart(spark: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(col("event_type"),
         date_format(col("ts_us"), "yyyy-MM-dd").as("day"))
       .agg(sum(cents(col("value"))).as("rev"))
       .withColumn("i",
         row_number().over(Window.partitionBy("event_type").orderBy("day"))
-          .cast("long"))
-      .localCheckpoint()
+          .cast("long")))
     val n = daily.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     val lagged = daily.join(broadcast(n), "event_type")
       .withColumn("m", expr("n div 2"))
@@ -8243,8 +8127,7 @@ object Analytics {
       .agg(sum(when(col("isF"), 1L).otherwise(0L)).as("a"),
         sum(when(!col("isF"), 1L).otherwise(0L)).as("b"))
       .withColumn("occ", lit(1L))
-    val idx = BandedScan.cumSum(cell, Seq.empty, "v", "occ", "idx", 8L)
-      .localCheckpoint()
+    val idx = Mat.once(BandedScan.cumSum(cell, Seq.empty, "v", "occ", "idx", 8L))
     val internal = idx.agg(
       sum(when(col("a") > 0L && col("b") > 0L, 1L).otherwise(0L)).as("t_in"),
       sum(col("a")).as("ta"), sum(col("b")).as("tb"))
@@ -8277,11 +8160,10 @@ object Analytics {
     * revenues, one z epilogue.
     */
   def q_seasonal_mann_kendall(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.eventsWithTs(spark, sf)
+    val cell = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(col("event_type"), hour(col("ts_us")).cast("long").as("h"),
         date_format(col("ts_us"), "yyyy-MM-dd").as("day"))
-      .agg(sum(cents(col("value"))).as("rev"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("rev")))
     val s = cell.as("a")
       .join(cell.select(col("event_type"), col("h"), col("day").as("day2"),
         col("rev").as("rev2")).as("b"), Seq("event_type", "h"))
@@ -8321,16 +8203,14 @@ object Analytics {
         col("event_type"))
       .agg(sum(cents(col("value"))).as("rev"))
     val k = cell.select(col("event_type")).distinct().count()
-    val complete = cell.withColumn("nt",
+    val complete = Mat.once(cell.withColumn("nt",
         count(lit(1)).over(Window.partitionBy("day")))
-      .filter(col("nt") === k).drop("nt")
-      .localCheckpoint()
+      .filter(col("nt") === k).drop("nt"))
     val ranked = complete.withColumn("r",
       row_number().over(Window.partitionBy("day").orderBy("rev", "event_type"))
         .cast("long"))
-    val rng = complete.groupBy(col("day"))
-      .agg((max(col("rev")) - min(col("rev"))).as("range"))
-      .localCheckpoint()
+    val rng = Mat.once(complete.groupBy(col("day"))
+      .agg((max(col("rev")) - min(col("rev"))).as("range")))
     val q = rng.as("a")
       .join(rng.select(col("day").as("day2"), col("range").as("range2")).as("b"),
         col("range2") < col("a.range")
@@ -8338,10 +8218,9 @@ object Analytics {
         "left_outer")
       .groupBy(col("a.day").as("day"))
       .agg((count(col("day2")) + 1L).as("qrank"))
-    val scores = ranked.join(q, "day")
+    val scores = Mat.once(ranked.join(q, "day")
       .select(col("day"), col("event_type"),
-        (col("qrank") * (lit(2L) * col("r") - lit(k + 1L))).as("s2"))
-      .localCheckpoint()
+        (col("qrank") * (lit(2L) * col("r") - lit(k + 1L))).as("s2")))
     val a = scores.agg(count(lit(1)).as("nk"),
       sum(col("s2") * col("s2")).as("a2"))
     val b = scores.groupBy(col("event_type")).agg(sum(col("s2")).as("sj"))
@@ -8365,19 +8244,17 @@ object Analytics {
     * double epilogue from broadcast totals — no cross-group float sums.
     */
   def q_conover_squared_ranks(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("g"), col("l_quantity").cast("long").as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     val medInput = BandedScan.cumSum(cell, Seq("g"), "v", "c", "cum", 8L)
     val ng = cell.groupBy(col("g")).agg(sum(col("c")).as("n_g"))
     val med = medInput.join(broadcast(ng), "g")
       .filter(col("cum") * 2L >= col("n_g"))
       .groupBy(col("g")).agg(min(col("v")).as("med"))
-    val zcell = cell.join(broadcast(med), "g")
+    val zcell = Mat.once(cell.join(broadcast(med), "g")
       .select(col("g"), abs(col("v") - col("med")).as("z"), col("c"))
-      .groupBy(col("g"), col("z")).agg(sum(col("c")).as("c"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("z")).agg(sum(col("c")).as("c")))
     val comb = zcell.groupBy(col("z")).agg(sum(col("c")).as("ct"))
     val ranks = BandedScan.cumSum(comb, Seq.empty, "z", "ct", "cum", 8L)
       .select(col("z"), col("ct"),
@@ -8417,10 +8294,9 @@ object Analytics {
     val fact = expr("CASE k WHEN 0 THEN 1.0 WHEN 1 THEN 1.0 WHEN 2 THEN 2.0 " +
       "WHEN 3 THEN 6.0 WHEN 4 THEN 24.0 WHEN 5 THEN 120.0 WHEN 6 THEN 720.0 " +
       "WHEN 7 THEN 5040.0 ELSE 40320.0 END")
-    val terms = spanH.crossJoin(
+    val terms = Mat.once(spanH.crossJoin(
         spark.range(0, 9).select(col("id").cast("long").as("k")))
-      .select(col("k"), col("a"), (pow(col("a"), col("k").cast("double")) / fact).as("t"))
-      .localCheckpoint()
+      .select(col("k"), col("a"), (pow(col("a"), col("k").cast("double")) / fact).as("t")))
     terms.filter(col("k") >= 1L).as("m")
       .join(terms.select(col("k").as("k2"), col("t").as("t2")).as("d"),
         col("k2") <= col("m.k"))
@@ -8508,12 +8384,11 @@ object Analytics {
         datediff(col("d1"), col("d0")).cast("long").as("t"),
         when(col("d1") <= lit("2024-01-23").cast("date"), 1L).otherwise(0L)
           .as("churned"))
-    val byT = obs.groupBy(col("t"))
+    val byT = Mat.once(obs.groupBy(col("t"))
       .agg(count(lit(1)).as("n_at"),
         sum(when(col("g") === 0, 1L).otherwise(0L)).as("n_at1"),
         sum(col("churned")).as("d"),
-        sum(when(col("g") === 0, col("churned")).otherwise(0L)).as("d1"))
-      .localCheckpoint()
+        sum(when(col("g") === 0, col("churned")).otherwise(0L)).as("d1")))
     val risk = byT.as("a")
       .join(byT.select(col("t").as("t2"), col("n_at").as("na2"),
         col("n_at1").as("na12")).as("b"), col("t2") >= col("a.t"))
@@ -8580,11 +8455,10 @@ object Analytics {
     * the chart is ≤ days rows.
     */
   def q_ewma_chart(spark: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .filter(col("event_type") === "error")
       .groupBy(to_date(col("ts_us")).as("day"))
-      .agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("x")))
     val st = daily.agg(count(lit(1)).as("n_days"), sum(col("x")).as("sx"))
       .select(col("n_days"),
         (col("sx").cast("double") / col("n_days").cast("double")).as("cbar"))
@@ -8615,10 +8489,9 @@ object Analytics {
     * numerators (4·U_num = 6·Σ(2R)² − 4m(N+1)(2N+1)).
     */
   def q_cucconi_test(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_linestatus").as("g"), col("l_quantity").cast("long").as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     val comb = cell.groupBy(col("v")).agg(sum(col("c")).as("ct"))
     val ranks = BandedScan.cumSum(comb, Seq.empty, "v", "ct", "cum", 8L)
       .select(col("v"),
@@ -8659,10 +8532,9 @@ object Analytics {
     * (count maxima), so no ordering enters.
     */
   def q_gk_lambda(spark: SparkSession, sf: String): DataFrame = {
-    val cont = Tables.customer(spark, sf)
+    val cont = Mat.once(Tables.customer(spark, sf)
       .groupBy(col("c_nationkey").cast("long").as("x"), col("c_mktsegment").as("y"))
-      .agg(count(lit(1)).as("nxy"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("nxy")))
     val rowMax = cont.groupBy(col("x")).agg(max(col("nxy")).as("mx"))
       .agg(sum(col("mx")).as("sum_row_max"), count(lit(1)).as("k_x"))
     val colMax = cont.groupBy(col("y")).agg(sum(col("nxy")).as("ny"))
@@ -8775,12 +8647,11 @@ object Analytics {
     * pair — k²/2 rows from a broadcast self-join of the k-row stats.
     */
   def q_tukey_hsd(spark: SparkSession, sf: String): DataFrame = {
-    val g = Tables.lineitem(spark, sf)
+    val g = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("flag"), pct(col("l_discount")).as("d"))
       .groupBy(col("flag"))
       .agg(count(lit(1)).as("n_g"), sum(col("d")).as("s1"),
-        sum(col("d").cast("decimal(38,0)") * col("d")).as("s2"))
-      .localCheckpoint()
+        sum(col("d").cast("decimal(38,0)") * col("d")).as("s2")))
     val mse = g.agg(sum(col("n_g")).as("nn"), count(lit(1)).as("k"),
       sum(col("s2").cast("double")
         - col("s1").cast("double") * col("s1").cast("double")
@@ -8812,13 +8683,12 @@ object Analytics {
     * decimal(38,0) until the single C epilogue. 25-row lattice.
     */
   def q_geary_c(spark: SparkSession, sf: String): DataFrame = {
-    val x = Tables.customer(spark, sf)
+    val x = Mat.once(Tables.customer(spark, sf)
       .groupBy(col("c_nationkey").cast("long").as("nk"))
       .agg(expr("sum(CAST(ROUND(c_acctbal*100) AS BIGINT)) div count(1)").as("x"))
       .join(Tables.nation(spark, sf)
         .select(col("n_nationkey").cast("long").as("nk"),
-          col("n_regionkey").cast("long").as("rk")), "nk")
-      .localCheckpoint()
+          col("n_regionkey").cast("long").as("rk")), "nk"))
     val tot = x.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
     val den = x.crossJoin(broadcast(tot))
       .select(((col("x") * col("n") - col("sx")).cast("decimal(38,0)")
@@ -8846,12 +8716,11 @@ object Analytics {
     * readout reports (critical values are table lookups, not data).
     */
   def q_dunnett_control(spark: SparkSession, sf: String): DataFrame = {
-    val g = Tables.lineitem(spark, sf)
+    val g = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("flag"), pct(col("l_discount")).as("d"))
       .groupBy(col("flag"))
       .agg(count(lit(1)).as("n_g"), sum(col("d")).as("s1"),
-        sum(col("d").cast("decimal(38,0)") * col("d")).as("s2"))
-      .localCheckpoint()
+        sum(col("d").cast("decimal(38,0)") * col("d")).as("s2")))
     val mse = g.agg(sum(col("n_g")).as("nn"), count(lit(1)).as("k"),
       sum(col("s2").cast("double")
         - col("s1").cast("double") * col("s1").cast("double")
@@ -8878,7 +8747,7 @@ object Analytics {
     * when pooling is unjustified.
     */
   def q_games_howell(spark: SparkSession, sf: String): DataFrame = {
-    val g = Tables.lineitem(spark, sf)
+    val g = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("flag"), pct(col("l_discount")).as("d"))
       .groupBy(col("flag"))
       .agg(count(lit(1)).as("n_g"), sum(col("d")).as("s1"),
@@ -8888,8 +8757,7 @@ object Analytics {
           - col("s1").cast("double") * col("s1").cast("double")
             / col("n_g").cast("double"))
           / (col("n_g") - 1L).cast("double")
-          / col("n_g").cast("double")).as("v"))
-      .localCheckpoint()
+          / col("n_g").cast("double")).as("v")))
     val pairs = g.as("a")
       .join(g.select(col("flag").as("flag2"), col("n_g").as("n2"),
         col("s1").as("t1"), col("v").as("v2")).as("b"),
@@ -8916,23 +8784,20 @@ object Analytics {
     * — the Welch-style df follows the same exact sums.
     */
   def q_brunner_munzel(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_linestatus").as("g"), col("l_quantity").cast("long").as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     val comb = cell.groupBy(col("v")).agg(sum(col("c")).as("ct"))
     val ranks = BandedScan.cumSum(comb, Seq.empty, "v", "ct", "cum", 8L)
       .select(col("v"), (lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L).as("r2"))
     val within = BandedScan.cumSum(cell, Seq("g"), "v", "c", "cumg", 8L)
       .select(col("g"), col("v"),
         (lit(2L) * (col("cumg") - col("c")) + col("c") + 1L).as("r2g"))
-    val base = cell.join(broadcast(ranks), "v")
-      .join(within, Seq("g", "v"))
-      .localCheckpoint()
-    val gs = base.groupBy(col("g"))
+    val base = Mat.once(cell.join(broadcast(ranks), "v")
+      .join(within, Seq("g", "v")))
+    val gs = Mat.once(base.groupBy(col("g"))
       .agg(sum(col("c")).as("n_g"),
-        sum(col("c").cast("decimal(38,0)") * col("r2")).as("sr2"))
-      .localCheckpoint()
+        sum(col("c").cast("decimal(38,0)") * col("r2")).as("sr2")))
     val dev = base.join(broadcast(gs), "g")
       .select(col("g"), col("c"),
         (col("n_g") * (col("r2") - col("r2g")) - col("sr2").cast("long")
@@ -8975,7 +8840,7 @@ object Analytics {
   def q_markov_absorption(spark: SparkSession, sf: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_usl").asc, col("event_id").asc)
-    val trans = Tables.eventsWithTs(spark, sf)
+    val trans = Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("user_id"), col("ts_usl"), col("event_id"), col("event_type"))
       .withColumn("dst", lead(col("event_type"), 1).over(w))
       .filter(col("dst").isNotNull)
@@ -8983,11 +8848,10 @@ object Analytics {
       .agg(count(lit(1)).as("c"))
       .withColumn("row_total",
         sum(col("c")).over(Window.partitionBy("src")))
-      .select(col("src"), col("dst"), expr("c * 1000000 div row_total").as("p_e6"))
-      .localCheckpoint()
+      .select(col("src"), col("dst"), expr("c * 1000000 div row_total").as("p_e6")))
     val a1 = trans.filter(col("dst") === "purchase")
       .select(col("src"), col("p_e6").as("a1_e6"))
-    val a2 = trans.filter(col("dst") =!= "purchase")
+    val a2 = Mat.once(trans.filter(col("dst") =!= "purchase")
       .join(broadcast(a1.select(col("src").as("dst"), col("a1_e6").as("a1_t"))),
         Seq("dst"), "left_outer")
       .groupBy(col("src"))
@@ -8995,8 +8859,7 @@ object Analytics {
       .join(a1, Seq("src"), "full_outer")
       .select(col("src"),
         (coalesce(col("a1_e6"), lit(0L))
-          + expr("coalesce(ind_e12, 0L) div 1000000")).as("a2_e6"))
-      .localCheckpoint()
+          + expr("coalesce(ind_e12, 0L) div 1000000")).as("a2_e6")))
     val a3 = trans.filter(col("dst") =!= "purchase")
       .join(broadcast(a2.select(col("src").as("dst"), col("a2_e6").as("a2_t"))),
         Seq("dst"), "left_outer")
@@ -9062,12 +8925,11 @@ object Analytics {
     * products) until one division. One contingency aggregate.
     */
   def q_weighted_kappa(spark: SparkSession, sf: String): DataFrame = {
-    val cont = Tables.orders(spark, sf)
+    val cont = Mat.once(Tables.orders(spark, sf)
       .select(least(expr("CAST(ROUND(o_totalprice*100) AS BIGINT) div 5000000"),
         lit(4L)).as("i"),
         (substring(col("o_orderpriority"), 1, 1).cast("long") - 1L).as("j"))
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("o"))
-      .localCheckpoint()
+      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("o")))
     val rows = cont.groupBy(col("i")).agg(sum(col("o")).as("r"))
     val cols9 = cont.groupBy(col("j")).agg(sum(col("o")).as("cc"))
     val num = cont
@@ -9092,12 +8954,10 @@ object Analytics {
     * and e6 rates exact.
     */
   def q_tukey_fences(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("g"), cents(col("l_extendedprice")).as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    val cum = BandedScan.cumSumAuto(cell, Seq("g"), "v", "c", "cum")
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
+    val cum = Mat.once(BandedScan.cumSumAuto(cell, Seq("g"), "v", "c", "cum"))
     val ng = cell.groupBy(col("g")).agg(sum(col("c")).as("n_g"))
     // both quartiles from ONE scan of the cum lattice: conditional min
     // inside a single aggregate instead of two filter+groupBy passes
@@ -9128,15 +8988,14 @@ object Analytics {
     * at any SF.
     */
   def q_sprt_monitor(spark: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(to_date(col("ts_us")).as("day"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("k"))
       .select(col("day"),
         round((col("k").cast("double") * log(lit(0.22) / lit(0.18))
           + (col("n") - col("k")).cast("double")
-            * log(lit(0.78) / lit(0.82))) * lit(1e8)).cast("long").as("llr_e8"))
-      .localCheckpoint()
+            * log(lit(0.78) / lit(0.82))) * lit(1e8)).cast("long").as("llr_e8")))
     daily.as("t")
       .join(daily.select(col("day").as("day2"), col("llr_e8").as("l2")).as("p"),
         col("day2") <= col("t.day"))
@@ -9186,10 +9045,9 @@ object Analytics {
     * [[q_cucconi_test]].
     */
   def q_lepage_test(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_linestatus").as("g"), col("l_quantity").cast("long").as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     val comb = cell.groupBy(col("v")).agg(sum(col("c")).as("ct"))
     val tot = cell.agg(sum(col("c")).as("nn"))
     val scores = BandedScan.cumSum(comb, Seq.empty, "v", "ct", "cum", 8L)
@@ -9199,7 +9057,7 @@ object Analytics {
         least(lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L,
           lit(2L) * (col("nn") + 1L)
             - (lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L)).as("a2"))
-    val base = cell.join(broadcast(scores), "v").localCheckpoint()
+    val base = Mat.once(cell.join(broadcast(scores), "v"))
     val pop = base.agg(sum(col("c")).as("nn"),
       sum(col("c").cast("decimal(38,0)") * col("r2")).as("sr"),
       sum(col("c").cast("decimal(38,0)") * col("r2") * col("r2")).as("srr"),
@@ -9234,16 +9092,14 @@ object Analytics {
     * location companion to the existing trimmed mean.
     */
   def q_winsorized_mean(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("g"), col("l_quantity").cast("long").as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     // lattice-sized (|flags|×|quantity domain| ≈ 150 rows); materialized
     // because BOTH clamp bounds below re-read it — lazy, each bound
     // re-evaluated the whole banded-scan subtree (round 10 plan audit:
     // 108 Exchange nodes without it)
-    val cum = BandedScan.cumSum(cell, Seq("g"), "v", "c", "cum", 8L)
-      .localCheckpoint()
+    val cum = Mat.once(BandedScan.cumSum(cell, Seq("g"), "v", "c", "cum", 8L))
     val ng = cell.groupBy(col("g")).agg(sum(col("c")).as("n_g"))
     val lo = cum.join(broadcast(ng), "g")
       .filter(col("cum") * 10L >= col("n_g"))
@@ -9271,13 +9127,11 @@ object Analytics {
     * Tukey trimean — robust spread/location without a single sort.
     */
   def q_quartile_dispersion(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_quantity").cast("long").as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    val cum = BandedScan.cumSum(cell, Seq.empty, "v", "c", "cum", 8L)
-      .crossJoin(broadcast(cell.agg(sum(col("c")).as("n"))))
-      .localCheckpoint()
+      .groupBy(col("v")).agg(count(lit(1)).as("c")))
+    val cum = Mat.once(BandedScan.cumSum(cell, Seq.empty, "v", "c", "cum", 8L)
+      .crossJoin(broadcast(cell.agg(sum(col("c")).as("n")))))
     def q(k: Int): DataFrame = cum.filter(col("cum") * 4L >= col("n") * k.toLong)
       .agg(min(col("v")).as(s"q$k"))
     q(1).crossJoin(q(2)).crossJoin(q(3))
@@ -9298,7 +9152,7 @@ object Analytics {
     * month-index arithmetic — calendar-bounded at any SF.
     */
   def q_adf_stat(spark: SparkSession, sf: String): DataFrame = {
-    val rev = monthlyRevenue(spark, sf).localCheckpoint()
+    val rev = Mat.once(monthlyRevenue(spark, sf))
     val pairs = rev.as("a")
       .join(rev.select((col("m") + 1L).as("m"), col("rev").as("prev")).as("b"),
         Seq("m"))
@@ -9331,16 +9185,14 @@ object Analytics {
     * exact e6 trunc integers, ulcer = √(mean dd²) one epilogue.
     */
   def q_max_drawdown(spark: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(to_date(col("ts_us")).as("day"))
-      .agg(sum(cents(col("value"))).as("x"))
-      .localCheckpoint()
-    val cum = daily.as("t")
+      .agg(sum(cents(col("value"))).as("x")))
+    val cum = Mat.once(daily.as("t")
       .join(daily.select(col("day").as("day2"), col("x").as("x2")).as("p"),
         col("day2") <= col("t.day"))
       .groupBy(col("t.day").as("day"))
-      .agg(sum(col("x2")).as("c"))
-      .localCheckpoint()
+      .agg(sum(col("x2")).as("c")))
     val dd = cum.as("t")
       .join(cum.select(col("day").as("day2"), col("c").as("c2")).as("p"),
         col("day2") <= col("t.day"))
@@ -9361,10 +9213,9 @@ object Analytics {
     * one final division. The gain/loss asymmetry card.
     */
   def q_omega_ratio(spark: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(to_date(col("ts_us")).as("day"))
-      .agg(sum(cents(col("value"))).as("x"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("x")))
     val tau = daily.agg(expr("sum(x) div count(1)").as("tau"))
     daily.crossJoin(broadcast(tau))
       .agg(count(lit(1)).as("n_days"), max(col("tau")).as("tau"),
@@ -9406,13 +9257,12 @@ object Analytics {
     * epilogue. One daily aggregate + one broadcast best-day scalar.
     */
   def q_oee_daily(spark: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(to_date(col("ts_us")).as("day"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purch"),
-        sum(cents(col("value"))).as("rev"))
-      .localCheckpoint()
+        sum(cents(col("value"))).as("rev")))
     val best = daily.agg(max(col("rev")).as("max_rev"))
     daily.crossJoin(broadcast(best))
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
@@ -9437,10 +9287,9 @@ object Analytics {
     */
   def q_yule_walker_ar2(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val raw = Tables.eventsWithTs(spark, sf)
+    val raw = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
-      .agg(sum(cents(col("value"))).as("x"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("x")))
     val base = raw.agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
       sum(col("x") * col("x")).as("q"))
     def lagSum(k: Int): DataFrame = raw.as("a")
@@ -9484,10 +9333,9 @@ object Analytics {
     */
   def q_hampel_filter(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val raw = Tables.eventsWithTs(spark, sf)
+    val raw = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
-      .agg(sum(cents(col("value"))).as("x"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("x")))
     val near = raw.as("a")
       .join(raw.select(col("t").as("t2"), col("x").as("x2")).as("b"),
         col("t2").between(col("t") - 3, col("t") + 3))
@@ -9544,12 +9392,11 @@ object Analytics {
       .groupBy(col("pk"), (col("m") === col("m1")).cast("int").as("cur"))
       .agg(sum(col("qty")).as("q"), sum(col("rev")).as("rev"))
       .withColumn("uv_e2", expr("rev * 100 div q"))
-    val matched = pm.filter(col("cur") === 0)
+    val matched = Mat.once(pm.filter(col("cur") === 0)
       .select(col("pk"), col("q").as("q0"), col("rev").as("rev0"), col("uv_e2").as("p0"))
       .join(pm.filter(col("cur") === 1)
         .select(col("pk"), col("q").as("q1"), col("rev").as("rev1"), col("uv_e2").as("p1")),
-        "pk")
-      .localCheckpoint()
+        "pk"))
     val tots = matched.agg(sum(col("rev0")).as("t0"), sum(col("rev1")).as("t1"))
     val terms = matched.crossJoin(broadcast(tots))
       .select(col("pk"), col("q0"), col("q1"), col("p0"), col("p1"),
@@ -9583,16 +9430,15 @@ object Analytics {
     * two-point comparison.
     */
   def q_chained_laspeyres(spark: SparkSession, sf: String): DataFrame = {
-    val pm = Tables.lineitem(spark, sf)
+    val pm = Mat.once(Tables.lineitem(spark, sf)
       .select((year(col("l_shipdate")) * 12 + month(col("l_shipdate")))
         .cast("long").as("m"), col("l_partkey").as("pk"),
         col("l_quantity").cast("long").as("qty"),
         cents(col("l_extendedprice")).as("rev"))
       .groupBy(col("m"), col("pk"))
       .agg(sum(col("qty")).as("q"), sum(col("rev")).as("rev"))
-      .withColumn("uv_e2", expr("rev * 100 div q"))
-      .localCheckpoint()
-    val links = pm.as("a")
+      .withColumn("uv_e2", expr("rev * 100 div q")))
+    val links = Mat.once(pm.as("a")
       .join(pm.select((col("m") - 1).as("m"), col("pk"),
         col("q").as("q1x"), col("uv_e2").as("p1")).as("b"), Seq("m", "pk"))
       .groupBy((col("m") + 1).as("m"))
@@ -9602,8 +9448,7 @@ object Analytics {
         expr("CAST(ROUND(CAST(num AS DOUBLE) / CAST(den AS DOUBLE) * 1e6) AS BIGINT)")
           .as("link_e6"),
         expr("CAST(ROUND(ln(CAST(num AS DOUBLE) / CAST(den AS DOUBLE)) * 1e9) AS BIGINT)")
-          .as("lnlink_e9"))
-      .localCheckpoint()
+          .as("lnlink_e9")))
     links.as("a")
       .join(links.select(col("m").as("m2"), col("lnlink_e9").as("l2")).as("b"),
         col("m2") <= col("m"))
@@ -9657,7 +9502,7 @@ object Analytics {
     * cents; empty last-3 windows forecast 0 by the exact guard.
     */
   def q_forecast_reconcile(spark: SparkSession, sf: String): DataFrame = {
-    val nm = Tables.orders(spark, sf)
+    val nm = Mat.once(Tables.orders(spark, sf)
       .select(col("o_custkey").as("cust"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("m"),
@@ -9665,8 +9510,7 @@ object Analytics {
       .join(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_nationkey").cast("long").as("nat")), "cust")
       .groupBy(col("nat"), col("m"))
-      .agg(sum(col("rev")).as("rev"))
-      .localCheckpoint()
+      .agg(sum(col("rev")).as("rev")))
     val mmax = nm.agg(max(col("m")).as("mx"))
     val base = nm.crossJoin(broadcast(mmax))
     val bu = base.filter(col("m").between(col("mx") - 3, col("mx") - 1))
@@ -9707,13 +9551,12 @@ object Analytics {
     */
   def q_lbkeogh_bound(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .filter(col("event_type").isin("purchase", "click"))
       .groupBy(col("event_type"),
         datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
       .agg(sum(cents(col("value"))).as("c"))
-      .select(col("event_type"), col("t"), expr("c div 100").as("v"))
-      .localCheckpoint()
+      .select(col("event_type"), col("t"), expr("c div 100").as("v")))
     val x = daily.filter(col("event_type") === "purchase").select(col("t"), col("v").as("x"))
     val y = daily.filter(col("event_type") === "click")
       .select(col("t").as("t2"), col("v").as("yv"))
@@ -9740,11 +9583,10 @@ object Analytics {
     */
   def q_error_budget_burn(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"))
-      .localCheckpoint()
+        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err")))
     daily.as("a")
       .join(daily.select(col("t").as("t2"), col("n").as("n2"),
         col("n_err").as("e2")).as("b"), col("t2") <= col("t"))
@@ -9768,7 +9610,7 @@ object Analytics {
     */
   def q_adstock_correlation(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .filter(col("event_type").isin("purchase", "click"))
       .groupBy(datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
       .agg(sum(when(col("event_type") === "click", cents(col("value")))
@@ -9777,8 +9619,7 @@ object Analytics {
           .otherwise(0L)).as("pc"))
       // $100 lattice: the 128-weighted adstock squared would overflow
       // BIGINT on cent sums at fleet scale; correlation is scale-free
-      .select(col("t"), expr("cc div 10000").as("c"), expr("pc div 10000").as("p"))
-      .localCheckpoint()
+      .select(col("t"), expr("cc div 10000").as("c"), expr("pc div 10000").as("p")))
     val ad = daily.as("a")
       .join(daily.select(col("t").as("t2"), col("c").as("c2")).as("b"),
         col("t2").between(col("t") - 7, col("t")))
@@ -9815,18 +9656,16 @@ object Analytics {
     */
   def q_recurrence_quantification(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val raw = Tables.eventsWithTs(spark, sf)
+    val raw = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
-      .agg(sum(cents(col("value"))).as("x"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("x")))
     val eps = raw.agg(expr("(max(x) - min(x)) div 10").as("eps"))
-    val rec = raw.as("a")
+    val rec = Mat.once(raw.as("a")
       .join(raw.select(col("t").as("t2"), col("x").as("x2")).as("b"),
         col("t2") > col("t"))
       .crossJoin(broadcast(eps))
       .select(col("t").as("i"), col("t2").as("j"),
-        (abs(col("x") - col("x2")) <= col("eps")).as("r"))
-      .localCheckpoint()
+        (abs(col("x") - col("x2")) <= col("eps")).as("r")))
     val base = rec.agg(count(lit(1)).as("n_pairs"),
       sum(when(col("r"), 1L).otherwise(0L)).as("n_rec"))
     val diag = rec.filter(col("r")).as("p")
@@ -9852,10 +9691,9 @@ object Analytics {
     */
   def q_cornish_fisher(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val raw = Tables.eventsWithTs(spark, sf)
+    val raw = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
-      .agg(sum(cents(col("value"))).as("x"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("x")))
     val mom = raw.agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
       sum(col("x").cast("double") * col("x").cast("double")).as("s2"),
       sum(col("x").cast("double") * col("x").cast("double")
@@ -9905,13 +9743,12 @@ object Analytics {
     */
   def q_pinball_loss(spark: SparkSession, sf: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val raw = Tables.eventsWithTs(spark, sf)
+    val raw = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(datediff(to_date(col("ts_us")), epoch).cast("long").as("t"))
-      .agg(sum(cents(col("value"))).as("x"))
-      .localCheckpoint()
+      .agg(sum(cents(col("value"))).as("x")))
     val cut = raw.agg((max(col("t")) - 13).as("tcut"))
-    val train = raw.crossJoin(broadcast(cut)).filter(col("t") < col("tcut"))
-      .select(col("t"), col("x")).localCheckpoint()
+    val train = Mat.once(raw.crossJoin(broadcast(cut)).filter(col("t") < col("tcut"))
+      .select(col("t"), col("x")))
     val ranked = train.as("a")
       .join(train.select(col("t").as("t2"), col("x").as("x2")).as("b"),
         col("x2") < col("x") || (col("x2") === col("x") && col("t2") <= col("t")))
@@ -9973,7 +9810,7 @@ object Analytics {
     // AND (doubled) both wedge legs + the degree aggregate — without this
     // the lineitem pair build re-executes for the un-checkpointed e-leg
     // (measured 2× the query's cost at sf0.1)
-    val e0 = support2Edges(spark, sf).localCheckpoint()
+    val e0 = Mat.once(support2Edges(spark, sf))
     val ed = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
     val tri = e0.as("e")
       .join(ed.select(col("u").as("eu"), col("v").as("z1")).as("a"),
@@ -10032,9 +9869,8 @@ object Analytics {
     * keyed wedge join (basket-bounded edge build, never vertex²).
     */
   def q_agm_bound(spark: SparkSession, sf: String): DataFrame = {
-    val e0 = support2Edges(spark, sf).localCheckpoint()
-    val ed = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+    val e0 = Mat.once(support2Edges(spark, sf))
+    val ed = Mat.once(e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))))
     val tri = e0.as("e")
       .join(ed.select(col("u").as("eu"), col("v").as("z1")).as("a"),
         col("e.u") === col("eu"))
@@ -10090,7 +9926,7 @@ object Analytics {
     * done.
     */
   def q_condorcet_copeland(spark: SparkSession, sf: String): DataFrame = {
-    val b = segmentBallots(spark, sf).localCheckpoint()
+    val b = Mat.once(segmentBallots(spark, sf))
     val duels = b.as("a")
       .join(b.select(col("segment").as("s2"), col("brand").as("b2"),
         col("rk").as("rk2")).as("bb"),
@@ -10142,7 +9978,7 @@ object Analytics {
     * aggregate. Pairs are candidate-bounded (brands² per segment).
     */
   def q_kemeny_distance(spark: SparkSession, sf: String): DataFrame = {
-    val b = segmentBallots(spark, sf).localCheckpoint()
+    val b = Mat.once(segmentBallots(spark, sf))
     val grev = Tables.lineitem(spark, sf)
       .join(broadcast(Tables.part(spark, sf)
         .select(col("p_partkey"), col("p_brand"))),
@@ -10180,15 +10016,14 @@ object Analytics {
     * The duel matrix is candidate-bounded (≤ brands²).
     */
   def q_bradley_terry_step(spark: SparkSession, sf: String): DataFrame = {
-    val b = segmentBallots(spark, sf).localCheckpoint()
-    val duels = b.as("a")
+    val b = Mat.once(segmentBallots(spark, sf))
+    val duels = Mat.once(b.as("a")
       .join(b.select(col("segment").as("s2"), col("brand").as("b2"),
         col("rk").as("rk2")).as("bb"),
         col("segment") === col("s2") && col("brand") =!= col("b2"))
       .groupBy(col("brand").as("x"), col("b2").as("y"))
       .agg(sum(when(col("rk") < col("rk2"), 1L).otherwise(0L)).as("wins_xy"),
-        count(lit(1)).as("n_xy"))
-      .localCheckpoint()
+        count(lit(1)).as("n_xy")))
     val w1 = duels.groupBy(col("x").as("brand"))
       .agg(sum(col("wins_xy")).as("wins"))
       .select(col("brand"), col("wins"), (col("wins") * 1000L).as("w1_e3"))
@@ -10197,10 +10032,9 @@ object Analytics {
       .join(broadcast(w1.select(col("brand").as("y"), col("w1_e3").as("wy"))), "y")
       .groupBy(col("x").as("brand"))
       .agg(sum(expr("n_xy * 1000000000 div (wx + wy)")).as("den_e6"))
-    val w2 = w1.join(denom, "brand")
+    val w2 = Mat.once(w1.join(denom, "brand")
       .select(col("brand"), col("wins"), col("w1_e3"),
-        expr("wins * 1000000000 div den_e6").as("w2_e3"))
-      .localCheckpoint()
+        expr("wins * 1000000000 div den_e6").as("w2_e3")))
     // ranks via the theta-count pattern on the ≤ brands-row strength
     // table (no global window)
     def rk(c: String, as: String)(df: DataFrame): DataFrame =
@@ -10355,16 +10189,15 @@ object Analytics {
     * every shared-cluster scheduler states its guarantees against.
     */
   def q_maxmin_fairness(spark: SparkSession, sf: String): DataFrame = {
-    val d = Tables.orders(spark, sf)
+    val d = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("cust"))
-      .groupBy(col("seg")).agg(sum(cents(col("o_totalprice"))).as("dem"))
-      .localCheckpoint()
+      .groupBy(col("seg")).agg(sum(cents(col("o_totalprice"))).as("dem")))
     val tot = d.agg(sum(col("dem")).as("td"), count(lit(1)).as("n"))
       .select(col("td"), col("n"), expr("td * 6 div 10").as("cap"))
     val o = d.select(col("seg").as("o_seg"), col("dem").as("o_dem"))
-    val ranked = d.join(broadcast(o),
+    val ranked = Mat.once(d.join(broadcast(o),
         col("o_dem") < col("dem") ||
         (col("o_dem") === col("dem") && col("o_seg") < col("seg")), "left_outer")
       .groupBy(col("seg"), col("dem"))
@@ -10374,8 +10207,7 @@ object Analytics {
       .select(col("seg"), col("dem"), col("rk"), col("prefix"), col("cap"),
         col("n"),
         when(col("dem") * (col("n") - col("rk") + 1L)
-          <= col("cap") - col("prefix"), 1L).otherwise(0L).as("satisfied"))
-      .localCheckpoint()
+          <= col("cap") - col("prefix"), 1L).otherwise(0L).as("satisfied")))
     val cut = ranked
       .agg(coalesce(sum(col("satisfied")), lit(0L)).as("n_sat"),
         coalesce(sum(when(col("satisfied") === 1L, col("dem"))
@@ -10412,12 +10244,11 @@ object Analytics {
     * parties that Hamilton (q_hamilton_apportionment) never shows.
     */
   def q_dhondt_apportionment(spark: SparkSession, sf: String): DataFrame = {
-    val d = Tables.orders(spark, sf)
+    val d = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("cust"))
-      .groupBy(col("seg")).agg(sum(cents(col("o_totalprice"))).as("dem"))
-      .localCheckpoint()
+      .groupBy(col("seg")).agg(sum(cents(col("o_totalprice"))).as("dem")))
     val quot = d.select(col("seg"), col("dem"),
       explode(sequence(lit(1L), lit(20L))).as("k"))
     val o = quot.select(col("seg").as("o_seg"), col("dem").as("o_dem"),
@@ -10456,17 +10287,15 @@ object Analytics {
     * theta-count.
     */
   def q_hamilton_apportionment(spark: SparkSession, sf: String): DataFrame = {
-    val d = Tables.orders(spark, sf)
+    val d = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("cust"))
-      .groupBy(col("seg")).agg(sum(cents(col("o_totalprice"))).as("dem"))
-      .localCheckpoint()
+      .groupBy(col("seg")).agg(sum(cents(col("o_totalprice"))).as("dem")))
     val tot = d.agg(sum(col("dem")).as("td"))
-    val q = d.crossJoin(broadcast(tot))
+    val q = Mat.once(d.crossJoin(broadcast(tot))
       .select(col("seg"), col("dem"),
-        expr("dem * 20 div td").as("fl"), expr("(dem * 20) % td").as("rem"))
-      .localCheckpoint()
+        expr("dem * 20 div td").as("fl"), expr("(dem * 20) % td").as("rem")))
     val leftover = q.agg((lit(20L) - sum(col("fl"))).as("lo"))
     val o = q.select(col("seg").as("o_seg"), col("rem").as("o_rem"))
     val remRank = q.join(broadcast(o),
@@ -10496,11 +10325,10 @@ object Analytics {
     * observed) are where PAVA merged violators.
     */
   def q_isotonic_fit(spark: SparkSession, sf: String): DataFrame = {
-    val mo = Tables.orders(spark, sf)
+    val mo = Mat.once(Tables.orders(spark, sf)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"))
-      .agg(sum(cents(col("o_totalprice"))).as("s"), count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(sum(cents(col("o_totalprice"))).as("s"), count(lit(1)).as("c")))
     val iv = mo.select(col("m").as("j"))
       .crossJoin(broadcast(mo.select(col("m").as("k"))))
       .filter(col("j") <= col("k"))
@@ -10534,10 +10362,9 @@ object Analytics {
         when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("y"))
     val mm = pc.agg(min(col("pc")).as("minc"), max(col("pc")).as("maxc"))
       .select(col("minc"), expr("(maxc - minc) div 10 + 1").as("wb"))
-    val bands = pc.crossJoin(broadcast(mm))
+    val bands = Mat.once(pc.crossJoin(broadcast(mm))
       .groupBy(expr("(pc - minc) div wb").as("b"))
-      .agg(sum(col("y")).as("s"), count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(sum(col("y")).as("s"), count(lit(1)).as("c")))
     val iv = bands.select(col("b").as("j"))
       .crossJoin(broadcast(bands.select(col("b").as("k"))))
       .filter(col("j") <= col("k"))
@@ -10568,12 +10395,11 @@ object Analytics {
     * plausible. One summary row.
     */
   def q_monotone_violations(spark: SparkSession, sf: String): DataFrame = {
-    val mo = Tables.orders(spark, sf)
+    val mo = Mat.once(Tables.orders(spark, sf)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"))
       .agg(expr("sum(CAST(ROUND(o_totalprice * 100) AS BIGINT)) * 10000 div count(1)")
-        .as("y_e4"))
-      .localCheckpoint()
+        .as("y_e4")))
     val prev = mo.select((col("m") + 1L).as("m"), col("y_e4").as("y_prev"))
     mo.join(prev, Seq("m"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -10597,15 +10423,14 @@ object Analytics {
     * window, O(25²) broadcast pairs.
     */
   def q_johnson_two_machine(spark: SparkSession, sf: String): DataFrame = {
-    val jobs = Tables.lineitem(spark, sf)
+    val jobs = Mat.once(Tables.lineitem(spark, sf)
       .join(broadcast(Tables.part(spark, sf)
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(expr("sum(CAST(l_quantity AS BIGINT)) div 100 + 1").as("p1"),
         expr("sum(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) div 100000000 + 1")
-          .as("p2"))
-      .localCheckpoint()
+          .as("p2")))
     // Johnson key: group 0 (p1<p2) by p1 asc, group 1 by p2 desc; ties brand
     val keyed = jobs.select(col("p_brand"), col("p1"), col("p2"),
       when(col("p1") < col("p2"), 0L).otherwise(1L).as("grp"),
@@ -10652,12 +10477,11 @@ object Analytics {
     * theta-count; two summary rows.
     */
   def q_spt_completion(spark: SparkSession, sf: String): DataFrame = {
-    val jobs = Tables.orders(spark, sf)
+    val jobs = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_nationkey").cast("long").as("nat"))),
         col("o_custkey") === col("cust"))
-      .groupBy(col("nat")).agg(count(lit(1)).as("p"))
-      .localCheckpoint()
+      .groupBy(col("nat")).agg(count(lit(1)).as("p")))
     val n = jobs.agg(count(lit(1)).as("n"))
     def total(ranked: DataFrame, name: String): DataFrame =
       ranked.crossJoin(broadcast(n))
@@ -10709,12 +10533,11 @@ object Analytics {
     * calendar-bounded (≤~100 rows at any SF), so the O(n²)/O(n³)
     * pairwise machinery below is a broadcast constant. */
   private def monthSeries(spark: SparkSession, sf: String): DataFrame =
-    Tables.orders(spark, sf)
+    Mat.once(Tables.orders(spark, sf)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"))
       .agg(expr("sum(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div count(1)")
-        .as("y"))
-      .localCheckpoint()
+        .as("y")))
 
   /** Rousseeuw-Croux Sn (JASA'93): lomed_i himed_{j≠i} |yᵢ−yⱼ| with the
     * 1.1926 consistency factor — the 58%-efficient, 50%-breakdown scale
@@ -10724,11 +10547,10 @@ object Analytics {
     */
   def q_sn_estimator(spark: SparkSession, sf: String): DataFrame = {
     val ms = monthSeries(spark, sf)
-    val pairs = ms.crossJoin(broadcast(ms.select(col("m").as("j"),
+    val pairs = Mat.once(ms.crossJoin(broadcast(ms.select(col("m").as("j"),
         col("y").as("yj"))))
       .filter(col("j") =!= col("m"))
-      .select(col("m"), col("j"), abs(col("y") - col("yj")).as("d"))
-      .localCheckpoint()
+      .select(col("m"), col("j"), abs(col("y") - col("yj")).as("d")))
     val n = ms.agg(count(lit(1)).as("n"))
     // inner high median: rank (n-1)/2 + 1 among each i's n-1 diffs
     val ranked = pairs.as("a").join(broadcast(pairs.select(col("m").as("m2"),
@@ -10760,11 +10582,10 @@ object Analytics {
     */
   def q_qn_estimator(spark: SparkSession, sf: String): DataFrame = {
     val ms = monthSeries(spark, sf)
-    val gaps = ms.crossJoin(broadcast(ms.select(col("m").as("j"),
+    val gaps = Mat.once(ms.crossJoin(broadcast(ms.select(col("m").as("j"),
         col("y").as("yj"))))
       .filter(col("m") < col("j"))
-      .select(col("m"), col("j"), abs(col("y") - col("yj")).as("d"))
-      .localCheckpoint()
+      .select(col("m"), col("j"), abs(col("y") - col("yj")).as("d")))
     val n = ms.agg(count(lit(1)).as("n"))
       .select(col("n"), expr("n div 2 + 1").as("h"))
       .select(col("n"), col("h"), expr("h * (h - 1) div 2").as("k"))
@@ -10826,15 +10647,14 @@ object Analytics {
     * starts by demanding.
     */
   def q_diff_in_diff(spark: SparkSession, sf: String): DataFrame = {
-    val o = Tables.orders(spark, sf)
+    val o = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("cust"))
       .select((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"),
         when(col("seg") === "BUILDING", 1L).otherwise(0L).as("treat"),
-        cents(col("o_totalprice")).as("v"))
-      .localCheckpoint()
+        cents(col("o_totalprice")).as("v")))
     val pivot = o.agg(expr("(min(m) + max(m) + 1) div 2").as("pv"))
     o.crossJoin(broadcast(pivot))
       .select(col("treat"), when(col("m") >= col("pv"), 1L).otherwise(0L)
@@ -10860,17 +10680,16 @@ object Analytics {
     * integer-cents arithmetic.
     */
   def q_event_study(spark: SparkSession, sf: String): DataFrame = {
-    val o = Tables.orders(spark, sf)
+    val o = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("cust"))
       .select((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"),
         when(col("seg") === "BUILDING", 1L).otherwise(0L).as("treat"),
-        cents(col("o_totalprice")).as("v"))
-      .localCheckpoint()
+        cents(col("o_totalprice")).as("v")))
     val pivot = o.agg(expr("(min(m) + max(m) + 1) div 2").as("pv"))
-    val gaps = o.crossJoin(broadcast(pivot))
+    val gaps = Mat.once(o.crossJoin(broadcast(pivot))
       .select((col("m") - col("pv")).as("tau"), col("treat"), col("v"))
       .filter(col("tau").between(-6L, 6L))
       .groupBy(col("tau"))
@@ -10881,8 +10700,7 @@ object Analytics {
         expr("sum(CASE WHEN treat = 0 THEN v ELSE 0 END) div " +
           "sum(CASE WHEN treat = 0 THEN 1 ELSE 0 END)").as("mean_c"))
       .select(col("tau"), col("n_t"), col("n_c"),
-        (col("mean_t") - col("mean_c")).as("gap_cents"))
-      .localCheckpoint()
+        (col("mean_t") - col("mean_c")).as("gap_cents")))
     val base = gaps.filter(col("tau") === -1L)
       .select(col("gap_cents").as("base_gap"))
     gaps.crossJoin(broadcast(base))
@@ -10941,14 +10759,13 @@ object Analytics {
     val top = bids.groupBy(col("pk"))
       .agg(count(lit(1)).as("n_bids"), max(col("b")).as("mx"))
       .filter(col("n_bids") >= 3L)
-    bids.join(top, "pk")
+    Mat.once(bids.join(top, "pk")
       .groupBy(col("pk"), col("n_bids"), col("mx"))
       .agg(sum(when(col("b") === col("mx"), 1L).otherwise(0L)).as("cnt_mx"),
         max(when(col("b") < col("mx"), col("b"))).as("below"))
       .select(col("pk"), col("n_bids"), col("mx"),
         when(col("cnt_mx") >= 2L, col("mx")).otherwise(col("below"))
-          .as("second"))
-      .localCheckpoint()
+          .as("second")))
   }
 
   /** First-price vs second-price (Vickrey) revenue over the part
@@ -11066,12 +10883,11 @@ object Analytics {
   def q_efficient_frontier(spark: SparkSession, sf: String): DataFrame = {
     val s = q_minvar_portfolio(spark, sf)
       .select(col("var_a_scaled"), col("var_b_scaled"), col("cov_scaled"))
-    val sweep = s.select(col("*"),
+    val sweep = Mat.once(s.select(col("*"),
         explode(array(lit(0L), lit(1L), lit(2L), lit(3L), lit(4L))).as("w"))
       .select(col("w").as("w_quarter"),
         expr("""w * w * var_a_scaled + (4 - w) * (4 - w) * var_b_scaled
-               + 2 * w * (4 - w) * cov_scaled""").as("var_num"))
-      .localCheckpoint()
+               + 2 * w * (4 - w) * cov_scaled""").as("var_num")))
     val mn = sweep.agg(min(col("var_num")).as("mn"))
     sweep.crossJoin(broadcast(mn))
       .select(col("w_quarter"), col("var_num"),
@@ -11086,15 +10902,14 @@ object Analytics {
     * month, one joint aggregate per segment via conditional sums.
     */
   def q_capm_beta(spark: SparkSession, sf: String): DataFrame = {
-    val sm = Tables.orders(spark, sf)
+    val sm = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"))),
         col("o_custkey") === col("cust"))
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"), col("seg"))
       .agg(expr("sum(CAST(ROUND(o_totalprice * 100) AS BIGINT)) div 100000")
-        .as("y"))
-      .localCheckpoint()
+        .as("y")))
     val mkt = sm.groupBy(col("m")).agg(sum(col("y")).as("x"))
     // DECIMAL(38,0) second moments for the same reason as
     // [[q_minvar_portfolio]]: the covariance numerator ×1e6 overflows a
@@ -11233,11 +11048,10 @@ object Analytics {
     * B2 = Σ(r−1)(r−2)x on the calendar-bounded maxima lattice (ranks
     * by theta-count). Shared by the three §2.180 estimators. */
   private def blockMaximaPwm(spark: SparkSession, sf: String): DataFrame = {
-    val bm = Tables.orders(spark, sf)
+    val bm = Mat.once(Tables.orders(spark, sf)
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"))
-      .agg(max(cents(col("o_totalprice"))).as("x"))
-      .localCheckpoint()
+      .agg(max(cents(col("o_totalprice"))).as("x")))
     val ranked = bm.join(broadcast(bm.select(col("m").as("m2"),
         col("x").as("x2"))),
         col("x2") < col("x") ||
@@ -11716,7 +11530,7 @@ object Analytics {
     // sides of the consecutive-age self-join below read it — lazy, the
     // whole life-table pipeline ran twice (round 10 plan audit: 72
     // Exchange nodes without it)
-    val lt = lifeTable(spark, sf).filter(col("d") > 0L).localCheckpoint()
+    val lt = Mat.once(lifeTable(spark, sf).filter(col("d") > 0L))
     val mx = "(CAST(2 AS DOUBLE) * CAST(d AS DOUBLE) / CAST(L2 AS DOUBLE))"
     val mxN = "(CAST(2 AS DOUBLE) * CAST(d_n AS DOUBLE) / CAST(L2_n AS DOUBLE))"
     val nxt = lt.select(col("age_days").as("age_n"), col("d").as("d_n"),
@@ -11772,7 +11586,7 @@ object Analytics {
     * scan; the 5×5 grid is a broadcast cross join.
     */
   def q_transport_plan_nw(spark: SparkSession, sf: String): DataFrame =
-    transportPlanNwOf(transportFlows(spark, sf).localCheckpoint())
+    transportPlanNwOf(Mat.once(transportFlows(spark, sf)))
 
   /** NW plan from an already-materialized flows table — shared with
     * [[q_transport_cost_gap]] so the lineitem→orders flows pipeline runs
@@ -11802,7 +11616,7 @@ object Analytics {
     * the regret ranking VAM allocates by. Keyed windows over the 5×5
     * cost matrix, row and column sides unioned. */
   def q_vogel_penalties(spark: SparkSession, sf: String): DataFrame = {
-    val fl = transportFlows(spark, sf).localCheckpoint()
+    val fl = Mat.once(transportFlows(spark, sf))
     def side(key: String, other: String, label: String) = {
       val w = Window.partitionBy(key).orderBy(col("cost").asc, col(other).asc)
       fl.withColumn("rk", row_number().over(w))
@@ -11823,7 +11637,7 @@ object Analytics {
     * row-minimum lower bound Σᵢ sᵢ·minⱼ cᵢⱼ — how far observed and
     * naive-feasible sit above the cheapest conceivable assignment. */
   def q_transport_cost_gap(spark: SparkSession, sf: String): DataFrame = {
-    val fl = transportFlows(spark, sf).localCheckpoint()
+    val fl = Mat.once(transportFlows(spark, sf))
     val actual = fl.agg(sum(col("flow") * col("cost")).as("actual_cost"))
     val nw = transportPlanNwOf(fl)
       .agg(sum(col("cost_total")).as("nw_cost"))
@@ -12308,7 +12122,7 @@ object Analytics {
     * Exposes per-source neighbor BITMASKS so the subset sweep below is
     * pure integer arithmetic. */
   private def hallLanes(spark: SparkSession, sf: String): DataFrame = {
-    val fl = transportFlows(spark, sf).localCheckpoint()
+    val fl = Mat.once(transportFlows(spark, sf))
     val thr = fl.agg(expr("sum(cost) div count(1)").as("mean_cost"))
     fl.crossJoin(broadcast(thr))
       .filter(col("cost") <= col("mean_cost"))
@@ -12608,7 +12422,7 @@ object Analytics {
     * closed iff closure == B; the lattice is attribute-bounded, so the
     * sweep is exhaustive at any corpus size. */
   def q_fca_closure_sweep(spark: SparkSession, sf: String): DataFrame = {
-    val objs = fcaObjects(spark, sf).localCheckpoint()
+    val objs = Mat.once(fcaObjects(spark, sf))
     spark.range(0L, 32L).toDF("b_mask")
       .join(broadcast(objs), expr("(attr_mask & b_mask) = b_mask"), "left")
       .groupBy("b_mask")
@@ -12623,7 +12437,7 @@ object Analytics {
     * (= the concept count), how many subsets are already closed, and the
     * top/bottom extents — the shape of the trade concept lattice. */
   def q_fca_concept_count(spark: SparkSession, sf: String): DataFrame = {
-    val sweep = q_fca_closure_sweep(spark, sf).localCheckpoint()
+    val sweep = Mat.once(q_fca_closure_sweep(spark, sf))
     sweep.agg(count(lit(1)).as("n_subsets"),
       countDistinct(col("closure_mask")).as("n_concepts"),
       sum(col("is_closed")).as("n_closed"),
@@ -13246,7 +13060,7 @@ object Analytics {
     * (3-paths) Σ_edges (deg_c−1)(deg_s−1), and the bipartite clustering
     * coefficient 4B/caterpillars (e6) — all exact integer sums. */
   def q_butterfly_count(spark: SparkSession, sf: String): DataFrame = {
-    val edges = bipEdges(spark, sf).localCheckpoint()
+    val edges = Mat.once(bipEdges(spark, sf))
     val degC = edges.groupBy("c").agg(count(lit(1)).as("dc"))
     val degS = edges.groupBy("s").agg(count(lit(1)).as("ds"))
     val nE = edges.agg(count(lit(1)).as("n_edges"))
@@ -13478,11 +13292,10 @@ object Analytics {
     * (≤ ~100 rows at any SF), so no window and no scale hazard. Rows
     * keep only months where the full p0..p3 stencil exists. */
   private def splineStencil(spark: SparkSession, sf: String): DataFrame = {
-    val base = Tables.orders(spark, sf)
+    val base = Mat.once(Tables.orders(spark, sf)
       .groupBy(expr("CAST(year(o_orderdate) * 12 + month(o_orderdate)" +
         " AS BIGINT)").as("m"))
-      .agg(sum(cents(col("o_totalprice"))).as("p"))
-      .localCheckpoint()
+      .agg(sum(cents(col("o_totalprice"))).as("p")))
     def at(off: Int, name: String) = broadcast(base.select(
       (col("m") - off.toLong).as(s"m_$name"), col("p").as(name)))
     base.select(col("m"), col("p").as("p1"))
@@ -13686,11 +13499,10 @@ object Analytics {
         .mkString(" ")
       s"(CASE $whens ELSE v END)"
     }
-    val cells = Tables.orders(spark, sf)
+    val cells = Mat.once(Tables.orders(spark, sf)
       .select(cents(col("o_totalprice")).as("v"))
       .select(expr(firstDigit).as("d1"), (col("v") % 2L).as("par"))
-      .groupBy("d1", "par").agg(count(lit(1)).as("n_obs"))
-      .localCheckpoint()
+      .groupBy("d1", "par").agg(count(lit(1)).as("n_obs")))
     val rowM = cells.groupBy("d1").agg(sum(col("n_obs")).as("n_row"))
     val colM = cells.groupBy("par").agg(sum(col("n_obs")).as("n_col"))
     val tot = cells.agg(sum(col("n_obs")).as("n_all"))

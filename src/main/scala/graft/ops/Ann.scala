@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 
 /** Approximate-nearest-neighbor scale paths over the embeddings table:
   * IVF (coarse-quantizer cell probing) and sign-random-projection LSH
@@ -196,7 +196,7 @@ object Ann {
       .groupBy(col("vec_id"))
       .agg(sum(expr("CASE WHEN proj > 0 THEN CAST(shiftleft(1, p) AS BIGINT) ELSE 0 END"))
         .as("bucket"))
-    val wb = v.join(buckets, "vec_id").localCheckpoint()
+    val wb = Mat.once(v.join(buckets, "vec_id"))
     val pairs = wb.as("a")
       .join(wb.select(col("vec_id").as("vid2"), col("label").as("label2"),
         col("bucket").as("bucket2"), col("qe").as("qe2"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.core.Mat
 
 /** Multi-level banded prefix scan — the scale-safe replacement for the
   * cumulative value-lattice theta join (`b.v <= a.v`).
@@ -53,7 +54,7 @@ object BandedScan {
   /** [[cumSum]] with bandWidth derived from the observed value range:
     * bandWidth ≈ (range+1)/√n keeps band count ≈ √n at ANY domain width.
     * Costs one extra tiny aggregate over `df` — callers with an expensive
-    * lattice lineage should `localCheckpoint()` it first (they already do).
+    * lattice lineage should `Mat.once` it first (they already do).
     */
   def cumSumAuto(df: DataFrame, groupCols: Seq[String], vCol: String,
                  xCol: String, cumCol: String): DataFrame =
@@ -131,21 +132,11 @@ object BandedScan {
     // the SAME df lineage 2^depth times: q_trimmed_mean's plan carried 46
     // Exchange nodes). One tiny eager job per recursing level flattens
     // the recursion onto a LogicalRDD; the depth-1 path (now the common
-    // one via [[cumSumsAuto]]) stays lazy and single-job.
-    //
-    // SIZE CONTRACT (round 10, applies to every localCheckpoint in this
-    // repo): localCheckpoint stores partitions on EXECUTOR-LOCAL storage
-    // and truncates lineage — a lost executor cannot recompute them, so
-    // it is only used for tables whose size is bounded by something
-    // other than the corpus: here |groups|·(V/bandWidth) band totals
-    // (≈ |groups|·√n rows by cumSumsAuto's band sizing). On a cluster
-    // where executor loss is routine, swap to reliable checkpointing
-    // (sc.setCheckpointDir + .checkpoint()) — same semantics, an HDFS
-    // write instead of local blocks. All in-query by construction:
-    // recomputed from parquet on every invocation, never reused across
-    // queries or runs.
+    // one via [[cumSumsAuto]]) stays lazy and single-job. The band-total
+    // table is |groups|·(V/bandWidth) rows (≈ |groups|·√n by
+    // cumSumsAuto's band sizing), never corpus-sized.
     val bandTot =
-      if (maxDepth > 1) bandTot0.localCheckpoint() else bandTot0
+      if (maxDepth > 1) Mat.once(bandTot0) else bandTot0
 
     // strict (<) per-band prefix of the band totals: recurse the banded
     // scan on the band table while depth remains, else broadcast theta

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 import graft.core.Det.cents
 
 /** Event-time operators over the events table — the BATCH twins of the
@@ -854,15 +854,14 @@ object Events {
     val daily = raw.crossJoin(broadcast(d0))
       .select((col("dayn") - col("d0")).as("t"), col("x"),
         (col("d1") - col("d0") + 1L).as("nd"))
-    val wins = daily.as("w")
+    val wins = Mat.once(daily.as("w")
       .join(daily.select(col("t").as("u"), col("x").as("xu")).as("e"),
         col("u").between(col("t"), col("t") + 4L))
       .groupBy(col("t"), col("nd"))
       .agg(count(lit(1)).as("wn"), sum(col("xu")).as("ws"),
         sum(col("xu") * col("xu")).as("wq"))
       .filter(col("wn") === 5L && col("t") <= col("nd") - 5L)
-      .select(col("t"), col("ws"), col("wq"))
-      .localCheckpoint()
+      .select(col("t"), col("ws"), col("wq")))
     // element-aligned cross-window products: offset k=0..4
     val elems = daily.select(col("t").as("et"), col("x"))
     val prod = wins.select(col("t").as("i"), col("ws").as("wsi"), col("wq").as("wqi"))
@@ -1029,11 +1028,10 @@ object Events {
       .filter(col("sd") > 0)
       .select(col("m"), col("blk"), col("sd"),
         (col("ps").cast("double") - col("k").cast("double") * col("mu")).as("cd"))
-    val rs = cum.groupBy(col("m"), col("blk"), col("sd"))
+    val rs = Mat.once(cum.groupBy(col("m"), col("blk"), col("sd"))
       .agg((max(col("cd")) - min(col("cd"))).as("r"))
       .groupBy(col("m"))
-      .agg(avg(col("r") / col("sd")).as("rs_mean"), count(lit(1)).as("n_blocks"))
-      .localCheckpoint()
+      .agg(avg(col("r") / col("sd")).as("rs_mean"), count(lit(1)).as("n_blocks")))
     val fit = rs.select(log(col("m").cast("double")).as("lx"),
         log(col("rs_mean")).as("ly"))
       .agg(count(lit(1)).cast("double").as("n"), sum(col("lx")).as("sx"),
@@ -1109,10 +1107,9 @@ object Events {
     * from exact µs integer arithmetic on both engines.
     */
   def q_hourly_profile(spark: SparkSession, sf: String): DataFrame = {
-    val hours = Tables.eventsWithTs(spark, sf)
+    val hours = Mat.once(Tables.eventsWithTs(spark, sf)
       .groupBy(expr("CAST((ts_usl div 3600000000) % 24 AS BIGINT)").as("h"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c")))
     val tot = hours.agg(sum(col("c")).as("n"))
     val chi = hours.crossJoin(broadcast(tot))
       .agg(max(col("n")).as("n"),
@@ -1142,12 +1139,11 @@ object Events {
     */
   private def userTypeSpans(spark: SparkSession, sf: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts_usl", "event_id")
-    Tables.eventsWithTs(spark, sf)
+    Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("user_id"), col("event_type"),
         row_number().over(w).cast("long").as("pos"))
       .groupBy(col("user_id"), col("event_type"))
-      .agg(min(col("pos")).as("minp"), max(col("pos")).as("maxp"))
-      .localCheckpoint()
+      .agg(min(col("pos")).as("minp"), max(col("pos")).as("maxp")))
   }
 
   /** PrefixSpan level-2 patterns — gap-allowed "A then B" support over
@@ -1193,10 +1189,9 @@ object Events {
     * across the stream.
     */
   def q_gsp_windowed_pairs(spark: SparkSession, sf: String): DataFrame = {
-    val ev = Tables.eventsWithTs(spark, sf)
+    val ev = Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("user_id"), col("event_type"), col("ts_usl"),
-        expr("ts_usl div 86400000000").as("day"))
-      .localCheckpoint()
+        expr("ts_usl div 86400000000").as("day")))
     // register each B occurrence under its own day AND the previous day so
     // the pair join is a pure (user, day) equi-join — per-bucket bounded,
     // never occurrence² across a user's whole stream
@@ -1240,11 +1235,10 @@ object Events {
     val userVal = Tables.eventsWithTs(spark, sf)
       .groupBy(col("user_id")).agg(sum(cents(col("value"))).as("v"))
     val meanV = userVal.agg((sum(col("v")) / count(lit(1))).as("mv"))
-    val cohorts = userVal.crossJoin(broadcast(meanV))
+    val cohorts = Mat.once(userVal.crossJoin(broadcast(meanV))
       .select(col("user_id"),
         when(col("v").cast("double") >= col("mv"), lit("high"))
-          .otherwise(lit("low")).as("cohort"))
-      .localCheckpoint()
+          .otherwise(lit("low")).as("cohort")))
     val cohortSizes = cohorts.groupBy(col("cohort"))
       .agg(count(lit(1)).as("c_users"))
     val spans = userTypeSpans(spark, sf)
@@ -1314,11 +1308,10 @@ object Events {
     */
   def q_secretary_rule(spark: SparkSession, sf: String): DataFrame = {
     val win = Window.partitionBy("u").orderBy("ns", "id")
-    val seq = Tables.eventsWithTs(spark, sf)
+    val seq = Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("user_id").as("u"), col("ts_nsl").as("ns"),
         col("event_id").as("id"), cents(col("value")).as("v"))
-      .withColumn("rn", row_number().over(win).cast("long"))
-      .localCheckpoint()
+      .withColumn("rn", row_number().over(win).cast("long")))
     val st = seq.groupBy(col("u"))
       .agg(count(lit(1)).as("n"), max(col("v")).as("vmax"))
       .filter(col("n") >= 5L)
@@ -1345,11 +1338,10 @@ object Events {
     */
   def q_prophet_threshold(spark: SparkSession, sf: String): DataFrame = {
     val win = Window.partitionBy("u").orderBy("ns", "id")
-    val seq = Tables.eventsWithTs(spark, sf)
+    val seq = Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("user_id").as("u"), col("ts_nsl").as("ns"),
         col("event_id").as("id"), cents(col("value")).as("v"))
-      .withColumn("rn", row_number().over(win).cast("long"))
-      .localCheckpoint()
+      .withColumn("rn", row_number().over(win).cast("long")))
     val st = seq.groupBy(col("u")).agg(max(col("v")).as("vmax"))
     val pick = seq.join(st, "u")
       .filter(col("v") * 2L >= col("vmax"))

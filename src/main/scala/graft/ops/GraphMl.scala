@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 import graft.core.Det.pct
 
 /** The remaining *classic MapReduce algorithm* surface (SURVEY.md §2.19):
@@ -70,9 +70,9 @@ object GraphMl {
     * contribution), identically on both engines.
     */
   def q_pagerank(spark: SparkSession, sf: String): DataFrame = {
-    val en = transitionEdges(spark, sf).cache()
-    val nodes = Tables.table(spark, sf, "events")
-      .select(col("event_type").as("v")).distinct().cache()
+    val en = Mat.once(transitionEdges(spark, sf))
+    val nodes = Mat.once(Tables.table(spark, sf, "events")
+      .select(col("event_type").as("v")).distinct())
     // the node count is a genuine scalar input of the formula (teleport
     // base 0.15/N): resolve it once, like q_recursive_calendar's bounds
     val n = nodes.count()
@@ -110,13 +110,12 @@ object GraphMl {
     * exact integer counts (D3).
     */
   def q_tree_split(spark: SparkSession, sf: String): DataFrame = {
-    val h = Tables.lineitem(spark, sf)
+    val h = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(col("l_quantity").cast("long").as("q"))
       .agg(
         sum(when(col("l_returnflag") === "A", 1L).otherwise(0L)).as("ca"),
         sum(when(col("l_returnflag") === "N", 1L).otherwise(0L)).as("cn"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("cr"))
-      .cache()
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("cr")))
     val cum = h.as("t").join(h.as("s"), col("s.q") <= col("t.q"))
       .groupBy(col("t.q").as("t"))
       .agg(sum(col("s.ca")).as("la"), sum(col("s.cn")).as("ln"), sum(col("s.cr")).as("lr"))
@@ -185,7 +184,7 @@ object GraphMl {
 
   /** Undirected co-purchase edge list (support ≥ 2 part pairs, both
     * directions) — the same graph as the triangle count, shared by the
-    * label-propagation and BFS operators below. `localCheckpoint` because
+    * label-propagation and BFS operators below. `Mat.once` because
     * every consumer fans out into multiple self-references.
     */
   private def coPurchaseEdges(spark: SparkSession, sf: String): DataFrame = {
@@ -196,9 +195,8 @@ object GraphMl {
     // one shuffle on the pair key (Round7OpsSpec pins the pair-multiset
     // equality of the two forms; Round9OpsSpec pins the weighted variant).
     val e = Analytics.support2Edges(spark, sf)
-    e.select(col("u"), col("v"))
-      .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+    Mat.once(e.select(col("u"), col("v"))
+      .unionByName(e.select(col("v").as("u"), col("u").as("v"))))
   }
 
   /** Weighted co-purchase edges (w = 1000 div support, both directions) —
@@ -207,15 +205,11 @@ object GraphMl {
   private def weightedCoPurchaseEdges(spark: SparkSession, sf: String): DataFrame = {
     val e0 = Analytics.support2PairCounts(spark, sf)
       .filter(col("s") >= 2)
-    e0.select(col("u"), col("v"), expr("1000 div s").as("w"))
+    // the support-2 edge list is bounded by Σ_baskets breadth² with
+    // breadth runtime-capped by Guards.boundedBasket
+    Mat.once(e0.select(col("u"), col("v"), expr("1000 div s").as("w"))
       .unionByName(e0.select(col("v").as("u"), col("u").as("v"),
-        expr("1000 div s").as("w")))
-      // size contract (see BandedScan.cumSums): the support-2 edge list
-      // is bounded by Σ_baskets breadth² with breadth runtime-capped by
-      // Guards.boundedBasket — a dimension-table-scale artifact, never
-      // corpus-scale; executor-local checkpoint storage is acceptable
-      // for it (swap to reliable .checkpoint() on a lossy cluster)
-      .localCheckpoint()
+        expr("1000 div s").as("w"))))
   }
 
   /** One synchronous label-propagation step on the co-purchase graph:
@@ -252,10 +246,9 @@ object GraphMl {
     val edges = coPurchaseEdges(spark, sf)
     val l0 = edges.agg(min(col("u")).as("node"))
     def expand(frontier: DataFrame, visited: DataFrame): DataFrame =
-      edges.join(frontier.select(col("node").as("u")), "u")
+      Mat.once(edges.join(frontier.select(col("node").as("u")), "u")
         .select(col("v").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint()
+        .join(visited, Seq("node"), "left_anti"))
     val l1 = expand(l0, l0)
     val v1 = l0.unionByName(l1)
     val l2 = expand(l1, v1)
@@ -342,10 +335,9 @@ object GraphMl {
     def peel(g: DataFrame): DataFrame = {
       val survivors = g.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= 3).select(col("u").as("node"))
-      g.join(survivors.select(col("node").as("u")), "u")
+      Mat.once(g.join(survivors.select(col("node").as("u")), "u")
         .join(survivors.select(col("node").as("v")), "v")
-        .select(col("u"), col("v"))
-        .localCheckpoint()
+        .select(col("u"), col("v")))
     }
     val g0 = coPurchaseEdges(spark, sf)
     val g1 = peel(g0)
@@ -365,11 +357,10 @@ object GraphMl {
     val edges = weightedCoPurchaseEdges(spark, sf)
     val src = edges.agg(min(col("u")).as("node")).withColumn("dist", lit(0L))
     def relax(d: DataFrame): DataFrame =
-      d.join(edges, col("node") === col("u"))
+      Mat.once(d.join(edges, col("node") === col("u"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
         .unionByName(d)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
     val d3 = relax(relax(relax(src)))
     d3.orderBy(col("dist").asc, col("node").asc).limit(10)
   }
@@ -406,12 +397,11 @@ object GraphMl {
     * sums are order-independent). Top-10 authorities.
     */
   def q_hits_scores(spark: SparkSession, sf: String): DataFrame = {
-    val edges = Tables.lineitem(spark, sf)
+    val edges = Mat.once(Tables.lineitem(spark, sf)
       .join(Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // a0 = 1e6 for every part → h1(c) = Σ a0, a1(p) = Σ h1, h2, a2
     val h1 = edges.groupBy(col("c")).agg((count(lit(1)) * 1000000L).as("h"))
     val a1 = edges.join(h1, "c").groupBy(col("p")).agg(sum(col("h")).as("a"))
@@ -456,10 +446,9 @@ object GraphMl {
     * integers (1000000 div d) so the sum is order-free.
     */
   def q_graph_efficiency(spark: SparkSession, sf: String): DataFrame = {
-    val e = transitionEdges(spark, sf)
+    val e = Mat.once(transitionEdges(spark, sf)
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"))
-      .localCheckpoint()
+      .select(col("src"), col("dst")))
     val d1 = e.select(col("src"), col("dst"), lit(1L).as("d"))
     val d2 = e.as("a")
       .join(e.select(col("src").as("mid"), col("dst").as("dst2")).as("b"),
@@ -472,9 +461,8 @@ object GraphMl {
       .filter(col("src") =!= col("dst3"))
       .select(col("src"), col("dst3").as("dst"), lit(3L).as("d"))
       .distinct()
-    val best = d1.unionByName(d2).unionByName(d3)
-      .groupBy(col("src"), col("dst")).agg(min(col("d")).as("d"))
-      .localCheckpoint()
+    val best = Mat.once(d1.unionByName(d2).unionByName(d3)
+      .groupBy(col("src"), col("dst")).agg(min(col("d")).as("d")))
     val n = Tables.eventsWithTs(spark, sf)
       .select(col("event_type")).distinct().count()
     best.agg(count(lit(1)).as("n_pairs_reachable"),
@@ -524,7 +512,7 @@ object GraphMl {
     */
   def q_ktruss_step(spark: SparkSession, sf: String): DataFrame = {
     val edges = coPurchaseEdges(spark, sf)
-    val und = edges.filter(col("u") < col("v")).localCheckpoint()
+    val und = Mat.once(edges.filter(col("u") < col("v")))
     val support = und.as("e")
       .join(edges.select(col("u").as("eu"), col("v").as("z1")).as("a"),
         col("e.u") === col("eu"))
@@ -554,17 +542,15 @@ object GraphMl {
     */
   def q_graph_eccentricity(spark: SparkSession, sf: String): DataFrame = {
     val edges = coPurchaseEdges(spark, sf)
-    val seeds = edges.groupBy(col("u").as("node"))
+    val seeds = Mat.once(edges.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("node").asc)
-      .limit(5)
-      .localCheckpoint()
+      .limit(5))
     val f0 = seeds.select(col("node").as("seed"), col("node"))
     def expand(frontier: DataFrame, visited: DataFrame): DataFrame =
-      frontier.join(edges.select(col("u").as("node"), col("v")), "node")
+      Mat.once(frontier.join(edges.select(col("u").as("node"), col("v")), "node")
         .select(col("seed"), col("v").as("node")).distinct()
-        .join(visited, Seq("seed", "node"), "left_anti")
-        .localCheckpoint()
+        .join(visited, Seq("seed", "node"), "left_anti"))
     val f1 = expand(f0, f0)
     val v1 = f0.unionByName(f1)
     val f2 = expand(f1, v1)
@@ -598,12 +584,11 @@ object GraphMl {
   def q_graph_diameter2sweep(spark: SparkSession, sf: String): DataFrame = {
     val edges = coPurchaseEdges(spark, sf)
     def expand(frontier: DataFrame, visited: DataFrame): DataFrame =
-      frontier.join(edges.select(col("u").as("node"), col("v")), "node")
+      Mat.once(frontier.join(edges.select(col("u").as("node"), col("v")), "node")
         .select(col("v").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint()
+        .join(visited, Seq("node"), "left_anti"))
     def sweep(src: DataFrame): DataFrame = {
-      val f0 = src.localCheckpoint()
+      val f0 = Mat.once(src)
       val f1 = expand(f0, f0)
       val v1 = f0.unionByName(f1)
       val f2 = expand(f1, v1)
@@ -615,8 +600,7 @@ object GraphMl {
         .unionByName(f3.withColumn("lvl", lit(3L)))
     }
     val s1 = sweep(edges.agg(min(col("u")).as("node")))
-    val far = s1.orderBy(col("lvl").desc, col("node").asc).limit(1)
-      .localCheckpoint()
+    val far = Mat.once(s1.orderBy(col("lvl").desc, col("node").asc).limit(1))
     val s2 = sweep(far.select(col("node")))
     val a1 = s1.agg(max(col("lvl")).as("ecc1"), count(lit(1)).as("n_reached1"))
     val a2 = s2.agg(max(col("lvl")).as("ecc2"), count(lit(1)).as("n_reached2"))
@@ -666,7 +650,7 @@ object GraphMl {
     */
   def q_local_bridges(spark: SparkSession, sf: String): DataFrame = {
     val edges = coPurchaseEdges(spark, sf)
-    val und = edges.filter(col("u") < col("v")).localCheckpoint()
+    val und = Mat.once(edges.filter(col("u") < col("v")))
     val supported = und.as("e")
       .join(edges.select(col("u").as("eu"), col("v").as("z1")).as("a"),
         col("e.u") === col("eu"))
@@ -674,10 +658,9 @@ object GraphMl {
         col("e.v") === col("ev") && col("z1") === col("z2"))
       .select(col("e.u").as("u"), col("e.v").as("v")).distinct()
     val deg = edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-    val bridges = und.join(supported, Seq("u", "v"), "left_anti")
+    val bridges = Mat.once(und.join(supported, Seq("u", "v"), "left_anti")
       .join(deg.select(col("node").as("u"), col("deg").as("deg_u")), "u")
-      .join(deg.select(col("node").as("v"), col("deg").as("deg_v")), "v")
-      .localCheckpoint()
+      .join(deg.select(col("node").as("v"), col("deg").as("deg_v")), "v"))
     val tot = bridges.agg(count(lit(1)).as("n_bridges_total"))
     bridges.crossJoin(broadcast(tot))
       .orderBy((col("deg_u") * col("deg_v")).desc, col("u").asc, col("v").asc)
@@ -696,16 +679,15 @@ object GraphMl {
     */
   def q_jones_plassmann(spark: SparkSession, sf: String): DataFrame = {
     val edges = coPurchaseEdges(spark, sf)
-    val pri = edges.select(col("u").as("node")).distinct()
-      .select(col("node"), graft.core.Det.hash32(col("node")).as("h"))
-      .localCheckpoint()
+    val pri = Mat.once(edges.select(col("u").as("node")).distinct()
+      .select(col("node"), graft.core.Det.hash32(col("node")).as("h")))
     val beaten = edges
       .join(pri.select(col("node").as("u"), col("h").as("hu")), "u")
       .join(pri.select(col("node").as("v"), col("h").as("hv")), "v")
       .filter(col("hv") > col("hu") || (col("hv") === col("hu") && col("v") > col("u")))
       .select(col("u").as("node")).distinct()
-    val sel = pri.join(beaten, Seq("node"), "left_anti")
-      .select(col("node")).localCheckpoint()
+    val sel = Mat.once(pri.join(beaten, Seq("node"), "left_anti")
+      .select(col("node")))
     val n = pri.agg(count(lit(1)).as("n_nodes"))
     val k = sel.agg(count(lit(1)).as("n_colored"))
     val conflicts = edges.filter(col("u") < col("v"))
@@ -726,17 +708,15 @@ object GraphMl {
     */
   def q_spectral_bisection_step(spark: SparkSession, sf: String): DataFrame = {
     val edges = coPurchaseEdges(spark, sf)
-    val x0 = edges.select(col("u").as("node")).distinct()
-      .select(col("node"), ((col("node") % 2) * 2 - 1).as("x"))
-      .localCheckpoint()
-    val x1 = edges
+    val x0 = Mat.once(edges.select(col("u").as("node")).distinct()
+      .select(col("node"), ((col("node") % 2) * 2 - 1).as("x")))
+    val x1 = Mat.once(edges
       .join(x0.select(col("node").as("u"), col("x").as("xu")), "u")
       .join(x0.select(col("node").as("v"), col("x").as("xv")), "v")
       .groupBy(col("u").as("node"), col("xu"))
       .agg(count(lit(1)).as("deg"), sum(col("xv")).as("nsum"))
       .select(col("node"), col("xu").as("x_old"),
-        (col("deg") * col("xu") - col("nsum")).as("x_new"))
-      .localCheckpoint()
+        (col("deg") * col("xu") - col("nsum")).as("x_new")))
     def cut(sign: DataFrame): DataFrame = edges.filter(col("u") < col("v"))
       .join(sign.select(col("node").as("u"), col("s").as("su")), "u")
       .join(sign.select(col("node").as("v"), col("s").as("sv")), "v")
@@ -760,16 +740,14 @@ object GraphMl {
     * VLDB'12), whose full run just iterates this exact step.
     */
   def q_densest_subgraph_peel(spark: SparkSession, sf: String): DataFrame = {
-    val und = coPurchaseEdges(spark, sf).filter(col("u") < col("v"))
-      .localCheckpoint()
-    val deg = und.select(col("u").as("node"))
+    val und = Mat.once(coPurchaseEdges(spark, sf).filter(col("u") < col("v")))
+    val deg = Mat.once(und.select(col("u").as("node"))
       .unionByName(und.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     val tot = deg.agg(count(lit(1)).as("n0"), sum(col("deg")).as("m2"))
-    val keep = deg.crossJoin(broadcast(tot))
+    val keep = Mat.once(deg.crossJoin(broadcast(tot))
       .filter(col("deg") * col("n0") > col("m2"))
-      .select(col("node")).localCheckpoint()
+      .select(col("node")))
     val kept = und
       .join(keep.select(col("node").as("u")), "u")
       .join(keep.select(col("node").as("v")), "v")
@@ -820,8 +798,7 @@ object GraphMl {
     val el = edges
       .join(broadcast(lab.select(col("node").as("u"), col("g").as("gu"))), "u")
       .join(broadcast(lab.select(col("node").as("v"), col("g").as("gv"))), "v")
-    val cells = el.groupBy(col("gu"), col("gv")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val cells = Mat.once(el.groupBy(col("gu"), col("gv")).agg(count(lit(1)).as("c")))
     val tr = cells.filter(col("gu") === col("gv")).agg(sum(col("c")).as("tr"))
     val margins = cells.groupBy(col("gu")).agg(sum(col("c")).as("a"))
       .join(cells.groupBy(col("gv").as("gu")).agg(sum(col("c")).as("b")), "gu")
@@ -847,8 +824,8 @@ object GraphMl {
   def q_threshold_cascade(spark: SparkSession, sf: String): DataFrame = {
     val edges = coPurchaseEdges(spark, sf)
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
-    val seeds = deg.orderBy(col("d").desc, col("u").asc).limit(5)
-      .select(col("u").as("node")).localCheckpoint()
+    val seeds = Mat.once(deg.orderBy(col("d").desc, col("u").asc).limit(5)
+      .select(col("u").as("node")))
     def step(active: DataFrame): DataFrame = {
       val newly = edges
         .join(active.select(col("node").as("v")), "v")
@@ -856,7 +833,7 @@ object GraphMl {
         .filter(col("cnt") >= 2L)
         .select(col("u").as("node"))
         .join(active, Seq("node"), "left_anti")
-      active.unionByName(newly).localCheckpoint()
+      Mat.once(active.unionByName(newly))
     }
     val a1 = step(seeds)
     val a2 = step(a1)
@@ -864,8 +841,8 @@ object GraphMl {
     def row(r: Long, a: DataFrame): DataFrame =
       a.agg(count(lit(1)).as("n_active")).select(lit(r).as("round"),
         col("n_active"))
-    val rounds = row(0L, seeds).unionByName(row(1L, a1))
-      .unionByName(row(2L, a2)).unionByName(row(3L, a3)).localCheckpoint()
+    val rounds = Mat.once(row(0L, seeds).unionByName(row(1L, a1))
+      .unionByName(row(2L, a2)).unionByName(row(3L, a3)))
     val prev = rounds.select((col("round") + 1L).as("round"),
       col("n_active").as("prev_active"))
     rounds.join(broadcast(prev), Seq("round"), "left_outer")
@@ -882,8 +859,7 @@ object GraphMl {
   def q_cascade_seed_compare(spark: SparkSession, sf: String): DataFrame = {
     import graft.core.Det.hash32
     val edges = coPurchaseEdges(spark, sf)
-    val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    val deg = Mat.once(edges.groupBy(col("u")).agg(count(lit(1)).as("d")))
     val nNodes = deg.agg(count(lit(1)).as("nn"))
     def run(seeds: DataFrame): DataFrame = {
       def step(active: DataFrame): DataFrame = {
@@ -893,9 +869,9 @@ object GraphMl {
           .filter(col("cnt") >= 2L)
           .select(col("u").as("node"))
           .join(active, Seq("node"), "left_anti")
-        active.unionByName(newly).localCheckpoint()
+        Mat.once(active.unionByName(newly))
       }
-      step(step(seeds.localCheckpoint()))
+      step(step(Mat.once(seeds)))
     }
     val topDeg = deg.orderBy(col("d").desc, col("u").asc).limit(5)
       .select(col("u").as("node"))

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 import graft.core.Det.{cents, pct}
 
 /** Deterministic, oracle-able formulations of the reference's ML surface
@@ -280,12 +280,11 @@ object MLDeterministic {
     * with −1 sentinels for undefined cells (a class never predicted).
     */
   def q_eval_f1(spark: SparkSession, sf: String): DataFrame = {
-    val conf = nbPredict(spark, sf)
-      .groupBy(col("actual"), col("predicted")).agg(count(lit(1)).as("n"))
-      // ≤ classes² rows; materialized because the precision and recall
-      // margins below each re-read it — lazy, the whole NB train+score
-      // pipeline ran twice (round 10 plan audit: 106 Exchange nodes)
-      .localCheckpoint()
+    // ≤ classes² rows; materialized because the precision and recall
+    // margins below each re-read it — lazy, the whole NB train+score
+    // pipeline ran twice (round 10 plan audit: 106 Exchange nodes)
+    val conf = Mat.once(nbPredict(spark, sf)
+      .groupBy(col("actual"), col("predicted")).agg(count(lit(1)).as("n")))
     val byPred = conf.groupBy(col("predicted").as("class"))
       .agg(sum(when(col("actual") === col("predicted"), col("n")).otherwise(0L)).as("tp"),
         sum(when(col("actual") =!= col("predicted"), col("n")).otherwise(0L)).as("fp"))
@@ -533,9 +532,8 @@ object MLDeterministic {
     * size); item supports are a broadcastable dimension at any scale.
     */
   def q_recsys_lift(spark: SparkSession, sf: String): DataFrame = {
-    val items = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      .localCheckpoint()
+    val items = Mat.once(Tables.lineitem(spark, sf)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct())
     val n = items.select(col("ok")).distinct().agg(count(lit(1)).as("n_orders"))
     val support = items.groupBy(col("pk")).agg(count(lit(1)).as("s"))
     // round 9: in-basket pair generation (one shuffle keyed by order +
@@ -716,9 +714,8 @@ object MLDeterministic {
 
   private[graft] def kmeansConverged(spark: SparkSession, sf: String,
       maxIter: Int): DataFrame = {
-    val vecs = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), Vectors.q7(col("embedding")).as("qe"))
-      .localCheckpoint()
+    val vecs = Mat.once(Tables.embeddings(spark, sf)
+      .select(col("vec_id"), Vectors.q7(col("embedding")).as("qe")))
     val qeType = vecs.schema("qe").dataType
     // seed centroids: same Spark ROUND(x/10) expression as before, k rows
     var cent: Seq[(Long, Array[Long])] = vecs.filter(col("vec_id") <= 9)
@@ -878,12 +875,11 @@ object MLDeterministic {
     * broadcast item supports.
     */
   def q_rule_confidence(spark: SparkSession, sf: String): DataFrame = {
-    val baskets = Tables.lineitem(spark, sf)
+    val baskets = Mat.once(Tables.lineitem(spark, sf)
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("items"))
       .select(graft.core.Guards.boundedBasket(col("items"),
-        graft.core.Guards.PairBreadthCap, "q_rule_confidence").as("items"))
-      .localCheckpoint()
+        graft.core.Guards.PairBreadthCap, "q_rule_confidence").as("items")))
     val nB = baskets.agg(count(lit(1)).as("nb"))
     val itemSup = baskets.select(explode(col("items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("sup"))
@@ -1117,7 +1113,12 @@ object MLDeterministic {
         scored.groupBy(col("score").as("pc")).agg(count(lit(1)).as("cnt")),
         Seq(), (1 to 9).map(i => i / 10.0 -> s"d$i"))
       .select(array((1 to 9).map(i => col(s"d$i")): _*).as("bounds"))
-    val dec = scored
+    // ≤10 rows; materialized because THREE consumers fan out below
+    // (the cumulative self-join's two sides + the totals row) — lazy,
+    // each would re-evaluate the whole scored⋈spend⋈percentile
+    // pipeline, tripling the work and planning a 194-Exchange tree
+    // (round 10 plan audit; guide §2.4 repeated-subtree)
+    val dec = Mat.once(scored
       .join(spend, col("c_custkey") === col("o_custkey"), "left")
       .crossJoin(broadcast(med))
       .crossJoin(broadcast(bounds))
@@ -1126,13 +1127,7 @@ object MLDeterministic {
         when(coalesce(col("spend"), lit(0L)).cast("double") > col("m"), 1L)
           .otherwise(0L).as("pos"))
       .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"))
-      // ≤10 rows; materialized because THREE consumers fan out below
-      // (the cumulative self-join's two sides + the totals row) — lazy,
-      // each would re-evaluate the whole scored⋈spend⋈percentile
-      // pipeline, tripling the work and planning a 194-Exchange tree
-      // (round 10 plan audit; guide §2.4 repeated-subtree)
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos")))
     val tot = dec.agg(sum(col("n")).as("tot_n"), sum(col("n_pos")).as("tot_pos"))
     dec.as("a")
       .join(dec.select(col("decile").as("d2"), col("n").as("n2"),
@@ -1303,7 +1298,7 @@ object MLDeterministic {
         sum(col("cyy")).as("tyy"))
       // cumulative sums over the ~50-row size histogram via bounded theta
       // join (house rule: no partition-less windows), like q_tree_split
-      h.as("t")
+      Mat.once(h.as("t")
         .join(h.select(col("f").as("f2"), col("cn").as("cn2"), col("cy").as("cy2"),
           col("cyy").as("cyy2")).as("s"), col("s.f2") <= col("t.f"))
         .groupBy(col("t.f").as("f"))
@@ -1320,8 +1315,7 @@ object MLDeterministic {
             """(CAST(lyy AS DOUBLE) - CAST(ly AS DOUBLE) * CAST(ly AS DOUBLE) / CAST(n_left AS DOUBLE))
                + (CAST(ryy AS DOUBLE) - CAST(ry AS DOUBLE) * CAST(ry AS DOUBLE) / CAST(n_right AS DOUBLE))"""),
             4) + lit(0.0)).as("sse"))
-        .orderBy(col("sse").asc, col("threshold").asc).limit(1)
-        .localCheckpoint()
+        .orderBy(col("sse").asc, col("threshold").asc).limit(1))
     }
     val base = Tables.part(spark, sf)
       .select(col("p_size").cast("long").as("f"), cents(col("p_retailprice")).as("yv"))
@@ -1527,15 +1521,14 @@ object MLDeterministic {
     */
   def q_esd_outliers(spark: SparkSession, sf: String): DataFrame = {
     val lambdas = Seq(3.02, 3.01, 3.01)
-    var remaining = Tables.eventsWithTs(spark, sf)
+    var remaining = Mat.once(Tables.eventsWithTs(spark, sf)
       .filter(col("event_type") === "error")
-      .select(col("event_id"), cents(col("value")).as("vc"))
-      .localCheckpoint()
+      .select(col("event_id"), cents(col("value")).as("vc")))
     var out: DataFrame = null
     for (r <- 1 to 3) {
       val st = remaining.agg(count(lit(1)).as("n"), sum(col("vc")).as("s"),
         sum(col("vc") * col("vc")).as("q"))
-      val top = remaining.crossJoin(broadcast(st))
+      val top = Mat.once(remaining.crossJoin(broadcast(st))
         .select(col("event_id"), col("vc"), col("n"),
           expr(
             """ABS(CAST(vc AS DOUBLE) - CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
@@ -1545,12 +1538,10 @@ object MLDeterministic {
         .select(lit(r.toLong).as("round"), col("event_id"), col("vc").as("value_cents"),
           col("n").as("n_remaining"), (round(col("z"), 4) + lit(0.0)).as("r_stat"),
           lit(lambdas(r - 1)).as("lambda_crit"),
-          when(col("z") > lambdas(r - 1), 1L).otherwise(0L).as("is_outlier"))
-        .localCheckpoint()
+          when(col("z") > lambdas(r - 1), 1L).otherwise(0L).as("is_outlier")))
       out = if (out == null) top else out.unionByName(top)
-      remaining = remaining
-        .join(top.select(col("event_id")), Seq("event_id"), "left_anti")
-        .localCheckpoint()
+      remaining = Mat.once(remaining
+        .join(top.select(col("event_id")), Seq("event_id"), "left_anti"))
     }
     out.orderBy("round")
   }
@@ -2048,7 +2039,7 @@ object MLDeterministic {
           (col("m2") === col(metric) && col("b2") < col("brand")), "left_outer")
         .groupBy(col("a.brand").as("brand"))
         .agg((count(col("b2")) + 1L).as(as))
-    val ranks = rank("rev", "ra").join(rank("qty", "rb"), "brand").localCheckpoint()
+    val ranks = Mat.once(rank("rev", "ra").join(rank("qty", "rb"), "brand"))
     val depths = spark.range(1, 26).select(col("id").as("d"))
     val overlap = ranks.crossJoin(broadcast(depths))
       .filter(col("ra") <= col("d") && col("rb") <= col("d"))
@@ -2444,12 +2435,11 @@ object MLDeterministic {
     val d = Tables.lineitem(spark, sf)
       .select(col("l_quantity").cast("long").as("x"), cents(col("l_extendedprice")).as("y"))
     val grid = spark.range(0, 10).select((lit(2000L) + col("id") * 200L).as("b"))
-    val losses = d.crossJoin(broadcast(grid))
+    val losses = Mat.once(d.crossJoin(broadcast(grid))
       .select(col("b"), (col("y") - col("b") * col("x")).as("r"))
       .groupBy(col("b"))
       .agg(sum(greatest(col("r") * 5L, col("r") * -5L)).as("loss50_x10"),
-        sum(greatest(col("r") * 9L, col("r") * -1L)).as("loss90_x10"))
-      .localCheckpoint()
+        sum(greatest(col("r") * 9L, col("r") * -1L)).as("loss90_x10")))
     def best(lossCol: String, tau: String): DataFrame =
       losses.orderBy(col(lossCol).asc, col("b").asc).limit(1)
         .select(lit(tau).as("tau"), col("b").as("best_slope_cents"),
@@ -2464,15 +2454,14 @@ object MLDeterministic {
     * exact.
     */
   def q_empirical_copula(spark: SparkSession, sf: String): DataFrame = {
-    val daily = Tables.eventsWithTs(spark, sf)
+    val daily = Mat.once(Tables.eventsWithTs(spark, sf)
       .filter(col("event_type").isin("view", "purchase"))
       .groupBy(to_date(col("ts_us")).as("day"), col("event_type"))
       .agg(sum(cents(col("value"))).as("v"))
       .groupBy(col("day"))
       .agg(max(when(col("event_type") === "view", col("v"))).as("x"),
         max(when(col("event_type") === "purchase", col("v"))).as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-      .localCheckpoint()
+      .filter(col("x").isNotNull && col("y").isNotNull))
     val ranked = daily.as("a")
       .join(daily.select(col("day").as("d2"), col("x").as("x2"), col("y").as("y2")).as("b"),
         col("a.day") =!= col("d2"), "left_outer")
@@ -2599,13 +2588,12 @@ object MLDeterministic {
     * Representative points keep the inverse-distance sum to 50 terms.
     */
   def q_weiszfeld_step(spark: SparkSession, sf: String): DataFrame = {
-    val pts = Tables.lineitem(spark, sf)
+    val pts = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_quantity").cast("long").as("x"), cents(col("l_extendedprice")).as("y"))
       .groupBy(col("x"))
       .agg(count(lit(1)).as("w"), sum(col("y")).as("sy"))
       .select(col("x").cast("double").as("px"),
-        expr("CAST(sy AS DOUBLE) / CAST(w AS DOUBLE) / 100.0").as("py"), col("w"))
-      .localCheckpoint()
+        expr("CAST(sy AS DOUBLE) / CAST(w AS DOUBLE) / 100.0").as("py"), col("w")))
     val c0 = pts.agg(
       expr("SUM(px * CAST(w AS DOUBLE)) / SUM(CAST(w AS DOUBLE))").as("cx0"),
       expr("SUM(py * CAST(w AS DOUBLE)) / SUM(CAST(w AS DOUBLE))").as("cy0"))
@@ -2676,8 +2664,8 @@ object MLDeterministic {
   /** The rank-decomposed core over a (user_id, act, np, arm) frame —
     * exposed to Round9OpsSpec's theta-join twin. */
   private[graft] def upliftQuartilesOf(u: DataFrame): DataFrame = {
-    val actCnt = u.groupBy(col("act")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // tiny: one row per distinct activity level
+    // tiny: one row per distinct activity level
+    val actCnt = Mat.once(u.groupBy(col("act")).agg(count(lit(1)).as("cnt")))
     val below = actCnt.as("a")
       .join(broadcast(actCnt.select(col("act").as("act2"), col("cnt").as("cnt2"))),
         col("act2") < col("act"), "left_outer")
@@ -2899,11 +2887,10 @@ object MLDeterministic {
     val train = branded.filter(col("l_shipdate") < lit("1998-07-01").cast("date"))
       .groupBy(col("brand"))
       .agg((sum(col("o")).cast("double") / count(lit(1)).cast("double")).as("p"))
-    val ev = branded.filter(col("l_shipdate") >= lit("1998-07-01").cast("date"))
+    val ev = Mat.once(branded.filter(col("l_shipdate") >= lit("1998-07-01").cast("date"))
       .groupBy(col("brand"))
       .agg(count(lit(1)).as("nk"), sum(col("o")).as("sk"))
-      .join(broadcast(train), "brand")
-      .localCheckpoint()
+      .join(broadcast(train), "brand"))
     val tot = ev.agg(sum(col("nk")).as("nn"), sum(col("sk")).as("so"))
       .select(col("nn"), (col("so").cast("double") / col("nn").cast("double")).as("obar"))
     ev.crossJoin(broadcast(tot))
@@ -2940,27 +2927,25 @@ object MLDeterministic {
     * FWER vs FDR on the same data.
     */
   def q_benjamini_hochberg(spark: SparkSession, sf: String): DataFrame = {
-    val joined = Tables.orders(spark, sf)
+    val joined = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp"))
-      .localCheckpoint()
+      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp")))
     val g = joined.agg(count(lit(1)).as("n"), sum(col("tp")).as("s"),
         sum(col("tp").cast("decimal(38,0)") * col("tp")).as("ss"))
       .select((col("s").cast("double") / col("n").cast("double")).as("mu"),
         sqrt(col("ss").cast("double") / col("n").cast("double")
           - (col("s").cast("double") / col("n").cast("double"))
             * (col("s").cast("double") / col("n").cast("double"))).as("sigma"))
-    val pvals = joined.groupBy(col("nk"))
+    val pvals = Mat.once(joined.groupBy(col("nk"))
       .agg(count(lit(1)).as("ni"), sum(col("tp")).as("si"))
       .crossJoin(broadcast(g))
       .select(col("nk"), col("ni"),
         ((col("si").cast("double") / col("ni").cast("double") - col("mu"))
           / (col("sigma") / sqrt(col("ni").cast("double")))).as("z"))
       .select(col("nk"), col("ni"), col("z"),
-        round(lit(2.0) / (lit(1.0) + exp(lit(1.702) * abs(col("z")))), 7).as("p"))
-      .localCheckpoint()
+        round(lit(2.0) / (lit(1.0) + exp(lit(1.702) * abs(col("z")))), 7).as("p")))
     val m = pvals.agg(count(lit(1)).as("m"))
     val ranked = pvals.as("a")
       .join(pvals.select(col("p").as("p2"), col("nk").as("nk2")).as("b"),
@@ -3042,12 +3027,11 @@ object MLDeterministic {
     * testing diagnostic before FDR thresholding.
     */
   def q_storey_pi0(spark: SparkSession, sf: String): DataFrame = {
-    val joined = Tables.orders(spark, sf)
+    val joined = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp"))
-      .localCheckpoint()
+      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp")))
     val g = joined.agg(count(lit(1)).as("n"), sum(col("tp")).as("s"),
         sum(col("tp").cast("decimal(38,0)") * col("tp")).as("ss"))
       .select((col("s").cast("double") / col("n").cast("double")).as("mu"),
@@ -3133,33 +3117,30 @@ object MLDeterministic {
     * with c(m) = Σ1/i recovered exactly from the rank column itself.
     */
   def q_benjamini_yekutieli(spark: SparkSession, sf: String): DataFrame = {
-    val joined = Tables.orders(spark, sf)
+    val joined = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp"))
-      .localCheckpoint()
+      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp")))
     val g = joined.agg(count(lit(1)).as("n"), sum(col("tp")).as("s"),
         sum(col("tp").cast("decimal(38,0)") * col("tp")).as("ss"))
       .select((col("s").cast("double") / col("n").cast("double")).as("mu"),
         sqrt(col("ss").cast("double") / col("n").cast("double")
           - (col("s").cast("double") / col("n").cast("double"))
             * (col("s").cast("double") / col("n").cast("double"))).as("sigma"))
-    val pvals = joined.groupBy(col("nk"))
+    val pvals = Mat.once(joined.groupBy(col("nk"))
       .agg(count(lit(1)).as("ni"), sum(col("tp")).as("si"))
       .crossJoin(broadcast(g))
       .select(col("nk"),
         ((col("si").cast("double") / col("ni").cast("double") - col("mu"))
           / (col("sigma") / sqrt(col("ni").cast("double")))).as("z"))
       .select(col("nk"),
-        round(lit(2.0) / (lit(1.0) + exp(lit(1.702) * abs(col("z")))), 7).as("p"))
-      .localCheckpoint()
-    val ranked = pvals.as("a")
+        round(lit(2.0) / (lit(1.0) + exp(lit(1.702) * abs(col("z")))), 7).as("p")))
+    val ranked = Mat.once(pvals.as("a")
       .join(pvals.select(col("p").as("p2"), col("nk").as("nk2")).as("b"),
         col("p2") < col("a.p") || (col("p2") === col("a.p") && col("nk2") <= col("a.nk")))
       .groupBy(col("a.nk").as("nk"), col("a.p").as("p"))
-      .agg(count(lit(1)).as("rk"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("rk")))
     val mc = ranked.agg(count(lit(1)).as("m"),
       sum(lit(1.0) / col("rk").cast("double")).as("cm"))
     val flagged = ranked.crossJoin(broadcast(mc))
@@ -3206,15 +3187,14 @@ object MLDeterministic {
     * one division.
     */
   def q_score_ks(spark: SparkSession, sf: String): DataFrame = {
-    val cells = Tables.lineitem(spark, sf)
+    val cells = Mat.once(Tables.lineitem(spark, sf)
       .select(floor((lit(-2.0) + lit(30.0) * col("l_discount")
         + lit(0.02) * col("l_quantity").cast("double")) * lit(100.0))
         .cast("long").as("s"),
         (col("l_returnflag") === "R").as("ret"))
       .groupBy(col("s"))
       .agg(sum(when(col("ret"), 1L).otherwise(0L)).as("c1"),
-        sum(when(!col("ret"), 1L).otherwise(0L)).as("c0"))
-      .localCheckpoint()
+        sum(when(!col("ret"), 1L).otherwise(0L)).as("c0")))
     val tot = cells.agg(sum(col("c1")).as("n1"), sum(col("c0")).as("n0"))
     cells.as("a")
       .join(cells.select(col("s").as("s2"), col("c1").as("c12"),
@@ -3236,12 +3216,11 @@ object MLDeterministic {
     * p-value pooling rules side by side.
     */
   def q_fisher_combined(spark: SparkSession, sf: String): DataFrame = {
-    val joined = Tables.orders(spark, sf)
+    val joined = Mat.once(Tables.orders(spark, sf)
       .join(broadcast(Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp"))
-      .localCheckpoint()
+      .select(col("c_nationkey").as("nk"), cents(col("o_totalprice")).as("tp")))
     val g = joined.agg(count(lit(1)).as("n"), sum(col("tp")).as("s"),
         sum(col("tp").cast("decimal(38,0)") * col("tp")).as("ss"))
       .select((col("s").cast("double") / col("n").cast("double")).as("mu"),
@@ -3356,12 +3335,11 @@ object MLDeterministic {
     val ev = Tables.eventsWithTs(spark, sf)
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_usl").asc, col("event_id").asc)
-    val starts = ev
+    // ≤|types| rows; the total AND the start scores read it — lazy,
+    // the per-user first-event window pass ran twice
+    val starts = Mat.once(ev
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .groupBy(col("event_type").as("s0")).agg(count(lit(1)).as("c"))
-      // ≤|types| rows; the total AND the start scores read it — lazy,
-      // the per-user first-event window pass ran twice
-      .localCheckpoint()
+      .groupBy(col("event_type").as("s0")).agg(count(lit(1)).as("c")))
     val nUsers = starts.agg(sum(col("c")).as("tot"))
     val s0 = starts.crossJoin(broadcast(nUsers))
       .select(col("s0"),
@@ -3369,11 +3347,10 @@ object MLDeterministic {
           .cast("long").as("sc0"))
     // |types|²-bounded; both DP steps read it — lazy, the events window
     // pass behind transitionEdges ran twice
-    val tr = GraphMl.transitionEdges(spark, sf)
+    val tr = Mat.once(GraphMl.transitionEdges(spark, sf)
       .select(col("src"), col("dst"),
         round(log(col("w").cast("double") / col("out_w").cast("double")) * 1e8)
-          .cast("long").as("lt"))
-      .localCheckpoint()
+          .cast("long").as("lt")))
     val v1 = s0.join(tr, col("s0") === col("src"))
       .groupBy(col("dst").as("s1"))
       .agg(max(struct((col("sc0") + col("lt")).as("sc"), col("s0"))).as("m"))
@@ -3400,26 +3377,24 @@ object MLDeterministic {
     val ev = Tables.eventsWithTs(spark, sf)
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_usl").asc, col("event_id").asc)
-    val starts = ev
+    // ≤|types| rows; the user total AND the α₂ product read it — lazy,
+    // the per-user first-event window pass ran twice
+    val starts = Mat.once(ev
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .groupBy(col("event_type").as("s0")).agg(count(lit(1)).as("c"))
-      // ≤|types| rows; the user total AND the α₂ product read it — lazy,
-      // the per-user first-event window pass ran twice
-      .localCheckpoint()
+      .groupBy(col("event_type").as("s0")).agg(count(lit(1)).as("c")))
     val nUsers = starts.agg(sum(col("c")).as("tot"))
     // |types|²-bounded; both matrix-vector products below read it — lazy,
     // the full events window pass behind transitionEdges ran twice
-    val tr = GraphMl.transitionEdges(spark, sf).localCheckpoint()
-    val a2 = starts.crossJoin(broadcast(nUsers))
+    val tr = Mat.once(GraphMl.transitionEdges(spark, sf))
+    // ≤|types| rows; read by the α₃ product AND the final join
+    val a2 = Mat.once(starts.crossJoin(broadcast(nUsers))
       .join(tr, col("s0") === col("src"))
       .select(col("dst"),
         round((col("c").cast("double") / col("tot").cast("double")) *
           (col("w").cast("double") / col("out_w").cast("double")) * lit(1e12))
           .cast("long").as("t_e12"))
       .groupBy(col("dst").as("state"))
-      .agg(sum(col("t_e12")).as("a2_e12"))
-      // ≤|types| rows; read by the α₃ product AND the final join
-      .localCheckpoint()
+      .agg(sum(col("t_e12")).as("a2_e12")))
     val a3 = a2
       .join(tr, col("state") === col("src"))
       .select(col("dst"),
@@ -3446,11 +3421,10 @@ object MLDeterministic {
     * no per-row model state at any scale.
     */
   def q_adaboost_round(spark: SparkSession, sf: String): DataFrame = {
-    val cell = Tables.lineitem(spark, sf)
+    val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(pct(col("l_discount")).as("d"),
         when(col("l_returnflag") === "R", 1L).otherwise(-1L).as("y"))
-      .groupBy(col("d"), col("y")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("d"), col("y")).agg(count(lit(1)).as("c")))
     val stumps = spark.range(0, 11).select(col("id").as("t"))
       .crossJoin(spark.range(0, 2).select((col("id") * 2L - 1L).as("p")))
     val err = cell.crossJoin(broadcast(stumps))
@@ -3478,9 +3452,8 @@ object MLDeterministic {
     * encoding. One aggregate + one broadcast total.
     */
   def q_rare_category_collapse(spark: SparkSession, sf: String): DataFrame = {
-    val cat = Tables.part(spark, sf)
-      .groupBy(col("p_type")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val cat = Mat.once(Tables.part(spark, sf)
+      .groupBy(col("p_type")).agg(count(lit(1)).as("n")))
     val tot = cat.agg(sum(col("n")).as("nn"), count(lit(1)).as("n_before"))
     cat.crossJoin(broadcast(tot))
       .select(col("nn"), col("n_before"),
@@ -3608,7 +3581,7 @@ object MLDeterministic {
     * Slope One predictor looks up at serve time.
     */
   def q_slope_one(spark: SparkSession, sf: String): DataFrame = {
-    val ratings = Tables.orders(spark, sf)
+    val ratings = Mat.once(Tables.orders(spark, sf)
       .select(col("o_orderkey").as("ok"), col("o_custkey").as("cust"))
       .join(Tables.lineitem(spark, sf)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")), "ok")
@@ -3616,8 +3589,7 @@ object MLDeterministic {
         .select(col("p_partkey").as("pk"), col("p_brand").as("brand"))), "pk")
       .select(col("cust"), col("brand"), col("ok")).distinct()
       .groupBy(col("cust"), col("brand"))
-      .agg(count(lit(1)).as("r"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("r")))
     ratings.as("a")
       .join(ratings.as("b"),
         col("a.cust") === col("b.cust") && col("a.brand") < col("b.brand"))
@@ -3661,7 +3633,7 @@ object MLDeterministic {
   /** The counting core over a prepared (cust, nat, seg, f2, f3, bb)
     * frame — exposed to Round9OpsSpec's pair-join twin. */
   private[graft] def fsPatternsOf(src: DataFrame): DataFrame = {
-    val c = src.localCheckpoint() // feeds the 8 counting aggregates
+    val c = Mat.once(src) // feeds the 8 counting aggregates
     def nT(out: String, fields: String*): DataFrame =
       c.groupBy((Seq("nat", "bb") ++ fields).map(col): _*)
         .agg(count(lit(1)).as("cnt"))
@@ -3696,12 +3668,11 @@ object MLDeterministic {
     * bit-identical cross-engine).
     */
   private def fsU(spark: SparkSession, sf: String): DataFrame = {
-    val c = Tables.customer(spark, sf).select(
+    val c = Mat.once(Tables.customer(spark, sf).select(
       col("c_mktsegment").as("f1"),
       expr("(CAST(ROUND(c_acctbal * 100) AS BIGINT) + 100000) % 100").as("f2"),
       expr("((CAST(ROUND(c_acctbal * 100) AS BIGINT) + 100000) div 100) % 10")
-        .as("f3"))
-      .localCheckpoint()
+        .as("f3")))
     val n = c.agg(count(lit(1)).as("n"))
     def chance(f: String): DataFrame = c.groupBy(col(f))
       .agg(count(lit(1)).as("cv"))
@@ -3751,7 +3722,7 @@ object MLDeterministic {
     // one row; materialized because the E-step AND the M-step epilogue
     // both cross-join it — lazy, the four chance-agreement aggregates
     // ran twice (round 10 plan audit: 90 Exchange nodes without it)
-    val u = fsU(spark, sf).localCheckpoint()
+    val u = Mat.once(fsU(spark, sf))
     val g = fsPatterns(spark, sf).crossJoin(broadcast(u))
       .select(col("a1"), col("a2"), col("a3"), col("n_pairs"),
         col("u1"), col("u2"), col("u3"),
@@ -3807,8 +3778,8 @@ object MLDeterministic {
     * a 9-row broadcast lattice against the 8-row pattern table.
     */
   def q_linkage_threshold_sweep(spark: SparkSession, sf: String): DataFrame = {
-    val scored = q_fellegi_sunter(spark, sf)
-      .select(col("n_pairs"), col("score_e6")).localCheckpoint()
+    val scored = Mat.once(q_fellegi_sunter(spark, sf)
+      .select(col("n_pairs"), col("score_e6")))
     val tot = scored.agg(sum(col("n_pairs")).as("np"))
     val ts = scored.sparkSession.range(-4L, 5L)
       .select((col("id") * 1000000L).as("t_e6"))
@@ -3831,8 +3802,7 @@ object MLDeterministic {
       .groupBy(col("o_custkey"))
       .agg(min(year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"))
-    val ad = fm.groupBy(col("m")).agg(count(lit(1)).as("n_ad"))
-      .localCheckpoint()
+    val ad = Mat.once(fm.groupBy(col("m")).agg(count(lit(1)).as("n_ad")))
     val lat = ad.select(col("m").as("m2"), col("n_ad").as("n2"))
     val cum = ad.join(broadcast(lat), col("m2") <= col("m"))
       .groupBy(col("m"), col("n_ad")).agg(sum(col("n2")).as("cum_n"))
@@ -3900,7 +3870,7 @@ object MLDeterministic {
     * tree; e-scaled outputs.
     */
   def q_bass_diffusion_ols(spark: SparkSession, sf: String): DataFrame = {
-    val ad0 = adoption(spark, sf).localCheckpoint()
+    val ad0 = Mat.once(adoption(spark, sf))
     // data-derived scale keeps x <= ~500 at every SF: exact BIGINT x^4 sums
     // without collapsing to zero on tiny fixtures
     val sc = ad0.agg(expr("max(cum_n) div 500 + 1").as("sc"))
@@ -3974,9 +3944,8 @@ object MLDeterministic {
       .withColumn("split", hash32(concat(lit("cp:"), col("k"))) % 4L)
     val fit = o.filter(col("split") <= 1L).groupBy(col("seg"))
       .agg(expr("sum(y) div count(1)").as("yhat"))
-    o.filter(col("split") >= 2L).join(broadcast(fit), "seg")
-      .select(col("split"), col("seg"), abs(col("y") - col("yhat")).as("s"))
-      .localCheckpoint()
+    Mat.once(o.filter(col("split") >= 2L).join(broadcast(fit), "seg")
+      .select(col("split"), col("seg"), abs(col("y") - col("yhat")).as("s")))
   }
 
   /** Split-conformal prediction interval at α = 0.1 (Vovk/Lei-Wasserman):
@@ -3989,8 +3958,7 @@ object MLDeterministic {
   def q_split_conformal(spark: SparkSession, sf: String): DataFrame = {
     val scored = conformalScores(spark, sf)
     val calib = scored.filter(col("split") === 2L)
-    val lattice = calib.groupBy(col("s")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val lattice = Mat.once(calib.groupBy(col("s")).agg(count(lit(1)).as("cnt")))
     val cum = BandedScan.cumSumAuto(lattice, Seq.empty, "s", "cnt", "cum")
     val ncal = calib.agg(count(lit(1)).as("ncal"))
     val qhat = cum.crossJoin(broadcast(ncal))
@@ -4014,10 +3982,8 @@ object MLDeterministic {
   def q_conformal_alpha_sweep(spark: SparkSession, sf: String): DataFrame = {
     val scored = conformalScores(spark, sf)
     val calib = scored.filter(col("split") === 2L)
-    val lattice = calib.groupBy(col("s")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val cum = BandedScan.cumSumAuto(lattice, Seq.empty, "s", "cnt", "cum")
-      .localCheckpoint()
+    val lattice = Mat.once(calib.groupBy(col("s")).agg(count(lit(1)).as("cnt")))
+    val cum = Mat.once(BandedScan.cumSumAuto(lattice, Seq.empty, "s", "cnt", "cum"))
     val ncal = calib.agg(count(lit(1)).as("ncal"))
     val ks = ncal.select(col("ncal"),
         explode(array(lit(20L), lit(10L), lit(5L))).as("a100"))
@@ -4049,8 +4015,7 @@ object MLDeterministic {
   def q_conformal_group_coverage(spark: SparkSession, sf: String): DataFrame = {
     val scored = conformalScores(spark, sf)
     val calib = scored.filter(col("split") === 2L)
-    val lattice = calib.groupBy(col("s")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val lattice = Mat.once(calib.groupBy(col("s")).agg(count(lit(1)).as("cnt")))
     val cum = BandedScan.cumSumAuto(lattice, Seq.empty, "s", "cnt", "cum")
     val ncal = calib.agg(count(lit(1)).as("ncal"))
     val qhat = cum.crossJoin(broadcast(ncal))

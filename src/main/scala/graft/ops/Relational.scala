@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Tables}
+import graft.core.{Det, Mat, Tables}
 import graft.core.Det.{cents, pct, r4}
 
 /** Relational operators: scans, filters/projections, aggregations, sorts,
@@ -378,11 +378,10 @@ object Relational {
     */
   private[graft] def fuzzyMatchOf(src: DataFrame, blockCol: String,
       keyCol: String, nameCol: String): DataFrame = {
-    val groups = src
+    val groups = Mat.once(src
       .groupBy(col(blockCol).as("blk"), col(nameCol).as("nm"))
       .agg(count(lit(1)).as("m"), min(col(keyCol)).as("kmin"),
-        max(col(keyCol)).as("kmax"))
-      .localCheckpoint() // feeds the rep pair build + both expansion joins
+        max(col(keyCol)).as("kmax"))) // feeds the rep pair build + both expansion joins
     val repPairs = fuzzyPairsOf(
       groups.select(col("blk"), col("kmin"), col("nm")), "blk", "kmin", "nm")
       .join(groups.select(col("blk").as("nationkey"), col("nm").as("n1"),
@@ -417,9 +416,9 @@ object Relational {
     * min-example aggregates are bit-identical). Exposed to the spec. */
   private[graft] def fuzzyPairsOf(
       src: DataFrame, blockCol: String, keyCol: String, nameCol: String): DataFrame = {
-    val s = src.select(col(blockCol).as("blk"), col(keyCol).as("k"),
-      col(nameCol).as("nm"), length(col(nameCol)).cast("long").as("len"))
-      .localCheckpoint() // tiny relative to the pair space; feeds 4 legs
+    // tiny relative to the pair space; feeds 4 legs
+    val s = Mat.once(src.select(col(blockCol).as("blk"), col(keyCol).as("k"),
+      col(nameCol).as("nm"), length(col(nameCol)).cast("long").as("len")))
     // positional trigrams (1-based pos), global df rarity order
     val grams = s.select(col("blk"), col("k"), col("len"),
         // CASE guard: sequence(1, n) runs DESCENDING for n < 1, so a
@@ -1024,7 +1023,7 @@ object Relational {
     // lattice lineage (scan + groupBy, often behind further joins) ran
     // three times per percentile call — q_qq_quantiles re-scanned events
     // six times across its two sides (round 10 plan audit; guide §2.4).
-    val lat = lat0.localCheckpoint()
+    val lat = Mat.once(lat0)
     val cum = BandedScan.cumSumAuto(lat, groupCols, "pc", "cnt", "cum")
     val nAgg = (if (groupCols.isEmpty) lat.groupBy()
       else lat.groupBy(groupCols.map(col): _*)).agg(sum(col("cnt")).as("n"))
@@ -1079,15 +1078,14 @@ object Relational {
     * Round5OpsSpec pins equality with the buffering formulation.
     */
   def q_trimmed_mean(spark: SparkSession, sf: String): DataFrame = {
-    val lat = Tables.lineitem(spark, sf)
+    // lattice-sized; three consumers (cumSumsAuto bounds probe, the
+    // banded scan, nAgg) — lazy, the lineitem scan + lattice groupBy
+    // ran three times (round 10; same discipline as latticePercentiles)
+    val lat = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("flag"), cents(col("l_extendedprice")).as("pc"))
       .groupBy(col("flag"), col("pc"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("pv", col("pc") * col("cnt"))
-      // lattice-sized; three consumers (cumSumsAuto bounds probe, the
-      // banded scan, nAgg) — lazy, the lineitem scan + lattice groupBy
-      // ran three times (round 10; same discipline as latticePercentiles)
-      .localCheckpoint()
+      .withColumn("pv", col("pc") * col("cnt")))
     val nAgg = lat.groupBy(col("flag")).agg(sum(col("cnt")).as("n"))
     // twin banded prefix scans (count + value mass) — keyed by (flag,
     // band), so no per-flag window funnels N/|flags| rows into one task
@@ -1314,8 +1312,7 @@ object Relational {
     // discrete rules both read the same prefix-scanned histogram — the
     // former shape re-scanned lineitem and re-ran the banded windows for
     // each rule (6.5 s isolated at sf0.1; ~1.5 s after)
-    val hist = b.groupBy(col("flag"), col("pc")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val hist = Mat.once(b.groupBy(col("flag"), col("pc")).agg(count(lit(1)).as("cnt")))
     val cum = BandedScan.cumSumAuto(hist, Seq("flag"), "pc", "cnt", "cum")
     val nAgg = hist.groupBy(col("flag")).agg(sum(col("cnt")).as("n"))
     val cont = latticePercentilesFromCum(cum, nAgg, Seq("flag"),
@@ -1526,7 +1523,7 @@ object Relational {
     // one row per ring position; the per-shard ledger AND the movement
     // total both read it — lazy, both full assignments ran twice
     // (round 10 plan audit: 80 Exchange nodes without it)
-    val j = before.join(after, "h").localCheckpoint()
+    val j = Mat.once(before.join(after, "h"))
     val perShard = j.groupBy(col("shard9").as("shard"))
       .agg(count(lit(1)).as("n_keys_after"),
         sum(when(col("shard8") =!= col("shard9"), 1L).otherwise(0L)).as("n_arrived"))
@@ -1847,7 +1844,7 @@ object Relational {
     */
   def q_dict_encoding_audit(spark: SparkSession, sf: String): DataFrame = {
     def audit(df: DataFrame, c: String, label: String): DataFrame = {
-      val base = df.select(col(c).as("v")).localCheckpoint()
+      val base = Mat.once(df.select(col(c).as("v")))
       val n = base.agg(count(lit(1)).as("n"),
         sum(length(col("v")).cast("long")).as("sum_len"))
       val d = base.distinct()
@@ -1913,16 +1910,16 @@ object Relational {
     * the 16-row histogram and 3-row range table broadcast.
     */
   def q_histogram_selectivity(spark: SparkSession, sf: String): DataFrame = {
-    val pc = Tables.orders(spark, sf)
-      .select(cents(col("o_totalprice")).as("pc")).localCheckpoint()
+    val pc = Mat.once(Tables.orders(spark, sf)
+      .select(cents(col("o_totalprice")).as("pc")))
     val mm = pc.agg(min(col("pc")).as("minc"), max(col("pc")).as("maxc"))
       .select(col("minc"), col("maxc"),
         expr("(maxc - minc) div 16 + 1").as("wb"),
         (col("maxc") - col("minc")).as("span"))
-    val hist = pc.crossJoin(broadcast(mm))
+    val hist = Mat.once(pc.crossJoin(broadcast(mm))
       .groupBy(expr("(pc - minc) div wb").as("b"))
-      .agg(count(lit(1)).as("cnt")).localCheckpoint()
-    val ranges = mm.select(explode(array(
+      .agg(count(lit(1)).as("cnt")))
+    val ranges = Mat.once(mm.select(explode(array(
         struct(lit("r1_wide_low").as("range_name"),
           (col("minc") + expr("span div 8")).as("lo"),
           (col("minc") + expr("span div 2")).as("hi")),
@@ -1934,8 +1931,7 @@ object Relational {
           (col("minc") + expr("2 * span div 5 + span div 50")).as("hi"))))
         .as("r"), col("minc"), col("wb"))
       .select(col("r.range_name").as("range_name"), col("r.lo").as("lo"),
-        col("r.hi").as("hi"), col("minc"), col("wb"))
-      .localCheckpoint()
+        col("r.hi").as("hi"), col("minc"), col("wb")))
     val est = broadcast(ranges).crossJoin(hist)
       .select(col("range_name"), col("lo"), col("hi"), col("wb"), col("cnt"),
         (col("minc") + col("b") * col("wb")).as("sb"))
@@ -1973,10 +1969,10 @@ object Relational {
     val cust = Tables.customer(spark, sf)
       .select(col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
     val ord = Tables.orders(spark, sf).select(col("o_custkey").as("ck"))
-    val natD = nat.join(broadcast(reg), "rk").localCheckpoint()
-    val custD = cust.join(broadcast(natD.select(col("nk"))), "nk").localCheckpoint()
-    val ordD = ord.join(custD.select(col("ck")).distinct(), "ck").localCheckpoint()
-    val custU = custD.join(ordD.select(col("ck")).distinct(), "ck").localCheckpoint()
+    val natD = Mat.once(nat.join(broadcast(reg), "rk"))
+    val custD = Mat.once(cust.join(broadcast(natD.select(col("nk"))), "nk"))
+    val ordD = Mat.once(ord.join(custD.select(col("ck")).distinct(), "ck"))
+    val custU = Mat.once(custD.join(ordD.select(col("ck")).distinct(), "ck"))
     val natU = natD.join(broadcast(custU.select(col("nk")).distinct()), "nk")
     def c(df: DataFrame): DataFrame = df.agg(count(lit(1)).as("c"))
     val joinSize = ordD.agg(count(lit(1)).as("c")) // chain join size = reduced orders
@@ -2069,7 +2065,7 @@ object Relational {
       countDistinct(col("a"), col("c")).as("sac"),
       countDistinct(col("b"), col("c")).as("sbc"),
       countDistinct(col("a"), col("b"), col("c")).as("sabc"))
-    val lat = sz.select(explode(array(
+    val lat = Mat.once(sz.select(explode(array(
         struct(lit(0L).as("mask"), lit("apex").as("node"), lit(1L).as("sz")),
         struct(lit(1L).as("mask"), lit("status").as("node"), col("sa").as("sz")),
         struct(lit(2L).as("mask"), lit("priority").as("node"), col("sb").as("sz")),
@@ -2080,8 +2076,7 @@ object Relational {
         struct(lit(7L).as("mask"), lit("status_priority_month").as("node"),
           col("sabc").as("sz")))).as("n"))
       .select(col("n.mask").as("mask"), col("n.node").as("node"),
-        col("n.sz").as("sz"))
-      .localCheckpoint()
+        col("n.sz").as("sz")))
     val top = lat.filter(col("mask") === 7L).select(col("sz").as("topsz"))
     val pairs = lat.select(col("mask").as("vmask"), col("sz").as("vsz"))
       .crossJoin(broadcast(lat.select(col("mask").as("wmask"), col("sz").as("wsz"))))
@@ -2161,20 +2156,18 @@ object Relational {
     * never a global window.
     */
   def q_fagin_ta_rounds(spark: SparkSession, sf: String): DataFrame = {
-    val base = Tables.lineitem(spark, sf)
+    val base = Mat.once(Tables.lineitem(spark, sf)
       .join(broadcast(Tables.part(spark, sf)
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(sum(col("l_quantity").cast("long")).as("q"),
-        sum(cents(col("l_extendedprice"))).as("r"))
-      .localCheckpoint()
+        sum(cents(col("l_extendedprice"))).as("r")))
     val tot = base.agg(sum(col("q")).as("tq"), sum(col("r")).as("tr"))
-    val items = base.crossJoin(broadcast(tot))
+    val items = Mat.once(base.crossJoin(broadcast(tot))
       .select(col("p_brand"), expr("q * 1000000 div tq").as("xs"),
         expr("r * 1000000 div tr").as("ys"),
-        expr("q * 1000000 div tq + r * 1000000 div tr").as("score"))
-      .localCheckpoint()
+        expr("q * 1000000 div tq + r * 1000000 div tr").as("score")))
     def rankBy(c: String, out: String): DataFrame = {
       val b = items.select(col("p_brand").as("b_brand"), col(c).as("b_c"))
       items.join(broadcast(b),
@@ -2183,10 +2176,9 @@ object Relational {
           "left_outer")
         .groupBy(col("p_brand")).agg((count(col("b_brand")) + 1L).as(out))
     }
-    val ranked = items.join(rankBy("xs", "r1"), "p_brand")
+    val ranked = Mat.once(items.join(rankBy("xs", "r1"), "p_brand")
       .join(rankBy("ys", "r2"), "p_brand")
-      .withColumn("ad", least(col("r1"), col("r2")))
-      .localCheckpoint()
+      .withColumn("ad", least(col("r1"), col("r2"))))
     val thr = ranked.select(col("r1").as("d"), col("xs"))
       .join(ranked.select(col("r2").as("d"), col("ys")), "d")
       .select(col("d"), (col("xs") + col("ys")).as("threshold_e6"))
@@ -2206,13 +2198,12 @@ object Relational {
       .agg(count(col("t_brand")).as("nbetter"))
       .filter(col("nbetter") === 4L)
       .select(col("d"), col("score").as("kth_score_e6"))
-    val rounds = nSeen.join(kth, Seq("d"), "left_outer")
+    val rounds = Mat.once(nSeen.join(kth, Seq("d"), "left_outer")
       .select(col("d").as("depth"), col("n_seen"),
         coalesce(col("kth_score_e6"), lit(-1L)).as("kth_score_e6"),
         col("threshold_e6"),
         when(coalesce(col("kth_score_e6"), lit(-1L)) >= col("threshold_e6"), 1L)
-          .otherwise(0L).as("stopped"))
-      .localCheckpoint()
+          .otherwise(0L).as("stopped")))
     val stopD = rounds.filter(col("stopped") === 1L)
       .agg(coalesce(min(col("depth")), lit(Long.MaxValue)).as("stop_depth"))
     rounds.crossJoin(broadcast(stopD))
@@ -2258,7 +2249,7 @@ object Relational {
     */
   def q_hrw_failover(spark: SparkSession, sf: String): DataFrame = {
     import graft.core.Det.hash32
-    val m = Tables.part(spark, sf).select(col("p_partkey").as("pk"))
+    val m = Mat.once(Tables.part(spark, sf).select(col("p_partkey").as("pk"))
       .select(col("pk"), explode(sequence(lit(0L), lit(7L))).as("j"))
       .select(col("pk"), col("j"),
         hash32(concat(lit("hrw"), col("j"), lit(":"), col("pk"))).as("h"))
@@ -2267,8 +2258,7 @@ object Relational {
         max(when(col("j") =!= 3L, col("h") * 16L + col("j"))).as("m_no3"))
       .select(expr("m_all % 16").as("before"),
         expr("(CASE WHEN m_all % 16 = 3 THEN m_no3 ELSE m_all END) % 16")
-          .as("after"))
-      .localCheckpoint()
+          .as("after")))
     val nodes = m.sparkSession.range(0L, 8L).select(col("id").as("node"))
     val b = m.groupBy(col("before").as("node")).agg(count(lit(1)).as("n_before"))
     val a = m.filter(col("after") =!= 3L)
@@ -2292,8 +2282,7 @@ object Relational {
     */
   def q_shard_move_cost(spark: SparkSession, sf: String): DataFrame = {
     import graft.core.Det.hash32
-    val keys = Tables.part(spark, sf).select(col("p_partkey").as("pk"))
-      .localCheckpoint()
+    val keys = Mat.once(Tables.part(spark, sf).select(col("p_partkey").as("pk")))
     val hrw = keys
       .select(col("pk"), explode(sequence(lit(0L), lit(8L))).as("j"))
       .select(col("pk"), col("j"),

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 
 /** Information-retrieval / tokenizer-training operators (SURVEY.md §2.21):
   * BM25 ranking, a BPE merge step, and windowed word co-occurrence.
@@ -86,7 +86,7 @@ object Retrieval {
     */
   private def tfidfModel(spark: SparkSession, sf: String,
       checkpoint: Boolean): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    def cp(d: DataFrame) = if (checkpoint) d.localCheckpoint() else d
+    def cp(d: DataFrame) = if (checkpoint) Mat.once(d) else d
     val docsWithRep = cp(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
       .withColumn("rep", min(col("doc_id")).over(
@@ -134,7 +134,7 @@ object Retrieval {
       .join(groups.filter(col("m") >= 2L).select(col("rep").as("doc_id")), "doc_id")
       .filter(col("nrm") > 0)
       .select(col("doc_id").as("g1"), col("doc_id").as("g2"), selfCos)
-    val classes = crossClasses.unionByName(withinClasses).localCheckpoint()
+    val classes = Mat.once(crossClasses.unionByName(withinClasses))
     // prune classes that cannot reach the global top-20: every class holds
     // ≥ 1 pair, so a class with cos strictly below the 20th-best class cos
     // is displaced by ≥ 20 better pairs; cos TIES stay in ((d1,d2) decides
@@ -155,7 +155,7 @@ object Retrieval {
         Window.partitionBy("rep").orderBy(col("doc_id").asc)))
       .filter(col("rn") <= 21)
       .select(col("rep"), col("doc_id"))
-    val top = kept
+    val top = Mat.once(kept
       .join(m21.select(col("rep").as("g1"), col("doc_id").as("m1")), "g1")
       .join(m21.select(col("rep").as("g2"), col("doc_id").as("m2")), "g2")
       .filter(col("g1") =!= col("g2") || col("m1") < col("m2"))
@@ -166,8 +166,7 @@ object Retrieval {
       .filter(col("prn") <= 20)
       .orderBy(col("cos").desc, col("d1").asc, col("d2").asc)
       .limit(20)
-      .select(col("d1"), col("d2"), col("cos"))
-      .localCheckpoint()
+      .select(col("d1"), col("d2"), col("cos")))
     // a pair missed by the probe leg has cosine ≤ 3/4 (see above); 0.7501
     // absorbs the 6-decimal output rounding. Asserted on the 1-row
     // aggregate (a global agg ALWAYS yields one row), never per result
@@ -268,7 +267,7 @@ object Retrieval {
 
   /** [[tfidfCosineTopRaw]] wired from the corpus via the SAME
     * [[tfidfModel]] builder as the production op, un-checkpointed — the
-    * spec's plan-inspection entry point (localCheckpoint would hide the
+    * spec's plan-inspection entry point (`Mat.once` would hide the
     * stages behind a Scan ExistingRDD). */
   private[graft] def tfidfCosineTopForPlan(spark: SparkSession, sf: String): DataFrame = {
     val (_, _, docVecs, weights) = tfidfModel(spark, sf, checkpoint = false)

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 import graft.core.Det.cents
 
 /** Sampling, splitting and profiling operators for training-data pipelines:
@@ -233,23 +233,20 @@ object Sampling {
     // windows, group totals), and WITHOUT the checkpoints each read
     // re-scanned the base events table — ten-ish full passes, 8.6 s
     // isolated at sf0.1 (~2 s after; the lattices are value-domain-sized)
-    val latV = v.groupBy(col("event_type"), col("vc").as("pc"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val latV = Mat.once(v.groupBy(col("event_type"), col("vc").as("pc"))
+      .agg(count(lit(1)).as("cnt")))
     val med = Relational.latticePercentile(latV, "event_type", 0.5, "med")
       .select(col("event_type"), col("med"))
-    val dev = v.join(broadcast(med), "event_type")
+    val dev = Mat.once(v.join(broadcast(med), "event_type")
       .select(col("event_type"), col("med"),
-        abs(col("vc").cast("double") - col("med")).as("dev"))
-      .localCheckpoint()
+        abs(col("vc").cast("double") - col("med")).as("dev")))
     // MAD via the doubled lattice: deviations step in halves (integer
     // cents minus an x.5 interpolating median), so 2·dev is an exact
     // integer and percentile(2·dev)/2 == percentile(dev) bit-for-bit
     // (power-of-two scaling commutes with every IEEE rounding involved)
-    val latD = dev.groupBy(col("event_type"),
+    val latD = Mat.once(dev.groupBy(col("event_type"),
         (col("dev") * lit(2.0)).cast("long").as("pc"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     val mad = Relational.latticePercentile(latD, "event_type", 0.5, "mad2")
       .select(col("event_type"), (col("mad2") / lit(2.0)).as("mad"))
     dev.join(broadcast(mad), "event_type")
@@ -683,7 +680,7 @@ object Sampling {
     // `graft_vec_sum` aggregates over per-order 20-long weight arrays —
     // one corpus pass, no join, no fan-out, identical Σw·x / Σw per
     // resample (order-free long addition either way)
-    Tables.orders(spark, sf)
+    Mat.once(Tables.orders(spark, sf)
       .select(graft.core.Det.cents(col("o_totalprice")).as("x"),
         idHash(col("o_orderkey").cast("string")).as("h0"))
       .select(col("x"), expr(
@@ -697,8 +694,7 @@ object Sampling {
       .agg(graft.functions.GraftFunctions.vecSum(col("wx")).as("swx"),
         graft.functions.GraftFunctions.vecSum(col("w")).as("sw"))
       .select(posexplode(arrays_zip(col("swx"), col("sw"))).as(Seq("b", "p")))
-      .select((col("p.swx").cast("double") / col("p.sw").cast("double")).as("mb"))
-      .localCheckpoint()
+      .select((col("p.swx").cast("double") / col("p.sw").cast("double")).as("mb")))
   }
 
   /** Deterministic hash-bootstrap of the mean order total over the
@@ -811,40 +807,37 @@ object Sampling {
     * (Deming-Stephan '40) as two broadcast joins over a 25-cell table.
     */
   def q_raking_step(spark: SparkSession, sf: String): DataFrame = {
-    val cust = Tables.customer(spark, sf)
+    val cust = Mat.once(Tables.customer(spark, sf)
       .join(broadcast(Tables.nation(spark, sf)
         .join(broadcast(Tables.region(spark, sf)),
           col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"), col("r_name"))),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey").as("cust"), col("c_mktsegment").as("seg"),
-        col("r_name").as("reg"))
-      .localCheckpoint()
-    val joint = cust.groupBy(col("seg"), col("reg"))
-      .agg(count(lit(1)).as("c0")).localCheckpoint()
+        col("r_name").as("reg")))
+    val joint = Mat.once(cust.groupBy(col("seg"), col("reg"))
+      .agg(count(lit(1)).as("c0")))
     val nTot = joint.agg(sum(col("c0")).as("nt"))
-    val ord = Tables.orders(spark, sf)
+    val ord = Mat.once(Tables.orders(spark, sf)
       .join(cust, col("o_custkey") === col("cust"))
-      .select(col("seg"), col("reg")).localCheckpoint()
+      .select(col("seg"), col("reg")))
     val rowTarget = ord.groupBy(col("seg")).agg(count(lit(1)).as("tr"))
     val colTarget = ord.groupBy(col("reg")).agg(count(lit(1)).as("tc"))
     val oTot = ord.agg(count(lit(1)).as("ot"))
     val w0 = joint.select(col("seg"), col("reg"),
       (col("c0") * lit(1000L)).as("w0"))
     val rowSum = w0.groupBy(col("seg")).agg(sum(col("w0")).as("rs"))
-    val w1 = w0.join(broadcast(rowSum), "seg")
+    val w1 = Mat.once(w0.join(broadcast(rowSum), "seg")
       .join(broadcast(rowTarget), "seg")
       .crossJoin(broadcast(oTot)).crossJoin(broadcast(nTot))
       .select(col("seg"), col("reg"), col("w0"),
-        expr("w0 * (tr * nt * 1000 div ot) div rs").as("w1"))
-      .localCheckpoint()
+        expr("w0 * (tr * nt * 1000 div ot) div rs").as("w1")))
     val colSum = w1.groupBy(col("reg")).agg(sum(col("w1")).as("cs"))
-    val w2 = w1.join(broadcast(colSum), "reg")
+    val w2 = Mat.once(w1.join(broadcast(colSum), "reg")
       .join(broadcast(colTarget), "reg")
       .crossJoin(broadcast(oTot)).crossJoin(broadcast(nTot))
       .select(col("seg"), col("reg"), col("w0"), col("w1"),
-        expr("w1 * (tc * nt * 1000 div ot) div cs").as("w2"))
-      .localCheckpoint()
+        expr("w1 * (tc * nt * 1000 div ot) div cs").as("w2")))
     val rowErr = w2.join(broadcast(rowTarget), "seg")
       .crossJoin(broadcast(oTot)).crossJoin(broadcast(nTot))
       .groupBy(col("seg"), expr("tr * nt * 1000 div ot").as("row_target_e3"))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 import graft.core.Det.hash32
 
 /** Probabilistic-sketch operators (SURVEY.md §2.20), each built ONLY from
@@ -257,7 +257,7 @@ object Sketches {
         .select((hash32(concat(col("i").cast("string"), lit("|"), col("k").cast("string")))
           % 16384).as("b"))
         .distinct()
-    val bloom = bits(hot).localCheckpoint()
+    val bloom = Mat.once(bits(hot))
     // membership decided once per DISTINCT key (3 bit probes each), then
     // row counts come from a semi join back to the fact rows
     val probed = ks.distinct()
@@ -387,9 +387,8 @@ object Sketches {
     * the e·N/w error bound. The 1024-row sketch broadcasts to the probe.
     */
   def q_count_min_sketch(spark: SparkSession, sf: String): DataFrame = {
-    val pk = Tables.lineitem(spark, sf)
-      .groupBy(col("l_partkey").as("pk")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val pk = Mat.once(Tables.lineitem(spark, sf)
+      .groupBy(col("l_partkey").as("pk")).agg(count(lit(1)).as("c")))
     val n = pk.agg(sum(col("c")).as("nn"))
     def bucket = (hash32(concat(lit("cms"), col("j"), lit(":"), col("pk")))
       % 256L).as("b")
@@ -423,12 +422,11 @@ object Sketches {
     * guaranteed set covers — all integer comparisons, no float ever.
     */
   def q_spacesaving_guarantee(spark: SparkSession, sf: String): DataFrame = {
-    val f = Tables.lineitem(spark, sf)
+    val f = Mat.once(Tables.lineitem(spark, sf)
       .join(broadcast(Tables.part(spark, sf)
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("p_brand")).agg(count(lit(1)).as("c")))
     val n = f.agg(sum(col("c")).as("nn"), count(lit(1)).as("n_items"))
     f.crossJoin(broadcast(n))
       .select(col("p_brand"), col("c"), col("nn"), col("n_items"),
@@ -453,12 +451,11 @@ object Sketches {
     * witness. Pure integer threshold algebra on exact counts.
     */
   def q_lossy_counting_bands(spark: SparkSession, sf: String): DataFrame = {
-    val f = Tables.lineitem(spark, sf)
+    val f = Mat.once(Tables.lineitem(spark, sf)
       .join(broadcast(Tables.part(spark, sf)
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("p_brand")).agg(count(lit(1)).as("c")))
     val n = f.agg(sum(col("c")).as("nn"))
     f.crossJoin(broadcast(n))
       .select(col("c"), col("nn"),
@@ -516,10 +513,9 @@ object Sketches {
     * indexed by the type rank so no sequence generator is needed).
     */
   def q_coupon_collector(spark: SparkSession, sf: String): DataFrame = {
-    val ev = Tables.eventsWithTs(spark, sf)
+    val ev = Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("event_type").as("t"), col("ts_nsl").as("ns"),
-        col("event_id").as("id"))
-      .localCheckpoint()
+        col("event_id").as("id")))
     val firstTs = ev.groupBy(col("t")).agg(min(col("ns")).as("fns"))
       .select(col("t").as("ft"), col("fns"))
     val firsts = ev.join(firstTs,
@@ -611,8 +607,7 @@ object Sketches {
     * two-row table.
     */
   def q_fibonacci_hashing(spark: SparkSession, sf: String): DataFrame = {
-    val keys = Tables.orders(spark, sf).select(col("o_orderkey").as("x"))
-      .localCheckpoint()
+    val keys = Mat.once(Tables.orders(spark, sf).select(col("o_orderkey").as("x")))
     def audit(name: String, bkt: Column): DataFrame =
       keys.select(bkt.as("b")).groupBy(col("b")).agg(count(lit(1)).as("c"))
         .agg(sum(col("c")).as("n"), count(lit(1)).as("occupied"),
@@ -635,8 +630,7 @@ object Sketches {
     * The oldest hash-table sizing rule, quantified on real keys.
     */
   def q_mod_prime_bias(spark: SparkSession, sf: String): DataFrame = {
-    val keys = Tables.orders(spark, sf).select(col("o_orderkey").as("x"))
-      .localCheckpoint()
+    val keys = Mat.once(Tables.orders(spark, sf).select(col("o_orderkey").as("x")))
     def audit(name: String, m: Long): DataFrame =
       keys.select(expr(s"x % $m").as("b")).groupBy(col("b"))
         .agg(count(lit(1)).as("c"))

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 
 /** Text analysis / LLM-data-pipeline operators over `documents`
   * (SURVEY.md §2.9): wordcount, n-grams, tf-idf, exact + near dedup,
@@ -110,13 +110,12 @@ object Text {
     * EXACTLY because identical token arrays have identical set overlap
     * with every third document). Window-min, not collect_list — a
     * million-way dup group is one fat partition, never one fat row.
-    * `localCheckpoint` because every consumer reads it ≥ 3 times (reps,
+    * `Mat.once` because every consumer reads it ≥ 3 times (reps,
     * members, group sizes). */
   private[graft] def withRepOf(docsIn: DataFrame): DataFrame =
-    docsIn
+    Mat.once(docsIn
       .withColumn("rep", min(col("doc_id")).over(
-        Window.partitionBy(col("lang"), col("source"), col("toks"))))
-      .localCheckpoint()
+        Window.partitionBy(col("lang"), col("source"), col("toks")))))
 
   /** [[pairOverlapOf]] semantics over a rep-collapsed corpus: the PPJoin
     * candidate + exact-verify machinery runs on ONE representative per
@@ -288,7 +287,7 @@ object Text {
       docsIn: DataFrame,
       minJ: Option[(Long, Long)],
       minC: Option[(Long, Long)]): DataFrame = {
-    val docs = docsIn.localCheckpoint()
+    val docs = Mat.once(docsIn)
     pairCandidatesOf(docs, minJ, minC)
       .join(docs.select(col("doc_id").as("d1"), col("toks").as("t1"),
         col("sz").as("sz1")), "d1")
@@ -370,7 +369,7 @@ object Text {
     * and near-dup edges (Jaccard ≥ 0.8). Spark side runs min-label
     * propagation with pointer-doubling shortcuts (converges in
     * O(log diameter) rounds; each round is two small joins on the
-    * edge/label tables, with `localCheckpoint` truncating the iterative
+    * edge/label tables, with `Mat.once` truncating the iterative
     * lineage — the large-star/small-star CC shape that scales to
     * billion-edge graphs). The oracle computes the same components by
     * recursive-CTE transitive closure, feasible because dup components
@@ -416,12 +415,12 @@ object Text {
       .select(col("ra").as("a"), col("rb").as("b"))
     val reps = withRep.filter(col("doc_id") === col("rep"))
       .select(col("doc_id"), col("lang"), col("source"), col("toks"), col("sz"))
-    val nearRepEdges = pairOverlapOf(reps, Some((4L, 5L)), None)
+    // feeds the edge union AND the vertex expansion
+    val nearRepEdges = Mat.once(pairOverlapOf(reps, Some((4L, 5L)), None)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")))
       .filter(col("jaccard") >= 0.8)
-      .select(col("d1").as("a"), col("d2").as("b"))
-      .localCheckpoint() // feeds the edge union AND the vertex expansion
+      .select(col("d1").as("a"), col("d2").as("b")))
     val e = exactRepEdges.union(nearRepEdges).distinct()
     // vertex self-loops folded into the undirected edge table (round 10):
     // min-label propagation over neighbors∪self is then ONE join + ONE
@@ -430,12 +429,11 @@ object Text {
     // (profiled: the loop's job count, not its data, dominates at small
     // SF — 77 Spark jobs per call; guide §7.3 driver overhead)
     val dir = e.union(e.select(col("b").as("a"), col("a").as("b")))
-    val und = dir
+    val und = Mat.once(dir
       .union(dir.select(col("a")).distinct()
-        .select(col("a"), col("a").as("b")))
-      .localCheckpoint()
-    var labels = und.select(col("a").as("v")).distinct()
-      .withColumn("comp", col("v")).localCheckpoint()
+        .select(col("a"), col("a").as("b"))))
+    var labels = Mat.once(und.select(col("a").as("v")).distinct()
+      .withColumn("comp", col("v")))
     var converged = false
     var iter = 0
     var labelSum: java.math.BigDecimal = null
@@ -447,14 +445,13 @@ object Text {
       // remaining propagation distance each round). Inner join — every
       // comp value is the min of some vertex-id set, hence itself a
       // vertex id, and `stepped` carries every vertex (self-loops).
-      val next = stepped.as("x")
+      // lazy: the convergence aggregate right below is the action that
+      // materializes it (eager would spend a second job per round)
+      val next = Mat.once(stepped.as("x")
         .join(stepped.select(col("v").as("cv"), col("comp").as("ccomp")).as("y"),
           col("x.comp") === col("y.cv"))
         .select(col("x.v").as("v"),
-          least(col("x.comp"), col("y.ccomp")).as("comp"))
-        // lazy: the convergence aggregate right below is the action that
-        // materializes it (eager would spend a second job per round)
-        .localCheckpoint(eager = false)
+          least(col("x.comp"), col("y.ccomp")).as("comp")), eager = false)
       // labels only ever decrease, so Σcomp is strictly monotone until the
       // fixpoint — one scalar aggregate per round instead of a compare-join
       val sum = next.agg(org.apache.spark.sql.functions.sum(col("comp")).cast("decimal(38,0)"))
@@ -503,13 +500,12 @@ object Text {
     val vsize = vocab.agg(count(lit(1)).as("v"))
     val totals = counts.groupBy(col("lang")).agg(sum(col("c")).as("t"))
     val langs = totals.select(col("lang"), col("t"))
-    val dense = langs.crossJoin(vocab)
+    // vocabulary-sized; materialize before the pair self-join so the
+    // corpus tokenize/aggregate pipeline behind it runs once, not twice
+    val dense = Mat.once(langs.crossJoin(vocab)
       .join(counts, Seq("lang", "word"), "left_outer")
       .select(col("lang"), col("word"), col("t"), coalesce(col("c"), lit(0L)).as("c"))
-      .crossJoin(broadcast(vsize))
-      // vocabulary-sized; materialize before the pair self-join so the
-      // corpus tokenize/aggregate pipeline behind it runs once, not twice
-      .localCheckpoint()
+      .crossJoin(broadcast(vsize)))
     val p = (col("a.c") + lit(1L)).cast("double") /
       (col("a.t") + col("a.v")).cast("double")
     val q = (col("b.c") + lit(1L)).cast("double") /
@@ -558,22 +554,21 @@ object Text {
     // rep = min doc_id over the exact-dup group, via a window rather than
     // a collect_list: no member array ever materializes, so a boilerplate
     // doc repeated a million times is one fat PARTITION, not one fat row
-    val withRep = docsIn
+    // feeds reps, group sizes, and the member scan
+    val withRep = Mat.once(docsIn
       .withColumn("rep", min(col("doc_id")).over(
-        Window.partitionBy(col("lang"), col("source"), col("toks"))))
-      .localCheckpoint() // feeds reps, group sizes, and the member scan
+        Window.partitionBy(col("lang"), col("source"), col("toks")))))
     val sizes = withRep.groupBy(col("rep")).agg(count(lit(1)).as("m"))
-    val groups = sizes.localCheckpoint()
+    val groups = Mat.once(sizes)
     val reps = withRep.filter(col("doc_id") === col("rep"))
       .select(col("doc_id"), col("lang"), col("source"), col("toks"), col("sz"))
     // Jaccard-only candidates (lowest cut 0.5): the containment leg's
     // extra candidates all fail every swept threshold, so dropping it
     // leaves the counted pair set unchanged while halving the candidates
-    val repPairs = pairOverlapOf(reps, Some((1L, 2L)), None)
+    val repPairs = Mat.once(pairOverlapOf(reps, Some((1L, 2L)), None)
       .select(col("d1"), col("d2"),
         expr("inter * 10000 div (sz1 + sz2 - inter)").as("j_e4"))
-      .filter(col("j_e4") >= 5000L)
-      .localCheckpoint() // feeds both the pair counts and the removal bounds
+      .filter(col("j_e4") >= 5000L)) // feeds both the pair counts and the removal bounds
     val thr = "explode(array(5000L, 6000L, 7000L, 8000L, 9000L))"
     // qualifying pair multiplicities: cross-group m_A·m_B + within-group C(m,2)
     val crossPairs = repPairs
@@ -634,13 +629,12 @@ object Text {
     * exactly, so the unobserved cells contribute nothing on either
     * engine), reported per language. Terms ride the proven e8 LN lattice
     * before the order-free sum; the joint table is vocabulary-sized and
-    * `localCheckpoint`ed so the corpus tokenize runs once, not four times
+    * materialized (`Mat.once`) so the corpus tokenize runs once, not four times
     * (joint + both margins + total).
     */
   def q_mutual_info(spark: SparkSession, sf: String): DataFrame = {
-    val joint = docTokens(spark, sf)
-      .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val joint = Mat.once(docTokens(spark, sf)
+      .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("c")))
     val nl = joint.groupBy(col("lang")).agg(sum(col("c")).as("nl"))
     val nw = joint.groupBy(col("word")).agg(sum(col("c")).as("nw"))
     val nn = joint.agg(sum(col("c")).as("nn"))
@@ -720,14 +714,13 @@ object Text {
     * Margins re-sum the bigram aggregate; the corpus is tokenized once.
     */
   def q_bigram_entropy_rate(spark: SparkSession, sf: String): DataFrame = {
-    val bg = Tables.documents(spark, sf)
+    val bg = Mat.once(Tables.documents(spark, sf)
       .select(col("lang"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("lang"), explode(expr(
         "transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS w1, t[i] AS w2))")).as("b"))
       .groupBy(col("lang"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c12")))
     def entropyTerms(df: DataFrame, c: String) = df
       .select(col("lang"), col(c),
         round(col(c).cast("double") * log(col(c).cast("double")) * 1e4)
@@ -940,13 +933,12 @@ object Text {
     */
   def q_kneser_ney(spark: SparkSession, sf: String): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)
-    val bigrams = Tables.documents(spark, sf)
+    val bigrams = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), col("pos"), col("col").as("w1"))
       .withColumn("w2", lead(col("w1"), 1).over(w))
       .filter(col("w2").isNotNull)
-      .select(col("w1"), col("w2"))
-      .localCheckpoint()
+      .select(col("w1"), col("w2")))
     val c12 = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c")).as("cw1"),
       count(lit(1)).as("n1plus_fwd"))
@@ -973,13 +965,12 @@ object Text {
     */
   private def bigramCounts(spark: SparkSession, sf: String): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)
-    Tables.documents(spark, sf)
+    Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), col("pos"), col("col").as("w1"))
       .withColumn("w2", lead(col("w1"), 1).over(w))
       .filter(col("w2").isNotNull)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c")))
   }
 
   /** Witten-Bell smoothed bigram probabilities for continuations of
@@ -1073,9 +1064,9 @@ object Text {
   def q_burrows_delta(spark: SparkSession, sf: String): DataFrame = {
     val toks = Tables.documents(spark, sf)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
-    val topW = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
+    val topW = Mat.once(toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w").asc).limit(20)
-      .select(col("w")).localCheckpoint()
+      .select(col("w")))
     val srcTot = toks.groupBy(col("source")).agg(count(lit(1)).as("nt"))
     val shares = toks.join(broadcast(topW), "w")
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("cw"))
@@ -1380,9 +1371,8 @@ object Text {
     // corpus tokenized ONCE; language/corpus totals re-sum the term
     // aggregate (a global window over it would serialize into one task —
     // banned shape), checkpointed so the explode doesn't run 3×
-    val terms = docTokens(spark, sf)
-      .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("y"))
-      .localCheckpoint()
+    val terms = Mat.once(docTokens(spark, sf)
+      .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("y")))
     val langTot = terms.groupBy(col("lang")).agg(sum(col("y")).as("nl"))
     val grand = langTot.agg(sum(col("nl")).as("n"))
     val scored = terms
@@ -1423,11 +1413,10 @@ object Text {
     // rep collapse (round 8): entropy depends only on lower(text), so the
     // per-character explode + two aggregates run once per identical
     // (lang, text) group and the per-doc rows expand by one join
-    val docs = Tables.documents(spark, sf)
+    val docs = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), lower(col("text")).as("lt"))
       .withColumn("rep", min(col("doc_id")).over(
-        Window.partitionBy(col("lang"), md5(col("lt").cast("binary")))))
-      .localCheckpoint()
+        Window.partitionBy(col("lang"), md5(col("lt").cast("binary"))))))
     val repStats = docs.filter(col("doc_id") === col("rep"))
       .select(col("doc_id").as("rep"), explode(expr(
         "transform(sequence(1, length(lt)), i -> substring(lt, i, 1))")).as("ch"))
@@ -1468,11 +1457,10 @@ object Text {
     val vocab = counts.select(col("word")).distinct()
     val vsize = vocab.agg(count(lit(1)).as("v"))
     val totals = counts.groupBy(col("lang")).agg(sum(col("c")).as("t"))
-    val dense = totals.crossJoin(vocab)
+    val dense = Mat.once(totals.crossJoin(vocab)
       .join(counts, Seq("lang", "word"), "left_outer")
       .select(col("lang"), col("word"), col("t"), coalesce(col("c"), lit(0L)).as("c"))
-      .crossJoin(broadcast(vsize))
-      .localCheckpoint()
+      .crossJoin(broadcast(vsize)))
     val p = (col("a.c") + lit(1L)).cast("double") /
       (col("a.t") + col("a.v")).cast("double")
     val q = (col("b.c") + lit(1L)).cast("double") /

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 
 /** LLM-training-data pipeline operators over `documents` beyond §2.9:
   * token counting, quality scoring, rolling-hash fingerprinting, SimHash
@@ -140,16 +140,15 @@ object TextPipeline {
       .select(col("doc_id"), col("lang"), col("source"),
         explode(col("toks")).as("word"))
       .select(col("doc_id"), col("lang"), col("source"), th(col("word")).as("h"))
-    val sig = hashed
+    // 8 rows per doc; materialized because the banding below AND (in
+    // the accuracy audit) two signature-agreement joins re-read it —
+    // lazy, the token explode + min-hash aggregate ran up to 4× per
+    // query (round 10 plan audit: q_minhash_accuracy 44 Exchange nodes)
+    val sig = Mat.once(hashed
       .select(col("doc_id"), col("lang"), col("source"), col("h"),
         explode(sequence(lit(0), lit(7))).as("i"))
       .groupBy(col("doc_id"), col("lang"), col("source"), col("i"))
-      .agg(min(expr("((2 * i + 1) * h + 7919 * i + 12345) % 1000000007")).as("sig"))
-      // 8 rows per doc; materialized because the banding below AND (in
-      // the accuracy audit) two signature-agreement joins re-read it —
-      // lazy, the token explode + min-hash aggregate ran up to 4× per
-      // query (round 10 plan audit: q_minhash_accuracy 44 Exchange nodes)
-      .localCheckpoint()
+      .agg(min(expr("((2 * i + 1) * h + 7919 * i + 12345) % 1000000007")).as("sig")))
     val bands = sig
       .groupBy(col("doc_id"), col("lang"), col("source"), expr("i div 2").as("band"))
       .agg(sum(expr("sig * (CASE WHEN i % 2 = 0 THEN 4294967311 ELSE 1 END)")).as("bv"))
@@ -238,7 +237,7 @@ object TextPipeline {
     val (sig, cand0) = lshSigAndCand(reps)
     // candidate pairs are read by BOTH the agreement count and the exact
     // Jaccard verify — materialize the banding join once
-    val cand = cand0.localCheckpoint()
+    val cand = Mat.once(cand0)
     val matches = cand
       .join(sig.select(col("doc_id").as("d1"), col("i"), col("sig").as("s1")), Seq("d1"))
       .join(sig.select(col("doc_id").as("d2"), col("i"), col("sig").as("s2")), Seq("d2", "i"))
@@ -422,11 +421,10 @@ object TextPipeline {
     */
   private def langidPredictions(spark: SparkSession, sf: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
-    val docs = Tables.documents(spark, sf)
+    val docs = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("text"))
       .withColumn("rep", min(col("doc_id")).over(
-        Window.partitionBy(col("lang"), md5(col("text").cast("binary")))))
-      .localCheckpoint()
+        Window.partitionBy(col("lang"), md5(col("text").cast("binary"))))))
     val groups = docs.groupBy(col("rep")).agg(count(lit(1)).as("m"))
     val grams = docs.filter(col("doc_id") === col("rep"))
       .select(col("doc_id"), col("lang"),
@@ -436,9 +434,8 @@ object TextPipeline {
     // lang, so the per-doc and per-lang profiles both derive from
     // (rep, lang, gram) counts — the full-corpus language profile is the
     // group-size-weighted re-aggregation
-    val gramCounts = grams.groupBy(col("doc_id"), col("lang"), col("gram"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds the language profile AND the doc ranks
+    val gramCounts = Mat.once(grams.groupBy(col("doc_id"), col("lang"), col("gram"))
+      .agg(count(lit(1)).as("c"))) // feeds the language profile AND the doc ranks
     val langTop = gramCounts
       .join(groups.select(col("rep").as("doc_id"), col("m")), "doc_id")
       .groupBy(col("lang"), col("gram")).agg(sum(col("c") * col("m")).as("c"))
@@ -740,7 +737,7 @@ object TextPipeline {
     * survive each pipeline stage — raw → length gate → token-count gate →
     * repetition gate → exact dedup (keep lowest doc_id per text). The
     * waterfall readout every corpus-curation run is judged by; per-doc
-    * flags are computed once (`localCheckpoint`) and the five stage
+    * flags are computed once (`Mat.once`) and the five stage
     * aggregates read that table, not the corpus.
     */
   def q_pipeline_funnel(spark: SparkSession, sf: String): DataFrame = {
@@ -749,10 +746,9 @@ object TextPipeline {
     // text (keyed by the dedup group's min doc_id) and join back; (2)
     // the five stage rows come from ONE conditional aggregate over the
     // per-doc flag table instead of five filter+agg jobs
-    val docs = Tables.documents(spark, sf)
+    val docs = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("n_chars"))
-      .withColumn("tid", min(col("doc_id")).over(Window.partitionBy("text")))
-      .localCheckpoint()
+      .withColumn("tid", min(col("doc_id")).over(Window.partitionBy("text"))))
     val firsts = docs.filter(col("doc_id") === col("tid"))
       .select(col("doc_id"), col("text"))
     val textStats = firsts
@@ -874,10 +870,9 @@ object TextPipeline {
           col("a.w") =!= col("b.w"))
       .groupBy(col("a.w").as("u"), col("b.w").as("v"))
       .agg(sum(col("a.m")).as("c"))
-    val edges = e0.select(col("u"), col("v"), col("c"))
+    val edges = Mat.once(e0.select(col("u"), col("v"), col("c"))
       .unionByName(e0.select(col("v").as("u"), col("u").as("v"), col("c")))
-      .groupBy(col("u"), col("v")).agg(sum(col("c")).as("c"))
-      .localCheckpoint()
+      .groupBy(col("u"), col("v")).agg(sum(col("c")).as("c")))
     val wTot = edges.groupBy(col("u")).agg(sum(col("c")).as("wu"))
     val nodes = wTot.select(col("u").as("w"), col("wu"))
     def step(r: DataFrame): DataFrame = {
@@ -885,11 +880,10 @@ object TextPipeline {
         .join(edges.select(col("u").as("w"), col("v"), col("c")), "w")
         .select(col("v"), expr("(rank * c) div wu").as("t"))
         .groupBy(col("v")).agg(sum(col("t")).as("tin"))
-      nodes.select(col("w"))
+      Mat.once(nodes.select(col("w"))
         .join(contrib.select(col("v").as("w"), col("tin")), Seq("w"), "left_outer")
         .select(col("w"),
-          (lit(150000000000L) + expr("(850 * coalesce(tin, CAST(0 AS BIGINT))) div 1000")).as("rank"))
-        .localCheckpoint()
+          (lit(150000000000L) + expr("(850 * coalesce(tin, CAST(0 AS BIGINT))) div 1000")).as("rank")))
     }
     val r0 = nodes.select(col("w"), lit(1000000000000L).as("rank"))
     val r2 = step(step(r0))
@@ -941,14 +935,13 @@ object TextPipeline {
       .withColumn("stop", when(col("w").isin("a", "the"), 1L).otherwise(0L))
     val wRun = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val phrases = toks
+    val phrases = Mat.once(toks
       .withColumn("grp", sum(col("stop")).over(wRun))
       .filter(col("stop") === 0)
       .groupBy(col("doc_id"), col("grp"))
       .agg(concat_ws(" ", array_sort(collect_list(struct(col("pos"), col("w"))))
         .getField("w")).as("phrase"), count(lit(1)).as("plen"))
-      .filter(col("plen").between(2, 4))
-      .localCheckpoint()
+      .filter(col("plen").between(2, 4)))
     val words = phrases
       .select(col("plen"), explode(split(col("phrase"), " ")).as("w"))
       .groupBy(col("w"))
@@ -1048,11 +1041,10 @@ object TextPipeline {
     * metric that, unlike pair-F1, doesn't let one giant cluster dominate.
     */
   def q_bcubed_eval(spark: SparkSession, sf: String): DataFrame = {
-    val d = Tables.documents(spark, sf)
+    val d = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"),
         md5(col("text").cast("binary")).as("tfp"),
-        md5(concat_ws(" ", array_sort(split(col("text"), " "))).cast("binary")).as("pfp"))
-      .localCheckpoint()
+        md5(concat_ws(" ", array_sort(split(col("text"), " "))).cast("binary")).as("pfp")))
     val predSz = d.groupBy(col("pfp")).agg(count(lit(1)).as("np"))
     val trueSz = d.groupBy(col("tfp")).agg(count(lit(1)).as("nt"))
     val bothSz = d.groupBy(col("pfp"), col("tfp")).agg(count(lit(1)).as("ni"))
@@ -1101,11 +1093,10 @@ object TextPipeline {
     // group minima, and a member's bigrams are all its rep's, so only
     // the OWNING rep can score a novel bigram — every non-rep member
     // scores nv = 0 and nb equal to its rep's)
-    val docs = Tables.documents(spark, sf)
+    val docs = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("text"))
       .withColumn("rep", min(col("doc_id")).over(
-        Window.partitionBy(md5(col("text").cast("binary")))))
-      .localCheckpoint()
+        Window.partitionBy(md5(col("text").cast("binary"))))))
     val nb = docBigramsOf(docs.filter(col("doc_id") === col("rep")))
       .select(col("doc_id"), col("w1"), col("w2")).distinct()
     val first = nb.groupBy(col("w1"), col("w2"))
@@ -1159,15 +1150,14 @@ object TextPipeline {
       .select(col("lang"), col("source"), col("m"), col("gid"),
         toks(col("text")).as("t"))
       .filter(size(col("t")) >= 6) // k + w - 1 tokens for one full window
-    val fps = groups
+    val fps = Mat.once(groups
       .select(col("gid"), col("m"), col("lang"), col("source"), expr(
         """transform(sequence(1, size(t) - 2),
              i -> cast(conv(substring(md5(cast(concat_ws(' ', t[i-1], t[i], t[i+1])
                   as binary)), 1, 8), 16, 10) as bigint))""").as("hs"))
       .select(col("gid"), col("m"), col("lang"), col("source"), explode(expr(
         "array_distinct(transform(sequence(1, size(hs) - 3), j -> array_min(slice(hs, j, 4))))"))
-        .as("fp"))
-      .localCheckpoint() // feeds per-rep totals + both legs of the pair join
+        .as("fp"))) // feeds per-rep totals + both legs of the pair join
     val perRep = fps.groupBy(col("lang"), col("source"), col("gid"), col("m"))
       .agg(count(lit(1)).as("nfp"))
     val cross = fps.as("a")
@@ -1255,16 +1245,15 @@ object TextPipeline {
     // one window pass assigns every doc its group id + size — round 10
     // replaced the groupBy + re-join-on-text pair (two shuffles, one of
     // them keyed by the full text string) with the single shuffle
-    // withRepOf-style window; one localCheckpoint feeds members, groups
+    // withRepOf-style window; one Mat.once feeds members, groups
     // and (when dups exist) the probe stream. Size contract: the
     // checkpointed table is the input corpus projected to (ids, shard
     // keys, text) — the same order of magnitude as the parquet input
     // split across executors, never a pair-shaped blow-up.
     val wg = Window.partitionBy(col("lang"), col("source"), col("text"))
-    val d = docsSrc.select(col("doc_id"), col("lang"), col("source"), col("text"))
+    val d = Mat.once(docsSrc.select(col("doc_id"), col("lang"), col("source"), col("text"))
       .withColumn("gid", min(col("doc_id")).over(wg))
-      .withColumn("m", count(lit(1)).over(wg))
-      .localCheckpoint()
+      .withColumn("m", count(lit(1)).over(wg)))
     val groups = d.filter(col("doc_id") === col("gid"))
       .select(col("lang"), col("source"), col("text"), col("gid"), col("m"),
         size(toks(col("text"))).cast("long").as("len"))
@@ -1438,10 +1427,9 @@ object TextPipeline {
     val perBucket = tok.groupBy(col("bucket")).agg(count(lit(1)).as("n_tokens"))
     val newTypes = tok.groupBy(col("word")).agg(min(col("bucket")).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("new_types"))
-    val growth = perBucket.join(newTypes, Seq("bucket"), "left_outer")
+    val growth = Mat.once(perBucket.join(newTypes, Seq("bucket"), "left_outer")
       .select(col("bucket"), col("n_tokens"),
-        coalesce(col("new_types"), lit(0L)).as("new_types"))
-      .localCheckpoint()
+        coalesce(col("new_types"), lit(0L)).as("new_types")))
     val cum = growth.as("a")
       .join(growth.select(col("bucket").as("b2"), col("n_tokens").as("nt2"),
         col("new_types").as("v2")).as("b"), col("b2") <= col("a.bucket"))
@@ -1493,12 +1481,11 @@ object TextPipeline {
     * and the share is an exact integer ratio.
     */
   def q_chunk_dedup(spark: SparkSession, sf: String): DataFrame = {
-    val chunks = Tables.documents(spark, sf)
+    val chunks = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
       .select(col("doc_id"), col("lang"),
         explode(expr("transform(sequence(0, (size(tk) div 8) - 1), " +
-          "i -> array_join(slice(tk, i * 8 + 1, 8), ' '))")).as("chunk"))
-      .localCheckpoint()
+          "i -> array_join(slice(tk, i * 8 + 1, 8), ' '))")).as("chunk")))
     val dup = chunks.groupBy(col("chunk"))
       .agg(countDistinct(col("doc_id")).as("ndocs"))
       .select(col("chunk"), (col("ndocs") > 1L).as("is_dup"))
@@ -1587,12 +1574,11 @@ object TextPipeline {
     * is one more doc-keyed aggregate.
     */
   def q_dup_chunk_removal(spark: SparkSession, sf: String): DataFrame = {
-    val chunks = Tables.documents(spark, sf)
+    val chunks = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("n_chars"), toks(col("text")).as("tk"))
       .select(col("doc_id"), col("lang"), col("n_chars"),
         explode(expr("transform(sequence(0, (size(tk) div 8) - 1), " +
-          "i -> array_join(slice(tk, i * 8 + 1, 8), ' '))")).as("chunk"))
-      .localCheckpoint()
+          "i -> array_join(slice(tk, i * 8 + 1, 8), ' '))")).as("chunk")))
     val dup = chunks.groupBy(col("chunk"))
       .agg(countDistinct(col("doc_id")).as("ndocs"))
       .select(col("chunk"), (col("ndocs") > 1L).as("is_dup"))
@@ -1623,10 +1609,9 @@ object TextPipeline {
     * sizes — no sort beyond the top-10 head.
     */
   def q_gries_dp(spark: SparkSession, sf: String): DataFrame = {
-    val tok = Tables.documents(spark, sf)
+    val tok = Mat.once(Tables.documents(spark, sf)
       .select(col("source"), explode(toks(col("text"))).as("w"))
-      .groupBy(col("w"), col("source")).agg(count(lit(1)).as("v"))
-      .localCheckpoint()
+      .groupBy(col("w"), col("source")).agg(count(lit(1)).as("v")))
     val parts = tok.groupBy(col("source")).agg(sum(col("v")).as("s"))
     val tot = parts.agg(sum(col("s")).as("t"))
     val f = tok.groupBy(col("w")).agg(sum(col("v")).as("f"))
@@ -1651,12 +1636,11 @@ object TextPipeline {
     * cross-row float sums. Top-15 by |LL| e4 with word-asc ties.
     */
   def q_keyness_ll(spark: SparkSession, sf: String): DataFrame = {
-    val tok = Tables.documents(spark, sf)
+    val tok = Mat.once(Tables.documents(spark, sf)
       .select((col("lang") === "en").as("inA"), explode(toks(col("text"))).as("w"))
       .groupBy(col("w"))
       .agg(sum(when(col("inA"), 1L).otherwise(0L)).as("a"),
-        sum(when(!col("inA"), 1L).otherwise(0L)).as("b"))
-      .localCheckpoint()
+        sum(when(!col("inA"), 1L).otherwise(0L)).as("b")))
     val tots = tok.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
     val aD = col("a").cast("double")
     val bD = col("b").cast("double")
@@ -1740,11 +1724,10 @@ object TextPipeline {
     * levenshtein is the classic unit-cost DP).
     */
   def q_edit_distance_dedup(spark: SparkSession, sf: String): DataFrame = {
-    val d = Tables.documents(spark, sf)
+    val d = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"),
         expr("n_chars div 8").as("blk"),
-        substring(col("text"), 1, 40).as("pfx"))
-      .localCheckpoint()
+        substring(col("text"), 1, 40).as("pfx")))
     val pairs = d.as("a")
       .join(d.select(col("doc_id").as("did2"), col("lang").as("lang2"),
         col("blk").as("blk2"), col("pfx").as("pfx2")).as("b"),
@@ -1942,12 +1925,11 @@ object TextPipeline {
     * cross-source duplicates (the fixture corpus has none, so the oracle
     * hash-match alone would verify only the empty result). */
   private[graft] def sourceOverlapOf(docs: DataFrame): DataFrame = {
-    val fp = docs
+    val fp = Mat.once(docs
       .select(col("source"),
         md5(concat_ws(" ", array_sort(split(col("text"), " "))).cast("binary"))
           .as("pfp"))
-      .groupBy(col("pfp"), col("source")).agg(count(lit(1)).as("nd"))
-      .localCheckpoint()
+      .groupBy(col("pfp"), col("source")).agg(count(lit(1)).as("nd")))
     fp.as("a")
       .join(fp.select(col("pfp"), col("source").as("source2"),
         col("nd").as("nd2")).as("b"),
@@ -1966,10 +1948,9 @@ object TextPipeline {
     * lattice is |distinct lengths| regardless of corpus size.
     */
   def q_length_filter_sweep(spark: SparkSession, sf: String): DataFrame = {
-    val lat = Tables.documents(spark, sf)
+    val lat = Mat.once(Tables.documents(spark, sf)
       .select(size(toks(col("text"))).cast("long").as("nw"))
-      .groupBy(col("nw")).agg(count(lit(1)).as("nd"))
-      .localCheckpoint()
+      .groupBy(col("nw")).agg(count(lit(1)).as("nd")))
     val tot = lat.agg(sum(col("nd")).as("td"),
       sum(col("nd") * col("nw")).as("tt"))
     val thr = spark.range(1, 11).select((col("id") * 10L).as("t"))
@@ -2043,11 +2024,10 @@ object TextPipeline {
     * vocab sizing curve.
     */
   def q_vocab_prune_sweep(spark: SparkSession, sf: String): DataFrame = {
-    val coc = Tables.documents(spark, sf)
+    val coc = Mat.once(Tables.documents(spark, sf)
       .select(explode(toks(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .groupBy(col("c")).agg(count(lit(1)).as("m"))
-      .localCheckpoint()
+      .groupBy(col("c")).agg(count(lit(1)).as("m")))
     val tot = coc.agg(sum(col("m")).as("tv"), sum(col("c") * col("m")).as("tt"))
     val thr = spark.range(0, 6)
       .select(expr("CAST(shiftleft(1, CAST(id AS INT)) AS BIGINT)").as("f"))
@@ -2133,18 +2113,17 @@ object TextPipeline {
     // member contributes its rep's occurrence multiset), scores are
     // group-invariant, and only each group's 20 smallest member ids can
     // reach the global top-20 (score ties break by doc_id)
-    val docs = Tables.documents(spark, sf)
+    val docs = Mat.once(Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("text"))
       .withColumn("rep", min(col("doc_id")).over(
-        Window.partitionBy(col("lang"), md5(col("text").cast("binary")))))
-      .localCheckpoint()
+        Window.partitionBy(col("lang"), md5(col("text").cast("binary"))))))
     val groups = docs.groupBy(col("rep")).agg(count(lit(1)).as("m"))
     val reps = docs.filter(col("doc_id") === col("rep"))
-    val feats = docBigramsOf(reps)
+    // feeds the bucket totals AND the scoring join
+    val feats = Mat.once(docBigramsOf(reps)
       .join(reps.select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("lang"),
-        pmod(th(concat_ws(" ", col("w1"), col("w2"))), lit(1024L)).as("b"))
-      .localCheckpoint() // feeds the bucket totals AND the scoring join
+        pmod(th(concat_ws(" ", col("w1"), col("w2"))), lit(1024L)).as("b")))
     val counts = feats
       .join(groups.select(col("rep").as("doc_id"), col("m")), "doc_id")
       .groupBy(col("b"))
@@ -2184,11 +2163,10 @@ object TextPipeline {
     val staged = Tables.documents(spark, sf)
       .select(least(lit(3L), expr("n_chars div 256")).as("stage"),
         col("doc_id"), col("n_chars"))
-    val agg = staged.groupBy(col("stage"))
+    val agg = Mat.once(staged.groupBy(col("stage"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"),
         expr("array_join(transform(slice(array_sort(collect_list(doc_id)), 1, 5)," +
-          " x -> CAST(x AS STRING)), ',')").as("first_docs"))
-      .localCheckpoint()
+          " x -> CAST(x AS STRING)), ',')").as("first_docs")))
     agg.as("a")
       .join(agg.select(col("stage").as("s2"), col("chars").as("c2")).as("b"),
         col("s2") < col("a.stage"), "left_outer")

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Mat, Tables}
 
 /** Vector similarity / search over the embeddings table (SURVEY.md §2.11)
   * plus shared vector math for the deterministic ML operators.
@@ -647,10 +647,9 @@ object Vectors {
   /** The rep-collapsed core over a (vec_id, qe) block — exposed to
     * Round9OpsSpec's pair-join twin. */
   private[graft] def nnDistanceHistOf(block: DataFrame): DataFrame = {
-    val groups = block
+    val groups = Mat.once(block
       .groupBy(col("qe"))
-      .agg(count(lit(1)).as("m"), min(col("vec_id")).as("vec_id"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("m"), min(col("vec_id")).as("vec_id")))
     val repNN = gridDirectedD2(groups.select(col("vec_id"), col("qe")), 8)
       .groupBy(col("qid")).agg(min(col("d2")).as("rep_nn"))
     groups.join(repNN, col("vec_id") === col("qid"), "left_outer")
@@ -723,17 +722,15 @@ object Vectors {
     */
   private[graft] def labelNoiseOf(block: DataFrame): DataFrame = {
     val w6 = Window.partitionBy("qe").orderBy("vec_id")
-    val groups = block.withColumn("rn", row_number().over(w6))
+    // feeds the rep grid and the vote arithmetic: one row per DISTINCT
+    // vector with a ≤6-element array — bounded by the distinct-vector
+    // count, never by the duplicated corpus
+    val groups = Mat.once(block.withColumn("rn", row_number().over(w6))
       .groupBy(col("qe"))
       .agg(count(lit(1)).as("m"), sum(col("label")).as("n1g"),
         min(col("vec_id")).as("rid"),
         sort_array(collect_list(when(col("rn") <= 6,
-          struct(col("vec_id").as("id"), col("label").as("lb"))))).as("top6"))
-      // feeds the rep grid and the vote arithmetic. Size contract (see
-      // BandedScan.cumSums): one row per DISTINCT vector with a ≤6-element
-      // array — bounded by the distinct-vector count, never by the
-      // duplicated corpus; executor-local checkpoint storage is fine
-      .localCheckpoint()
+          struct(col("vec_id").as("id"), col("label").as("lb"))))).as("top6")))
     val reps = groups.select(col("rid").as("vec_id"), col("qe"),
       col("m").as("gm"), slice(col("top6"), 1, 5).as("top5"))
     val ext = gridDirectedD2(reps, 8, Nil, Seq("gm", "top5"))
@@ -843,21 +840,20 @@ object Vectors {
     * v₀ = 1⃗, w = G·v, v ← round(w/max|w|·10⁶) (one IEEE division per
     * component — trunc-vs-floor-unsafe integer division never touches the
     * possibly-negative values). The data is read ONCE (the 64-cell scatter
-    * aggregate, `localCheckpoint`ed); both iterations are joins over that
+    * aggregate, materialized by `Mat.once`); both iterations are joins over that
     * 8×8 table, so iteration cost is independent of corpus size. Output:
     * the e6 loadings and the Rayleigh-quotient eigenvalue estimate on the
     * original scale.
     */
   def q_pca_power(spark: SparkSession, sf: String): DataFrame = {
-    val cells = Tables.embeddings(spark, sf)
+    val cells = Mat.once(Tables.embeddings(spark, sf)
       .select(slice(q7(col("embedding")), 1, 8).as("qe"))
       .select(explode(expr(
         "flatten(transform(sequence(0, 7), i ->" +
           " transform(sequence(0, 7), j -> struct(CAST(i+1 AS BIGINT) AS i," +
           " CAST(j+1 AS BIGINT) AS j, qe[i] * qe[j] AS p))))")).as("c"))
       .groupBy(col("c.i").as("i"), col("c.j").as("j"))
-      .agg(sum(col("c.p").cast("decimal(38,0)")).as("g"), count(lit(1)).as("n"))
-      .localCheckpoint()
+      .agg(sum(col("c.p").cast("decimal(38,0)")).as("g"), count(lit(1)).as("n")))
     val v1raw = cells.groupBy(col("i")).agg(sum(col("g")).as("w"))
     val m1 = v1raw.agg(max(abs(col("w"))).as("m"))
     val v1 = v1raw.crossJoin(broadcast(m1))
@@ -984,11 +980,10 @@ object Vectors {
   def q_mmr_rerank(spark: SparkSession, sf: String): DataFrame = {
     val all = quantized(spark, sf)
     val query = all.filter(col("vec_id") === 0).select(col("qe").as("query_qe"))
-    val cands = all.filter(col("vec_id") =!= 0)
+    val cands = Mat.once(all.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(query))
       .select(col("vec_id"), col("qe"), dotE14(col("qe"), col("query_qe")).as("rel"))
-      .orderBy(col("rel").desc, col("vec_id").asc).limit(20)
-      .localCheckpoint()
+      .orderBy(col("rel").desc, col("vec_id").asc).limit(20))
     var selected = cands.orderBy(col("rel").desc, col("vec_id").asc).limit(1)
       .select(col("vec_id"), col("qe"), col("rel"), lit(0L).as("ms"),
         (col("rel") * 7).as("score"), lit(1L).as("rank"))
@@ -1006,7 +1001,7 @@ object Vectors {
         .join(cands.select(col("vec_id"), col("qe")), "vec_id")
         .select(col("vec_id"), col("qe"), col("rel"), col("ms"), col("score"),
           lit(r.toLong).as("rank"))
-      selected = selected.unionByName(next).localCheckpoint()
+      selected = Mat.once(selected.unionByName(next))
     }
     selected.select(col("rank").as("mmr_rank"), col("vec_id"), col("rel").as("rel_e14"),
       col("ms").as("max_sim_e14"), col("score").as("score_x10"))
@@ -1084,7 +1079,7 @@ object Vectors {
     */
   def q_lof_outliers(spark: SparkSession, sf: String): DataFrame = {
     val sel = quantized(spark, sf).filter(col("label") === 0)
-    val knn = gridTopK(gridDirectedD2(sel, 8), 5).localCheckpoint()
+    val knn = Mat.once(gridTopK(gridDirectedD2(sel, 8), 5))
     val kdist = knn.filter(col("rn") === 5)
       .select(col("qid").as("kd_id"), col("d2").as("kdist"))
     // lrd(a) = k / Σ_b max(kdist(b), d2(a,b))
@@ -1119,10 +1114,9 @@ object Vectors {
   def q_dbscan_labels(spark: SparkSession, sf: String): DataFrame = {
     val eps = 165000000000000L
     val sel = quantized(spark, sf).filter(col("label") === 0)
-    val neigh = gridDirectedD2(sel, 8)
+    val neigh = Mat.once(gridDirectedD2(sel, 8)
       .filter(col("d2") <= eps)
-      .select(col("qid"), col("nid"), col("d2"))
-      .localCheckpoint()
+      .select(col("qid"), col("nid"), col("d2")))
     val core = neigh.groupBy(col("qid")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= 4).select(col("qid").as("core_id"))
     val border = neigh
@@ -1301,11 +1295,10 @@ object Vectors {
       .groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("c"))
     val tot = h.groupBy(col("label")).agg(sum(col("c")).as("t"))
     val buckets = h.select(col("bucket")).distinct()
-    val dense = tot.crossJoin(buckets)
+    val dense = Mat.once(tot.crossJoin(buckets)
       .join(h, Seq("label", "bucket"), "left_outer")
       .select(col("label"), col("bucket"), col("t"),
-        coalesce(col("c"), lit(0L)).as("c"))
-      .localCheckpoint()
+        coalesce(col("c"), lit(0L)).as("c")))
     val pa = col("a.c").cast("double") / col("a.t").cast("double")
     val pb = col("b.c").cast("double") / col("b.t").cast("double")
     dense.as("a")
@@ -1332,24 +1325,22 @@ object Vectors {
     * passes, all shuffles keyed by dim or vec.
     */
   def q_perceptron_step(spark: SparkSession, sf: String): DataFrame = {
-    val e = Tables.embeddings(spark, sf)
+    val e = Mat.once(Tables.embeddings(spark, sf)
       .select(col("vec_id"),
         when(col("label") <= 4, 1L).otherwise(-1L).as("y"),
         posexplode(q7(col("embedding"))).as(Seq("dim", "x")))
       .select(col("vec_id"), col("y"), col("dim").cast("long").as("dim"),
-        col("x"))
-      .localCheckpoint()
+        col("x")))
     val w0 = e.groupBy(col("dim"))
       .agg(sum(when(col("y") === 1L, col("x")).otherwise(0L)).as("sp"),
         sum(when(col("y") === 1L, 1L).otherwise(0L)).as("np"),
         sum(when(col("y") === -1L, col("x")).otherwise(0L)).as("sn"),
         sum(when(col("y") === -1L, 1L).otherwise(0L)).as("nn"))
       .select(col("dim"), expr("(sp div np) - (sn div nn)").as("w0"))
-    val m1 = e.join(broadcast(w0), Seq("dim"))
+    val m1 = Mat.once(e.join(broadcast(w0), Seq("dim"))
       .groupBy(col("vec_id"), col("y"))
       .agg(sum(col("x") * col("w0")).as("dot"))
-      .select(col("vec_id"), col("y"), (col("y") * col("dot") <= 0L).as("mis"))
-      .localCheckpoint()
+      .select(col("vec_id"), col("y"), (col("y") * col("dot") <= 0L).as("mis")))
     val upd = e.join(m1.filter(col("mis")).select(col("vec_id")), Seq("vec_id"))
       .groupBy(col("dim")).agg(sum(col("y") * col("x")).as("su"),
         countDistinct(col("vec_id")).as("nmis"))
@@ -1400,9 +1391,8 @@ object Vectors {
     * of corpus size.
     */
   def q_adjusted_rand(spark: SparkSession, sf: String): DataFrame = {
-    val cont = lshPartition(spark, sf)
-      .groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("nij"))
-      .localCheckpoint()
+    val cont = Mat.once(lshPartition(spark, sf)
+      .groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("nij")))
     val cells = cont.agg(
       sum(expr("CAST(nij * (nij - 1) div 2 AS decimal(38,0))")).as("sum_idx"),
       count(lit(1)).as("n_cells"))
@@ -1430,9 +1420,8 @@ object Vectors {
     * the result; NMI = 2I/(H_label + H_bucket) is one epilogue.
     */
   def q_nmi_clusters(spark: SparkSession, sf: String): DataFrame = {
-    val cont = lshPartition(spark, sf)
-      .groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("nij"))
-      .localCheckpoint()
+    val cont = Mat.once(lshPartition(spark, sf)
+      .groupBy(col("label"), col("bucket")).agg(count(lit(1)).as("nij")))
     val tot = cont.agg(sum(col("nij")).as("n"))
     val rows = cont.groupBy(col("label")).agg(sum(col("nij")).as("ai"))
     val colsM = cont.groupBy(col("bucket")).agg(sum(col("nij")).as("bj"))
@@ -1482,8 +1471,8 @@ object Vectors {
     * pair table is k² rows regardless of scale.
     */
   def q_davies_bouldin(spark: SparkSession, sf: String): DataFrame = {
-    val cent = centroids8(spark, sf).localCheckpoint()
-    val scat = Tables.embeddings(spark, sf)
+    val cent = Mat.once(centroids8(spark, sf))
+    val scat = Mat.once(Tables.embeddings(spark, sf)
       .select(col("label").cast("long").as("clabel"),
         slice(q7(col("embedding")), 1, 8).as("qe"))
       .join(broadcast(cent), "clabel")
@@ -1492,8 +1481,7 @@ object Vectors {
           .cast("long").as("d_e6"))
       .groupBy(col("clabel"))
       .agg(count(lit(1)).as("n_members"), sum(col("d_e6")).as("sd"))
-      .select(col("clabel"), col("n_members"), expr("sd div n_members").as("s_e6"))
-      .localCheckpoint()
+      .select(col("clabel"), col("n_members"), expr("sd div n_members").as("s_e6")))
     val pairs = cent.as("a")
       .join(cent.select(col("clabel").as("clabel2"), col("c_qe").as("c_qe2")).as("b"),
         col("a.clabel") =!= col("clabel2"))
@@ -1524,7 +1512,7 @@ object Vectors {
     * centroid join per scan.
     */
   def q_calinski_harabasz(spark: SparkSession, sf: String): DataFrame = {
-    val cent = centroids8(spark, sf).localCheckpoint()
+    val cent = Mat.once(centroids8(spark, sf))
     val sizes = Tables.embeddings(spark, sf)
       .groupBy(col("label").cast("long").as("clabel"))
       .agg(count(lit(1)).as("ni"))
@@ -1567,15 +1555,14 @@ object Vectors {
     val all = quantized(spark, sf)
     val q = all.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("qe").as("q_qe"))
-    val cand = all.filter(col("vec_id") >= 20)
+    val cand = Mat.once(all.filter(col("vec_id") >= 20)
       .select(col("vec_id").as("tid"), col("qe").as("t_qe"))
       .crossJoin(broadcast(q))
       .select(col("qid"), col("tid"),
         dist2E14(col("t_qe"), col("q_qe")).as("d_full"),
         dist2E14(slice(col("t_qe"), 1, 8), slice(col("q_qe"), 1, 8)).as("d8"),
         dist2E14(slice(col("t_qe"), 1, 16), slice(col("q_qe"), 1, 16)).as("d16"),
-        dist2E14(slice(col("t_qe"), 1, 32), slice(col("q_qe"), 1, 32)).as("d32"))
-      .localCheckpoint()
+        dist2E14(slice(col("t_qe"), 1, 32), slice(col("q_qe"), 1, 32)).as("d32")))
     def top5(dcol: String): DataFrame = {
       val w = Window.partitionBy(col("qid")).orderBy(col(dcol).asc, col("tid").asc)
       cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
@@ -1649,20 +1636,19 @@ object Vectors {
   /** The rep-collapsed core over a (vec_id, x, y) frame — exposed to
     * Round9OpsSpec's uncollapsed-grid twin. */
   private[graft] def closestPair2dOf(ptsSrc: DataFrame): DataFrame = {
-    val pts = ptsSrc.localCheckpoint()
+    val pts = Mat.once(ptsSrc)
     val grp = pts.groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("m"), min(col("vec_id")).as("i1"))
     val second = pts.join(grp.select(col("x"), col("y"), col("i1")), Seq("x", "y"))
       .filter(col("vec_id") > col("i1"))
       .groupBy(col("x"), col("y")).agg(min(col("vec_id")).as("i2"))
-    val groups = grp.join(second, Seq("x", "y"), "left_outer").localCheckpoint()
+    val groups = Mat.once(grp.join(second, Seq("x", "y"), "left_outer"))
     val bounds = groups.agg(min(col("x")).as("x0"), max(col("x")).as("x1"),
       min(col("y")).as("y0"), max(col("y")).as("y1"))
-    val cells = groups.crossJoin(broadcast(bounds))
+    val cells = Mat.once(groups.crossJoin(broadcast(bounds))
       .select(col("i1"), col("m"), col("x"), col("y"),
         expr("(x - x0) * 32 div (x1 - x0 + 1)").as("cx"),
-        expr("(y - y0) * 32 div (y1 - y0 + 1)").as("cy"))
-      .localCheckpoint()
+        expr("(y - y0) * 32 div (y1 - y0 + 1)").as("cy")))
     val probe = cells.select(col("i1").as("b"), col("m").as("bm"),
         col("x").as("bx"), col("y").as("by"), col("cx"), col("cy"))
       .withColumn("d", explode(expr(
@@ -1678,7 +1664,7 @@ object Vectors {
     val within = groups.filter(col("m") >= 2L)
       .select(col("i1").as("a"), col("i2").as("b"), lit(0L).as("d2"),
         expr("m * (m - 1) div 2").as("w"))
-    val cand = cross.unionByName(within).localCheckpoint()
+    val cand = Mat.once(cross.unionByName(within))
     val n = cand.agg(sum(col("w")).as("n_candidates"))
     cand.orderBy(col("d2").asc, col("a").asc, col("b").asc).limit(1)
       .crossJoin(broadcast(n))
@@ -1701,14 +1687,13 @@ object Vectors {
         round(element_at(col("embedding"), 2).cast("double") * 1e7).cast("long").as("y"))
     val bounds = pts.agg(min(col("x")).as("x0"), max(col("x")).as("x1"),
       min(col("y")).as("y0"), max(col("y")).as("y1"))
-    val grid = pts.crossJoin(broadcast(bounds))
+    val grid = Mat.once(pts.crossJoin(broadcast(bounds))
       .select(col("vec_id"),
         expr("(x - x0) * 256 div (x1 - x0 + 1)").as("gx"),
         expr("(y - y0) * 256 div (y1 - y0 + 1)").as("gy"))
       .withColumn("morton", expr((0 until 8).map(b =>
         s"((gx div ${1L << b}) % 2) * ${1L << (2 * b)}" +
-          s" + ((gy div ${1L << b}) % 2) * ${1L << (2 * b + 1)}").mkString(" + ")))
-      .localCheckpoint()
+          s" + ((gy div ${1L << b}) % 2) * ${1L << (2 * b + 1)}").mkString(" + "))))
     def locality(bucketed: DataFrame, scheme: String): DataFrame =
       bucketed.groupBy(col("bk"))
         .agg(count(lit(1)).as("n"), sum(col("gx")).as("sx"),

@@ -9,8 +9,9 @@ import scala.util.control.NonFatal
   * Usage: runMain graft.tools.Explain <sfDir> [queryName...]
   *
   * `SPARK_GRAFT_EXPLAIN_ONLY=1` skips the final `.count()` only: queries
-  * that materialize intermediates while they are built (eager
-  * `localCheckpoint`, `isEmpty`/`collect` probes) still run those jobs.
+  * that materialize intermediates while they are built (`Mat.once`,
+  * `isEmpty`/`collect` probes) still run those jobs; the `Mat.once` jobs
+  * are named `materialize <Module>.<method>:<line>`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

@@ -10,8 +10,10 @@ import scala.collection.mutable
   * twice (cold, then warm — codegen and scan caches primed) and prints
   * every Spark job the warm run launched, with its duration, stage count
   * and task count, so a flat-cost query's overhead can be attributed to
-  * eager materializations (localCheckpoint jobs), driver-side sizing
-  * actions, and the final action. Not part of the driver contract.
+  * eager materializations, driver-side sizing actions, and the final
+  * action. Construction jobs appear by site name: `core.Mat` describes
+  * each as `materialize <Module>.<method>:<line>`. Not part of the
+  * driver contract.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <queryName...>
   */

@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{Analytics, Retrieval, Text, Vectors}
 
+import scala.jdk.CollectionConverters._
+
 /** Semantic invariants for the round-3 analytics / IR batch (§2.21) —
   * properties the oracle hash can't see on its own.
   */
@@ -923,5 +925,43 @@ class AnalyticsSpec extends AnyFunSuite {
       .select(col("o_custkey")).distinct().count()
     assert(total === custs)
     df.unpersist()
+  }
+
+  test("Mat names each construction job after its call site, then restores the caller's") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "mat-site-names"
+    // (job description, first stage's call site) of each job in the group
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add((String.valueOf(e.properties.getProperty("spark.job.description")),
+            e.stageInfos.headOption.map(_.name).getOrElse("")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller")
+      Analytics.q_stationary_tiers(spark, sf) // only builds the query
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      // the listener bus is asynchronous and in order: once this job's start
+      // is seen, every construction job's start has been delivered
+      sc.setJobDescription("marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == "marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val built = jobs.asScala.toList.takeWhile(_._1 != "marker")
+      val (mats, others) = built.partition(_._1.startsWith("materialize "))
+      assert(mats.nonEmpty)
+      assert(mats.forall(_._1.startsWith("materialize Analytics.")), mats)
+      assert(mats.exists(_._1.matches("""materialize Analytics\.q_stationary_tiers:\d+""")), mats)
+      // the one other kind of construction job: Spark's parquet footer read
+      // that infers a table's schema when Tables loads it
+      assert(others.forall(_._2.startsWith("parquet at Tables.scala")), others)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

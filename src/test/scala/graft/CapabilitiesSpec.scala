@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,7 +12,7 @@ class CapabilitiesSpec extends AnyFunSuite {
   import TestSpark.sf
 
   test("csv and json round-trip with explicit schemas") {
-    val dir = Files.createTempDirectory("graft_src").toString
+    val dir = TestSpark.tempDir("graft_src")
     val df = graft.core.Tables.nation(spark, sf)
     Sources.writeCsv(df, s"$dir/nation_csv")
     val schema = StructType(Seq(
@@ -31,7 +29,7 @@ class CapabilitiesSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet sink enables partition pruning") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part")
     Sources.writeParquet(graft.core.Tables.orders(spark, sf),
       s"$dir/orders_p", partitionBy = Seq("o_orderpriority"))
     val pruned = Sources.readParquet(spark, s"$dir/orders_p")
@@ -85,23 +83,28 @@ class CapabilitiesSpec extends AnyFunSuite {
     assert(byKind("video") > 3)   // videos explode to duration/1000 frames
   }
 
+  // the registration tests use a fresh session: the shared one already has
+  // the functions (Graft.session attaches them), so registering there again
+  // would only replace them
   test("registered UDFs and native SQL functions work through spark.sql") {
-    graft.functions.GraftFunctions.register(spark)
-    val toks = spark.sql("SELECT graft_tokenize('Fast, QUERY!! scan') AS t")
+    val s = spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    val toks = s.sql("SELECT graft_tokenize('Fast, QUERY!! scan') AS t")
       .head().getSeq[String](0)
     assert(toks === Seq("fast", "query", "scan"))
-    val dot = spark.sql("SELECT graft_dot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
+    val dot = s.sql("SELECT graft_dot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
       .head().getLong(0)
     assert(dot === 32L)
-    val d2 = spark.sql("SELECT graft_dist2(array(1L, 2L), array(3L, 1L)) AS d")
+    val d2 = s.sql("SELECT graft_dist2(array(1L, 2L), array(3L, 1L)) AS d")
       .head().getLong(0)
     assert(d2 === 5L)
   }
 
   test("centroid UDAF computes the element-wise mean") {
-    graft.functions.GraftFunctions.register(spark)
-    graft.core.Tables.embeddings(spark, sf).createOrReplaceTempView("emb_t")
-    val c = spark.sql(
+    val s = spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    graft.core.Tables.embeddings(s, sf).createOrReplaceTempView("emb_t")
+    val c = s.sql(
       "SELECT graft_cosine_centroid(embedding) AS c FROM emb_t WHERE vec_id < 4")
       .head().getSeq[Double](0)
     assert(c.length === 64)
@@ -152,12 +155,14 @@ class CapabilitiesSpec extends AnyFunSuite {
   }
 
   test("Graft facade: attach, table load, query lookup, view registration") {
-    Graft.attach(spark)
-    assert(Graft.table(spark, sf, "events").columns.contains("ts_us"))
+    val s = spark.newSession()
+    Graft.attach(s)
+    assert(s.sql("SELECT graft_dot(array(1L, 2L), array(3L, 4L))").head().getLong(0) === 11L)
+    assert(Graft.table(s, sf, "events").columns.contains("ts_us"))
     assert(Graft.queryNames.size === SparkEntry.queries.size)
-    assert(Graft.query("q_topk_customers")(spark, sf).count() === 10)
-    Graft.registerViews(spark, sf)
-    assert(spark.sql("SELECT count(*) FROM lineitem").head().getLong(0) === 6000L)
+    assert(Graft.query("q_topk_customers")(s, sf).count() === 10)
+    Graft.registerViews(s, sf)
+    assert(s.sql("SELECT count(*) FROM lineitem").head().getLong(0) === 6000L)
   }
 
   test("SparkSessionExtensions injection registers graft functions") {

@@ -26,7 +26,7 @@ class DegeneracySpec extends AnyFunSuite {
 
   /** Write `tables` as `<dir>/<name>.parquet` and return the dir. */
   private def fixture(tables: (String, DataFrame)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen").toString
+    val dir = TestSpark.tempDir("graft_degen")
     tables.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

@@ -78,7 +78,7 @@ class FixtureSchemaSpec extends AnyFunSuite {
     // rounds 1-2 shipped ts as raw nanosecond longs (read under
     // nanosAsLong); synthesize that layout from the current fixture and
     // check the adaptive loader lands on the same derived columns
-    val dir = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    val dir = TestSpark.tempDir("graft_nanos")
     val cur = Tables.eventsWithTs(spark, sf)
     cur.select(col("event_id"), (col("ts_usl") * 1000L).as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))

@@ -69,4 +69,13 @@ class GraphMlSpec extends AnyFunSuite {
       if (df <= 15) assert(nPost === df) else assert(nPost === 15)
     }
   }
+
+  test("pagerank and tree split leave nothing in the shared CacheManager") {
+    // their shared tables are per-query materializations, so a rerun
+    // recomputes from parquet instead of reading the previous run's blocks
+    GraphMl.q_pagerank(spark, sf).collect()
+    GraphMl.q_tree_split(spark, sf).collect()
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+  }
 }

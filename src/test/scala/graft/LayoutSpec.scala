@@ -30,7 +30,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("partitioned sink produces partition-pruned scans") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part")
     graft.sources.Sources.writeParquet(
       Tables.lineitem(spark, sf), dir, partitionBy = Seq("l_returnflag"))
     val pruned = spark.read.parquet(dir).filter(col("l_returnflag") === "A")
@@ -71,5 +71,26 @@ class LayoutSpec extends AnyFunSuite {
     assert(keys.size == SparkEntry.queries.size,
       s"registry literal has ${keys.size} entries but the Map kept " +
         s"${SparkEntry.queries.size}")
+  }
+
+  test("every materialization in src/main goes through core.Mat") {
+    // one primitive owns mechanism, storage and job naming; a hand-written
+    // checkpoint or cache elsewhere bypasses all three (and a .cache()
+    // outlives the query in the shared CacheManager)
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(java.nio.file.Paths.get("graft/core/Mat.scala"))).toList
+    val banned = """localCheckpoint\(|\.cache\(\)|\.persist\(|\.checkpoint\(""".r
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if banned.findFirstIn(code.split("//", 2)(0)).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}: $code"
+    assert(files.size > 20, s"scanned only ${files.size} files")
+    assert(hits.isEmpty, s"materialize through graft.core.Mat.once:\n${hits.mkString("\n")}")
   }
 }

@@ -186,7 +186,7 @@ class Round6OpsSpec extends AnyFunSuite {
   // ---- tfidf cosine completeness certificate --------------------------------
 
   private def fixture(tables: (String, DataFrame)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r6").toString
+    val dir = TestSpark.tempDir("graft_r6")
     tables.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

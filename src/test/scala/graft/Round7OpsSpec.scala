@@ -182,7 +182,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   test("whale-basket guard fires inside q_apriori_pairs on a planted 1025-part order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_whale").toString
+    val dir = TestSpark.tempDir("graft_whale")
     // one whale order spanning PairBreadthCap+1 distinct parts
     val whale = spark.range(graft.core.Guards.PairBreadthCap + 1)
       .select(lit(1L).as("l_orderkey"), col("id").as("l_partkey"),
@@ -239,10 +239,12 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   test("graft_vec_sum is SQL-callable after registration") {
-    graft.functions.GraftFunctions.register(spark)
-    import spark.implicits._
+    // a fresh session: the shared one already has the function
+    val s = spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    import s.implicits._
     Seq((1L, Seq(3L, 4L))).toDF("g", "v").createOrReplaceTempView("vs_in")
-    val out = spark.sql("SELECT graft_vec_sum(v) AS s FROM vs_in GROUP BY g").collect()
+    val out = s.sql("SELECT graft_vec_sum(v) AS s FROM vs_in GROUP BY g").collect()
     assert(out.head.getSeq[Long](0) === Seq(3L, 4L))
   }
 }

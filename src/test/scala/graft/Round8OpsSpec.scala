@@ -28,7 +28,7 @@ class Round8OpsSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
 
   private def fixture(tables: (String, DataFrame)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r8").toString
+    val dir = TestSpark.tempDir("graft_r8")
     tables.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

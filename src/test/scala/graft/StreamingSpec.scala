@@ -152,7 +152,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("file sink writes streaming output to parquet with checkpointing") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = TestSpark.tempDir("graft_sink")
     val stream = MemoryStream[Ev](spark)
     stream.addData(Ev(ts(1), "view", 1.0, 1), Ev(ts(2), "click", 2.0, 2))
     val q = graft.streaming.Streaming.startFileSink(
