@@ -1,1137 +1,61 @@
 package graft
-import org.apache.spark.sql.{SparkSession, DataFrame}
+
+import java.lang.reflect.{InvocationTargetException, Method}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.ops._
 import graft.oracle.OracleSql
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q_agg_pricing_summary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Built once:
-    * `Graft.query` and the test shards look keys up in it per call. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scan_lineitem_count" -> (Relational.q_scan_lineitem_count _),
-    "q_scan_pruned"         -> (Relational.q_scan_pruned _),
-    "q_filter_complex"      -> (Relational.q_filter_complex _),
-    "q_project_expr"        -> (Relational.q_project_expr _),
-    "q_agg_pricing_summary" -> (Relational.q_agg_pricing_summary _),
-    "q_agg_distinct"        -> (Relational.q_agg_distinct _),
-    "q_agg_rollup"          -> (Relational.q_agg_rollup _),
-    "q_agg_cube"            -> (Relational.q_agg_cube _),
-    "q_agg_stats"           -> (Relational.q_agg_stats _),
-    "q_agg_median"          -> (Relational.q_agg_median _),
-    "q_topk_customers"      -> (Relational.q_topk_customers _),
-    "q_sort_multi"          -> (Relational.q_sort_multi _),
-    "q_set_intersect"       -> (Relational.q_set_intersect _),
-    "q_set_except"          -> (Relational.q_set_except _),
-    "q_set_union"           -> (Relational.q_set_union _),
-    "q_join_broadcast"      -> (Joins.q_join_broadcast _),
-    "q_join_shuffle_multi"  -> (Joins.q_join_shuffle_multi _),
-    "q_join_left_outer"     -> (Joins.q_join_left_outer _),
-    "q_join_semi"           -> (Joins.q_join_semi _),
-    "q_join_anti"           -> (Joins.q_join_anti _),
-    "q_join_theta"          -> (Joins.q_join_theta _),
-    "q_join_asof"           -> (Joins.q_join_asof _),
-    "q_window_rank"         -> (Windows.q_window_rank _),
-    "q_window_running"      -> (Windows.q_window_running _),
-    "q_window_lag_delta"    -> (Windows.q_window_lag_delta _),
-    "q_window_ntile"        -> (Windows.q_window_ntile _),
-    "q_window_firstlast"    -> (Windows.q_window_firstlast _),
-    "q_pivot_events"        -> (Relational.q_pivot_events _),
-    "q_unpivot_part"        -> (Relational.q_unpivot_part _),
-    "q_subquery_scalar"     -> (Relational.q_subquery_scalar _),
-    "q_scalar_string"       -> (Scalars.q_scalar_string _),
-    "q_scalar_date"         -> (Scalars.q_scalar_date _),
-    "q_scalar_math"         -> (Scalars.q_scalar_math _),
-    "q_scalar_json"         -> (Scalars.q_scalar_json _),
-    "q_scalar_array"        -> (Scalars.q_scalar_array _),
-    "q_wordcount"           -> (Text.q_wordcount _),
-    "q_word_per_lang"       -> (Text.q_word_per_lang _),
-    "q_ngram_bigrams"       -> (Text.q_ngram_bigrams _),
-    "q_tfidf"               -> (Text.q_tfidf _),
-    "q_dedup_exact"         -> (Text.q_dedup_exact _),
-    "q_neardup_jaccard"     -> (Text.q_neardup_jaccard _),
-    "q_sentiment_lexicon"   -> (Text.q_sentiment_lexicon _),
-    "q_text_stats"          -> (Text.q_text_stats _),
-    "q_stream_tumbling"     -> (Events.q_stream_tumbling _),
-    "q_stream_sliding"      -> (Events.q_stream_sliding _),
-    "q_stream_session"      -> (Events.q_stream_session _),
-    "q_cosine_topk"         -> (Vectors.q_cosine_topk _),
-    "q_similarity_join_topk" -> (Vectors.q_similarity_join_topk _),
-    "q_knn_classify"        -> (Vectors.q_knn_classify _),
-    "q_linreg_normal"       -> (MLDeterministic.q_linreg_normal _),
-    "q_naivebayes_train"    -> (MLDeterministic.q_naivebayes_train _),
-    "q_naivebayes_predict"  -> (MLDeterministic.q_naivebayes_predict _),
-    "q_kmeans_step"         -> (MLDeterministic.q_kmeans_step _),
-    "q_kmeans_iter2"        -> (MLDeterministic.q_kmeans_iter2 _),
-    "q_apriori_pairs"       -> (MLDeterministic.q_apriori_pairs _),
-    "q_token_count"         -> (TextPipeline.q_token_count _),
-    "q_quality_score"       -> (TextPipeline.q_quality_score _),
-    "q_doc_fingerprint"     -> (TextPipeline.q_doc_fingerprint _),
-    "q_dedup_simhash"       -> (TextPipeline.q_dedup_simhash _),
-    "q_dedup_minhash_lsh"   -> (TextPipeline.q_dedup_minhash_lsh _),
-    "q_langid_ngram"        -> (TextPipeline.q_langid_ngram _),
-    "q_neardup_embedding"   -> (Ann.q_neardup_embedding _),
-    "q_ann_ivf"             -> (Ann.q_ann_ivf _),
-    "q_ann_rplsh"           -> (Ann.q_ann_rplsh _),
-    // round 2: sampling / splits / profiling / LM / frames (SURVEY.md §2.15)
-    "q_sample_hash_split"   -> (Sampling.q_sample_hash_split _),
-    "q_sample_stratified"   -> (Sampling.q_sample_stratified _),
-    "q_sample_weighted"     -> (Sampling.q_sample_weighted _),
-    "q_mixture_plan"        -> (Sampling.q_mixture_plan _),
-    "q_hist_value"          -> (Sampling.q_hist_value _),
-    "q_feature_stats"       -> (Sampling.q_feature_stats _),
-    "q_grouping_sets"       -> (Relational.q_grouping_sets _),
-    "q_window_range_frame"  -> (Windows.q_window_range_frame _),
-    "q_join_range_bin"      -> (Joins.q_join_range_bin _),
-    "q_ngram_lm"            -> (TextPipeline.q_ngram_lm _),
-    "q_dedup_apply"         -> (TextPipeline.q_dedup_apply _),
-    "q_stream_dedup"        -> (Events.q_stream_dedup _),
-    "q_corr_matrix"         -> (MLDeterministic.q_corr_matrix _),
-    // round 2 batch 2: outer join / agg idioms / profiling / LM (§2.16)
-    "q_join_full_outer"     -> (Joins.q_join_full_outer _),
-    "q_agg_argmax"          -> (Relational.q_agg_argmax _),
-    "q_agg_collect"         -> (Relational.q_agg_collect _),
-    "q_window_percentiles"  -> (Windows.q_window_percentiles _),
-    "q_seq_pack"            -> (Sampling.q_seq_pack _),
-    "q_doc_length_buckets"  -> (Sampling.q_doc_length_buckets _),
-    "q_anomaly_zscore"      -> (Sampling.q_anomaly_zscore _),
-    "q_minmax_scale"        -> (Sampling.q_minmax_scale _),
-    "q_contamination"       -> (TextPipeline.q_contamination _),
-    "q_lm_score"            -> (TextPipeline.q_lm_score _),
-    "q_pii_redact"          -> (Scalars.q_pii_redact _),
-    // round 2 batch 3: components / salting / entropy / PMI / mode (§2.17)
-    "q_dedup_components"    -> (Text.q_dedup_components _),
-    "q_join_salted"         -> (Joins.q_join_salted _),
-    "q_token_entropy"       -> (Text.q_token_entropy _),
-    "q_colloc_pmi"          -> (Text.q_colloc_pmi _),
-    "q_agg_mode"            -> (Relational.q_agg_mode _),
-    // round 2 batch 4: funnel / retention / fuzzy / spearman (§2.18)
-    "q_funnel"              -> (Events.q_funnel _),
-    "q_retention"           -> (Events.q_retention _),
-    "q_fuzzy_match"         -> (Relational.q_fuzzy_match _),
-    "q_corr_spearman"       -> (MLDeterministic.q_corr_spearman _),
-    "q_binary_meta"         -> (graft.multimodal.Multimodal.q_binary_meta _),
-    "q_window_ewma"         -> (Windows.q_window_ewma _),
-    "q_chi_square"          -> (MLDeterministic.q_chi_square _),
-    "q_recursive_calendar"  -> (Events.q_recursive_calendar _),
-    "q_join_interval"       -> (Joins.q_join_interval _),
-    "q_agg_weighted"        -> (Relational.q_agg_weighted _),
-    "q_matmul"              -> (GraphMl.q_matmul _),
-    "q_pagerank"            -> (GraphMl.q_pagerank _),
-    "q_tree_split"          -> (GraphMl.q_tree_split _),
-    "q_logreg_step"         -> (GraphMl.q_logreg_step _),
-    "q_inverted_index"      -> (GraphMl.q_inverted_index _),
-    "q_hll_estimate"        -> (Sketches.q_hll_estimate _),
-    "q_cms_topk"            -> (Sketches.q_cms_topk _),
-    "q_bloom_filter"        -> (Sketches.q_bloom_filter _),
-    "q_repetition_filter"   -> (TextPipeline.q_repetition_filter _),
-    // round 3: time-series/product analytics + IR/tokenizer ops (§2.21)
-    "q_ohlc_bars"           -> (Analytics.q_ohlc_bars _),
-    "q_markov_transitions"  -> (Analytics.q_markov_transitions _),
-    "q_ab_ztest"            -> (Analytics.q_ab_ztest _),
-    "q_hist_equidepth"      -> (Analytics.q_hist_equidepth _),
-    "q_triangle_count"      -> (Analytics.q_triangle_count _),
-    "q_cte_q3"              -> (Analytics.q_cte_q3 _),
-    "q_bm25_topk"           -> (Retrieval.q_bm25_topk _),
-    "q_bpe_merge_step"      -> (Retrieval.q_bpe_merge_step _),
-    "q_word_cooccur"        -> (Retrieval.q_word_cooccur _),
-    "q_neardup_containment" -> (Text.q_neardup_containment _),
-    "q_gram_matrix"         -> (Vectors.q_gram_matrix _),
-    "q_ridge_normal"        -> (MLDeterministic.q_ridge_normal _),
-    "q_label_centroids"     -> (Vectors.q_label_centroids _),
-    "q_profile_columns"     -> (Sampling.q_profile_columns _),
-    "q_filter_pipeline"     -> (TextPipeline.q_filter_pipeline _),
-    "q_ts_interpolate"      -> (Events.q_ts_interpolate _),
-    "q_boilerplate_prefix"  -> (Text.q_boilerplate_prefix _),
-    "q_anomaly_mad"         -> (Sampling.q_anomaly_mad _),
-    "q_quantile_sketch"     -> (Sketches.q_quantile_sketch _),
-    "q_attribution_lasttouch" -> (Analytics.q_attribution_lasttouch _),
-    "q_dau_cumulative"      -> (Analytics.q_dau_cumulative _),
-    "q_pq_assign"           -> (Vectors.q_pq_assign _),
-    "q_seasonality_profile" -> (Analytics.q_seasonality_profile _),
-    "q_cohort_ltv"          -> (Analytics.q_cohort_ltv _),
-    "q_recsys_lift"         -> (MLDeterministic.q_recsys_lift _),
-    "q_oov_rate"            -> (TextPipeline.q_oov_rate _),
-    "q_join_asof_nearest"   -> (Joins.q_join_asof_nearest _),
-    "q_kcenter_seeds"       -> (MLDeterministic.q_kcenter_seeds _),
-    "q_cluster_quality"     -> (MLDeterministic.q_cluster_quality _),
-    "q_auc_rank"            -> (MLDeterministic.q_auc_rank _),
-    "q_changepoint_cusum"   -> (Analytics.q_changepoint_cusum _),
-    "q_lang_divergence"     -> (Text.q_lang_divergence _),
-    "q_set_bag_ops"         -> (Relational.q_set_bag_ops _),
-    "q_impute_missing"      -> (Relational.q_impute_missing _),
-    "q_seq_pattern"         -> (Analytics.q_seq_pattern _),
-    "q_wow_change"          -> (Analytics.q_wow_change _),
-    "q_reorder_latency"     -> (Analytics.q_reorder_latency _),
-    // round 2 (cont.): time-series diagnostics / concentration / RFM / graph degree
-    "q_autocorr_daily"      -> (Analytics.q_autocorr_daily _),
-    "q_ma_crossover"        -> (Analytics.q_ma_crossover _),
-    "q_gini_revenue"        -> (Analytics.q_gini_revenue _),
-    "q_rfm_segments"        -> (Analytics.q_rfm_segments _),
-    "q_bipartite_degree"    -> (Analytics.q_bipartite_degree _),
-    "q_zipf_fit"            -> (Text.q_zipf_fit _),
-    "q_vocab_growth"        -> (TextPipeline.q_vocab_growth _),
-    "q_feature_hashing"     -> (TextPipeline.q_feature_hashing _),
-    "q_ams_f2"              -> (Sketches.q_ams_f2 _),
-    "q_kmv_distinct"        -> (Sketches.q_kmv_distinct _),
-    "q_eval_f1"             -> (MLDeterministic.q_eval_f1 _),
-    "q_target_encoding"     -> (MLDeterministic.q_target_encoding _),
-    "q_pca_power"           -> (Vectors.q_pca_power _),
-    "q_join_null_safe"      -> (Joins.q_join_null_safe _),
-    "q_union_by_name"       -> (Relational.q_union_by_name _),
-    "q_session_duration"    -> (Events.q_session_duration _),
-    "q_winsorize"           -> (Sampling.q_winsorize _),
-    "q_freq_triples"        -> (MLDeterministic.q_freq_triples _),
-    "q_streak_islands"      -> (Analytics.q_streak_islands _),
-    "q_skew_kurtosis"       -> (Analytics.q_skew_kurtosis _),
-    "q_grouped_quantiles"   -> (Relational.q_grouped_quantiles _),
-    "q_anova_f"             -> (Analytics.q_anova_f _),
-    "q_mutual_info"         -> (Text.q_mutual_info _),
-    "q_benford"             -> (Analytics.q_benford _),
-    "q_runs_test"           -> (Analytics.q_runs_test _),
-    "q_join_asof_tolerance" -> (Joins.q_join_asof_tolerance _),
-    "q_lifecycle_states"    -> (Analytics.q_lifecycle_states _),
-    "q_survival_hazard"     -> (Analytics.q_survival_hazard _),
-    "q_hapax_ratio"         -> (Text.q_hapax_ratio _),
-    "q_mix_drift"           -> (Analytics.q_mix_drift _),
-    "q_sample_quantile_error" -> (Sampling.q_sample_quantile_error _),
-    "q_rare_collapse"       -> (Sampling.q_rare_collapse _),
-    "q_iqr_outliers"        -> (Sampling.q_iqr_outliers _),
-    "q_ndcg_eval"           -> (Vectors.q_ndcg_eval _),
-    "q_merge_upsert"        -> (Relational.q_merge_upsert _),
-    "q_grouped_regression"  -> (MLDeterministic.q_grouped_regression _),
-    "q_pr_curve"            -> (MLDeterministic.q_pr_curve _),
-    "q_embedding_norm_hist" -> (Vectors.q_embedding_norm_hist _),
-    "q_peak_detection"      -> (Analytics.q_peak_detection _),
-    "q_pareto_coverage"     -> (Analytics.q_pareto_coverage _),
-    "q_tfidf_cosine_docs"   -> (Retrieval.q_tfidf_cosine_docs _),
-    "q_rolling_wau"         -> (Analytics.q_rolling_wau _),
-    "q_seasonal_decompose"  -> (Analytics.q_seasonal_decompose _),
-    "q_label_noise"         -> (Vectors.q_label_noise _),
-    "q_woe_binning"         -> (MLDeterministic.q_woe_binning _),
-    "q_rolling_median"      -> (Analytics.q_rolling_median _),
-    "q_interarrival_hist"   -> (Analytics.q_interarrival_hist _),
-    "q_distinct_rollup"     -> (Relational.q_distinct_rollup _),
-    "q_key_dup_audit"       -> (Relational.q_key_dup_audit _),
-    "q_feature_label_corr"  -> (Vectors.q_feature_label_corr _),
-    "q_corpus_report"       -> (TextPipeline.q_corpus_report _),
-    "q_seq_gap_audit"       -> (Relational.q_seq_gap_audit _),
-    "q_tier_transition"     -> (Relational.q_tier_transition _),
-    "q_stickiness"          -> (Analytics.q_stickiness _),
-    "q_session_conversion"  -> (Analytics.q_session_conversion _),
-    "q_coverage_cold_items" -> (MLDeterministic.q_coverage_cold_items _),
-    "q_dedup_threshold_sweep" -> (Text.q_dedup_threshold_sweep _),
-    "q_minhash_accuracy"    -> (TextPipeline.q_minhash_accuracy _),
-    "q_hhi_concentration"   -> (Analytics.q_hhi_concentration _),
-    "q_user_similarity"     -> (Analytics.q_user_similarity _),
-    "q_feature_store_export" -> (Analytics.q_feature_store_export _),
-    "q_nn_distance_hist"    -> (Vectors.q_nn_distance_hist _),
-    "q_lag_features_export" -> (Windows.q_lag_features_export _),
-    "q_revenue_growth_accounting" -> (Analytics.q_revenue_growth_accounting _),
-    "q_attribution_linear"  -> (Analytics.q_attribution_linear _),
-    "q_bigram_entropy_rate" -> (Text.q_bigram_entropy_rate _),
-    "q_psi_drift"           -> (Analytics.q_psi_drift _),
-    "q_partition_health"    -> (Analytics.q_partition_health _),
-    "q_top_movers"          -> (Analytics.q_top_movers _),
-    "q_int8_quant_error"    -> (Vectors.q_int8_quant_error _),
-    "q_nzv_screen"          -> (Vectors.q_nzv_screen _),
-    // round 2 (cont.): hypothesis tests / effect sizes / scorecard eval (§2.36)
-    "q_ks_test"             -> (Analytics.q_ks_test _),
-    "q_mann_whitney"        -> (Analytics.q_mann_whitney _),
-    "q_cramers_v"           -> (Analytics.q_cramers_v _),
-    "q_cohens_d"            -> (Analytics.q_cohens_d _),
-    "q_decile_lift"         -> (MLDeterministic.q_decile_lift _),
-    "q_map_eval"            -> (Vectors.q_map_eval _),
-    "q_mrr_eval"            -> (Vectors.q_mrr_eval _),
-    "q_knn_regression"      -> (Vectors.q_knn_regression _),
-    "q_calibration_bins"    -> (MLDeterministic.q_calibration_bins _),
-    "q_quantile_normalize"  -> (Sampling.q_quantile_normalize _),
-    "q_drawdown"            -> (Analytics.q_drawdown _),
-    "q_bollinger_breaks"    -> (Analytics.q_bollinger_breaks _),
-    "q_vwap_monthly"        -> (Analytics.q_vwap_monthly _),
-    "q_basket_size_dist"    -> (Analytics.q_basket_size_dist _),
-    "q_price_elasticity"    -> (MLDeterministic.q_price_elasticity _),
-    // round 2 (cont.): corpus QA / session paths / LOCF / ACF / folds (§2.39-2.40)
-    "q_token_length_profile" -> (Text.q_token_length_profile _),
-    "q_dedup_bow"           -> (Text.q_dedup_bow _),
-    "q_ngram_novelty"       -> (Text.q_ngram_novelty _),
-    "q_top_token_coverage"  -> (TextPipeline.q_top_token_coverage _),
-    "q_chars_per_token"     -> (TextPipeline.q_chars_per_token _),
-    "q_session_path_topk"   -> (Events.q_session_path_topk _),
-    "q_locf_fill"           -> (Events.q_locf_fill _),
-    "q_acf_multi_lag"       -> (Analytics.q_acf_multi_lag _),
-    "q_crossval_folds"      -> (Sampling.q_crossval_folds _),
-    "q_hist2d"              -> (Sampling.q_hist2d _),
-    // round 2 (cont.): cluster eval / outliers / SQL-surface / business (§2.41-2.42)
-    "q_silhouette_sample"   -> (Vectors.q_silhouette_sample _),
-    "q_centroid_confusion"  -> (Vectors.q_centroid_confusion _),
-    "q_mahalanobis_diag"    -> (Vectors.q_mahalanobis_diag _),
-    "q_window_cume_dist"    -> (Windows.q_window_cume_dist _),
-    "q_percentile_disc"     -> (Relational.q_percentile_disc _),
-    "q_sla_days"            -> (Analytics.q_sla_days _),
-    "q_revenue_bridge"      -> (Analytics.q_revenue_bridge _),
-    "q_abc_class"           -> (Analytics.q_abc_class _),
-    "q_weekday_lift"        -> (Analytics.q_weekday_lift _),
-    "q_purchase_interval_median" -> (Events.q_purchase_interval_median _),
-    // round 2 (cont.): streaming ops / SCD / graph / data-quality (§2.43-2.44)
-    "q_watermark_lateness"  -> (Events.q_watermark_lateness _),
-    "q_ts_regularity"       -> (Events.q_ts_regularity _),
-    "q_scd_snapshot"        -> (Analytics.q_scd_snapshot _),
-    "q_attribution_firsttouch" -> (Analytics.q_attribution_firsttouch _),
-    "q_new_returning_revenue" -> (Analytics.q_new_returning_revenue _),
-    "q_label_propagation"   -> (GraphMl.q_label_propagation _),
-    "q_bfs_levels"          -> (GraphMl.q_bfs_levels _),
-    "q_blocking_stats"      -> (Relational.q_blocking_stats _),
-    "q_grouping_id"         -> (Relational.q_grouping_id _),
-    "q_fk_integrity"        -> (Relational.q_fk_integrity _),
-    // round 2 (cont.): IR scoring / robust trend / SQL surface (§2.45-2.46)
-    "q_doc_top_tfidf"       -> (Retrieval.q_doc_top_tfidf _),
-    "q_query_likelihood"    -> (Retrieval.q_query_likelihood _),
-    "q_char_trigram_profile" -> (TextPipeline.q_char_trigram_profile _),
-    "q_theil_sen"           -> (Analytics.q_theil_sen _),
-    "q_embedding_center_export" -> (Vectors.q_embedding_center_export _),
-    "q_subsample_stability" -> (Sampling.q_subsample_stability _),
-    "q_subquery_exists"     -> (Relational.q_subquery_exists _),
-    "q_subquery_in"         -> (Relational.q_subquery_in _),
-    "q_window_nth_value"    -> (Windows.q_window_nth_value _),
-    "q_agg_filter_clause"   -> (Relational.q_agg_filter_clause _),
-    // round 2 (cont.): robust aggregates / model selection / testing (§2.47-2.48)
-    "q_geometric_mean"      -> (Relational.q_geometric_mean _),
-    "q_harmonic_mean"       -> (Relational.q_harmonic_mean _),
-    "q_trimmed_mean"        -> (Relational.q_trimmed_mean _),
-    "q_weighted_median"     -> (Relational.q_weighted_median _),
-    "q_stats_merge_audit"   -> (Relational.q_stats_merge_audit _),
-    "q_elbow_inertia"       -> (MLDeterministic.q_elbow_inertia _),
-    "q_learning_curve"      -> (MLDeterministic.q_learning_curve _),
-    "q_permutation_test"    -> (MLDeterministic.q_permutation_test _),
-    "q_anova_posthoc"       -> (MLDeterministic.q_anova_posthoc _),
-    "q_session_entropy"     -> (Events.q_session_entropy _),
-    // round 2 (cont.): planning / curation funnel / association (§2.49-2.50)
-    "q_budget_variance"     -> (Analytics.q_budget_variance _),
-    "q_orders_in_flight"    -> (Analytics.q_orders_in_flight _),
-    "q_event_cooccur_lift"  -> (Analytics.q_event_cooccur_lift _),
-    "q_basket_value_corr"   -> (Analytics.q_basket_value_corr _),
-    "q_pipeline_funnel"     -> (TextPipeline.q_pipeline_funnel _),
-    "q_vocab_jaccard_langs" -> (Text.q_vocab_jaccard_langs _),
-    "q_rising_terms"        -> (Text.q_rising_terms _),
-    "q_burstiness"          -> (Events.q_burstiness _),
-    "q_price_consistency"   -> (Relational.q_price_consistency _),
-    "q_zscore_export"       -> (Sampling.q_zscore_export _),
-    // round 2 (cont.): conversion / rules / backtests / indexes (§2.51-2.52)
-    "q_funnel_latency"      -> (Events.q_funnel_latency _),
-    "q_rule_confidence"     -> (MLDeterministic.q_rule_confidence _),
-    "q_medoid_sample"       -> (MLDeterministic.q_medoid_sample _),
-    "q_dup_transaction_audit" -> (Relational.q_dup_transaction_audit _),
-    "q_forecast_backtest"   -> (Analytics.q_forecast_backtest _),
-    "q_refund_rate_trend"   -> (Analytics.q_refund_rate_trend _),
-    "q_first_ship_latency_hist" -> (Analytics.q_first_ship_latency_hist _),
-    "q_segment_index"       -> (Analytics.q_segment_index _),
-    "q_emb_dim_corr"        -> (Vectors.q_emb_dim_corr _),
-    "q_lang_length_ratio"   -> (TextPipeline.q_lang_length_ratio _),
-    // round 2 (cont.): metric-learning / ANN eval / SQL surface 3 (§2.53-2.54)
-    "q_triplet_mining"      -> (Vectors.q_triplet_mining _),
-    "q_margin_sampling"     -> (Vectors.q_margin_sampling _),
-    "q_knn_weighted"        -> (Vectors.q_knn_weighted _),
-    "q_ann_recall_eval"     -> (Ann.q_ann_recall_eval _),
-    "q_share_matrix"        -> (Relational.q_share_matrix _),
-    "q_rowvalue_in"         -> (Relational.q_rowvalue_in _),
-    "q_lateral_topn"        -> (Relational.q_lateral_topn _),
-    "q_window_rollup_audit" -> (Events.q_window_rollup_audit _),
-    "q_onehot_export"       -> (Sampling.q_onehot_export _),
-    "q_fiscal_calendar"     -> (Analytics.q_fiscal_calendar _),
-    // round 2 (cont.): lexical services / ops monitoring / planning audits (§2.55-2.56)
-    "q_ngram_autocomplete"  -> (TextPipeline.q_ngram_autocomplete _),
-    "q_stopword_discovery"  -> (TextPipeline.q_stopword_discovery _),
-    "q_len_token_corr"      -> (TextPipeline.q_len_token_corr _),
-    "q_spell_candidates"    -> (Text.q_spell_candidates _),
-    "q_error_alert_hours"   -> (Events.q_error_alert_hours _),
-    "q_capacity_p95"        -> (Events.q_capacity_p95 _),
-    "q_data_freshness"      -> (Relational.q_data_freshness _),
-    "q_join_skew_profile"   -> (Relational.q_join_skew_profile _),
-    "q_partition_planning"  -> (Relational.q_partition_planning _),
-    "q_holdout_drift"       -> (Sampling.q_holdout_drift _),
-    // round 2 (cont.): quality audits / allocation / curves (§2.57-2.58)
-    "q_embedding_shape_audit" -> (Vectors.q_embedding_shape_audit _),
-    "q_label_balance"       -> (Vectors.q_label_balance _),
-    "q_sampling_temperature" -> (Sampling.q_sampling_temperature _),
-    "q_qoq_growth"          -> (Analytics.q_qoq_growth _),
-    "q_aging_buckets"       -> (Analytics.q_aging_buckets _),
-    "q_lorenz_curve"        -> (Analytics.q_lorenz_curve _),
-    "q_degenerate_docs"     -> (TextPipeline.q_degenerate_docs _),
-    "q_decimal_integrity"   -> (Relational.q_decimal_integrity _),
-    "q_five_number"         -> (Events.q_five_number _),
-    "q_weekly_retention_curve" -> (Events.q_weekly_retention_curve _),
-    // round 2 (cont.): model eval / ops planning / causal / supply risk (§2.59-2.60)
-    "q_langid_confusion"    -> (TextPipeline.q_langid_confusion _),
-    "q_compaction_candidates" -> (Analytics.q_compaction_candidates _),
-    "q_region_priority_matrix" -> (Analytics.q_region_priority_matrix _),
-    "q_xyz_variability"     -> (Analytics.q_xyz_variability _),
-    "q_did_estimate"        -> (Analytics.q_did_estimate _),
-    "q_like_patterns"       -> (Relational.q_like_patterns _),
-    "q_supplier_concentration" -> (Relational.q_supplier_concentration _),
-    "q_srm_check"           -> (MLDeterministic.q_srm_check _),
-    "q_discount_depth"      -> (MLDeterministic.q_discount_depth _),
-    "q_norm_anova"          -> (MLDeterministic.q_norm_anova _),
-    // round 2 (cont.): pagination / time-weighting / warehouse patterns (§2.61-2.62)
-    "q_keyset_pagination"   -> (Relational.q_keyset_pagination _),
-    "q_group_by_all"        -> (Relational.q_group_by_all _),
-    "q_values_lookup"       -> (Relational.q_values_lookup _),
-    "q_catalog_price_drift" -> (Relational.q_catalog_price_drift _),
-    "q_twap"                -> (Events.q_twap _),
-    "q_demand_intermittency" -> (Analytics.q_demand_intermittency _),
-    "q_accumulating_snapshot" -> (Analytics.q_accumulating_snapshot _),
-    "q_order_fulfillment"   -> (Analytics.q_order_fulfillment _),
-    "q_seasonal_amplitude"  -> (Analytics.q_seasonal_amplitude _),
-    "q_norm_quantiles_by_label" -> (Vectors.q_norm_quantiles_by_label _),
-    // round 2 (cont.): link prediction / agreement / robust tests / set sketches (§2.63-2.64)
-    "q_adamic_adar"          -> (GraphMl.q_adamic_adar _),
-    "q_graph_assortativity"  -> (GraphMl.q_graph_assortativity _),
-    "q_rater_agreement"      -> (MLDeterministic.q_rater_agreement _),
-    "q_kendall_tau"          -> (MLDeterministic.q_kendall_tau _),
-    "q_levene_test"          -> (MLDeterministic.q_levene_test _),
-    "q_attribution_time_decay" -> (Analytics.q_attribution_time_decay _),
-    "q_cross_correlation"    -> (Events.q_cross_correlation _),
-    "q_kmv_setops"           -> (Sketches.q_kmv_setops _),
-    "q_surrogate_hash_audit" -> (Relational.q_surrogate_hash_audit _),
-    "q_business_days"        -> (Relational.q_business_days _),
-    // round 2 (cont.): reranking / frontier / survival / boosting (§2.65-2.66)
-    "q_mmr_rerank"           -> (Vectors.q_mmr_rerank _),
-    "q_skyline"              -> (Relational.q_skyline _),
-    "q_knapsack_greedy"      -> (Relational.q_knapsack_greedy _),
-    "q_price_endings"        -> (Relational.q_price_endings _),
-    "q_kaplan_meier"         -> (Analytics.q_kaplan_meier _),
-    "q_abandonment_rate"     -> (Events.q_abandonment_rate _),
-    "q_kcore_peel"           -> (GraphMl.q_kcore_peel _),
-    "q_partial_correlation"  -> (MLDeterministic.q_partial_correlation _),
-    "q_boosting_stump"       -> (MLDeterministic.q_boosting_stump _),
-    "q_chi2_residuals"       -> (MLDeterministic.q_chi2_residuals _),
-    // round 2 (cont.): experimentation / causal / Bayesian / weighted graph (§2.67-2.68)
-    "q_cuped"                -> (MLDeterministic.q_cuped _),
-    "q_iv_estimate"          -> (MLDeterministic.q_iv_estimate _),
-    "q_sprt_boundary"        -> (MLDeterministic.q_sprt_boundary _),
-    "q_wilson_ci"            -> (MLDeterministic.q_wilson_ci _),
-    "q_beta_posterior"       -> (MLDeterministic.q_beta_posterior _),
-    "q_post_stratification"  -> (Sampling.q_post_stratification _),
-    "q_sssp_weighted"        -> (GraphMl.q_sssp_weighted _),
-    "q_position_bias"        -> (Events.q_position_bias _),
-    "q_user_sequence_similarity" -> (Events.q_user_sequence_similarity _),
-    "q_eoq_policy"           -> (Analytics.q_eoq_policy _),
-    // round 2 (cont.): Shapley / wavelets / outlier models / text graphs (§2.69-2.70)
-    "q_shapley_attribution"  -> (Analytics.q_shapley_attribution _),
-    "q_pvm_decomposition"    -> (Analytics.q_pvm_decomposition _),
-    "q_graph_modularity"     -> (GraphMl.q_graph_modularity _),
-    "q_knn_hubness"          -> (Vectors.q_knn_hubness _),
-    "q_esd_outliers"         -> (MLDeterministic.q_esd_outliers _),
-    "q_hill_tail_index"      -> (MLDeterministic.q_hill_tail_index _),
-    "q_ecod_outlier"         -> (MLDeterministic.q_ecod_outlier _),
-    "q_sax_symbolize"        -> (Events.q_sax_symbolize _),
-    "q_haar_energy"          -> (Events.q_haar_energy _),
-    "q_textrank_keywords"    -> (TextPipeline.q_textrank_keywords _),
-    // round 2 (cont.): layout / runtime-filter / CBO / linkage infra (§2.71-2.72)
-    "q_consistent_hash_rebalance" -> (Relational.q_consistent_hash_rebalance _),
-    "q_zorder_locality"      -> (Relational.q_zorder_locality _),
-    "q_cardinality_estimation" -> (Relational.q_cardinality_estimation _),
-    "q_bloom_join_prefilter" -> (Sketches.q_bloom_join_prefilter _),
-    "q_hits_scores"          -> (GraphMl.q_hits_scores _),
-    "q_cdc_chunks"           -> (TextPipeline.q_cdc_chunks _),
-    "q_state_retention_sweep" -> (Events.q_state_retention_sweep _),
-    "q_qq_quantiles"         -> (Events.q_qq_quantiles _),
-    "q_mutual_nn"            -> (Vectors.q_mutual_nn _),
-    "q_leverage_points"      -> (MLDeterministic.q_leverage_points _),
-    // round 2 (cont.): density outliers / SPC / KN smoothing / OR (§2.73-2.74)
-    "q_lof_outliers"         -> (Vectors.q_lof_outliers _),
-    "q_dbscan_labels"        -> (Vectors.q_dbscan_labels _),
-    "q_interval_merge"       -> (Analytics.q_interval_merge _),
-    "q_newsvendor"           -> (Analytics.q_newsvendor _),
-    "q_control_chart"        -> (Events.q_control_chart _),
-    "q_ols_two_features"     -> (MLDeterministic.q_ols_two_features _),
-    "q_gaussian_nb"          -> (MLDeterministic.q_gaussian_nb _),
-    "q_simpson_paradox"      -> (MLDeterministic.q_simpson_paradox _),
-    "q_kneser_ney"           -> (Text.q_kneser_ney _),
-    "q_rake_keyphrases"      -> (TextPipeline.q_rake_keyphrases _),
-    // round 2 (cont.): empirical Bayes / causal / spectral / OPE (§2.75-2.76)
-    "q_qte_deciles"          -> (MLDeterministic.q_qte_deciles _),
-    "q_james_stein"          -> (MLDeterministic.q_james_stein _),
-    "q_mediation"            -> (MLDeterministic.q_mediation _),
-    "q_power_analysis"       -> (MLDeterministic.q_power_analysis _),
-    "q_conformal_interval"   -> (MLDeterministic.q_conformal_interval _),
-    "q_ipf_raking"           -> (MLDeterministic.q_ipf_raking _),
-    "q_offpolicy_replay"     -> (MLDeterministic.q_offpolicy_replay _),
-    "q_periodogram"          -> (Events.q_periodogram _),
-    "q_matrix_profile"       -> (Events.q_matrix_profile _),
-    "q_single_linkage_step"  -> (Vectors.q_single_linkage_step _),
-    // round 2 (cont.): fairness / drift / ranking agreement / AutoML / stylometry (§2.77-2.78)
-    "q_fairness_audit"       -> (MLDeterministic.q_fairness_audit _),
-    "q_emd_drift"            -> (MLDeterministic.q_emd_drift _),
-    "q_rank_biased_overlap"  -> (MLDeterministic.q_rank_biased_overlap _),
-    "q_successive_halving"   -> (MLDeterministic.q_successive_halving _),
-    "q_pacf"                 -> (MLDeterministic.q_pacf _),
-    "q_burrows_delta"        -> (Text.q_burrows_delta _),
-    "q_df_pruning"           -> (Text.q_df_pruning _),
-    "q_largest_remainder"    -> (Relational.q_largest_remainder _),
-    "q_negative_sampling"    -> (TextPipeline.q_negative_sampling _),
-    "q_minibatch_balance"    -> (TextPipeline.q_minibatch_balance _),
-    // round 2 (cont.): bandits / multiple testing / concordance / lineage (§2.79-2.80)
-    "q_ucb_allocation"       -> (MLDeterministic.q_ucb_allocation _),
-    "q_holm_correction"      -> (MLDeterministic.q_holm_correction _),
-    "q_decision_curve"       -> (MLDeterministic.q_decision_curve _),
-    "q_tail_dependence"      -> (MLDeterministic.q_tail_dependence _),
-    "q_granger_test"         -> (MLDeterministic.q_granger_test _),
-    "q_kendall_w"            -> (MLDeterministic.q_kendall_w _),
-    "q_jackknife_se"         -> (MLDeterministic.q_jackknife_se _),
-    "q_zone_map_pruning"     -> (Relational.q_zone_map_pruning _),
-    "q_etl_reconciliation"   -> (Relational.q_etl_reconciliation _),
-    "q_golden_record"        -> (TextPipeline.q_golden_record _),
-    // round 2 (cont.): drift detectors / population estimation / queueing / EVT (§2.81-2.82)
-    "q_page_hinkley"         -> (MLDeterministic.q_page_hinkley _),
-    "q_icc"                  -> (MLDeterministic.q_icc _),
-    "q_forecast_combo"       -> (Analytics.q_forecast_combo _),
-    "q_capture_recapture"    -> (Analytics.q_capture_recapture _),
-    "q_stationary_tiers"     -> (Analytics.q_stationary_tiers _),
-    "q_good_turing"          -> (Text.q_good_turing _),
-    "q_chao1_estimate"       -> (Text.q_chao1_estimate _),
-    "q_gumbel_maxima"        -> (Events.q_gumbel_maxima _),
-    "q_mm1_queue"            -> (Events.q_mm1_queue _),
-    "q_session_gap_sweep"    -> (Events.q_session_gap_sweep _),
-    // round 2 (cont.): quantile regression / copulas / optimizer / index numbers (§2.83-2.84)
-    "q_quantile_regression_grid" -> (MLDeterministic.q_quantile_regression_grid _),
-    "q_empirical_copula"     -> (MLDeterministic.q_empirical_copula _),
-    "q_binary_segmentation"  -> (MLDeterministic.q_binary_segmentation _),
-    "q_platt_step"           -> (MLDeterministic.q_platt_step _),
-    "q_alpha_spending"       -> (MLDeterministic.q_alpha_spending _),
-    "q_weiszfeld_step"       -> (MLDeterministic.q_weiszfeld_step _),
-    "q_rolling_beta"         -> (Events.q_rolling_beta _),
-    "q_risk_pooling"         -> (Analytics.q_risk_pooling _),
-    "q_price_indices"        -> (Analytics.q_price_indices _),
-    "q_join_order_choice"    -> (Relational.q_join_order_choice _),
-    // round 2 (cont.): privacy / uplift / rank aggregation / robustness (§2.85-2.86)
-    "q_lasso_step"           -> (MLDeterministic.q_lasso_step _),
-    "q_uplift_quartiles"     -> (MLDeterministic.q_uplift_quartiles _),
-    "q_exposure_fairness"    -> (MLDeterministic.q_exposure_fairness _),
-    "q_enrichment_test"      -> (MLDeterministic.q_enrichment_test _),
-    "q_borda_count"          -> (MLDeterministic.q_borda_count _),
-    "q_k_anonymity"          -> (Relational.q_k_anonymity _),
-    "q_bloom_sizing"         -> (Sketches.q_bloom_sizing _),
-    "q_design_effect"        -> (Sampling.q_design_effect _),
-    "q_graph_robustness"     -> (GraphMl.q_graph_robustness _),
-    "q_min_variance_portfolio" -> (Analytics.q_min_variance_portfolio _),
-    // round 2 (cont.): discretization / survival summary / clustering eval / data valuation (§2.87-2.88)
-    "q_chimerge_step"        -> (MLDeterministic.q_chimerge_step _),
-    "q_sign_test"            -> (MLDeterministic.q_sign_test _),
-    "q_rmst"                 -> (Analytics.q_rmst _),
-    "q_mix_shift_decomposition" -> (Analytics.q_mix_shift_decomposition _),
-    "q_bcubed_eval"          -> (TextPipeline.q_bcubed_eval _),
-    "q_source_valuation"     -> (TextPipeline.q_source_valuation _),
-    "q_negbin_fit"           -> (Text.q_negbin_fit _),
-    "q_intrinsic_dimension"  -> (Vectors.q_intrinsic_dimension _),
-    "q_neyman_allocation"    -> (Sampling.q_neyman_allocation _),
-    // round 2 (cont.): econometric diagnostics / forecast quality / FDR (§2.89-2.90)
-    "q_hurst_exponent"       -> (Events.q_hurst_exponent _),
-    "q_adstock_decay"        -> (Events.q_adstock_decay _),
-    "q_variance_ratio"       -> (Analytics.q_variance_ratio _),
-    "q_ljung_box"            -> (Analytics.q_ljung_box _),
-    "q_durbin_watson"        -> (Analytics.q_durbin_watson _),
-    "q_theil_index"          -> (Analytics.q_theil_index _),
-    "q_process_capability"   -> (Analytics.q_process_capability _),
-    "q_cronbach_alpha"       -> (MLDeterministic.q_cronbach_alpha _),
-    "q_brier_decomposition"  -> (MLDeterministic.q_brier_decomposition _),
-    "q_benjamini_hochberg"   -> (MLDeterministic.q_benjamini_hochberg _),
-    // round 2 (cont.): classical tests / finance indicators (§2.91-2.92)
-    "q_jarque_bera"          -> (Analytics.q_jarque_bera _),
-    "q_breusch_pagan"        -> (Analytics.q_breusch_pagan _),
-    "q_chow_test"            -> (Analytics.q_chow_test _),
-    "q_kruskal_wallis"       -> (Analytics.q_kruskal_wallis _),
-    "q_friedman_test"        -> (Analytics.q_friedman_test _),
-    "q_wilcoxon_signed_rank" -> (Analytics.q_wilcoxon_signed_rank _),
-    "q_odds_ratio"           -> (Analytics.q_odds_ratio _),
-    "q_rsi_indicator"        -> (Analytics.q_rsi_indicator _),
-    "q_var_cvar"             -> (Analytics.q_var_cvar _),
-    "q_mcnemar"              -> (MLDeterministic.q_mcnemar _),
-    // round 2 (cont.): variance tests / cointegration / inequality / finance (§2.93-2.94)
-    "q_bartlett_test"        -> (Analytics.q_bartlett_test _),
-    "q_engle_granger"        -> (Analytics.q_engle_granger _),
-    "q_goodman_kruskal_gamma" -> (Analytics.q_goodman_kruskal_gamma _),
-    "q_atkinson_index"       -> (Analytics.q_atkinson_index _),
-    "q_sharpe_sortino"       -> (Analytics.q_sharpe_sortino _),
-    "q_kelly_criterion"      -> (Analytics.q_kelly_criterion _),
-    "q_mann_kendall"         -> (Analytics.q_mann_kendall _),
-    "q_ses_forecast"         -> (Analytics.q_ses_forecast _),
-    "q_gamma_mom"            -> (Analytics.q_gamma_mom _),
-    "q_cochran_q"            -> (MLDeterministic.q_cochran_q _),
-    // round 2 (cont.): nonparametric tests / changepoints / text scores (§2.95-2.96)
-    "q_moods_median_test"    -> (Analytics.q_moods_median_test _),
-    "q_mood_dispersion"      -> (Analytics.q_mood_dispersion _),
-    "q_hodges_lehmann"       -> (Analytics.q_hodges_lehmann _),
-    "q_pettitt_test"         -> (Analytics.q_pettitt_test _),
-    "q_bowley_skewness"      -> (Analytics.q_bowley_skewness _),
-    "q_dunn_posthoc"         -> (Analytics.q_dunn_posthoc _),
-    "q_readability_score"    -> (Analytics.q_readability_score _),
-    "q_permutation_entropy"  -> (Analytics.q_permutation_entropy _),
-    "q_sample_entropy"       -> (Analytics.q_sample_entropy _),
-    "q_bounce_rate"          -> (Events.q_bounce_rate _),
-    // round 2 (cont.): series diagnostics / graph locality / richness / eval (§2.97-2.98)
-    "q_turning_points"       -> (Analytics.q_turning_points _),
-    "q_arch_lm"              -> (Analytics.q_arch_lm _),
-    "q_higuchi_fd"           -> (Analytics.q_higuchi_fd _),
-    "q_local_clustering"     -> (Analytics.q_local_clustering _),
-    "q_repeat_purchase_curve" -> (Analytics.q_repeat_purchase_curve _),
-    "q_yule_k"               -> (Text.q_yule_k _),
-    "q_simpson_diversity"    -> (Text.q_simpson_diversity _),
-    "q_mcc_youden"           -> (MLDeterministic.q_mcc_youden _),
-    "q_fleiss_kappa"         -> (MLDeterministic.q_fleiss_kappa _),
-    "q_hash_bootstrap"       -> (Sampling.q_hash_bootstrap _),
-    // round 2 (cont.): quality loss / queueing / inequality / graph structure / risk (§2.99-2.100)
-    "q_taguchi_loss"         -> (Analytics.q_taguchi_loss _),
-    "q_littles_law"          -> (Analytics.q_littles_law _),
-    "q_erlang_c"             -> (Analytics.q_erlang_c _),
-    "q_lorenz_asymmetry"     -> (Analytics.q_lorenz_asymmetry _),
-    "q_palma_ratio"          -> (Analytics.q_palma_ratio _),
-    "q_rich_club"            -> (Analytics.q_rich_club _),
-    "q_degree_powerlaw"      -> (Analytics.q_degree_powerlaw _),
-    "q_welch_ttest"          -> (Analytics.q_welch_ttest _),
-    "q_poisson_dispersion"   -> (Analytics.q_poisson_dispersion _),
-    "q_kupiec_pof"           -> (Analytics.q_kupiec_pof _),
-    // round 2 (cont.): effect sizes / ordered alternatives / method comparison (§2.101-2.102)
-    "q_g_test"               -> (Analytics.q_g_test _),
-    "q_cohen_h"              -> (Analytics.q_cohen_h _),
-    "q_cliff_delta"          -> (Analytics.q_cliff_delta _),
-    "q_eta_squared"          -> (Analytics.q_eta_squared _),
-    "q_page_trend"           -> (Analytics.q_page_trend _),
-    "q_jonckheere"           -> (Analytics.q_jonckheere _),
-    "q_deming_regression"    -> (Analytics.q_deming_regression _),
-    "q_lin_ccc"              -> (Analytics.q_lin_ccc _),
-    "q_bland_altman"         -> (Analytics.q_bland_altman _),
-    "q_storey_pi0"           -> (MLDeterministic.q_storey_pi0 _),
-    // round 2 (cont.): robust fitting / causal / survival / graph walks (§2.103-2.104)
-    "q_ransac_trend"         -> (Analytics.q_ransac_trend _),
-    "q_katz_centrality"      -> (Analytics.q_katz_centrality _),
-    "q_regression_discontinuity" -> (Analytics.q_regression_discontinuity _),
-    "q_logrank_test"         -> (Analytics.q_logrank_test _),
-    "q_nelson_aalen"         -> (Analytics.q_nelson_aalen _),
-    "q_yuen_ttest"           -> (Analytics.q_yuen_ttest _),
-    "q_abc_xyz_matrix"       -> (Analytics.q_abc_xyz_matrix _),
-    "q_gmm_em_step"          -> (MLDeterministic.q_gmm_em_step _),
-    "q_propensity_balance"   -> (MLDeterministic.q_propensity_balance _),
-    "q_benjamini_yekutieli"  -> (MLDeterministic.q_benjamini_yekutieli _),
-    // round 2 (cont.): seeded centralities / text scores / forecast evaluation (§2.105-2.106)
-    "q_harmonic_centrality"  -> (Analytics.q_harmonic_centrality _),
-    "q_burt_constraint"      -> (Analytics.q_burt_constraint _),
-    "q_cross_elasticity"     -> (Analytics.q_cross_elasticity _),
-    "q_safety_stock"         -> (Analytics.q_safety_stock _),
-    "q_theil_u2"             -> (Analytics.q_theil_u2 _),
-    "q_diebold_mariano"      -> (Analytics.q_diebold_mariano _),
-    "q_mincer_zarnowitz"     -> (Analytics.q_mincer_zarnowitz _),
-    "q_directional_accuracy" -> (Analytics.q_directional_accuracy _),
-    "q_lexical_density"      -> (Text.q_lexical_density _),
-    "q_mean_token_logfreq"   -> (Text.q_mean_token_logfreq _),
-    // round 2 (cont.): SPC charts / retail structure / parametric fits / queueing (§2.107-2.108)
-    "q_xmr_chart"            -> (Analytics.q_xmr_chart _),
-    "q_p_chart"              -> (Analytics.q_p_chart _),
-    "q_brand_overlap"        -> (Analytics.q_brand_overlap _),
-    "q_share_of_wallet"      -> (Analytics.q_share_of_wallet _),
-    "q_weibull_fit"          -> (Analytics.q_weibull_fit _),
-    "q_lognormal_fit"        -> (Analytics.q_lognormal_fit _),
-    "q_markov_entropy_rate"  -> (Analytics.q_markov_entropy_rate _),
-    "q_mg1_queue"            -> (Analytics.q_mg1_queue _),
-    "q_h_index"              -> (Analytics.q_h_index _),
-    "q_clumpiness"           -> (Analytics.q_clumpiness _),
-    // round 2 (cont.): extreme values / circular / ordinal / diagnostics (§2.109-2.110)
-    "q_gpd_pot"              -> (Analytics.q_gpd_pot _),
-    "q_extremal_index"       -> (Analytics.q_extremal_index _),
-    "q_records_test"         -> (Analytics.q_records_test _),
-    "q_circular_stats"       -> (Analytics.q_circular_stats _),
-    "q_somers_d"             -> (Analytics.q_somers_d _),
-    "q_dixon_q"              -> (Analytics.q_dixon_q _),
-    "q_cooks_distance"       -> (Analytics.q_cooks_distance _),
-    "q_uncertainty_coefficient" -> (Analytics.q_uncertainty_coefficient _),
-    "q_median_ci"            -> (Analytics.q_median_ci _),
-    "q_tetrachoric"          -> (MLDeterministic.q_tetrachoric _),
-    // round 2 (cont.): stratified epi / paired-categorical / segregation / spatial (§2.111-2.112)
-    "q_cmh_test"             -> (Analytics.q_cmh_test _),
-    "q_mantel_haenszel"      -> (Analytics.q_mantel_haenszel _),
-    "q_direct_standardization" -> (Analytics.q_direct_standardization _),
-    "q_bowker_symmetry"      -> (Analytics.q_bowker_symmetry _),
-    "q_shorrocks_mobility"   -> (Analytics.q_shorrocks_mobility _),
-    "q_concentration_index"  -> (Analytics.q_concentration_index _),
-    "q_dissimilarity_index"  -> (Analytics.q_dissimilarity_index _),
-    "q_location_quotient"    -> (Analytics.q_location_quotient _),
-    "q_morans_i"             -> (Analytics.q_morans_i _),
-    "q_rate_ratio_ci"        -> (Analytics.q_rate_ratio_ci _),
-    // round 2 (cont.): meta-analytic ORs / shrinkage / trend tests / HAC (§2.113-2.114)
-    "q_breslow_day"          -> (Analytics.q_breslow_day _),
-    "q_peto_odds_ratio"      -> (Analytics.q_peto_odds_ratio _),
-    "q_smr_indirect"         -> (Analytics.q_smr_indirect _),
-    "q_funnel_plot"          -> (Analytics.q_funnel_plot _),
-    "q_eb_shrinkage"         -> (Analytics.q_eb_shrinkage _),
-    "q_buhlmann_credibility" -> (Analytics.q_buhlmann_credibility _),
-    "q_cochran_armitage"     -> (Analytics.q_cochran_armitage _),
-    "q_piecewise_trend"      -> (Analytics.q_piecewise_trend _),
-    "q_newey_west"           -> (Analytics.q_newey_west _),
-    "q_tost_equivalence"     -> (Analytics.q_tost_equivalence _),
-    // round 2 (cont.): modern two-sample / dependence / growth econ / robust scale (§2.115-2.116)
-    "q_welch_anova"          -> (Analytics.q_welch_anova _),
-    "q_energy_distance"      -> (Analytics.q_energy_distance _),
-    "q_mmd_rbf"              -> (Analytics.q_mmd_rbf _),
-    "q_distance_correlation" -> (Analytics.q_distance_correlation _),
-    "q_beta_convergence"     -> (Analytics.q_beta_convergence _),
-    "q_theil_between_within" -> (Analytics.q_theil_between_within _),
-    "q_ancova_adjust"        -> (Analytics.q_ancova_adjust _),
-    "q_moment_zscores"       -> (Analytics.q_moment_zscores _),
-    "q_biweight_midvariance" -> (Analytics.q_biweight_midvariance _),
-    "q_cvm_uniform"          -> (Analytics.q_cvm_uniform _),
-    // round 2 (cont.): p-pooling / contrasts / eval metrics / embedding geometry (§2.117-2.118)
-    "q_fisher_combined"      -> (MLDeterministic.q_fisher_combined _),
-    "q_log_loss"             -> (MLDeterministic.q_log_loss _),
-    "q_score_ks"             -> (MLDeterministic.q_score_ks _),
-    "q_hartley_fmax"         -> (Analytics.q_hartley_fmax _),
-    "q_scheffe_contrast"     -> (Analytics.q_scheffe_contrast _),
-    "q_polynomial_contrasts" -> (Analytics.q_polynomial_contrasts _),
-    "q_survival_cindex"      -> (Analytics.q_survival_cindex _),
-    "q_embedding_eigen2"     -> (Vectors.q_embedding_eigen2 _),
-    "q_embedding_isotropy"   -> (Vectors.q_embedding_isotropy _),
-    "q_hourly_profile"       -> (Events.q_hourly_profile _),
-    // round 2 (cont.): MCDM / forecasting baselines / algorithmic classics / dependence (§2.119-2.120)
-    "q_topsis_ranking"       -> (Analytics.q_topsis_ranking _),
-    "q_theta_forecast"       -> (Analytics.q_theta_forecast _),
-    "q_tracking_signal"      -> (Analytics.q_tracking_signal _),
-    "q_max_subarray"         -> (Analytics.q_max_subarray _),
-    "q_simrank_step"         -> (Analytics.q_simrank_step _),
-    "q_gray_relational"      -> (Analytics.q_gray_relational _),
-    "q_median_polish"        -> (Analytics.q_median_polish _),
-    "q_seasonal_strength"    -> (Analytics.q_seasonal_strength _),
-    "q_blomqvist_beta"       -> (Analytics.q_blomqvist_beta _),
-    "q_hoeffding_d"          -> (Analytics.q_hoeffding_d _),
-    // round 2 (cont.): resampling CIs / bounds / richness / regression diagnostics (§2.121-2.122)
-    "q_bootstrap_ci"         -> (Sampling.q_bootstrap_ci _),
-    "q_tail_bounds"          -> (Analytics.q_tail_bounds _),
-    "q_entropy_corrected"    -> (Text.q_entropy_corrected _),
-    "q_ace_richness"         -> (Text.q_ace_richness _),
-    "q_clt_diagnostic"       -> (Analytics.q_clt_diagnostic _),
-    "q_zip_fit"              -> (Analytics.q_zip_fit _),
-    "q_dfbetas"              -> (Analytics.q_dfbetas _),
-    "q_press_statistic"      -> (Analytics.q_press_statistic _),
-    "q_rank_size_rule"       -> (Analytics.q_rank_size_rule _),
-    "q_decile_ratio"         -> (Analytics.q_decile_ratio _),
-    // round 2 (final): categorical variation / diversity endpoints / shape screens (§2.123)
-    "q_iqv"                  -> (Analytics.q_iqv _),
-    "q_pearson_skew2"        -> (Analytics.q_pearson_skew2 _),
-    "q_pielou_evenness"      -> (Text.q_pielou_evenness _),
-    // round 4: corpus structure / winnowing / Viterbi / engagement (§2.124)
-    "q_dedup_crossshard"     -> (Text.q_dedup_crossshard _),
-    "q_log_odds_terms"       -> (Text.q_log_odds_terms _),
-    "q_char_entropy"         -> (Text.q_char_entropy _),
-    "q_corpus_novelty"       -> (TextPipeline.q_corpus_novelty _),
-    "q_winnowing_fingerprint" -> (TextPipeline.q_winnowing_fingerprint _),
-    "q_viterbi_path"         -> (MLDeterministic.q_viterbi_path _),
-    "q_partition_digest"     -> (Analytics.q_partition_digest _),
-    // round 5: distribution distances / divergences (§2.125)
-    "q_jensen_shannon"       -> (Text.q_jensen_shannon _),
-    "q_renyi_spectrum"       -> (Text.q_renyi_spectrum _),
-    "q_hellinger_distance"   -> (Analytics.q_hellinger_distance _),
-    "q_total_variation"      -> (Analytics.q_total_variation _),
-    "q_cvm_twosample"        -> (Analytics.q_cvm_twosample _),
-    "q_bhattacharyya"        -> (Vectors.q_bhattacharyya _),
-    // round 5: hypothesis-test round-out (§2.126)
-    "q_grubbs_test"          -> (Analytics.q_grubbs_test _),
-    "q_brown_forsythe"       -> (Analytics.q_brown_forsythe _),
-    "q_cochran_c"            -> (Analytics.q_cochran_c _),
-    "q_ansari_bradley"       -> (Analytics.q_ansari_bradley _),
-    "q_bartels_rank"         -> (Analytics.q_bartels_rank _),
-    "q_cuzick_trend"         -> (Analytics.q_cuzick_trend _),
-    // round 5: forecast metrics / ops analytics (§2.127)
-    "q_mase_smape"           -> (Analytics.q_mase_smape _),
-    "q_croston_forecast"     -> (Analytics.q_croston_forecast _),
-    "q_brown_double_smoothing" -> (Analytics.q_brown_double_smoothing _),
-    "q_spectral_entropy"     -> (Analytics.q_spectral_entropy _),
-    "q_kpss_stat"            -> (Analytics.q_kpss_stat _),
-    "q_bullwhip_effect"      -> (Analytics.q_bullwhip_effect _),
-    "q_gini_mean_difference" -> (Analytics.q_gini_mean_difference _),
-    "q_c_chart"              -> (Analytics.q_c_chart _),
-    // round 5: text-metric / ML round-out (§2.128)
-    "q_rouge_recall"         -> (TextPipeline.q_rouge_recall _),
-    "q_bleu_pairs"           -> (TextPipeline.q_bleu_pairs _),
-    "q_heaps_law_fit"        -> (TextPipeline.q_heaps_law_fit _),
-    "q_structure_dedup"      -> (TextPipeline.q_structure_dedup _),
-    "q_chunk_dedup"          -> (TextPipeline.q_chunk_dedup _),
-    "q_hmm_forward"          -> (MLDeterministic.q_hmm_forward _),
-    "q_perceptron_step"      -> (Vectors.q_perceptron_step _),
-    "q_kernel_regression"    -> (Analytics.q_kernel_regression _),
-    "q_huber_irls_step"      -> (Analytics.q_huber_irls_step _),
-    "q_reciprocity"          -> (Analytics.q_reciprocity _),
-    // round 4: quality-filter battery / semantic dedup (§2.129)
-    "q_gopher_quality"       -> (TextPipeline.q_gopher_quality _),
-    "q_ttr_filter"           -> (TextPipeline.q_ttr_filter _),
-    "q_dup_chunk_removal"    -> (TextPipeline.q_dup_chunk_removal _),
-    "q_semantic_dedup"       -> (Ann.q_semantic_dedup _),
-    // round 4: spatial association round-out (§2.130)
-    "q_getis_ord_g"          -> (Analytics.q_getis_ord_g _),
-    "q_join_count_stat"      -> (Analytics.q_join_count_stat _),
-    "q_local_moran"          -> (Analytics.q_local_moran _),
-    // round 4: goodness-of-fit / sequence tests (§2.131)
-    "q_anderson_darling"     -> (Analytics.q_anderson_darling _),
-    "q_cox_stuart"           -> (Analytics.q_cox_stuart _),
-    "q_wald_wolfowitz"       -> (Analytics.q_wald_wolfowitz _),
-    // round 4: blocked/seasonal rank tests, reliability & tariff curves (§2.132)
-    "q_seasonal_mann_kendall" -> (Analytics.q_seasonal_mann_kendall _),
-    "q_quade_test"           -> (Analytics.q_quade_test _),
-    "q_conover_squared_ranks" -> (Analytics.q_conover_squared_ranks _),
-    "q_erlang_b_loss"        -> (Analytics.q_erlang_b_loss _),
-    "q_crow_amsaa"           -> (Analytics.q_crow_amsaa _),
-    "q_suits_index"          -> (Analytics.q_suits_index _),
-    // round 4: corpus dispersion/keyness, survival family, SPC memory (§2.133)
-    "q_gries_dp"             -> (TextPipeline.q_gries_dp _),
-    "q_keyness_ll"           -> (TextPipeline.q_keyness_ll _),
-    "q_weighted_logrank"     -> (Analytics.q_weighted_logrank _),
-    "q_kakwani_index"        -> (Analytics.q_kakwani_index _),
-    "q_ewma_chart"           -> (Analytics.q_ewma_chart _),
-    "q_graph_efficiency"     -> (GraphMl.q_graph_efficiency _),
-    // round 4: clustering validation (external + internal) (§2.134)
-    "q_adjusted_rand"        -> (Vectors.q_adjusted_rand _),
-    "q_nmi_clusters"         -> (Vectors.q_nmi_clusters _),
-    "q_davies_bouldin"       -> (Vectors.q_davies_bouldin _),
-    "q_calinski_harabasz"    -> (Vectors.q_calinski_harabasz _),
-    "q_kmedoids_step"        -> (Vectors.q_kmedoids_step _),
-    "q_cohen_kappa"          -> (TextPipeline.q_cohen_kappa _),
-    // round 4: location-scale/normality/randomness tests + PRE/spatial (§2.135)
-    "q_cucconi_test"         -> (Analytics.q_cucconi_test _),
-    "q_gk_lambda"            -> (Analytics.q_gk_lambda _),
-    "q_dagostino_k2"         -> (Analytics.q_dagostino_k2 _),
-    "q_runs_updown"          -> (Analytics.q_runs_updown _),
-    "q_tukey_hsd"            -> (Analytics.q_tukey_hsd _),
-    "q_geary_c"              -> (Analytics.q_geary_c _),
-    "q_tsallis_entropy"      -> (TextPipeline.q_tsallis_entropy _),
-    // round 4: boosting/smoothing/OEE/fuzzy-dedup/link prediction (§2.136)
-    "q_adaboost_round"       -> (MLDeterministic.q_adaboost_round _),
-    "q_oee_daily"            -> (Analytics.q_oee_daily _),
-    "q_edit_distance_dedup"  -> (TextPipeline.q_edit_distance_dedup _),
-    "q_link_prediction"      -> (GraphMl.q_link_prediction _),
-    // round 4: reliability coefficients, calibration GoF, readability battery (§2.137)
-    "q_kr20"                 -> (TextPipeline.q_kr20 _),
-    "q_split_half"           -> (TextPipeline.q_split_half _),
-    "q_item_total"           -> (TextPipeline.q_item_total _),
-    "q_readability_battery"  -> (TextPipeline.q_readability_battery _),
-    "q_hosmer_lemeshow"      -> (MLDeterministic.q_hosmer_lemeshow _),
-    // round 4: many-to-one/unequal-variance/rank-effect tests + corpus curation (§2.138)
-    "q_dunnett_control"      -> (Analytics.q_dunnett_control _),
-    "q_games_howell"         -> (Analytics.q_games_howell _),
-    "q_brunner_munzel"       -> (Analytics.q_brunner_munzel _),
-    "q_source_overlap"       -> (TextPipeline.q_source_overlap _),
-    "q_length_filter_sweep"  -> (TextPipeline.q_length_filter_sweep _),
-    // round 4: training-shard planning (packing/masking/vocab/balance) (§2.139)
-    "q_packing_efficiency"   -> (TextPipeline.q_packing_efficiency _),
-    "q_span_corruption_plan" -> (TextPipeline.q_span_corruption_plan _),
-    "q_vocab_prune_sweep"    -> (TextPipeline.q_vocab_prune_sweep _),
-    "q_shard_balance"        -> (TextPipeline.q_shard_balance _),
-    // round 4: absorption funnel, self-excitation, k-truss peel (§2.140)
-    "q_markov_absorption"    -> (Analytics.q_markov_absorption _),
-    "q_hawkes_branching"     -> (Analytics.q_hawkes_branching _),
-    "q_ktruss_step"          -> (GraphMl.q_ktruss_step _),
-    // round 4: unit root, drawdown/omega, HT sampling, matryoshka recall (§2.141)
-    "q_adf_stat"             -> (Analytics.q_adf_stat _),
-    "q_max_drawdown"         -> (Analytics.q_max_drawdown _),
-    "q_omega_ratio"          -> (Analytics.q_omega_ratio _),
-    "q_horvitz_thompson"     -> (Sampling.q_horvitz_thompson _),
-    "q_matryoshka_recall"    -> (Vectors.q_matryoshka_recall _),
-    // round 4: Lepage, winsorized/quartile cards, doc entropy filter (§2.142)
-    "q_lepage_test"          -> (Analytics.q_lepage_test _),
-    "q_winsorized_mean"      -> (Analytics.q_winsorized_mean _),
-    "q_quartile_dispersion"  -> (Analytics.q_quartile_dispersion _),
-    "q_doc_entropy_filter"   -> (TextPipeline.q_doc_entropy_filter _),
-    // round 4: SPRT monitor, behavior entropy, feature-eng encoders (§2.143)
-    "q_sprt_monitor"         -> (Analytics.q_sprt_monitor _),
-    "q_user_behavior_entropy" -> (Analytics.q_user_behavior_entropy _),
-    "q_rare_category_collapse" -> (MLDeterministic.q_rare_category_collapse _),
-    // round 4: epidemiology/diagnostic stats + ordinal agreement + fences (§2.144)
-    "q_relative_risk"        -> (Analytics.q_relative_risk _),
-    "q_prevalence_adjust"    -> (Analytics.q_prevalence_adjust _),
-    "q_weighted_kappa"       -> (Analytics.q_weighted_kappa _),
-    "q_tukey_fences"         -> (Analytics.q_tukey_fences _),
-    "q_likelihood_ratios"    -> (MLDeterministic.q_likelihood_ratios _),
-    // round 4: graph distance & spanning structure (§2.145)
-    "q_graph_eccentricity"   -> (GraphMl.q_graph_eccentricity _),
-    "q_graph_diameter2sweep" -> (GraphMl.q_graph_diameter2sweep _),
-    "q_boruvka_step"         -> (GraphMl.q_boruvka_step _),
-    "q_local_bridges"        -> (GraphMl.q_local_bridges _),
-    // round 4: DSIR selection, curriculum schedule, bottom-k reservoir (§2.146)
-    "q_dsir_weights"         -> (TextPipeline.q_dsir_weights _),
-    "q_curriculum_schedule"  -> (TextPipeline.q_curriculum_schedule _),
-    "q_reservoir_bottomk"    -> (Sampling.q_reservoir_bottomk _),
-    // round 4: AR(2) fit, Hampel filter, price index numbers (§2.147)
-    "q_yule_walker_ar2"      -> (Analytics.q_yule_walker_ar2 _),
-    "q_hampel_filter"        -> (Analytics.q_hampel_filter _),
-    "q_price_indexes"        -> (Analytics.q_price_indexes _),
-    "q_chained_laspeyres"    -> (Analytics.q_chained_laspeyres _),
-    // round 4: recommender steps, l-diversity, hierarchy reconcile (§2.148)
-    "q_als_user_step"        -> (MLDeterministic.q_als_user_step _),
-    "q_slope_one"            -> (MLDeterministic.q_slope_one _),
-    "q_l_diversity"          -> (Analytics.q_l_diversity _),
-    "q_forecast_reconcile"   -> (Analytics.q_forecast_reconcile _),
-    // round 4: parallel graph rounds + DTW envelope bound (§2.149)
-    "q_jones_plassmann"      -> (GraphMl.q_jones_plassmann _),
-    "q_spectral_bisection_step" -> (GraphMl.q_spectral_bisection_step _),
-    "q_densest_subgraph_peel" -> (GraphMl.q_densest_subgraph_peel _),
-    "q_lbkeogh_bound"        -> (Analytics.q_lbkeogh_bound _),
-    // round 4: friendship paradox, label mixing, SLO burn, adstock (§2.150)
-    "q_friendship_paradox"   -> (GraphMl.q_friendship_paradox _),
-    "q_attribute_assortativity" -> (GraphMl.q_attribute_assortativity _),
-    "q_error_budget_burn"    -> (Analytics.q_error_budget_burn _),
-    "q_adstock_correlation"  -> (Analytics.q_adstock_correlation _),
-    // round 4: RQA, Cornish-Fisher, pinball loss (§2.151)
-    "q_recurrence_quantification" -> (Analytics.q_recurrence_quantification _),
-    "q_cornish_fisher"       -> (Analytics.q_cornish_fisher _),
-    "q_pinball_loss"         -> (Analytics.q_pinball_loss _),
-    // round 4: spatial grid join, Z-order locality, RLE layout audit (§2.152)
-    "q_closest_pair_2d"      -> (Vectors.q_closest_pair_2d _),
-    "q_zorder_bucket_tightness" -> (Vectors.q_zorder_bucket_tightness _),
-    "q_rle_benefit"          -> (Relational.q_rle_benefit _),
-    // round 4: probabilistic counting round-out — LC, FM (§2.153)
-    "q_linear_counting"      -> (Sketches.q_linear_counting _),
-    "q_fm_sketch"            -> (Sketches.q_fm_sketch _),
-    "q_pcsa"                 -> (Sketches.q_pcsa _),
-    // round 4: process bottlenecks, graph null model, percolation (§2.154)
-    "q_process_bottleneck"   -> (Analytics.q_process_bottleneck _),
-    "q_clustering_null_model" -> (Analytics.q_clustering_null_model _),
-    "q_percolation_threshold" -> (Analytics.q_percolation_threshold _),
-    // round 4: DB-theory — Yannakakis, FD mining, factorized counts (§2.155)
-    "q_yannakakis_reduction"  -> (Relational.q_yannakakis_reduction _),
-    "q_fd_discovery"          -> (Relational.q_fd_discovery _),
-    "q_factorized_join_count" -> (Relational.q_factorized_join_count _),
-    // round 4: rank aggregation — Condorcet, RRF, Kemeny, Bradley-Terry (§2.156)
-    "q_condorcet_copeland"    -> (Analytics.q_condorcet_copeland _),
-    "q_rrf_fusion"            -> (Analytics.q_rrf_fusion _),
-    "q_kemeny_distance"       -> (Analytics.q_kemeny_distance _),
-    "q_bradley_terry_step"    -> (Analytics.q_bradley_terry_step _),
-    // round 4: storage codec audit — Shannon bound, delta bits, dictionary (§2.157)
-    "q_shannon_code_bound"    -> (Relational.q_shannon_code_bound _),
-    "q_delta_bits_audit"      -> (Relational.q_delta_bits_audit _),
-    "q_dict_encoding_audit"   -> (Relational.q_dict_encoding_audit _),
-    // round 4: optimizer cardinality theory — AGM, AVI, histograms (§2.158)
-    "q_agm_bound"             -> (Analytics.q_agm_bound _),
-    "q_avi_selectivity"       -> (Relational.q_avi_selectivity _),
-    "q_histogram_selectivity" -> (Relational.q_histogram_selectivity _),
-    // round 4: LM smoothing round-out — WB, JM, stupid backoff (§2.159)
-    "q_witten_bell"           -> (Text.q_witten_bell _),
-    "q_jelinek_mercer"        -> (Text.q_jelinek_mercer _),
-    "q_stupid_backoff"        -> (Text.q_stupid_backoff _),
-    // round 4: sequential pattern mining — PrefixSpan, GSP, contrast (§2.160)
-    "q_prefixspan_pairs"      -> (Events.q_prefixspan_pairs _),
-    "q_gsp_windowed_pairs"    -> (Events.q_gsp_windowed_pairs _),
-    "q_contrast_sequences"    -> (Events.q_contrast_sequences _),
-    // round 4: frequency sketches — count-min, space-saving, lossy counting (§2.161)
-    "q_count_min_sketch"      -> (Sketches.q_count_min_sketch _),
-    "q_spacesaving_guarantee" -> (Sketches.q_spacesaving_guarantee _),
-    "q_lossy_counting_bands"  -> (Sketches.q_lossy_counting_bands _),
-    // round 4: physical design classics — HRU views, bitmap runs, Fagin TA (§2.162)
-    "q_view_selection_hru"    -> (Relational.q_view_selection_hru _),
-    "q_bitmap_index_audit"    -> (Relational.q_bitmap_index_audit _),
-    "q_fagin_ta_rounds"       -> (Relational.q_fagin_ta_rounds _),
-    // round 4: privacy risk & anonymization cost (§2.163)
-    "q_t_closeness"           -> (Analytics.q_t_closeness _),
-    "q_discernibility_metric" -> (Analytics.q_discernibility_metric _),
-    "q_ncp_generalization"    -> (Analytics.q_ncp_generalization _),
-    // round 4: record linkage — Fellegi-Sunter, EM step, threshold sweep (§2.164)
-    "q_fellegi_sunter"         -> (MLDeterministic.q_fellegi_sunter _),
-    "q_em_linkage_step"        -> (MLDeterministic.q_em_linkage_step _),
-    "q_linkage_threshold_sweep" -> (MLDeterministic.q_linkage_threshold_sweep _),
-    // round 4: fair allocation — water-filling, D'Hondt, Hamilton (§2.165)
-    "q_maxmin_fairness"        -> (Analytics.q_maxmin_fairness _),
-    "q_dhondt_apportionment"   -> (Analytics.q_dhondt_apportionment _),
-    "q_hamilton_apportionment" -> (Analytics.q_hamilton_apportionment _),
-    // round 4: monotone fitting — isotonic PAVA, calibration, audit (§2.166)
-    "q_isotonic_fit"          -> (Analytics.q_isotonic_fit _),
-    "q_isotonic_calibration"  -> (Analytics.q_isotonic_calibration _),
-    "q_monotone_violations"   -> (Analytics.q_monotone_violations _),
-    // round 4: data placement — rendezvous hashing, failover, reshard (§2.167)
-    "q_rendezvous_hashing"    -> (Relational.q_rendezvous_hashing _),
-    "q_hrw_failover"          -> (Relational.q_hrw_failover _),
-    "q_shard_move_cost"       -> (Relational.q_shard_move_cost _),
-    // round 4: scheduling classics — Johnson, SPT, makespan bounds (§2.168)
-    "q_johnson_two_machine"   -> (Analytics.q_johnson_two_machine _),
-    "q_spt_completion"        -> (Analytics.q_spt_completion _),
-    "q_makespan_bounds"       -> (Analytics.q_makespan_bounds _),
-    // round 4: population estimation — German tank, coupon, birthday (§2.169)
-    "q_german_tank"           -> (Sketches.q_german_tank _),
-    "q_coupon_collector"      -> (Sketches.q_coupon_collector _),
-    "q_birthday_collisions"   -> (Sketches.q_birthday_collisions _),
-    // round 4: growth curves — logistic, Gompertz, Bass diffusion (§2.170)
-    "q_logistic_growth_fit"   -> (MLDeterministic.q_logistic_growth_fit _),
-    "q_gompertz_fit"          -> (MLDeterministic.q_gompertz_fit _),
-    "q_bass_diffusion_ols"    -> (MLDeterministic.q_bass_diffusion_ols _),
-    // round 4: online decision rules — ski rental, secretary, prophet (§2.171)
-    "q_ski_rental"            -> (Events.q_ski_rental _),
-    "q_secretary_rule"        -> (Events.q_secretary_rule _),
-    "q_prophet_threshold"     -> (Events.q_prophet_threshold _),
-    // round 4: robust scale — Rousseeuw-Croux Sn/Qn, MAD consistency (§2.172)
-    "q_sn_estimator"          -> (Analytics.q_sn_estimator _),
-    "q_qn_estimator"          -> (Analytics.q_qn_estimator _),
-    "q_mad_consistency"       -> (Analytics.q_mad_consistency _),
-    // round 4: causal inference — DiD, event study, Wald IV (§2.173)
-    "q_diff_in_diff"          -> (Analytics.q_diff_in_diff _),
-    "q_event_study"           -> (Analytics.q_event_study _),
-    "q_wald_iv"               -> (Analytics.q_wald_iv _),
-    // round 4: auction theory — Vickrey, reserve sweep, equivalence (§2.174)
-    "q_auction_revenue"       -> (Analytics.q_auction_revenue _),
-    "q_reserve_price_sweep"   -> (Analytics.q_reserve_price_sweep _),
-    "q_revenue_equivalence"   -> (Analytics.q_revenue_equivalence _),
-    // round 4: portfolio theory — min-variance, frontier, CAPM beta (§2.175)
-    "q_minvar_portfolio"      -> (Analytics.q_minvar_portfolio _),
-    "q_efficient_frontier"    -> (Analytics.q_efficient_frontier _),
-    "q_capm_beta"             -> (Analytics.q_capm_beta _),
-    // round 4: cooperative games — Shapley, Banzhaf, core (§2.176)
-    "q_shapley_coverage"      -> (Analytics.q_shapley_coverage _),
-    "q_banzhaf_power"         -> (Analytics.q_banzhaf_power _),
-    "q_core_stability"        -> (Analytics.q_core_stability _),
-    // round 4: hashing theory — universal, Fibonacci, prime modulus (§2.177)
-    "q_universal_hash_audit"  -> (Sketches.q_universal_hash_audit _),
-    "q_fibonacci_hashing"     -> (Sketches.q_fibonacci_hashing _),
-    "q_mod_prime_bias"        -> (Sketches.q_mod_prime_bias _),
-    // round 4: contagion — threshold cascade, seed compare, SIS (§2.178)
-    "q_threshold_cascade"     -> (GraphMl.q_threshold_cascade _),
-    "q_cascade_seed_compare"  -> (GraphMl.q_cascade_seed_compare _),
-    "q_sis_meanfield"         -> (GraphMl.q_sis_meanfield _),
-    // round 4: survey statistics — Kish n_eff, raking, nonresponse (§2.179)
-    "q_kish_neff"             -> (Sampling.q_kish_neff _),
-    "q_raking_step"           -> (Sampling.q_raking_step _),
-    "q_nonresponse_bias"      -> (Sampling.q_nonresponse_bias _),
-    // round 4: extreme values — PWM Gumbel, return levels, GEV shape (§2.180)
-    "q_gumbel_pwm_fit"        -> (Analytics.q_gumbel_pwm_fit _),
-    "q_return_levels"         -> (Analytics.q_return_levels _),
-    "q_gev_shape_pwm"         -> (Analytics.q_gev_shape_pwm _),
-    // round 4: conformal prediction — split, alpha sweep, groups (§2.181)
-    "q_split_conformal"        -> (MLDeterministic.q_split_conformal _),
-    "q_conformal_alpha_sweep"  -> (MLDeterministic.q_conformal_alpha_sweep _),
-    "q_conformal_group_coverage" -> (MLDeterministic.q_conformal_group_coverage _),
-    // round 4: discrete choice — logit shares, log-sum, elasticities (§2.182)
-    "q_logit_shares"          -> (Analytics.q_logit_shares _),
-    "q_logsum_surplus"        -> (Analytics.q_logsum_surplus _),
-    "q_logit_elasticities"    -> (Analytics.q_logit_elasticities _),
-    // round 4: claims reserving — chain ladder, BF ultimate (§2.183)
-    "q_chain_ladder_factors"  -> (Analytics.q_chain_ladder_factors _),
-    "q_chain_ladder_reserve"  -> (Analytics.q_chain_ladder_reserve _),
-    "q_bf_ultimate"           -> (Analytics.q_bf_ultimate _),
-    // round 4: fixed income — price, duration, convexity (§2.184)
-    "q_bond_pricing"          -> (Analytics.q_bond_pricing _),
-    "q_bond_duration"         -> (Analytics.q_bond_duration _),
-    "q_bond_convexity"        -> (Analytics.q_bond_convexity _),
-    // round 4: cache / working-set analytics (§2.185)
-    "q_reuse_distance"        -> (Events.q_reuse_distance _),
-    "q_lru_hit_curve"         -> (Events.q_lru_hit_curve _),
-    "q_working_set_curve"     -> (Events.q_working_set_curve _),
-    // round 4: actuarial life table, Lexis, Gompertz gradient (§2.186)
-    "q_life_table"            -> (Analytics.q_life_table _),
-    "q_lexis_surface"         -> (Analytics.q_lexis_surface _),
-    "q_mortality_gradient"    -> (Analytics.q_mortality_gradient _),
-    // round 4: transportation problem — NW corner, Vogel, cost gap (§2.187)
-    "q_transport_plan_nw"     -> (Analytics.q_transport_plan_nw _),
-    "q_vogel_penalties"       -> (Analytics.q_vogel_penalties _),
-    "q_transport_cost_gap"    -> (Analytics.q_transport_cost_gap _),
-    // round 4: option pricing — BS grid, parity, implied vol (§2.188)
-    "q_black_scholes_grid"    -> (Analytics.q_black_scholes_grid _),
-    "q_put_call_parity"       -> (Analytics.q_put_call_parity _),
-    "q_implied_vol_grid"      -> (Analytics.q_implied_vol_grid _),
-    // round 4: credit scorecard — PDO points, distribution, alignment (§2.189)
-    "q_scorecard_points"      -> (Analytics.q_scorecard_points _),
-    "q_scorecard_distribution" -> (Analytics.q_scorecard_distribution _),
-    "q_scorecard_alignment"   -> (Analytics.q_scorecard_alignment _),
-    // round 4: magnitude analytics — GR b-value, Omori, completeness (§2.190)
-    "q_gutenberg_richter"     -> (Analytics.q_gutenberg_richter _),
-    "q_omori_decay"           -> (Analytics.q_omori_decay _),
-    "q_magnitude_completeness" -> (Analytics.q_magnitude_completeness _),
-    // round 4: doubly-robust causal — AIPW, IPW diag, positivity (§2.191)
-    "q_aipw_ate"              -> (Analytics.q_aipw_ate _),
-    "q_ipw_diagnostics"       -> (Analytics.q_ipw_diagnostics _),
-    "q_overlap_positivity"    -> (Analytics.q_overlap_positivity _),
-    // round 4: rate limiting — token bucket / GCRA conformance (§2.192)
-    "q_token_bucket_audit"    -> (Events.q_token_bucket_audit _),
-    "q_rate_limit_summary"    -> (Events.q_rate_limit_summary _),
-    "q_gcra_conformance_sweep" -> (Events.q_gcra_conformance_sweep _),
-    // round 4: reliability blocks, Birnbaum, availability budget (§2.193)
-    "q_reliability_block"     -> (Analytics.q_reliability_block _),
-    "q_birnbaum_importance"   -> (Analytics.q_birnbaum_importance _),
-    "q_availability_budget"   -> (Analytics.q_availability_budget _),
-    // round 4: bipartite structure — lanes, Hall sweep, matching bound (§2.194)
-    "q_lane_adjacency"        -> (Analytics.q_lane_adjacency _),
-    "q_hall_deficiency"       -> (Analytics.q_hall_deficiency _),
-    "q_matching_bound"        -> (Analytics.q_matching_bound _),
-    // round 4: Bayesian A/B — posteriors, decision, credible bounds (§2.195)
-    "q_bayes_ab_posterior"    -> (Analytics.q_bayes_ab_posterior _),
-    "q_bayes_ab_decision"     -> (Analytics.q_bayes_ab_decision _),
-    "q_bayes_credible_bounds" -> (Analytics.q_bayes_credible_bounds _),
-    // round 4: period detection — phase dispersion, best period (§2.196)
-    "q_phase_dispersion"      -> (Analytics.q_phase_dispersion _),
-    "q_best_period"           -> (Analytics.q_best_period _),
-    "q_phase_profile"         -> (Analytics.q_phase_profile _),
-    // round 4: random-walk path statistics (§2.197)
-    "q_walk_ballot"           -> (Analytics.q_walk_ballot _),
-    "q_walk_range"            -> (Analytics.q_walk_range _),
-    "q_walk_last_zero"        -> (Analytics.q_walk_last_zero _),
-    // round 4: formal concept analysis (§2.198)
-    "q_fca_closure_sweep"     -> (Analytics.q_fca_closure_sweep _),
-    "q_fca_concept_count"     -> (Analytics.q_fca_concept_count _),
-    "q_fca_implications"      -> (Analytics.q_fca_implications _),
-    // round 4: Jackson network — traffic equations, utilization (§2.199)
-    "q_jackson_arrivals"      -> (Analytics.q_jackson_arrivals _),
-    "q_jackson_utilization"   -> (Analytics.q_jackson_utilization _),
-    "q_jackson_bottleneck"    -> (Analytics.q_jackson_bottleneck _),
-    // round 4: market microstructure — Roll, Kyle, Amihud (§2.200)
-    "q_roll_spread"           -> (Analytics.q_roll_spread _),
-    "q_kyle_lambda"           -> (Analytics.q_kyle_lambda _),
-    "q_amihud_illiquidity"    -> (Analytics.q_amihud_illiquidity _),
-    // round 4: differential-privacy composition (§2.201)
-    "q_dp_composition"        -> (Analytics.q_dp_composition _),
-    "q_dp_budget_split"       -> (Analytics.q_dp_budget_split _),
-    "q_dp_delta_tradeoff"     -> (Analytics.q_dp_delta_tradeoff _),
-    // round 4: Leontief input-output — exact Cramer solve (§2.202)
-    "q_leontief_coefficients" -> (Analytics.q_leontief_coefficients _),
-    "q_leontief_solve"        -> (Analytics.q_leontief_solve _),
-    "q_leontief_multipliers"  -> (Analytics.q_leontief_multipliers _),
-    // round 4: quantized KDE — grid, bandwidth sweep, modes (§2.203)
-    "q_kde_grid"              -> (Analytics.q_kde_grid _),
-    "q_kde_bandwidth_sweep"   -> (Analytics.q_kde_bandwidth_sweep _),
-    "q_kde_modes"             -> (Analytics.q_kde_modes _),
-    // round 4: bipartite motifs — butterflies, wedges (§2.204)
-    "q_butterfly_count"       -> (Analytics.q_butterfly_count _),
-    "q_butterfly_suppliers"   -> (Analytics.q_butterfly_suppliers _),
-    "q_wedge_distribution"    -> (Analytics.q_wedge_distribution _),
-    // round 4: real-time scheduling — EDF, DBF, RM bounds (§2.205)
-    "q_edf_utilization"       -> (Analytics.q_edf_utilization _),
-    "q_demand_bound_audit"    -> (Analytics.q_demand_bound_audit _),
-    "q_rm_bound"              -> (Analytics.q_rm_bound _),
-    // round 4: coding theory — Hamming(7,4) audits (§2.206)
-    "q_hamming74_audit"       -> (Analytics.q_hamming74_audit _),
-    "q_hamming_weight_enumerator" -> (Analytics.q_hamming_weight_enumerator _),
-    "q_hamming_min_distance"  -> (Analytics.q_hamming_min_distance _),
-    // round 4: splines — Catmull-Rom, monotone Hermite, overshoot (§2.207)
-    "q_catmull_rom_interp"    -> (Analytics.q_catmull_rom_interp _),
-    "q_monotone_hermite"      -> (Analytics.q_monotone_hermite _),
-    "q_spline_overshoot_audit" -> (Analytics.q_spline_overshoot_audit _),
-    // round 4: population genetics — Hardy-Weinberg (§2.208)
-    "q_hardy_weinberg"        -> (Analytics.q_hardy_weinberg _),
-    "q_allele_frequencies"    -> (Analytics.q_allele_frequencies _),
-    "q_inbreeding_coefficient" -> (Analytics.q_inbreeding_coefficient _),
-    // round 4: forensic digits — Benford 2nd, last digit, pairs (§2.209)
-    "q_benford_second_digit"  -> (Analytics.q_benford_second_digit _),
-    "q_last_digit_uniform"    -> (Analytics.q_last_digit_uniform _),
-    "q_digit_pair_independence" -> (Analytics.q_digit_pair_independence _),
-    // round 4: Mack chain-ladder variance (§2.210)
-    "q_mack_sigma"            -> (Analytics.q_mack_sigma _),
-    "q_dev_factor_ci"         -> (Analytics.q_dev_factor_ci _),
-    "q_mack_residuals"        -> (Analytics.q_mack_residuals _),
-    // round 5: inequality audits — Jensen, AM-GM, log-sum-exp (§2.211)
-    "q_jensen_gap"            -> (Analytics.q_jensen_gap _),
-    "q_amgm_gap"              -> (Analytics.q_amgm_gap _),
-    "q_logsumexp_audit"       -> (Analytics.q_logsumexp_audit _),
-    // capability-only (no oracle — engine-specific sketch internals;
-    // driver records the weaker rows-only check, tests gate the accuracy)
-    "q_approx_distinct"     -> (Relational.q_approx_distinct _),
-    // capability-only (no oracle — a run-to-convergence driver LOOP is
-    // not one SQL statement; Round5OpsSpec gates convergence,
-    // Lloyd monotonicity, and determinism)
-    "q_kmeans_converged"    -> (MLDeterministic.q_kmeans_converged _),
-  )
+  /** The modules that declare queries (SURVEY.md §2 lists every key under
+    * its section). A query is one public `q_<key>(spark, sf)` method on one
+    * of them; nothing else names it.
+    */
+  private val modules: Seq[AnyRef] = Seq(
+    Relational, Joins, Windows, Scalars, Text, Events, Vectors,
+    MLDeterministic, TextPipeline, Ann, Sampling, Sketches, GraphMl,
+    Retrieval, Analytics, graft.multimodal.Multimodal)
+
+  /** Every declared query by key. Built once: `Graft.query` and the test
+    * shards look keys up in it per call. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = registry(modules)
+
+  /** Each public `q_[a-z0-9_]+` method of `modules` as a query keyed by its
+    * name (`$` never matches, so default-argument getters are skipped).
+    * Fails naming module and method on a signature other than
+    * `(SparkSession, String) => Dataset`, or on a key two modules declare.
+    * A query that throws surfaces its own exception, not the reflective
+    * wrapper.
+    */
+  private[graft] def registry(
+      modules: Seq[AnyRef]): Map[String, (SparkSession, String) => DataFrame] = {
+    def owner(m: AnyRef) = m.getClass.getName.stripSuffix("$")
+    val queryName = "q_[a-z0-9_]+".r
+    val declared: Seq[(String, AnyRef, Method)] = for {
+      m <- modules
+      meth <- m.getClass.getMethods.toSeq if queryName.matches(meth.getName)
+    } yield {
+      require(meth.getParameterTypes.toSeq == Seq(classOf[SparkSession], classOf[String]) &&
+        classOf[Dataset[_]].isAssignableFrom(meth.getReturnType),
+        s"${owner(m)}.${meth.getName} is not a query: it must be " +
+          s"(SparkSession, String) => DataFrame, found $meth")
+      (meth.getName, m, meth)
+    }
+    declared.groupBy(_._1).foreach { case (key, ds) =>
+      require(ds.size == 1,
+        s"query $key is declared more than once: ${ds.map(d => owner(d._2)).mkString(", ")}")
+    }
+    declared.map { case (key, m, meth) =>
+      key -> { (spark: SparkSession, sf: String) =>
+        try meth.invoke(m, spark, sf).asInstanceOf[DataFrame]
+        catch { case e: InvocationTargetException => throw e.getCause }
+      }
+    }.toMap
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,6 +1,10 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,9 +24,37 @@ import org.apache.spark.sql.types._
 object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    assertSchema(name, df)
-    df
+    val path = s"$sfDir/$name.parquet"
+    val schema = footerSchema(spark, path)
+    assertSchema(name, schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, read from one
+    * footer on the driver: inference runs a Spark job on every load, and
+    * loading happens while a query is built. Like Spark without schema
+    * merging, it takes the first data file of a directory, prefers the
+    * Spark schema stored in the footer and converts under the session's
+    * SQLConf, so `nanosAsLong` and NTZ inference give the same types.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(path).getFileSystem(conf)
+    val root = fs.makeQualified(new Path(path))
+    val file =
+      if (!fs.getFileStatus(root).isDirectory) root
+      else {
+        val files = fs.listFiles(root, true)
+        Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+          .filterNot(_.toString.stripPrefix(root.toString).split('/')
+            .exists(n => n.startsWith("_") || n.startsWith("."))) // hidden, summary
+          .minByOption(_.toString)
+          .getOrElse(throw new IllegalStateException(s"no parquet data file under $path"))
+      }
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   // ---- fixture-schema guard -------------------------------------------------
@@ -87,11 +119,11 @@ object Tables {
       ("vec_id", is(LongType), "bigint"), ("embedding", floatArray, "array<float>"),
       ("label", is(IntegerType), "int")))
 
-  /** Throws with a single readable message if `df`'s schema drifted from the
+  /** Throws with a single readable message if `schema` drifted from the
     * declared contract for fixture `name`. */
-  def assertSchema(name: String, df: DataFrame): Unit =
+  def assertSchema(name: String, schema: StructType): Unit =
     expectedSchemas.get(name).foreach { exp =>
-      val actual = df.schema.fields.map(f => f.name -> f.dataType).toMap
+      val actual = schema.fields.map(f => f.name -> f.dataType).toMap
       val missing = exp.collect { case (c, _, _) if !actual.contains(c) => c }
       val wrong = exp.collect {
         case (c, ok, want) if actual.get(c).exists(t => !ok(t)) =>

@@ -97,14 +97,11 @@ object Events {
   /** Recursive CTE (Spark 4's WITH RECURSIVE, through the SQL entry path):
     * a generated calendar scaffold from the event stream's min to max day
     * (bounded recursion — one level per day), LEFT JOINed back to daily
-    * event counts so silent days appear as explicit zeros. The same
-    * recursive SQL runs on the oracle.
+    * event counts so silent days appear as explicit zeros. The oracle runs
+    * the whole calendar as one recursive SQL statement.
     */
   def q_recursive_calendar(spark: SparkSession, sf: String): DataFrame = {
     val ed = Tables.eventsWithTs(spark, sf).select(to_date(col("ts_us")).as("d"))
-    // graft-prefixed view name: temp views are session-global, a generic
-    // name could clobber a caller's own view
-    ed.createOrReplaceTempView("graft_event_days_v")
     // resolve the bounds ONCE (a 1-row aggregate) and inline them as date
     // literals — inside the recursive CTE the bounds subquery would be
     // recomputed per recursion level (30 full scans at 30 days of data)
@@ -112,28 +109,21 @@ object Events {
     if (b.isNullAt(0)) // empty input: empty calendar, not a parse error
       return spark.range(0).select(lit("").as("day"), lit(0L).as("n_events")).where(lit(false))
     val (lo, hi) = (b.getDate(0), b.getDate(1))
-    // one recursion level per calendar day: the default level limit (100)
-    // fails on any span over ~3 months, so size it to the actual span —
-    // sf-independent (a year of data is 366 levels, still trivial).
-    // Only ever RAISE the session limit: DataFrames execute lazily, so
-    // constructing a short-span query after a long-span one would
-    // otherwise lower the limit before the long-span plan actually runs
+    // one recursion level per calendar day: the session default (100 levels)
+    // fails on any span over ~3 months, so the CTE carries its own limit
+    // sized to the span (a year of data is 366 levels, still trivial)
     val spanDays = java.time.temporal.ChronoUnit.DAYS.between(lo.toLocalDate, hi.toLocalDate)
-    val current = spark.conf.getOption("spark.sql.cteRecursionLevelLimit")
-      .map(_.toLong).getOrElse(100L)
-    spark.conf.set("spark.sql.cteRecursionLevelLimit",
-      (spanDays + 10L).max(current).max(100L).toString)
-    spark.sql(s"""
-      WITH RECURSIVE
-        days(d) AS (
-          SELECT DATE'$lo'
-          UNION ALL
-          SELECT date_add(d, 1) FROM days WHERE d < DATE'$hi'),
-        daily AS (SELECT d, COUNT(*) AS n FROM graft_event_days_v GROUP BY d)
-      SELECT date_format(days.d, 'yyyy-MM-dd') AS day,
-             CAST(COALESCE(daily.n, 0) AS BIGINT) AS n_events
-      FROM days LEFT JOIN daily ON days.d = daily.d
-      ORDER BY day""")
+    val days = spark.sql(s"""
+      WITH RECURSIVE days(d) MAX RECURSION LEVEL ${spanDays + 10} AS (
+        SELECT DATE'$lo'
+        UNION ALL
+        SELECT date_add(d, 1) FROM days WHERE d < DATE'$hi')
+      SELECT d FROM days""")
+    val daily = ed.groupBy(col("d")).agg(count(lit(1)).as("n"))
+    days.join(daily, Seq("d"), "left")
+      .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
+        coalesce(col("n"), lit(0L)).as("n_events"))
+      .orderBy("day")
   }
 
   /** Sessionization with a 30-minute inactivity gap, computed with the

@@ -16,7 +16,7 @@ import scala.util.control.NonFatal
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.tail.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
+    val names = if (args.length > 1) args.tail.toSeq else graft.Graft.queryNames
     val spark = graft.Graft.localSession()
     // SPARK_GRAFT_EXPLAIN_ONLY=1: skip the final action (plan sweep
     // over the full inventory — prints one summary line per query with

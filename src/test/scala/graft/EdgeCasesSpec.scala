@@ -119,17 +119,41 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(row.getAs[Double]("chi2") >= 0.0)
   }
 
-  test("recursive calendar has no gaps and covers every event day") {
-    val days = graft.ops.Events.q_recursive_calendar(spark, sf).collect()
+  /** The calendar has no gaps and covers every event day of `dir`. */
+  private def checkCalendar(session: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
+    val days = graft.ops.Events.q_recursive_calendar(session, dir).collect()
     val dates = days.map(_.getAs[String]("day"))
     assert(dates.length >= 2)
     assert(dates.toSeq === dates.sorted.toSeq)
     val total = days.map(_.getAs[Long]("n_events")).sum
-    assert(total === graft.core.Tables.eventsWithTs(spark, sf).count())
+    assert(total === graft.core.Tables.eventsWithTs(session, dir).count())
     // scaffold is contiguous: length equals datediff(min, max) + 1
     val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
     val lo = java.time.LocalDate.parse(dates.head, fmt)
     val hi = java.time.LocalDate.parse(dates.last, fmt)
     assert(dates.length.toLong === java.time.temporal.ChronoUnit.DAYS.between(lo, hi) + 1)
+    dates.toSeq
+  }
+
+  test("recursive calendar has no gaps and covers every event day") {
+    checkCalendar(spark, sf)
+  }
+
+  test("recursive calendar spans more than 100 days at the default recursion limit") {
+    // one recursion level per day: the CTE sizes its own limit, so a fresh
+    // session keeps Spark's default of 100 levels before and after
+    val fresh = spark.newSession()
+    Graft.attach(fresh)
+    import fresh.implicits._
+    val limit = "spark.sql.cteRecursionLevelLimit"
+    assert(fresh.conf.get(limit) === "100")
+    val dir = TestSpark.tempDir("graft_calendar")
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 12, 0)
+    Seq(0L, 45L, 150L).map(d => (d, t0.plusDays(d), 1L, "view", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val dates = checkCalendar(fresh, dir)
+    assert(dates.length === 151)
+    assert(fresh.conf.get(limit) === "100")
   }
 }

@@ -21,17 +21,26 @@ class FixtureSchemaSpec extends AnyFunSuite {
       Tables.table(spark, sf, t)
   }
 
+  test("Tables loads each table with the schema Spark would infer") {
+    // the loader reads the schema from the footer on the driver instead of
+    // running Spark's inference job; both must agree on every table
+    for (t <- Seq("region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings"))
+      assert(Tables.table(spark, sf, t).schema ===
+        spark.read.parquet(s"$sf/$t.parquet").schema, t)
+  }
+
   test("guard names the table and column on type drift") {
     val bad = Tables.table(spark, sf, "events")
       .withColumn("value", org.apache.spark.sql.functions.col("value").cast("string"))
-    val e = intercept[IllegalStateException](Tables.assertSchema("events", bad))
+    val e = intercept[IllegalStateException](Tables.assertSchema("events", bad.schema))
     assert(e.getMessage.contains("events"))
     assert(e.getMessage.contains("value"))
   }
 
   test("guard names missing columns") {
     val bad = Tables.table(spark, sf, "events").drop("props")
-    val e = intercept[IllegalStateException](Tables.assertSchema("events", bad))
+    val e = intercept[IllegalStateException](Tables.assertSchema("events", bad.schema))
     assert(e.getMessage.contains("missing column props"))
   }
 
@@ -69,7 +78,7 @@ class FixtureSchemaSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val bad = Tables.table(spark, sf, "events")
       .withColumn("ts", col("ts").cast("string"))
-    val e = intercept[IllegalStateException](Tables.assertSchema("events", bad))
+    val e = intercept[IllegalStateException](Tables.assertSchema("events", bad.schema))
     assert(e.getMessage.contains("ts"))
   }
 
@@ -86,6 +95,8 @@ class FixtureSchemaSpec extends AnyFunSuite {
     val legacy = Tables.eventsWithTs(spark, dir)
     assert(legacy.schema("ts").dataType ===
       org.apache.spark.sql.types.LongType)
+    assert(Tables.table(spark, dir, "events").schema ===
+      spark.read.parquet(s"$dir/events.parquet").schema)
     val diff = legacy.select(col("event_id"), col("ts_usl").as("usl_legacy"))
       .join(cur.select(col("event_id"), col("ts_usl")), "event_id")
       .agg(sum(when(col("usl_legacy") === col("ts_usl"), 0L).otherwise(1L))

@@ -55,24 +55,6 @@ class LayoutSpec extends AnyFunSuite {
       plain.orderBy("o_orderpriority").collect().toSeq)
   }
 
-  test("query registry has no silent key collisions (Map keeps last wins)") {
-    // a duplicate key in the SparkEntry.queries literal silently shadows the
-    // earlier operator (it has happened twice); parse the source and fail loudly
-    import scala.jdk.CollectionConverters._
-    val src = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")).asScala
-        .mkString("\n")
-    val body = src.substring(src.indexOf("val queries"),
-      src.indexOf("def oracleSql"))
-    val keys = "\"(q_[a-z0-9_]+)\"\\s*->".r.findAllMatchIn(body)
-      .map(_.group(1)).toSeq
-    val dups = keys.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
-    assert(dups.isEmpty, s"duplicate registry keys shadow operators: $dups")
-    assert(keys.size == SparkEntry.queries.size,
-      s"registry literal has ${keys.size} entries but the Map kept " +
-        s"${SparkEntry.queries.size}")
-  }
-
   test("every materialization in src/main goes through core.Mat") {
     // one primitive owns mechanism, storage and job naming; a hand-written
     // checkpoint or cache elsewhere bypasses all three (and a .cache()

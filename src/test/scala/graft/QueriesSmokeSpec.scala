@@ -37,8 +37,7 @@ abstract class QueriesSmokeShard(shard: Int) extends AnyFunSuite {
       val df = fn(spark, sf)
       val after = spark.conf.getAll
       val written = (before.keySet ++ after.keySet)
-        .filter(k => before.get(k) != after.get(k)) --
-        QueriesSmokeShard.confWrites.getOrElse(name, Set.empty)
+        .filter(k => before.get(k) != after.get(k))
       assert(written.isEmpty, s"$name wrote session conf while being built: " +
         written.toSeq.sorted.map(k => s"$k: ${before.get(k)} -> ${after.get(k)}").mkString(", "))
       val a = df.collect().map(_.toString).toSeq
@@ -54,11 +53,6 @@ abstract class QueriesSmokeShard(shard: Int) extends AnyFunSuite {
 
 object QueriesSmokeShard {
   val nShards = 6
-  // the confs a query may write while it is built, per query: the
-  // recursive calendar sizes the CTE recursion limit to the data's day
-  // span before it plans (the default of 100 levels fails past ~3 months)
-  val confWrites: Map[String, Set[String]] = Map(
-    "q_recursive_calendar" -> Set("spark.sql.cteRecursionLevelLimit"))
   // stable across JVMs (String.hashCode is specified arithmetic, not
   // identity-based), so every query lands in exactly one shard suite
   def shardOf(name: String): Int = math.floorMod(name.hashCode, nShards)
@@ -98,28 +92,57 @@ class QueriesSmokeSpec extends QueriesSmokeShard(0) {
 
   private val capabilityOnly = Set("q_approx_distinct", "q_kmeans_converged")
 
-  test("no duplicate keys in the SparkEntry / OracleSql map literals") {
+  test("no duplicate keys in the OracleSql map literal") {
     // a Map literal silently keeps only the LAST binding for a repeated
-    // key — a new query reusing an existing name would shadow the old
-    // implementation with no compile error (it happened once)
-    for (path <- Seq("src/main/scala/graft/SparkEntry.scala",
-        "src/main/scala/graft/oracle/OracleSql.scala")) {
-      // explicit UTF-8: the sources carry µ/× in Scaladoc and the test
-      // JVM's platform default charset may be ASCII
-      val src = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val keys = "\"(q_\\w+)\"\\s*->".r.findAllMatchIn(src)
-        .map(_.group(1)).toSeq
-      val dups = keys.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
-      assert(dups.isEmpty, s"$path declares duplicate keys: ${dups.mkString(", ")}")
-    }
+    // key — a new oracle reusing an existing name would shadow the old
+    // SQL with no compile error (it happened once)
+    val path = "src/main/scala/graft/oracle/OracleSql.scala"
+    // explicit UTF-8: the sources carry µ/× in Scaladoc and the test
+    // JVM's platform default charset may be ASCII
+    val src = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val keys = "\"(q_\\w+)\"\\s*->".r.findAllMatchIn(src)
+      .map(_.group(1)).toSeq
+    val dups = keys.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
+    assert(dups.isEmpty, s"$path declares duplicate keys: ${dups.mkString(", ")}")
+  }
+
+  test("the registry rejects a twice-declared key and a non-query q_ method, " +
+      "and a query throws its own exception") {
+    import QueryModuleFakes._
+    val dup = intercept[IllegalArgumentException](SparkEntry.registry(Seq(Throws, Twin)))
+    assert(dup.getMessage.contains("q_fake") && dup.getMessage.contains("QueryModuleFakes$Throws") &&
+      dup.getMessage.contains("QueryModuleFakes$Twin"), dup.getMessage)
+    val bad = intercept[IllegalArgumentException](SparkEntry.registry(Seq(WrongSignature)))
+    assert(bad.getMessage.contains("QueryModuleFakes$WrongSignature.q_fake"), bad.getMessage)
+    // q_fake's default-argument getter (q_fake$default$2) is not a query
+    val reg = SparkEntry.registry(Seq(Throws))
+    assert(reg.keySet === Set("q_fake"))
+    intercept[ArithmeticException](reg("q_fake")(null, "sf"))
   }
 
   test("every query has an oracle or is explicitly capability-only") {
+    assert(capabilityOnly.subsetOf(SparkEntry.queries.keySet),
+      s"capability-only keys not declared: ${capabilityOnly -- SparkEntry.queries.keySet}")
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- capabilityOnly
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty,
       "oracle SQL for undeclared queries")
+  }
+}
+
+/** Stand-ins for ops modules, for the registry's failure modes. */
+object QueryModuleFakes {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  object Throws {
+    def q_fake(spark: SparkSession, sf: String = "unused"): DataFrame =
+      throw new ArithmeticException("a query's own failure")
+  }
+  object Twin {
+    def q_fake(spark: SparkSession, sf: String): DataFrame = spark.emptyDataFrame
+  }
+  object WrongSignature {
+    def q_fake(spark: SparkSession): DataFrame = spark.emptyDataFrame
   }
 }
