@@ -2876,7 +2876,7 @@ object Analytics {
           .as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
-    val ranks = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 32L)
+    val ranks = BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "ci"))
       .select(col("v"), col("t"),
         ((col("ci") - col("t")).cast("double")
           + (col("t").cast("double") + lit(1.0)) / lit(2.0)).as("midrank"))
@@ -3351,7 +3351,7 @@ object Analytics {
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
     val tot = vals.agg(sum(col("t")).as("nn"))
       .select(col("nn"), expr("CAST((nn + 1) div 2 AS BIGINT)").as("k"))
-    val med = BandedScan.cumSum(vals, Seq.empty, "v", "t", "cum", bandWidth = 256L)
+    val med = BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "cum"))
       .crossJoin(broadcast(tot))
       .filter(col("cum") >= col("k"))
       .agg(min(col("v")).as("med"))
@@ -3401,7 +3401,7 @@ object Analytics {
           .as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
-    val mid = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 256L)
+    val mid = BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "ci"))
       .select(col("v"),
         ((col("ci") - col("t")).cast("double")
           + (col("t").cast("double") + lit(1.0)) / lit(2.0)).as("midrank"))
@@ -3430,9 +3430,9 @@ object Analytics {
 
   /** Hodges–Lehmann shift estimator between the 1996 and 1997 monthly
     * revenue series: the lower median of all 144 pairwise differences
-    * (exact cents) via the [[BandedScan]] cumulative count (wide bands —
-    * the cent-difference lattice is sparse, so banding groups it into
-    * a handful of keyed windows instead of an all-pairs theta join).
+    * (exact cents) via the [[BandedScan]] cumulative count (its bands
+    * are sized from the sparse cent-difference lattice's own range, so
+    * a handful of keyed windows replace an all-pairs theta join).
     */
   def q_hodges_lehmann(spark: SparkSession, sf: String): DataFrame = {
     val rev = monthlyRevenue(spark, sf)
@@ -3444,10 +3444,7 @@ object Analytics {
       .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
     val tot = w.agg(sum(col("cnt")).as("np"))
       .select(col("np"), expr("CAST((np + 1) div 2 AS BIGINT)").as("k"))
-    // auto bandWidth: the cent-difference lattice is sparse and its range
-    // is data-dependent — deriving the width keeps ≈√V bands at any SF
-    // instead of the old degenerate single 1e8-wide band
-    BandedScan.cumSumAuto(w, Seq.empty, "w", "cnt", "cum")
+    BandedScan.cumSums(w, Seq.empty, "w", Seq("cnt" -> "cum"))
       .crossJoin(broadcast(tot))
       .filter(col("cum") >= col("k"))
       .agg(max(col("np")).as("n_pairs"), min(col("w")).as("hl_cents"))
@@ -3468,14 +3465,13 @@ object Analytics {
   def q_pettitt_test(spark: SparkSession, sf: String): DataFrame = {
     val rev = Mat.once(monthlyRevenue(spark, sf))
     val lat = rev.groupBy(col("rev").as("rv")).agg(count(lit(1)).as("tcnt"))
-    // auto bandWidth (was a degenerate 1e8 single band): ≈√V bands at any SF
-    val twomid = BandedScan.cumSumAuto(lat, Seq.empty, "rv", "tcnt", "ci")
+    val twomid = BandedScan.cumSums(lat, Seq.empty, "rv", Seq("tcnt" -> "ci"))
       .select(col("rv"),
         (lit(2L) * (col("ci") - col("tcnt")) + col("tcnt") + 1L).as("tm"))
     val byMonth = rev.join(twomid, col("rev") === col("rv"))
       .select(col("m"), col("tm"), lit(1L).as("one"))
     val u = Mat.once(BandedScan.cumSums(byMonth, Seq.empty, "m",
-        Seq("tm" -> "w2", "one" -> "tpos"), bandWidth = 16L))
+        Seq("tm" -> "w2", "one" -> "tpos")))
     val nm = rev.agg(count(lit(1)).as("nm"))
     val ut = u.crossJoin(broadcast(nm))
       .filter(col("tpos") < col("nm"))  // U_n ≡ 0: the empty cut, as before
@@ -3499,8 +3495,8 @@ object Analytics {
   /** Bowley (quartile) skewness and the quartile coefficient of
     * dispersion of order totals per priority, from exact discrete
     * quartiles (⌈qn⌉-th smallest on the $100 cent-bin lattice via the
-    * [[BandedScan]] two-level prefix scan — O(V·√V) per group instead
-    * of the O(V²) all-pairs cumulative theta join).
+    * [[BandedScan]] prefix scan — O(V) per group instead of the O(V²)
+    * all-pairs cumulative theta join).
     */
   def q_bowley_skewness(spark: SparkSession, sf: String): DataFrame = {
     val gv = Mat.once(Tables.orders(spark, sf)
@@ -3513,7 +3509,7 @@ object Analytics {
         expr("CAST((n + 3) div 4 AS BIGINT)").as("k1"),
         expr("CAST((n + 1) div 2 AS BIGINT)").as("k2"),
         expr("CAST((3 * n + 3) div 4 AS BIGINT)").as("k3"))
-    BandedScan.cumSum(gv, Seq("g"), "v", "cnt", "cum", bandWidth = 256L)
+    BandedScan.cumSums(gv, Seq("g"), "v", Seq("cnt" -> "cum"))
       .join(broadcast(stats), "g")
       .groupBy(col("g"), col("n"))
       .agg(min(when(col("cum") >= col("k1"), col("v"))).as("q1"),
@@ -3540,7 +3536,7 @@ object Analytics {
           .as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt")))
     val vals = gv.groupBy(col("v")).agg(sum(col("cnt")).as("t"))
-    val mid = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 32L)
+    val mid = BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "ci"))
       .select(col("v"),
         ((col("ci") - col("t")).cast("double")
           + (col("t").cast("double") + lit(1.0)) / lit(2.0)).as("midrank"))
@@ -3942,7 +3938,7 @@ object Analytics {
         expr("CAST((4 * n + 9) div 10 AS BIGINT)").as("k40"),
         expr("CAST((9 * n + 9) div 10 AS BIGINT)").as("k90"))
     val cum = Mat.once(BandedScan.cumSums(vals.withColumn("vt", col("v") * col("t")),
-        Seq.empty, "v", Seq("t" -> "ct", "vt" -> "cmass"), bandWidth = 1024L)
+        Seq.empty, "v", Seq("t" -> "ct", "vt" -> "cmass"))
       .select(col("v"), col("t"), (col("ct") - col("t")).as("cb"),
         (col("cmass") - col("vt")).as("mb"))
       .crossJoin(broadcast(tot)))
@@ -4307,7 +4303,7 @@ object Analytics {
       .select(col("j2"), col("v"),
         coalesce(col("dcnt"), lit(0L)).as("dcnt"),
         coalesce(col("qcnt"), lit(0L)).as("qcnt")))
-    val pairs = BandedScan.cumSumAuto(lat, Seq("j2"), "v", "dcnt", "ci")
+    val pairs = BandedScan.cumSums(lat, Seq("j2"), "v", Seq("dcnt" -> "ci"))
       .agg(sum(col("qcnt") * (col("ci") - col("dcnt"))).as("jgt"),
         sum(col("qcnt") * col("dcnt")).as("jeq"))
     val sizes = gv.groupBy(col("j")).agg(sum(col("cnt")).as("ng"))
@@ -4628,7 +4624,7 @@ object Analytics {
       .agg(count(lit(1)).as("cnt")))
     val stats = gv.groupBy(col("g")).agg(sum(col("cnt")).as("n"))
       .select(col("g"), col("n"), expr("CAST(n div 5 AS BIGINT)").as("tr"))
-    val cum = Mat.once(BandedScan.cumSum(gv, Seq("g"), "v", "cnt", "ci", bandWidth = 256L)
+    val cum = Mat.once(BandedScan.cumSums(gv, Seq("g"), "v", Seq("cnt" -> "ci"))
       .withColumn("cb", col("ci") - col("cnt")).drop("ci")
       .join(broadcast(stats), "g"))
     // per-bin kept mass inside ranks (tr, n-tr]: clip the bin's rank span
@@ -4705,7 +4701,7 @@ object Analytics {
     // cumulative counts over the rv lattice via BandedScan (round 8) —
     // the former rv2 <= rv theta self-join was O(V²) in distinct revenue
     // values and planned BNLJ; same cum values, same cuts
-    val cuts = BandedScan.cumSumsAuto(vals, Seq.empty, "rv", Seq("t" -> "cum"))
+    val cuts = BandedScan.cumSums(vals, Seq.empty, "rv", Seq("t" -> "cum"))
       .crossJoin(broadcast(tot))
       .agg(min(when(col("cum") >= col("k80"), col("rv"))).as("c80"),
         min(when(col("cum") >= col("k95"), col("rv"))).as("c95"))
@@ -5464,7 +5460,7 @@ object Analytics {
         (floor((col("n").cast("double")
           + lit(1.959964) * sqrt(col("n").cast("double"))) / lit(2.0))
           .cast("long") + 1L).as("khi"))
-    BandedScan.cumSum(vals, Seq.empty, "v", "t", "cum", bandWidth = 256L)
+    BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "cum"))
       .crossJoin(broadcast(tot))
       .agg(max(col("n")).as("n_orders"),
         min(when(col("cum") >= col("k2"), col("v"))).as("median_bin"),
@@ -5628,7 +5624,7 @@ object Analytics {
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("h")))
     val vals = cust.groupBy(col("v"))
       .agg(count(lit(1)).as("t"), sum(col("h")).as("hv"))
-    val mid = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 1024L)
+    val mid = BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "ci"))
       .select(col("v"), col("hv"),
         ((col("ci") - col("t")).cast("double")
           + (col("t").cast("double") + lit(1.0)) / lit(2.0)).as("midrank"))
@@ -6379,13 +6375,13 @@ object Analytics {
       .groupBy(col("v")).agg(count(lit(1)).as("t")))
     val tot = vals.agg(sum(col("t")).as("n"))
       .select(col("n"), expr("CAST((n + 1) div 2 AS BIGINT)").as("k"))
-    val cum = Mat.once(BandedScan.cumSum(vals, Seq.empty, "v", "t", "cum", bandWidth = 256L))
+    val cum = Mat.once(BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "cum")))
     val med = cum.crossJoin(broadcast(tot))
       .filter(col("cum") >= col("k")).agg(min(col("v")).as("med"))
     val dev = vals.crossJoin(broadcast(med))
       .select(abs(col("v") - col("med")).as("av"), col("t"))
       .groupBy(col("av")).agg(sum(col("t")).as("t"))
-    val madCum = BandedScan.cumSum(dev, Seq.empty, "av", "t", "cum", bandWidth = 256L)
+    val madCum = BandedScan.cumSums(dev, Seq.empty, "av", Seq("t" -> "cum"))
       .crossJoin(broadcast(tot))
       .filter(col("cum") >= col("k")).agg(min(col("av")).as("mad"))
     vals.crossJoin(broadcast(med)).crossJoin(broadcast(madCum))
@@ -6419,7 +6415,7 @@ object Analytics {
     val vals = Mat.once(Tables.lineitem(spark, sf)
       .select(pct(col("l_discount")).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("t")))
-    val cum = BandedScan.cumSum(vals, Seq.empty, "v", "t", "ci", bandWidth = 4L)
+    val cum = BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "ci"))
       .withColumn("cb", col("ci") - col("t"))
     val tot = vals.agg(sum(col("t")).as("n"))
     cum.crossJoin(broadcast(tot))
@@ -6842,8 +6838,7 @@ object Analytics {
       // banded scan over the value lattice; cum = t·(inclusive row count)
       // reproduces the original row-pair count exactly even under ties.
       val lat = v.groupBy(col("v")).agg(count(lit(1)).as("t"))
-      // auto bandWidth (was a degenerate 1e8 single band): ≈√V bands at any SF
-      BandedScan.cumSumAuto(lat, Seq.empty, "v", "t", "ci")
+      BandedScan.cumSums(lat, Seq.empty, "v", Seq("t" -> "ci"))
         .select(col("v"), (col("t") * col("ci")).as("cum"))
         .crossJoin(broadcast(tot))
         .filter(col("cum") >= col("k")).agg(min(col("v")).as(s"med_$value"))
@@ -7128,7 +7123,7 @@ object Analytics {
         expr("CAST((n + 9) div 10 AS BIGINT)").as("k10"),
         expr("CAST((n + 1) div 2 AS BIGINT)").as("k50"),
         expr("CAST((9 * n + 9) div 10 AS BIGINT)").as("k90"))
-    BandedScan.cumSum(vals, Seq.empty, "v", "t", "cum", bandWidth = 1024L)
+    BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "cum"))
       .crossJoin(broadcast(tot))
       .agg(max(col("n")).as("n_customers"),
         min(when(col("cum") >= col("k10"), col("v"))).as("p10_bin"),
@@ -7175,7 +7170,7 @@ object Analytics {
         sqrt(col("svv") / col("n").cast("double")
           - (col("sv").cast("double") / col("n").cast("double"))
             * (col("sv").cast("double") / col("n").cast("double"))).as("sig"))
-    val med = BandedScan.cumSum(vals, Seq.empty, "v", "t", "cum", bandWidth = 256L)
+    val med = BandedScan.cumSums(vals, Seq.empty, "v", Seq("t" -> "cum"))
       .crossJoin(broadcast(st.select(col("k"))))
       .filter(col("cum") >= col("k")).agg(min(col("v")).as("med"))
     st.crossJoin(med)
@@ -7272,7 +7267,7 @@ object Analytics {
     val cell = Mat.once(li.groupBy(col("qc")).agg(
       sum(when(col("rf") === "A", 1L).otherwise(0L)).as("ca"),
       sum(when(col("rf") === "R", 1L).otherwise(0L)).as("cr")))
-    val cum = BandedScan.cumSumsAuto(cell, Seq(), "qc",
+    val cum = BandedScan.cumSums(cell, Seq(), "qc",
       Seq("ca" -> "cuma", "cr" -> "cumr"))
     cum.agg(
       sum(col("ca") * (col("cumr") - col("cr")) * (col("cumr") - col("cr")))
@@ -7338,7 +7333,7 @@ object Analytics {
     val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("rf"), cents(col("l_quantity")).as("qc"))
       .groupBy(col("rf"), col("qc")).agg(count(lit(1)).as("cnt")))
-    val cum = BandedScan.cumSumAuto(cell, Seq("rf"), "qc", "cnt", "cum")
+    val cum = BandedScan.cumSums(cell, Seq("rf"), "qc", Seq("cnt" -> "cum"))
     val gn = cell.groupBy(col("rf")).agg(sum(col("cnt")).as("ng"))
     val med = cum.join(broadcast(gn), Seq("rf"))
       .filter(col("cum") * 2L >= col("ng") + 1L)
@@ -7414,7 +7409,7 @@ object Analytics {
       .groupBy(col("dp"))
       .agg(sum(when(col("ls") === "O", 1L).otherwise(0L)).as("co"),
         count(lit(1)).as("ct")))
-    val cum = BandedScan.cumSumAuto(cell, Seq(), "dp", "ct", "cumt")
+    val cum = BandedScan.cumSums(cell, Seq(), "dp", Seq("ct" -> "cumt"))
     val tot = cell.agg(sum(col("co")).as("m"), sum(col("ct")).as("nt"))
     // S(x) = sum_{p=1..x} min(p, T-p), T = N+1, kk = T div 2 — all
     // integer `div` arithmetic (Column `/` on longs would go double and
@@ -7509,7 +7504,7 @@ object Analytics {
         cents(col("o_totalprice")).as("v"))
     val cell = Mat.once(o.groupBy(col("v"))
       .agg(count(lit(1)).as("ct"), sum(col("j")).as("sjc")))
-    val cum = BandedScan.cumSumAuto(cell, Seq(), "v", "ct", "cumt")
+    val cum = BandedScan.cumSums(cell, Seq(), "v", Seq("ct" -> "cumt"))
     val t2 = cum.agg(sum(col("sjc") *
       ((col("cumt") - col("ct")) * 2L + col("ct") + 1L)).as("t2"))
     val sizes = o.groupBy(col("j")).agg(count(lit(1)).as("nj"))
@@ -7765,7 +7760,7 @@ object Analytics {
       .select(col("l_returnflag").as("rf"), cents(col("l_quantity")).as("v"))
       .groupBy(col("rf"), col("v")).agg(count(lit(1)).as("c"))
       .withColumn("sv", col("c") * col("v")))
-    val cum = BandedScan.cumSumsAuto(cell, Seq("rf"), "v",
+    val cum = BandedScan.cumSums(cell, Seq("rf"), "v",
       Seq("c" -> "cumc", "sv" -> "cumsv"))
     cum.select(col("rf"), col("c"),
         (col("c") * (col("v") * (col("cumc") - col("c")) -
@@ -7872,7 +7867,7 @@ object Analytics {
             col("b_e8").cast("double") / lit(1e8) * col("x").cast("double"))))
           .cast("long").as("ar")))
     val lat = Mat.once(r.groupBy(col("ar")).agg(count(lit(1)).as("cnt")))
-    val medv = BandedScan.cumSumAuto(lat, Seq(), "ar", "cnt", "cum")
+    val medv = BandedScan.cumSums(lat, Seq(), "ar", Seq("cnt" -> "cum"))
       .crossJoin(broadcast(lat.agg(sum(col("cnt")).as("nn"))))
       .filter(col("cum") * 2L >= col("nn") + 1L)
       .agg(min(col("ar")).as("med"))
@@ -8051,7 +8046,7 @@ object Analytics {
     val cell = Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("flag"), pct(col("l_discount")).as("d"))
       .groupBy(col("flag"), col("d")).agg(count(lit(1)).as("c"))
-    val withCum = BandedScan.cumSum(cell, Seq("flag"), "d", "c", "hi", 4L)
+    val withCum = BandedScan.cumSums(cell, Seq("flag"), "d", Seq("c" -> "hi"))
       .withColumn("lo", col("hi") - col("c") + 1L)
     val n = withCum.groupBy(col("flag")).agg(sum(col("c")).as("n"))
     val terms = withCum.join(broadcast(n), "flag")
@@ -8127,7 +8122,7 @@ object Analytics {
       .agg(sum(when(col("isF"), 1L).otherwise(0L)).as("a"),
         sum(when(!col("isF"), 1L).otherwise(0L)).as("b"))
       .withColumn("occ", lit(1L))
-    val idx = Mat.once(BandedScan.cumSum(cell, Seq.empty, "v", "occ", "idx", 8L))
+    val idx = Mat.once(BandedScan.cumSums(cell, Seq.empty, "v", Seq("occ" -> "idx")))
     val internal = idx.agg(
       sum(when(col("a") > 0L && col("b") > 0L, 1L).otherwise(0L)).as("t_in"),
       sum(col("a")).as("ta"), sum(col("b")).as("tb"))
@@ -8247,7 +8242,7 @@ object Analytics {
     val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("g"), col("l_quantity").cast("long").as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
-    val medInput = BandedScan.cumSum(cell, Seq("g"), "v", "c", "cum", 8L)
+    val medInput = BandedScan.cumSums(cell, Seq("g"), "v", Seq("c" -> "cum"))
     val ng = cell.groupBy(col("g")).agg(sum(col("c")).as("n_g"))
     val med = medInput.join(broadcast(ng), "g")
       .filter(col("cum") * 2L >= col("n_g"))
@@ -8256,7 +8251,7 @@ object Analytics {
       .select(col("g"), abs(col("v") - col("med")).as("z"), col("c"))
       .groupBy(col("g"), col("z")).agg(sum(col("c")).as("c")))
     val comb = zcell.groupBy(col("z")).agg(sum(col("c")).as("ct"))
-    val ranks = BandedScan.cumSum(comb, Seq.empty, "z", "ct", "cum", 8L)
+    val ranks = BandedScan.cumSums(comb, Seq.empty, "z", Seq("ct" -> "cum"))
       .select(col("z"), col("ct"),
         (lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L).as("r2"))
     val tot = ranks.agg(sum(col("ct")).as("nn"),
@@ -8493,7 +8488,7 @@ object Analytics {
       .select(col("l_linestatus").as("g"), col("l_quantity").cast("long").as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     val comb = cell.groupBy(col("v")).agg(sum(col("c")).as("ct"))
-    val ranks = BandedScan.cumSum(comb, Seq.empty, "v", "ct", "cum", 8L)
+    val ranks = BandedScan.cumSums(comb, Seq.empty, "v", Seq("ct" -> "cum"))
       .select(col("v"),
         (lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L).as("r2"))
     val tot = cell.agg(sum(col("c")).as("nn"))
@@ -8788,9 +8783,9 @@ object Analytics {
       .select(col("l_linestatus").as("g"), col("l_quantity").cast("long").as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     val comb = cell.groupBy(col("v")).agg(sum(col("c")).as("ct"))
-    val ranks = BandedScan.cumSum(comb, Seq.empty, "v", "ct", "cum", 8L)
+    val ranks = BandedScan.cumSums(comb, Seq.empty, "v", Seq("ct" -> "cum"))
       .select(col("v"), (lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L).as("r2"))
-    val within = BandedScan.cumSum(cell, Seq("g"), "v", "c", "cumg", 8L)
+    val within = BandedScan.cumSums(cell, Seq("g"), "v", Seq("c" -> "cumg"))
       .select(col("g"), col("v"),
         (lit(2L) * (col("cumg") - col("c")) + col("c") + 1L).as("r2g"))
     val base = Mat.once(cell.join(broadcast(ranks), "v")
@@ -8948,7 +8943,7 @@ object Analytics {
 
   /** Tukey-fence outlier audit of extended price per return flag:
     * Q1/Q3 by the exact integer rank rule on the price-cent lattice
-    * (keyed [[BandedScan]], auto band width — the lattice is \|distinct
+    * (keyed [[BandedScan]], bands sized per flag — the lattice is \|distinct
     * cents\| however big the table), fences at ±1.5·IQR carried in
     * half-cent integers (2·Q1 − 3·IQR needs no floats), outlier counts
     * and e6 rates exact.
@@ -8957,7 +8952,7 @@ object Analytics {
     val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("g"), cents(col("l_extendedprice")).as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
-    val cum = Mat.once(BandedScan.cumSumAuto(cell, Seq("g"), "v", "c", "cum"))
+    val cum = Mat.once(BandedScan.cumSums(cell, Seq("g"), "v", Seq("c" -> "cum")))
     val ng = cell.groupBy(col("g")).agg(sum(col("c")).as("n_g"))
     // both quartiles from ONE scan of the cum lattice: conditional min
     // inside a single aggregate instead of two filter+groupBy passes
@@ -9050,7 +9045,7 @@ object Analytics {
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c")))
     val comb = cell.groupBy(col("v")).agg(sum(col("c")).as("ct"))
     val tot = cell.agg(sum(col("c")).as("nn"))
-    val scores = BandedScan.cumSum(comb, Seq.empty, "v", "ct", "cum", 8L)
+    val scores = BandedScan.cumSums(comb, Seq.empty, "v", Seq("ct" -> "cum"))
       .crossJoin(broadcast(tot))
       .select(col("v"),
         (lit(2L) * (col("cum") - col("ct")) + col("ct") + 1L).as("r2"),
@@ -9099,7 +9094,7 @@ object Analytics {
     // because BOTH clamp bounds below re-read it — lazy, each bound
     // re-evaluated the whole banded-scan subtree (round 10 plan audit:
     // 108 Exchange nodes without it)
-    val cum = Mat.once(BandedScan.cumSum(cell, Seq("g"), "v", "c", "cum", 8L))
+    val cum = Mat.once(BandedScan.cumSums(cell, Seq("g"), "v", Seq("c" -> "cum")))
     val ng = cell.groupBy(col("g")).agg(sum(col("c")).as("n_g"))
     val lo = cum.join(broadcast(ng), "g")
       .filter(col("cum") * 10L >= col("n_g"))
@@ -9130,7 +9125,7 @@ object Analytics {
     val cell = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_quantity").cast("long").as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("c")))
-    val cum = Mat.once(BandedScan.cumSum(cell, Seq.empty, "v", "c", "cum", 8L)
+    val cum = Mat.once(BandedScan.cumSums(cell, Seq.empty, "v", Seq("c" -> "cum"))
       .crossJoin(broadcast(cell.agg(sum(col("c")).as("n")))))
     def q(k: Int): DataFrame = cum.filter(col("cum") * 4L >= col("n") * k.toLong)
       .agg(min(col("v")).as(s"q$k"))
@@ -11481,16 +11476,18 @@ object Analytics {
     * lived ×2 kept exactly integral so e_x = T2/(2l) is the only float.
     */
   private def lifeTable(spark: SparkSession, sf: String): DataFrame = {
-    val ages = Tables.eventsWithTs(spark, sf)
+    // one row per age in days (bounded by the event span): computed once,
+    // since the two chained scans read it several times each
+    val ages = Mat.once(Tables.eventsWithTs(spark, sf)
       .select(col("user_id"),
         expr("ts_usl div 86400000000").as("m"))
       .groupBy("user_id").agg(min(col("m")).as("m0"), max(col("m")).as("m1"))
       .select((col("m1") - col("m0")).as("x"))
       .groupBy("x").agg(count(lit(1)).as("d"))
-      .withColumn("nx", -col("x"))
-    val lx = BandedScan.cumSum(ages, Nil, "nx", "d", "lx")
+      .withColumn("nx", -col("x")))
+    val lx = BandedScan.cumSums(ages, Nil, "nx", Seq("d" -> "lx"))
       .withColumn("L2", col("lx") * 2L - col("d"))
-    BandedScan.cumSum(lx, Nil, "nx", "L2", "T2")
+    BandedScan.cumSums(lx, Nil, "nx", Seq("L2" -> "T2"))
       .select(col("x").cast("long").as("age_days"), col("d"), col("lx"),
         col("L2"), col("T2"))
   }
@@ -11592,11 +11589,11 @@ object Analytics {
     * [[q_transport_cost_gap]] so the lineitem→orders flows pipeline runs
     * once per query, not once per sub-plan. */
   private def transportPlanNwOf(fl: DataFrame): DataFrame = {
-    val sup = BandedScan.cumSum(
-      fl.groupBy("src").agg(sum(col("flow")).as("s")), Nil, "src", "s", "cs")
+    val sup = BandedScan.cumSums(
+      fl.groupBy("src").agg(sum(col("flow")).as("s")), Nil, "src", Seq("s" -> "cs"))
       .select(col("src"), (col("cs") - col("s")).as("s_lo"), col("cs").as("s_hi"))
-    val dem = BandedScan.cumSum(
-      fl.groupBy("dst").agg(sum(col("flow")).as("d")), Nil, "dst", "d", "cd")
+    val dem = BandedScan.cumSums(
+      fl.groupBy("dst").agg(sum(col("flow")).as("d")), Nil, "dst", Seq("d" -> "cd"))
       .select(col("dst"), (col("cd") - col("d")).as("d_lo"), col("cd").as("d_hi"))
     sup.crossJoin(broadcast(dem))
       .select(col("src"), col("dst"),
@@ -11914,7 +11911,7 @@ object Analytics {
       .select(expr("CAST(ROUND(value * 100) AS BIGINT) div 1000").as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("n"))
       .withColumn("nb", -col("bin"))
-    BandedScan.cumSum(bins, Nil, "nb", "n", "cum_n")
+    BandedScan.cumSums(bins, Nil, "nb", Seq("n" -> "cum_n"))
       .select(col("bin"), col("n"), col("cum_n"),
         expr("CAST(ROUND(LN(CAST(cum_n AS DOUBLE)) / LN(CAST(10 AS DOUBLE))" +
           " * 1000000) AS BIGINT)").as("log10_cum_e6"))
@@ -12857,17 +12854,36 @@ object Analytics {
       .orderBy("src", "dst")
   }
 
+  /** The Cramer determinants of a 5×5 system over the one-row `stats`:
+    * `det` of the matrix `cell(i, j)` and `det_s` of the same matrix with
+    * column s replaced by `rhs(i)`, plus the `keep` columns, as one row.
+    * Each determinant is computed on its own exploded row (row −1 the
+    * matrix, row s its column-s replacement): six 120-term Leibniz
+    * determinants in one projection generate code past the JVM's 64 KB
+    * method limit, while every row here runs the same expression tree on
+    * the same values. */
+  private def cramerDets(stats: DataFrame, cell: (Int, Int) => Column,
+      rhs: Int => Column, keep: Seq[String]): DataFrame = {
+    val cells = for (i <- 0 to 4; j <- 0 to 4) yield
+      when(col("k") === j.toLong, rhs(i)).otherwise(cell(i, j)).as(s"a_${i}_$j")
+    val keepCols = keep.map(col)
+    val dets = stats.withColumn("k", explode(sequence(lit(-1L), lit(4L))))
+      .select((col("k") +: cells) ++ keepCols: _*)
+      .select((col("k") +: keepCols) :+
+        expr(leibnizDet((i, j) => s"a_${i}_$j")).as("det"): _*)
+    val aggs = keep.map(c => max(col(c)).as(c)) ++ (-1 to 4).map { k =>
+      max(when(col("k") === k.toLong, col("det"))).as(if (k < 0) "det" else s"det_$k") }
+    dets.groupBy().agg(aggs.head, aggs.tail: _*)
+  }
+
   /** EXACT Leontief solve by Cramer's rule: x̂ = (I−A)⁻¹f via six
     * 120-term Leibniz determinants (fixed lexicographic term order, pure
     * +,*,/ — bit-identical cross-engine). Since the accounts satisfy
     * x = Ax + f identically, x̂ must reproduce the observed gross output
     * up to float: the audit gap (e6, relative) rounds to 0. */
   def q_leontief_solve(spark: SparkSession, sf: String): DataFrame = {
-    var df = leontiefStats(spark, sf)
-      .withColumn("det", expr(leibnizDet((i, j) => s"m_${i}_$j")))
-    for (s <- 0 to 4)
-      df = df.withColumn(s"det_$s", expr(leibnizDet((i, j) =>
-        if (j == s) s"CAST(d_$i AS DOUBLE)" else s"m_${i}_$j")))
+    val df = cramerDets(leontiefStats(spark, sf), (i, j) => col(s"m_${i}_$j"),
+      i => col(s"d_$i").cast("double"), (0 to 4).flatMap(i => Seq(s"x_$i", s"d_$i")))
     val rows = (0 to 4).map { s =>
       struct(lit(s.toLong).as("sector"), col(s"d_$s").as("final_demand_cents"),
         col(s"x_$s").as("observed_output_cents"),
@@ -12888,15 +12904,11 @@ object Analytics {
     * economy-wide output one final-demand cent in each sector drives.
     * Every multiplier ≥ 1 by the power-series positivity. */
   def q_leontief_multipliers(spark: SparkSession, sf: String): DataFrame = {
-    def mT(i: Int, j: Int) = s"m_${j}_$i"
-    var df = leontiefStats(spark, sf)
-      .withColumn("dett", expr(leibnizDet(mT)))
-    for (s <- 0 to 4)
-      df = df.withColumn(s"dett_$s", expr(leibnizDet((i, j) =>
-        if (j == s) "CAST(1 AS DOUBLE)" else mT(i, j))))
+    val df = cramerDets(leontiefStats(spark, sf), (i, j) => col(s"m_${j}_$i"),
+      _ => lit(1.0), Nil)
     val rows = (0 to 4).map { s =>
       struct(lit(s.toLong).as("sector"),
-        expr(s"CAST(ROUND(dett_$s / dett * 1000000) AS BIGINT)")
+        expr(s"CAST(ROUND(det_$s / det * 1000000) AS BIGINT)")
           .as("multiplier_e6")) }
     df.select(explode(array(rows: _*)).as("r"))
       .select(col("r.sector").as("sector"),

@@ -1347,37 +1347,32 @@ object Events {
   // ---- §2.185 cache / working-set analytics -------------------------------
 
   /** Global access-sequence numbers over the event stream WITHOUT a
-    * global window: band the timeline (≈√n bands from the observed
-    * range, like [[BandedScan.cumSumAuto]]), row_number within each band
-    * (keyed window), then add the banded prefix count of earlier bands.
-    * Returns (key, rn, n_total): key = user_id (the "cache line"),
-    * rn = 1-based position in the (ts, event_id) total order. The band
-    * bounds resolve once at plan construction (one tiny aggregate), the
-    * same pattern as the calendar bounds in q_recursive_calendar.
+    * global window: band the timeline with the banded scan's in-plan
+    * sizing ([[BandedScan.withBand]], ≤ √n + 1 bands), row_number within
+    * each band (keyed window), then add the banded prefix count of
+    * earlier bands. Returns (key, rn) — key = user_id (the "cache line"),
+    * rn = 1-based position in the (ts, event_id) total order — and the
+    * one-row access total `n`. Building it runs no Spark job.
     */
-  private def accessSeq(spark: SparkSession, sf: String): (DataFrame, Long) = {
+  private def accessSeq(spark: SparkSession, sf: String): (DataFrame, DataFrame) = {
     val ev = Tables.eventsWithTs(spark, sf)
       .select(col("user_id").as("key"), col("ts_usl").as("t"),
         col("event_id").as("id"))
-    val b = ev.agg(min(col("t")).as("mn"), max(col("t")).as("mx"),
-      count(lit(1)).as("n")).head()
-    val n = b.getLong(2)
-    val bw = math.max(1L,
-      math.ceil((b.getLong(1) - b.getLong(0) + 1) / math.sqrt(math.max(n, 1L).toDouble)).toLong)
-    val banded = ev.withColumn("band", expr(s"t div $bw"))
+    val banded = BandedScan.withBand(ev, Nil, "t", "band")
     val wIn = Window.partitionBy("band").orderBy(col("t"), col("id"))
     val inBand = banded.withColumn("r_in", row_number().over(wIn).cast("long"))
     val prefix = BandedScan
-      .cumSum(banded.groupBy("band").agg(count(lit(1)).as("cnt")),
-        Nil, "band", "cnt", "cum")
+      .cumSums(banded.groupBy("band").agg(count(lit(1)).as("cnt")),
+        Nil, "band", Seq("cnt" -> "cum"))
       .select(col("band"), (col("cum") - col("cnt")).as("prev"))
     (inBand.join(prefix, "band")
-      .select(col("key"), (col("prev") + col("r_in")).as("rn")), n)
+      .select(col("key"), (col("prev") + col("r_in")).as("rn")),
+      ev.agg(count(lit(1)).as("n")))
   }
 
   /** Reuse distances: rn − previous rn of the same key (a keyed window),
-    * null for compulsory first accesses. */
-  private def reuseDist(spark: SparkSession, sf: String): (DataFrame, Long) = {
+    * null for compulsory first accesses; plus the access total. */
+  private def reuseDist(spark: SparkSession, sf: String): (DataFrame, DataFrame) = {
     val (acc, n) = accessSeq(spark, sf)
     val w = Window.partitionBy("key").orderBy("rn")
     (acc.withColumn("d", col("rn") - lag(col("rn"), 1).over(w))
@@ -1402,8 +1397,9 @@ object Events {
     r.groupBy(expr(s"CAST($reuseBucket AS BIGINT)").as("bucket"))
       .agg(count(lit(1)).as("n_accesses"),
         min(col("d")).as("d_min"), max(col("d")).as("d_max"))
+      .crossJoin(broadcast(n))
       .select(col("bucket"), col("n_accesses"),
-        expr(s"n_accesses * 1000000 div ${n}L").as("share_e6"),
+        expr("n_accesses * 1000000 div n").as("share_e6"),
         col("d_min"), col("d_max"))
       .orderBy("bucket")
   }
@@ -1421,14 +1417,14 @@ object Events {
     val aggs = sizes.map(c =>
       sum(when(col("d") <= c, 1L).otherwise(0L)).as(s"h_$c")) :+
       count(lit(1)).as("n_reuses")
-    val one = r.groupBy().agg(aggs.head, aggs.tail: _*)
+    val one = r.groupBy().agg(aggs.head, aggs.tail: _*).crossJoin(broadcast(n))
     val rows = sizes.map { c =>
       struct(lit(c).as("cache_size"), col(s"h_$c").as("hits"),
-        expr(s"h_$c * 1000000 div ${n}L").as("hit_rate_e6")) }
-    one.select(col("n_reuses"), explode(array(rows: _*)).as("r"))
+        expr(s"h_$c * 1000000 div n").as("hit_rate_e6")) }
+    one.select(col("n_reuses"), col("n"), explode(array(rows: _*)).as("r"))
       .select(col("r.cache_size").as("cache_size"), col("r.hits").as("hits"),
         col("r.hit_rate_e6").as("hit_rate_e6"),
-        (lit(n) - col("n_reuses")).as("compulsory_misses"))
+        (col("n") - col("n_reuses")).as("compulsory_misses"))
       .orderBy("cache_size")
   }
 

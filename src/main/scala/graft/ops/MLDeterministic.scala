@@ -3959,7 +3959,7 @@ object MLDeterministic {
     val scored = conformalScores(spark, sf)
     val calib = scored.filter(col("split") === 2L)
     val lattice = Mat.once(calib.groupBy(col("s")).agg(count(lit(1)).as("cnt")))
-    val cum = BandedScan.cumSumAuto(lattice, Seq.empty, "s", "cnt", "cum")
+    val cum = BandedScan.cumSums(lattice, Seq.empty, "s", Seq("cnt" -> "cum"))
     val ncal = calib.agg(count(lit(1)).as("ncal"))
     val qhat = cum.crossJoin(broadcast(ncal))
       .filter(col("cum") >= expr("((ncal + 1) * 9 + 9) div 10"))
@@ -3983,7 +3983,7 @@ object MLDeterministic {
     val scored = conformalScores(spark, sf)
     val calib = scored.filter(col("split") === 2L)
     val lattice = Mat.once(calib.groupBy(col("s")).agg(count(lit(1)).as("cnt")))
-    val cum = Mat.once(BandedScan.cumSumAuto(lattice, Seq.empty, "s", "cnt", "cum"))
+    val cum = Mat.once(BandedScan.cumSums(lattice, Seq.empty, "s", Seq("cnt" -> "cum")))
     val ncal = calib.agg(count(lit(1)).as("ncal"))
     val ks = ncal.select(col("ncal"),
         explode(array(lit(20L), lit(10L), lit(5L))).as("a100"))
@@ -4016,7 +4016,7 @@ object MLDeterministic {
     val scored = conformalScores(spark, sf)
     val calib = scored.filter(col("split") === 2L)
     val lattice = Mat.once(calib.groupBy(col("s")).agg(count(lit(1)).as("cnt")))
-    val cum = BandedScan.cumSumAuto(lattice, Seq.empty, "s", "cnt", "cum")
+    val cum = BandedScan.cumSums(lattice, Seq.empty, "s", Seq("cnt" -> "cum"))
     val ncal = calib.agg(count(lit(1)).as("ncal"))
     val qhat = cum.crossJoin(broadcast(ncal))
       .filter(col("cum") >= expr("((ncal + 1) * 9 + 9) div 10"))

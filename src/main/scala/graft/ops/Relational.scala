@@ -1018,13 +1018,13 @@ object Relational {
   private[graft] def latticePercentiles(lat0: DataFrame, groupCols: Seq[String],
       ps: Seq[(Double, String)]): DataFrame = {
     // lattice-sized (distinct values × groups, NOT rows); materialized
-    // once because THREE consumers read it — cumSumAuto's bounds probe,
-    // the banded scan itself, and the n aggregate. Lazy, every caller's
-    // lattice lineage (scan + groupBy, often behind further joins) ran
-    // three times per percentile call — q_qq_quantiles re-scanned events
-    // six times across its two sides (round 10 plan audit; guide §2.4).
+    // once because several consumers read it — the banded scan's band
+    // sizing aggregate, its windows and band totals, and the n aggregate.
+    // Lazy, every caller's lattice lineage (scan + groupBy, often behind
+    // further joins) ran once per consumer — q_qq_quantiles re-scanned
+    // events six times across its two sides (round 10 plan audit).
     val lat = Mat.once(lat0)
-    val cum = BandedScan.cumSumAuto(lat, groupCols, "pc", "cnt", "cum")
+    val cum = BandedScan.cumSums(lat, groupCols, "pc", Seq("cnt" -> "cum"))
     val nAgg = (if (groupCols.isEmpty) lat.groupBy()
       else lat.groupBy(groupCols.map(col): _*)).agg(sum(col("cnt")).as("n"))
     latticePercentilesFromCum(cum, nAgg, groupCols, ps)
@@ -1078,9 +1078,10 @@ object Relational {
     * Round5OpsSpec pins equality with the buffering formulation.
     */
   def q_trimmed_mean(spark: SparkSession, sf: String): DataFrame = {
-    // lattice-sized; three consumers (cumSumsAuto bounds probe, the
-    // banded scan, nAgg) — lazy, the lineitem scan + lattice groupBy
-    // ran three times (round 10; same discipline as latticePercentiles)
+    // lattice-sized; several consumers (the banded scan's sizing
+    // aggregate, windows and band totals, nAgg) — lazy, the lineitem scan
+    // + lattice groupBy ran once per consumer (same discipline as
+    // latticePercentiles)
     val lat = Mat.once(Tables.lineitem(spark, sf)
       .select(col("l_returnflag").as("flag"), cents(col("l_extendedprice")).as("pc"))
       .groupBy(col("flag"), col("pc"))
@@ -1090,7 +1091,7 @@ object Relational {
     // twin banded prefix scans (count + value mass) — keyed by (flag,
     // band), so no per-flag window funnels N/|flags| rows into one task
     val cum = BandedScan
-      .cumSumsAuto(lat, Seq("flag"), "pc", Seq("cnt" -> "cum", "pv" -> "cumv"))
+      .cumSums(lat, Seq("flag"), "pc", Seq("cnt" -> "cum", "pv" -> "cumv"))
       .join(broadcast(nAgg), "flag")
     val pos10 = lit(0.1) * (col("n") - lit(1L)).cast("double")
     val pos90 = lit(0.9) * (col("n") - lit(1L)).cast("double")
@@ -1313,7 +1314,7 @@ object Relational {
     // former shape re-scanned lineitem and re-ran the banded windows for
     // each rule (6.5 s isolated at sf0.1; ~1.5 s after)
     val hist = Mat.once(b.groupBy(col("flag"), col("pc")).agg(count(lit(1)).as("cnt")))
-    val cum = BandedScan.cumSumAuto(hist, Seq("flag"), "pc", "cnt", "cum")
+    val cum = BandedScan.cumSums(hist, Seq("flag"), "pc", Seq("cnt" -> "cum"))
     val nAgg = hist.groupBy(col("flag")).agg(sum(col("cnt")).as("n"))
     val cont = latticePercentilesFromCum(cum, nAgg, Seq("flag"),
         Seq(0.5 -> "c50", 0.9 -> "c90"))
@@ -2263,8 +2264,8 @@ object Relational {
     val b = m.groupBy(col("before").as("node")).agg(count(lit(1)).as("n_before"))
     val a = m.filter(col("after") =!= 3L)
       .groupBy(col("after").as("node")).agg(count(lit(1)).as("n_after"))
-    broadcast(nodes).join(b, Seq("node"), "left_outer")
-      .join(a, Seq("node"), "left_outer")
+    nodes.join(broadcast(b), Seq("node"), "left_outer")
+      .join(broadcast(a), Seq("node"), "left_outer")
       .select(col("node"), coalesce(col("n_before"), lit(0L)).as("n_before"),
         when(col("node") === 3L, 0L).otherwise(coalesce(col("n_after"), lit(0L)))
           .as("n_after"))

@@ -229,7 +229,7 @@ object Sampling {
     val v = Tables.eventsWithTs(spark, sf)
       .select(col("event_type"), cents(col("value")).as("vc"))
     // every lattice/derived frame is checkpointed: latticePercentile's
-    // banded scan reads its input several times (auto band-width scalar,
+    // banded scan reads its input several times (band-sizing aggregate,
     // windows, group totals), and WITHOUT the checkpoints each read
     // re-scanned the base events table — ten-ish full passes, 8.6 s
     // isolated at sf0.1 (~2 s after; the lattices are value-domain-sized)

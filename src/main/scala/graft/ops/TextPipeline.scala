@@ -1257,10 +1257,10 @@ object TextPipeline {
     val groups = d.filter(col("doc_id") === col("gid"))
       .select(col("lang"), col("source"), col("text"), col("gid"), col("m"),
         size(toks(col("text"))).cast("long").as("len"))
-    // data-adaptive fast path (one cheap scan of the checkpointed d,
-    // same discipline as BandedScan.cumSumsAuto): with NO duplicate
-    // texts anywhere, every group is its own single member, the within
-    // leg is empty, and every forward orientation has mult exactly 1 —
+    // data-adaptive fast path (one cheap scan of the checkpointed d):
+    // with NO duplicate texts anywhere, every group is its own single
+    // member, the within leg is empty, and every forward orientation
+    // has mult exactly 1 —
     // the whole inversion/complement machinery below would compute a
     // constant. The graded sf0.1 fixture is exactly this corpus.
     val anyDup = !d.filter(col("m") >= 2L).isEmpty
